@@ -75,50 +75,32 @@ class AnnIndexBuilder(
     usable
   }
 
-  def pendingItems(): DataFrame =
-    if (!checkIndexLayout()) scoped
-    else {
-      val base = scoped.join(index.df.select(col("id").alias(source.key)),
-        Seq(source.key), "left_anti")
-      // PREVIEW the lu-newer docs too (the reference `newer_in` estimate
-      // covers unseen ∪ updated, core/store.py:239-275); run() realizes
-      // the same set by dropping stale codes before the left-anti
-      if (!index.df.columns.contains("lu") ||
-          !scoped.columns.contains(source.lastUpdatedField)) base
-      else base.unionByName(scoped
-        .join(index.df.groupBy(col("id"))
-          .agg(max(col("lu")).alias("__ilu"))
-          .withColumnRenamed("id", source.key), Seq(source.key))
-        .filter(col(source.lastUpdatedField) > col("__ilu")).drop("__ilu"))
-    }
-
-  /** Count the docs whose source `last_updated` is newer than the lu
-    * they were encoded with — the update half of the reference delta
-    * contract (`core/store.py:239-275`): [[pendingItems]]' lu-newer
-    * branch re-surfaces them, and they re-encode against the FROZEN
-    * quantizer (updates never retrain — staleness is [[rebuild]]'s
-    * job, signalled by adcDrift). One row per id in the codes table,
-    * so no per-doc aggregation is needed; a lu-less source or a legacy
-    * lu-less index degrades to insert-only.
-    * Oracle row `ann_index_update`. */
-  private def dropChanged(): Long = {
+  /** Ids whose source `last_updated` is newer than the lu they were
+    * encoded with — the update half of the reference delta contract
+    * (`core/store.py:239-275`). The codes table is one row per id, so
+    * this is a plain (id, lu) join, without the per-id max-lu aggregate
+    * of [[Contributions.changed]]. They re-encode against the FROZEN
+    * quantizer (updates never retrain — staleness is [[rebuild]]'s job,
+    * signalled by adcDrift); a lu-less source or a legacy lu-less index
+    * degrades to insert-only. No removal write: the id-keyed upsert of
+    * the re-encoded docs shadows the stale row under the store's
+    * last-write-wins merge (df-visible contents are identical; the stale
+    * base row is physically dropped at the next compaction). Oracle row
+    * `ann_index_update`. */
+  private def changedIds(): Option[DataFrame] =
     if (!checkIndexLayout() || !index.df.columns.contains("lu") ||
-        !scoped.columns.contains(source.lastUpdatedField)) return 0L
-    val changed = index.df.select(col("id"), col("lu"))
+        !scoped.columns.contains(source.lastUpdatedField)) None
+    else Some(index.df.select(col("id"), col("lu"))
       .join(scoped.select(col(source.key).alias("id"),
         col(source.lastUpdatedField).alias("s_lu")), Seq("id"))
-      .filter(col("s_lu") > col("lu"))
-      .select(col("id"))
-      .materializeEager() // count + the pendingItems lu-newer re-surface
-    try changed.count() finally changed.unpersist()
-    // r17 (VERDICT r16 #3): NO removeKeys — the codes table is one row
-    // per id and [[run]] re-encodes every changed doc in the same run
-    // (pendingItems' lu-newer branch re-surfaces them), so the id-keyed
-    // upsert SHADOWS the stale row under the store's last-write-wins
-    // merge: df-visible contents are identical, and the stale base row
-    // is physically dropped at the next compaction. The r16 shape paid
-    // a full O(index) version rewrite here on every update run.
-  }
+      .filter(col("s_lu") > col("lu")).select(col("id")))
+
+  private def pendingOf(changed: Option[DataFrame]): DataFrame =
+    if (!checkIndexLayout()) scoped
+    else Contributions.pending(source, scoped, index.df, changed)
+
+  /** Unseen ∪ lu-newer docs ([[Contributions.pending]]). */
+  def pendingItems(): DataFrame = pendingOf(changedIds())
 
   /** Per-instance quantizer cache: the quantizer is trained once and
     * immutable thereafter (the class contract), so after the first
@@ -230,13 +212,14 @@ class AnnIndexBuilder(
     * Report = docs examined (the incremental contract's measure). */
   def run(): BuildReport = {
     index.ensureIndex("cell")
-    // lu-newer docs re-enter through pendingItems' lu-newer branch and
-    // their stale code row is SHADOWED by this run's id-keyed upsert
-    // (see dropChanged — no O(index) removal write)
-    val updated = dropChanged()
+    // lu-newer docs re-enter as pending and their stale code row is
+    // SHADOWED by this run's id-keyed upsert (see changedIds — no
+    // O(index) removal write); the plan is counted, not materialized
+    val changed = changedIds()
+    val updated = changed.fold(0L)(_.count())
     // spread-checkpointed: the PQ-encode kernel is CPU-bound per vector
     // and must not inherit a 2-split scan (Builder.spreadCheckpoint)
-    val batch = Builder.spreadCheckpoint(pendingItems())
+    val batch = Builder.spreadCheckpoint(pendingOf(changed.filter(_ => updated > 0)))
     val examined = batch.count()
     var batchErr: Option[Double] = None
     if (examined > 0) {

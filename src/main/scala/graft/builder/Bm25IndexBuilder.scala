@@ -67,114 +67,37 @@ class Bm25IndexBuilder(
     usable
   }
 
-  /** Docs the index has not absorbed (id-based, like [[AnnIndexBuilder]]
-    * — the sentinel posting keeps zero-token docs out of here too).
-    *
-    * Composed with [[dropChanged]] this realizes the reference's full
-    * `last_updated` delta contract (`core/store.py:239-275`): postings
-    * carry the indexed doc's lu, [[run]] first DROPS docs whose source
-    * lu is newer (postings removed, stats decremented), and this
-    * left-anti then re-surfaces them as pending — so an updated doc
-    * re-indexes with its new text and [[topK]] matches the from-scratch
-    * build over the final corpus (oracle row `text_bm25_update`). A
-    * source without a lu column degrades to the id-based insert-only
-    * behavior. */
-  def pendingItems(): DataFrame =
-    if (!checkIndexLayout()) scoped
-    else {
-      val base = scoped.join(index.df.select(col("id").alias(source.key)),
-        Seq(source.key), "left_anti")
-      // PREVIEW the lu-newer docs too (the reference `newer_in` estimate
-      // covers unseen ∪ updated); run() realizes the same set by dropping
-      // stale postings before the left-anti. Per-doc max(lu): postings
-      // are one row per (term, id), lu constant per doc
-      if (!index.df.columns.contains("lu") ||
-          !scoped.columns.contains(source.lastUpdatedField)) base
-      else base.unionByName(scoped
-        .join(index.df.groupBy(col("id"))
-          .agg(max(col("lu")).alias("__ilu"))
-          .withColumnRenamed("id", source.key), Seq(source.key))
-        .filter(col(source.lastUpdatedField) > col("__ilu")).drop("__ilu"))
-    }
-
   /** `(id, dl)` of docs whose source `last_updated` is newer than the
-    * lu their postings were indexed with — the update half of the
-    * reference delta contract. Exhaustive per-doc comparison, same
-    * shape as [[Store.newerIn]]'s exhaustive mode: one columnar
-    * (id, dl, lu) scan of the index joined against the scoped corpus's
-    * (key, lu) — no driver-side key lists. r17 (VERDICT r16 #3): the
-    * posting removal and the stats decrement are DEFERRED into
-    * [[run]]'s index/stats writes — the removal rides the SAME
-    * committed version write that absorbs the batch's postings, and
-    * the decrement folds into the single additive stats update —
-    * [[pendingWith]]'s semi-join re-surfaces these docs as this run's
-    * batch, so the final store contents are unchanged. Returns a
-    * materialized frame, or None when the lu discipline does not
-    * apply. */
-  private def changedDocs(): Option[DataFrame] = {
-    if (!checkIndexLayout() || !index.df.columns.contains("lu") ||
-        !scoped.columns.contains(source.lastUpdatedField)) return None
-    val perDoc = index.df.groupBy(col("id"))
-      .agg(max(col("dl")).cast("long").alias("dl"), // dl, lu constant per doc
-        max(col("lu")).alias("i_lu"))
-    Some(perDoc.join(
-        scoped.select(col(source.key).alias("id"),
-          col(source.lastUpdatedField).alias("s_lu")), Seq("id"))
-      .filter(col("s_lu") > col("i_lu"))
-      .select(col("id"), col("dl"))
-      .materializeEager()) // agg + pending semi-join + fused removal
-  }
+    * lu their postings were indexed with ([[Contributions.changed]]; dl
+    * and lu are constant per doc). The posting removal and the stats
+    * decrement are DEFERRED into [[run]]'s index/stats writes — the
+    * removal rides the SAME committed version write that absorbs the
+    * batch's postings, and the decrement folds into the single additive
+    * stats update. */
+  private def changedDocs(): Option[DataFrame] =
+    if (!checkIndexLayout()) None
+    else Contributions.changed(source, scoped, index.df,
+      max(col("dl")).cast("long").alias("dl"))
 
-  /** [[pendingItems]] with the lu-newer subplan replaced by a semi-join
-    * against the already-materialized changed frame (row set identical
-    * by construction — same join, same filter). */
-  private def pendingWith(changed: Option[DataFrame]): DataFrame =
+  private def pendingOf(changed: Option[DataFrame]): DataFrame =
     if (!checkIndexLayout()) scoped
-    else {
-      val base = scoped.join(index.df.select(col("id").alias(source.key)),
-        Seq(source.key), "left_anti")
-      changed match {
-        case Some(ch) => base.unionByName(scoped.join(
-          ch.select(col("id").alias(source.key)), Seq(source.key), "left_semi"))
-        case None => base
-      }
-    }
+    else Contributions.pending(source, scoped, index.df, changed)
 
-  /** The index/stats pair is written in two store updates that cannot
-    * be atomic across stores: a crash or foreachBatch retry between
-    * them (postings landed, stats write lost — or orphans removed,
-    * stats not decremented) would leave every later [[topK]] scoring
-    * with a silently wrong N/avgdl FOREVER, because the id-based
-    * pending check never revisits absorbed docs. The repair is to
-    * treat the POSTINGS as the source of truth and the stats row as a
-    * cache: recompute (n_docs, Σdl) from the index — count of distinct
-    * ids and sum of per-doc dl (dl is constant across a doc's
-    * postings) — and rewrite the stats row when it disagrees.
-    *
-    * Cost discipline: the recount is O(index), so it runs only when
-    * the pair is possibly torn — gated on the CLEAN-PAIR MARKER
-    * exactly like [[UnigramLmBuilder]] (VERDICT r15 #2 — see the full
-    * rationale there): a fully committed [[run]] stamps both stores'
-    * content tokens into the stats store's metadata, and the recount
-    * runs only when the current tokens no longer match (torn pair,
-    * failed run, or third-party write) — never on the steady-state
-    * batch path. */
-  private val CleanPairKey = "graft.cleanpair"
+  /** Docs the index has not absorbed ∪ docs whose source lu is newer
+    * than their postings' (the sentinel posting keeps zero-token docs
+    * out of here). [[run]] re-indexes the lu-newer ones with their new
+    * text, so [[topK]] matches the from-scratch build over the final
+    * corpus (oracle row `text_bm25_update`). A source without a lu
+    * column degrades to the id-based insert-only behavior. */
+  def pendingItems(): DataFrame = pendingOf(changedDocs())
 
-  private def pairToken: String = {
-    val it = index.contentToken; val st = stats.contentToken
-    if (it.isEmpty || st.isEmpty) "" else s"$it|$st"
-  }
-
-  private def pairClean: Boolean = {
-    val t = pairToken
-    t.nonEmpty && stats.getMeta(CleanPairKey).contains(t)
-  }
-
-  private def stampCleanPair(): Unit = {
-    val t = pairToken
-    if (t.nonEmpty) stats.putMeta(CleanPairKey, t)
-  }
+  /** Postings are the source of truth, the stats row a cache: a torn
+    * index/stats pair would leave every later [[topK]] scoring with a
+    * silently wrong N/avgdl, so the [[CleanPair]]-gated startup recount
+    * rebuilds (n_docs, Σdl) from the index — count of distinct ids and
+    * sum of per-doc dl — and rewrites the stats row when it disagrees.
+    * Never on the steady-state batch path. */
+  private val pair = new CleanPair(index, stats)
 
   /** Whether the last [[run]] paid the startup recount — test
     * observability for the clean-pair gating (no behavioral use). */
@@ -188,18 +111,22 @@ class Bm25IndexBuilder(
     val n = truth.getLong(0)
     if (n == 0) return
     val sdl = if (truth.isNullAt(1)) 0L else truth.getLong(1)
-    if (!loadStats().contains((n, sdl))) {
-      val s = spark
-      import s.implicits._
-      stats.update(Seq(("bm25", n, sdl)).toDF("sid", "n_docs", "sum_dl"),
-        Seq("sid"))
-    }
+    if (!loadStats().contains((n, sdl))) writeStats(n, sdl)
   }
 
-  /** The one-row stats record. ONE driver action (collect.headOption —
-    * the r16 shape probed isEmpty first, a second limit-1 job), and the
-    * value is CACHED keyed on the stats store's content token (the
-    * AnnIndexBuilder quantizer-cache discipline, VERDICT r16 #4): any
+  private def writeStats(n: Long, sumDl: Long): Unit = {
+    val s = spark
+    import s.implicits._
+    stats.update(Seq(("bm25", n, sumDl)).toDF("sid", "n_docs", "sum_dl"), Seq("sid"))
+  }
+
+  /** The `sid = "bm25"` stats record. ONE driver action pulling only
+    * this builder's row (the store is upserted on `sid`, so one row) — a
+    * stats store that holds other rows too still answers this record,
+    * not an arbitrary one. No `limit(1)`: a limit scans partition by
+    * partition and pays a second job whenever the row is not in the
+    * first one. The value is CACHED keyed on the stats store's content
+    * token (the AnnIndexBuilder quantizer-cache discipline): any
     * store write changes the token and misses the cache; a token-less
     * store ("" — no cheap change signal) never caches. The cache lives
     * on the instance, so a fresh builder over the same stores pays one
@@ -207,15 +134,15 @@ class Bm25IndexBuilder(
     * free. */
   @volatile private var statsCache: Option[(String, Option[(Long, Long)])] = None
 
-  private def loadStats(): Option[(Long, Long)] = {
+  private[graft] def loadStats(): Option[(Long, Long)] = {
     val tok = stats.contentToken
     statsCache match {
       case Some((t, v)) if t.nonEmpty && t == tok => v
       case _ =>
         val df = stats.df
         val v =
-          if (!df.columns.contains("n_docs")) None
-          else df.select(col("n_docs").cast("long"),
+          if (!df.columns.contains("n_docs") || !df.columns.contains("sid")) None
+          else df.filter(col("sid") === "bm25").select(col("n_docs").cast("long"),
               col("sum_dl").cast("long")).collect().headOption
             .map(r => (r.getLong(0), r.getLong(1)))
         statsCache = Some((tok, v))
@@ -227,17 +154,14 @@ class Bm25IndexBuilder(
     * compiled [[graft.functions.TermCounts]] kernel carries tf and the
     * doc length; `explode_outer` + coalesce emits the zero-token
     * sentinel. `lu` rides every posting (constant per doc, like `dl`) so
-    * [[dropChanged]] can compare against the source without a second
+    * [[changedDocs]] can compare against the source without a second
     * per-doc table; a lu-less source writes a null long column. A
     * LEGACY populated index built before the lu column keeps its layout
     * (lu stripped) — it stays insert-only rather than failing the
     * append. */
   private def postingsOf(batch: DataFrame): DataFrame = {
-    val lu =
-      if (batch.columns.contains(source.lastUpdatedField))
-        col(source.lastUpdatedField)
-      else lit(null).cast("long")
-    val p = batch.select(col(source.key).alias("id"), lu.alias("lu"),
+    val p = batch.select(col(source.key).alias("id"),
+        Contributions.lu(source, batch).alias("lu"),
         graft.functions.GraftFunctions.termCounts(spark,
           graft.ext.TextAnalysis.normTokens(col(textField))).alias("__tc"))
       .select(col("id"), col("lu"),
@@ -261,12 +185,12 @@ class Bm25IndexBuilder(
     // items — skipped when the clean-pair marker still matches (see
     // reconcileStats); a throw anywhere below leaves the marker
     // un-stamped, so the NEXT run recounts
-    lastRunReconciled = !pairClean
+    lastRunReconciled = !pair.clean
     if (lastRunReconciled) reconcileStats()
     // lu-newer docs: (id, dl) resolved up front, the stale-posting drop
     // and the stats decrement DEFERRED into this run's index/stats
-    // writes (see changedDocs) — pendingWith re-surfaces them
-    val changed = changedDocs()
+    // writes (see changedDocs) — pendingOf re-surfaces them
+    val changed = changedDocs().map(_.materializeEager())
     val (updated, updatedDl) = changed.map { ch =>
       val r = ch.agg(count(lit(1)).alias("n"), sum(col("dl")).alias("s")).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
@@ -275,7 +199,7 @@ class Bm25IndexBuilder(
     try {
       // spread-checkpointed: the tokenize+count kernel is CPU-dense per
       // doc and must not inherit a 2-split scan (Builder.spreadCheckpoint)
-      val batch = Builder.spreadCheckpoint(pendingWith(dropSlice))
+      val batch = Builder.spreadCheckpoint(pendingOf(dropSlice))
       try {
         val examined = batch.count()
         if (examined > 0) {
@@ -301,15 +225,11 @@ class Bm25IndexBuilder(
               ch.select(col("id")), Seq("term", "id"))
             case None => index.update(postingsOf(batch), Seq("term", "id"))
           }
-          val s = spark
-          import s.implicits._
           stats0 match {
             case Some((n0, s0)) =>
               // ONE additive stats write: batch increment and (when docs
               // changed) the decrement of their OLD lengths fold together
-              stats.update(Seq(("bm25", n0 + batchN - updated,
-                  s0 + batchS - updatedDl))
-                .toDF("sid", "n_docs", "sum_dl"), Seq("sid"))
+              writeStats(n0 + batchN - updated, s0 + batchS - updatedDl)
             case None if updated > 0 =>
               // stats row missing/unreadable while postings exist (e.g.
               // truncated externally after the startup recount):
@@ -317,15 +237,13 @@ class Bm25IndexBuilder(
               // recount from the just-committed postings, the source of
               // truth (they already reflect drop + batch)
               reconcileStats()
-            case None =>
-              stats.update(Seq(("bm25", batchN, batchS))
-                .toDF("sid", "n_docs", "sum_dl"), Seq("sid"))
+            case None => writeStats(batchN, batchS)
           }
         }
         val orphans = if (deleteOrphans) removeOrphans(scoped) else 0L
         // every write pair committed: stamp the marker (a failure above
         // propagates with the marker stale, so the next run recounts)
-        stampCleanPair()
+        pair.stamp()
         BuildReport(examined, 0, orphans, updated = updated)
       } finally batch.unpersist()
     } finally changed.foreach(_.unpersist())
@@ -348,11 +266,8 @@ class Bm25IndexBuilder(
         index.removeKeys(orphanDl.select(col("id")))
         loadStats() match {
           case Some((n0, s0)) =>
-            val s = spark
-            import s.implicits._
-            stats.update(Seq(("bm25", n0 - n, s0 - (if (r.isNullAt(1)) 0L else r.getLong(1))))
-              .toDF("sid", "n_docs", "sum_dl"), Seq("sid"))
-          case None => reconcileStats() // see dropChanged: never decrement from (0,0)
+            writeStats(n0 - n, s0 - (if (r.isNullAt(1)) 0L else r.getLong(1)))
+          case None => reconcileStats() // see run: never decrement from (0,0)
         }
       }
       n

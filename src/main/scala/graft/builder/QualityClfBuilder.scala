@@ -1,18 +1,13 @@
 package graft.builder
 
-import graft.builder.Builder.MaterializeOps
-import graft.query.MongoFilter
 import graft.store.Store
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Train/update a PERSISTED hashed-ngram quality classifier — the
-  * train-once/score-batches split of [[graft.ext.QualityClassifier]],
-  * following the reference's incremental-build contract (process only
-  * what's new, `core/store.py:239-275`) exactly like
-  * [[UnigramLmBuilder]] (same watermark, same count-merge, same
-  * O(batch) delta write — here the "vocabulary" is the bounded bucket
-  * table, ≤ buckets+1 rows).
+  * train-once/score-batches split of [[graft.ext.QualityClassifier]], on
+  * the shared incremental count-merge skeleton ([[CountModelBuilder]]):
+  * here the model is the bounded bucket table, ≤ buckets+1 rows.
   *
   * The model lives in `model` as one row per hash bucket:
   * `(bucket, c0, c1, <lastUpdatedField>)` — per-class feature counts,
@@ -22,41 +17,20 @@ import org.apache.spark.sql.functions._
   * retraining — the property that makes a count-based linear
   * classifier the right quality-filter shape at 100 TB.
   *
-  *  - **newer_in discipline (S10)**: the watermark is the model
-  *    store's own max `lastUpdatedField`; a run counts ONLY source
-  *    docs strictly above it. A repeat run over an unchanged corpus
-  *    reports 0 and writes nothing.
-  *  - **count MERGE, not last-write-wins**: batch counts left-join the
-  *    persisted counts bucket-keyed and the summed rows upsert — only
-  *    TOUCHED buckets are written.
-  *
   * Scoring against the persisted counts is
   * [[graft.ext.QualityClassifier.score]] over `model.df` — the
   * broadcast-by-construction join (the model is bucket-bounded).
   *
-  * '''lu-UPDATE contract''' (`core/store.py:239-275` covers updated
-  * docs too): the model is an AGGREGATE, so un-counting a re-labeled
-  * or re-written doc needs its old per-bucket contribution. Pass
-  * `docs` (a contributions store, layout `(id, bucket, tf, lbl, lu)`
-  * keyed on `id`) and the builder becomes fully updatable: [[run]]
-  * first NEGATIVE-merges the stored contribution of lu-newer docs out
-  * of the per-class counts (buckets reaching zero on BOTH classes
-  * leave the store — a `(0,0)` row and an absent row score
-  * identically through [[graft.ext.QualityClassifier.score]]'s
-  * missing-bucket weight, but the store must converge to the
-  * from-scratch train), drops their contribution rows, and the
-  * id-based left-anti re-surfaces them as this run's batch. Label
-  * flips repair naturally: the old counts leave the OLD class's
-  * column, the new ones enter the new. Every doc has a contribution
-  * row (the bucket −1 doc marker rides [[graft.ext.QualityClassifier
-  * .features]] even for zero-token docs), so no sentinel is needed.
-  * The contributions store is O(corpus distinct (doc, bucket)) — the
-  * postings-shaped price of updatability; leave `docs` unset for the
-  * cheap watermark-only insert-only behavior.
-  *
-  * Report semantics: docs EXAMINED this run, matching the other
-  * incremental builders; `updated` counts the lu-newer docs whose old
-  * contribution was dropped. */
+  * With `docs` (contributions layout `(id, bucket, tf, lbl, lu)` keyed on
+  * `id`) the model is fully updatable (see [[CountModelBuilder]]). A
+  * bucket zeroed on BOTH classes leaves the store: a `(0,0)` row and an
+  * absent row score identically through the missing-bucket weight, but
+  * the store must converge to the from-scratch train. Label flips repair
+  * naturally: the old counts leave the OLD class's column, the new ones
+  * enter the new. Every doc has a contribution row (the bucket −1 doc
+  * marker rides [[graft.ext.QualityClassifier.features]] even for
+  * zero-token docs), so no sentinel is needed. Leave `docs` unset for
+  * the cheap watermark-only insert-only behavior. */
 class QualityClfBuilder(
     val source: Store,
     val model: Store,
@@ -67,313 +41,34 @@ class QualityClfBuilder(
     val seed: Int = 0,
     val criteria: Option[String] = None,
     val docs: Option[Store] = None)
-  extends Builder {
+  extends CountModelBuilder {
 
-  private def scoped: DataFrame =
-    criteria.map(c => MongoFilter(source.df, c)).getOrElse(source.df)
-
-  private def modelEmpty: Boolean = {
-    val df = model.df
-    df.columns.isEmpty || !df.columns.contains("bucket") || df.isEmpty
-  }
-
-  /** Max source-lu the model has absorbed (type-agnostic scalar — the
-    * UnigramLmBuilder watermark contract). One-row agg by contract. */
-  private def watermark: Option[Any] = {
-    val df = model.df
-    if (modelEmpty || !df.columns.contains(model.lastUpdatedField)) None
-    else df.agg(max(col(model.lastUpdatedField))).collect().headOption
-      .flatMap(r => Option(r.get(0)))
-  }
-
-  /** Empty or not-yet-written contributions store (schema-on-write). */
-  private def docsEmpty(d: Store): Boolean = {
-    val df = d.df
-    df.columns.isEmpty || !df.columns.contains("bucket") || df.isEmpty
-  }
-
-  /** Docs pending this run. With a contributions store: unseen (id
-    * left-anti) ∪ lu-newer — the full reference `newer_in` estimate;
-    * [[run]] consumes the same set through [[pendingWith]] (the
-    * lu-newer side reused from the materialized changed-id frame).
-    * Without one: docs newer than the model watermark (all on the
-    * first run). */
-  def pendingItems(): DataFrame = docs match {
-    case Some(d) if !docsEmpty(d) =>
-      val base = scoped.join(d.df.select(col("id").alias(source.key)),
-        Seq(source.key), "left_anti")
-      if (!d.df.columns.contains("lu") ||
-          !scoped.columns.contains(source.lastUpdatedField)) base
-      else base.unionByName(scoped
-        .join(d.df.groupBy(col("id")).agg(max(col("lu")).alias("__ilu"))
-          .withColumnRenamed("id", source.key), Seq(source.key))
-        .filter(col(source.lastUpdatedField) > col("__ilu")).drop("__ilu"))
-    case Some(_) => scoped
-    case None => watermark match {
-      case Some(wm) => scoped.filter(col(source.lastUpdatedField) > lit(wm))
-      case None     => scoped
-    }
-  }
-
-  /** Per-class sums of a contributions slice, in the model layout —
-    * the exact [[graft.ext.QualityClassifier.train]] accounting
-    * (marker rows at bucket −1 carry the per-class doc counts). */
-  private def classSums(contrib: DataFrame): DataFrame =
-    contrib.groupBy(col("bucket"))
-      .agg(sum(when(col("lbl") === 0, col("tf").cast("long")).otherwise(0L)).alias("c0"),
-        sum(when(col("lbl") === 1, col("tf").cast("long")).otherwise(0L)).alias("c1"))
-
-  /** Ids of docs whose source lu is newer than the lu their
-    * contribution was absorbed with — the update half of the reference
-    * delta contract. r17 (VERDICT r16 #3): ids ONLY; the class-sum
-    * subtraction and the contribution-row removal are DEFERRED into
-    * [[run]]'s two store writes exactly as in [[UnigramLmBuilder
-    * .changedIds]] (one version rewrite per store instead of an
-    * update+removeKeys pair each), and [[pendingWith]]'s semi-join
-    * re-surfaces these docs as this run's batch. */
-  private def changedIds(d: Store, dEmpty: Boolean): Option[DataFrame] = {
-    if (dEmpty || !d.df.columns.contains("lu") ||
-        !scoped.columns.contains(source.lastUpdatedField)) return None
-    Some(d.df.groupBy(col("id")).agg(max(col("lu")).alias("__ilu"))
-      .join(scoped.select(col(source.key).alias("id"),
-        col(source.lastUpdatedField).alias("__slu")), Seq("id"))
-      .filter(col("__slu") > col("__ilu"))
-      .select(col("id"))
-      .materializeEager())
-  }
-
-  /** [[pendingItems]] with the lu-newer subplan replaced by a semi-join
-    * against the already-materialized changed-id frame (row set
-    * identical by construction — same join, same filter; the
-    * [[UnigramLmBuilder.pendingWith]] shape). */
-  private def pendingWith(dEmpty: Option[Boolean],
-                          changed: Option[DataFrame]): DataFrame = docs match {
-    case Some(d) if !dEmpty.getOrElse(true) =>
-      val base = scoped.join(d.df.select(col("id").alias(source.key)),
-        Seq(source.key), "left_anti")
-      changed match {
-        case Some(ch) => base.unionByName(scoped.join(
-          ch.select(col("id").alias(source.key)), Seq(source.key), "left_semi"))
-        case None => base
-      }
-    case Some(_) => scoped
-    case None => watermark match {
-      case Some(wm) => scoped.filter(col(source.lastUpdatedField) > lit(wm))
-      case None     => scoped
-    }
-  }
-
-  /** The model and the contributions store cannot be written
-    * atomically as a pair; the CONTRIBUTIONS are the source of truth
-    * and the model a per-bucket cache of their class sums — recompute
-    * and rewrite the rows that disagree. O(contributions); gated on
-    * the CLEAN-PAIR MARKER exactly like [[UnigramLmBuilder]] (VERDICT
-    * r15 #2 — see the full rationale there): a fully committed [[run]]
-    * stamps both stores' content tokens into the model store's
-    * metadata, and the reconcile runs only when the current tokens no
-    * longer match (torn pair, failed run, or third-party write). */
-  private val CleanPairKey = "graft.cleanpair"
-
-  private def pairToken(d: Store): String = {
-    val dt = d.contentToken; val mt = model.contentToken
-    if (dt.isEmpty || mt.isEmpty) "" else s"$dt|$mt"
-  }
-
-  private def pairClean(d: Store): Boolean = {
-    val t = pairToken(d)
-    t.nonEmpty && model.getMeta(CleanPairKey).contains(t)
-  }
-
-  private def stampCleanPair(): Unit =
-    docs.foreach { d =>
-      val t = pairToken(d)
-      if (t.nonEmpty) model.putMeta(CleanPairKey, t)
-    }
-
-  /** Whether the last [[run]] paid the startup reconcile — test
-    * observability for the clean-pair gating (no behavioral use). */
-  private[graft] var lastRunReconciled: Boolean = false
-
-  private def reconcileModel(): Unit = docs.foreach { d =>
-    if (docsEmpty(d)) return
-    val truth = classSums(d.df).filter(col("c0") > 0 || col("c1") > 0)
-    val luLit = () => lit(d.df.agg(max(col("lu"))).collect().head.get(0))
-    if (modelEmpty) {
-      if (!truth.isEmpty)
-        model.update(truth.withColumn(model.lastUpdatedField, luLit()),
-          Seq("bucket"))
-      return
-    }
-    val joined = truth.join(
-        model.df.select(col("bucket"), col("c0").cast("long").alias("__c0"),
-          col("c1").cast("long").alias("__c1"),
-          col(model.lastUpdatedField).alias("__lu")),
-        Seq("bucket"), "full_outer")
-      .filter(col("c0").isNull || col("__c0").isNull ||
-        col("c0") =!= col("__c0") || col("c1") =!= col("__c1"))
-      .materializeEager() // isEmpty + two consumers on one diff slice
-    try {
-      if (!joined.isEmpty) {
-        val fix = joined.filter(col("c0").isNotNull)
-          .select(col("bucket"), col("c0"), col("c1"),
-            coalesce(col("__lu"), luLit()).alias(model.lastUpdatedField))
-        model.update(fix, Seq("bucket"))
-        val gone = joined.filter(col("c0").isNull).select(col("bucket"))
-        if (!gone.isEmpty) model.removeKeys(gone)
-      }
-    } finally joined.unpersist()
-  }
+  protected val key = "bucket"
+  protected val counts = Seq("c0", "c1")
 
   /** `(id, bucket, tf, lbl, lu)` contribution rows of a batch — the
     * hashed feature counts each doc feeds [[graft.ext.QualityClassifier
-    * .train]], labeled and lu-stamped for the subtract path.
-    *
-    * r16: label + lu ride the SAME projection as the
-    * [[graft.functions.ClfBucketTf]] explode — the pre-r16 shape
-    * computed features separately and re-attached them with an id JOIN
-    * over the batch (a whole extra exchange pair on a frame derived
-    * from the batch itself; guide §2.4). Row set unchanged. */
-  private def contribOf(batch: DataFrame): DataFrame = {
-    val lu =
-      if (batch.columns.contains(source.lastUpdatedField))
-        col(source.lastUpdatedField)
-      else lit(null).cast("long")
+    * .train]], labeled and lu-stamped, in ONE projection over the
+    * [[graft.functions.ClfBucketTf]] explode (no id join back to the
+    * batch). */
+  protected def contribOf(batch: DataFrame): DataFrame =
     batch.select(col(source.key).alias("id"),
-        col(labelField).cast("int").alias("lbl"), lu.alias("lu"),
+        col(labelField).cast("int").alias("lbl"),
+        Contributions.lu(source, batch).alias("lu"),
         explode(graft.functions.GraftFunctions.clfBucketTf(batch.sparkSession,
           graft.ext.TextAnalysis.normTokens(col(textField)),
           buckets, family, seed)).alias("__bt"))
       .select(col("id"), col("__bt").getField("bucket").alias("bucket"),
         col("__bt").getField("tf").cast("long").alias("tf"),
         col("lbl"), col("lu"))
-  }
 
-  def run(): BuildReport = {
-    // store-emptiness probes are limit-1 jobs on a durable store — run
-    // each ONCE per build (lifecycle-row driver-job floor, VERDICT r16 #3)
-    val dEmpty: Option[Boolean] = docs.map(docsEmpty)
-    val mEmpty0 = modelEmpty
-    // a contributions store attached to an already-populated model has
-    // no per-doc history to subtract from — refuse instead of silently
-    // double-counting every doc
-    if (dEmpty.contains(true) && !mEmpty0) throw new IllegalArgumentException(
-      "QualityClfBuilder: `docs` contributions store is empty but the " +
-        "model is populated — the per-doc history needed for updates " +
-        "does not exist; rebuild from scratch or run without `docs`")
-    // repair a possibly-torn model/contributions pair BEFORE computing
-    // pending items — skipped when the clean-pair marker still matches
-    // (see reconcileModel); a throw anywhere below leaves the marker
-    // un-stamped, so the NEXT run reconciles
-    lastRunReconciled = docs.exists(d => !pairClean(d))
-    if (lastRunReconciled) reconcileModel()
-    // the reconcile can populate an empty model from the contributions —
-    // re-probe only on that (rare) path
-    val mEmpty = if (lastRunReconciled) modelEmpty else mEmpty0
-    // lu-newer docs: ids resolved up front, the class-sum subtraction
-    // and the stale-row drop DEFERRED into this run's two store writes
-    // (see changedIds) — pendingWith's semi-join re-surfaces them
-    val changed: Option[DataFrame] =
-      docs.flatMap(d => changedIds(d, dEmpty.contains(true)))
-    val updated = changed.map(_.count()).getOrElse(0L)
-    val subSlice = changed.filter(_ => updated > 0)
-    try {
-      // spread-checkpointed: the tokenize+hash kernel is CPU-dense per
-      // doc and must not inherit a 2-split scan
-      val batch = Builder.spreadCheckpoint(pendingWith(dEmpty, subSlice))
-      try {
-        // ONE header agg: batch size + new watermark
-        val luExpr =
-          if (batch.columns.contains(source.lastUpdatedField))
-            max(col(source.lastUpdatedField))
-          else max(lit(null).cast("long"))
-        val hdr = batch.agg(count(lit(1)).alias("__n"),
-          luExpr.alias("__lu")).head()
-        val examined = hdr.getLong(0)
-        if (examined == 0) {
-          stampCleanPair() // the reconcile (if any) committed; record it
-          return BuildReport(0, updated = updated)
-        }
-        val batchLu = hdr.get(1)
-        // typed null when the batch carries no lu (matches contribOf's
-        // long-typed null; a bare lit(null) is NullType and unwritable)
-        val luCol = if (batchLu == null) lit(null).cast("long") else lit(batchLu)
-        val counts = graft.ext.QualityClassifier.train(batch, textField,
-          labelField, buckets, family, seed)
-          .withColumnRenamed("c0", "__b0").withColumnRenamed("c1", "__b1")
-        val next =
-          if (mEmpty)
-            counts.select(col("bucket"), col("__b0").alias("c0"),
-              col("__b1").alias("c1"), luCol.alias(model.lastUpdatedField))
-          else subSlice match {
-            case None =>
-              val existing = model.df.select(col("bucket"),
-                col("c0").cast("long").alias("__o0"),
-                col("c1").cast("long").alias("__o1"))
-              counts.join(existing, Seq("bucket"), "left_outer")
-                .select(col("bucket"),
-                  (col("__b0") + coalesce(col("__o0"), lit(0L))).alias("c0"),
-                  (col("__b1") + coalesce(col("__o1"), lit(0L))).alias("c1"),
-                  luCol.alias(model.lastUpdatedField))
-            case Some(ch) =>
-              // the changed docs' OLD class sums ride the SAME
-              // bucket-keyed merge as the batch adds (deferred negative
-              // side: c = batch + persisted − dropped, equal to the r16
-              // subtract-then-add by associativity and sub ≤ persisted
-              // under the pair invariant); decrement-only buckets keep
-              // their stored lu, exactly as the r16 decrement wrote them
-              val sub = classSums(d_dfOf(ch))
-                .withColumnRenamed("c0", "__s0").withColumnRenamed("c1", "__s1")
-              val existing = model.df.select(col("bucket"),
-                col("c0").cast("long").alias("__o0"),
-                col("c1").cast("long").alias("__o1"),
-                col(model.lastUpdatedField).alias("__mlu"))
-              counts.join(sub, Seq("bucket"), "full_outer")
-                .join(existing, Seq("bucket"), "left_outer")
-                .select(col("bucket"),
-                  (coalesce(col("__b0"), lit(0L)) +
-                    coalesce(col("__o0"), lit(0L)) -
-                    coalesce(col("__s0"), lit(0L))).alias("c0"),
-                  (coalesce(col("__b1"), lit(0L)) +
-                    coalesce(col("__o1"), lit(0L)) -
-                    coalesce(col("__s1"), lit(0L))).alias("c1"),
-                  when(col("__b0").isNotNull, luCol)
-                    .otherwise(col("__mlu")).alias(model.lastUpdatedField))
-          }
-        // contributions land FIRST (the source of truth the reconcile
-        // recomputes from), the model cache second; the clean-pair
-        // marker is stamped ONLY after both committed — a tear anywhere
-        // leaves it stale and the next run repairs
-        subSlice match {
-          case None =>
-            docs.foreach(d => d.update(contribOf(batch), Seq("id", "bucket")))
-            model.update(next, Seq("bucket"))
-          case Some(ch) =>
-            val merged = next.materializeEager() // ups/gone/isEmpty, one slice
-            try {
-              val ups = merged.filter(col("c0") > 0 || col("c1") > 0)
-              val gone = merged.filter(col("c0") <= 0 && col("c1") <= 0)
-                .select(col("bucket"))
-              // stale contribution rows leave in the SAME committed write
-              // that absorbs the batch — ONE version rewrite where the
-              // r16 shape paid removeKeys + a full compound-key upsert
-              docs.foreach(d =>
-                d.updateRemoveKeys(contribOf(batch), ch, Seq("id", "bucket")))
-              // buckets zeroed on BOTH classes leave the model in the
-              // same write (from-scratch convergence)
-              if (gone.isEmpty) model.update(ups, Seq("bucket"))
-              else model.updateRemoveKeys(ups, gone, Seq("bucket"))
-            } finally merged.unpersist()
-        }
-        stampCleanPair()
-        BuildReport(examined, updated = updated)
-      } finally batch.unpersist()
-    } finally changed.foreach(_.unpersist())
-  }
-
-  /** The changed docs' contribution slice — the negative side of the
-    * deferred merge (see [[changedIds]]). */
-  private def d_dfOf(ch: DataFrame): DataFrame =
-    docs.get.df.join(ch, Seq("id"), "left_semi")
+  /** Per-class sums in the model layout — the exact
+    * [[graft.ext.QualityClassifier.train]] accounting (marker rows at
+    * bucket −1 carry the per-class doc counts). */
+  protected def sums(contribs: DataFrame): DataFrame =
+    contribs.groupBy(col("bucket"))
+      .agg(sum(when(col("lbl") === 0, col("tf").cast("long")).otherwise(0L)).alias("c0"),
+        sum(when(col("lbl") === 1, col("tf").cast("long")).otherwise(0L)).alias("c1"))
 
   /** Score docs against the PERSISTED counts. */
   def score(df: DataFrame, idCol: String, textCol: String): DataFrame =

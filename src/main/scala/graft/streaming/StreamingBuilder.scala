@@ -39,14 +39,8 @@ class StreamingBuilder(
       case Some(d) if source.columns.contains(lu) => source.withWatermark(lu, d)
       case _ => source
     }
-    var writer = transform(watermarked).writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) target.update(batch, Seq(target.key))
-      }
-    trigger.foreach(t => writer = writer.trigger(t))
-    checkpoint.foreach(c => writer = writer.option("checkpointLocation", c))
-    writer.start()
+    StreamingBuilder.foreachNonEmpty(transform(watermarked), checkpoint, trigger)(
+      batch => target.update(batch, Seq(target.key)))
   }
 
   /** Start the continuous build; returns the query handle. */
@@ -57,6 +51,21 @@ class StreamingBuilder(
 }
 
 object StreamingBuilder {
+  /** The update-mode `foreachBatch` sink every stream plane shares: `f`
+    * runs on each NON-EMPTY micro-batch; `checkpoint` wires the query's
+    * recovery location and `trigger` (default: as fast as possible) its
+    * cadence. */
+  private def foreachNonEmpty(stream: DataFrame, checkpoint: Option[String],
+                              trigger: Option[Trigger] = None)
+                             (f: DataFrame => Unit): StreamingQuery = {
+    var writer = stream.writeStream
+      .outputMode("update")
+      .foreachBatch { (batch: DataFrame, _: Long) => if (!batch.isEmpty) f(batch) }
+    trigger.foreach(t => writer = writer.trigger(t))
+    checkpoint.foreach(c => writer = writer.option("checkpointLocation", c))
+    writer.start()
+  }
+
   /** Windowed aggregation over an event-time stream — the watermarked
     * `groupBy(window(...))` shape (Structured Streaming's native
     * replacement for the reference's absent stream processing). Returns
@@ -114,21 +123,14 @@ object StreamingBuilder {
     require(method == "minhash" || method == "simhash" || method == "ngram" ||
         method == "semantic" || method == "image",
       s"dedupStream supports minhash|simhash|ngram|semantic|image, got '$method'")
-    var writer = stream.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val src = new graft.store.TableStore(batch.sparkSession, batch,
-            "stream-batch", key)
-          new graft.builder.DedupBuilder(src, target, textField, method,
-            threshold = threshold, indexStore = Some(indexStore),
-            nCentroids = nCentroids, numHashes = numHashes, bands = bands,
-            shingleSize = shingleSize, family = family).run()
-          ()
-        }
-      }
-    checkpoint.foreach(c => writer = writer.option("checkpointLocation", c))
-    writer.start()
+    foreachNonEmpty(stream, checkpoint) { batch =>
+      val src = new graft.store.TableStore(batch.sparkSession, batch,
+        "stream-batch", key)
+      new graft.builder.DedupBuilder(src, target, textField, method,
+        threshold = threshold, indexStore = Some(indexStore),
+        nCentroids = nCentroids, numHashes = numHashes, bands = bands,
+        shingleSize = shingleSize, family = family).run()
+    }
   }
 
   /** Streaming IVF-PQ index maintenance: one [[graft.builder
@@ -150,31 +152,17 @@ object StreamingBuilder {
     // startup work then run once per QUERY, not once per micro-batch
     var current: DataFrame = null
     var builder: graft.builder.AnnIndexBuilder = null
-    var writer = stream.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          current = batch
-          if (builder == null)
-            builder = new graft.builder.AnnIndexBuilder(
-              new graft.store.TableStore(batch.sparkSession, current,
-                "stream-batch", key),
-              index, quantizer, vecField, nCentroids, m, ksub, iters, family)
-          builder.run()
-          ()
-        }
-      }
-    checkpoint.foreach(c => writer = writer.option("checkpointLocation", c))
-    writer.start()
+    foreachNonEmpty(stream, checkpoint) { batch =>
+      current = batch
+      if (builder == null)
+        builder = new graft.builder.AnnIndexBuilder(
+          new graft.store.TableStore(batch.sparkSession, current,
+            "stream-batch", key),
+          index, quantizer, vecField, nCentroids, m, ksub, iters, family)
+      builder.run()
+    }
   }
 
-  /** Streaming twin of the incremental BM25 index
-    * ([[graft.builder.Bm25IndexBuilder]]): each micro-batch indexes
-    * through the SAME builder, so postings append O(batch), the stats
-    * row merges additively, and serving (`Bm25IndexBuilder.topK` over
-    * the same stores) answers exactly what a batch-driven build answers
-    * — streaming state lives in the stores, not the query, the contract
-    * every streaming plane here shares. */
   /** Streaming twin of the incremental quality classifier
     * ([[graft.builder.QualityClfBuilder]]): each micro-batch of labeled
     * documents trains through the SAME builder, so the per-class bucket
@@ -196,51 +184,45 @@ object StreamingBuilder {
     // price per trigger, never per instance re-setup
     var current: DataFrame = null
     var builder: graft.builder.QualityClfBuilder = null
-    var writer = stream.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          current = batch
-          if (builder == null)
-            builder = new graft.builder.QualityClfBuilder(
-              new graft.store.TableStore(batch.sparkSession, current,
-                "stream-batch", key, lastUpdated),
-              model, textField, labelField, buckets, family, seed)
-          builder.run()
-          ()
-        }
-      }
-    checkpoint.foreach(c => writer = writer.option("checkpointLocation", c))
-    writer.start()
+    foreachNonEmpty(stream, checkpoint) { batch =>
+      current = batch
+      if (builder == null)
+        builder = new graft.builder.QualityClfBuilder(
+          new graft.store.TableStore(batch.sparkSession, current,
+            "stream-batch", key, lastUpdated),
+          model, textField, labelField, buckets, family, seed)
+      builder.run()
+    }
   }
 
+  /** Streaming twin of the incremental BM25 index
+    * ([[graft.builder.Bm25IndexBuilder]]): each micro-batch indexes
+    * through the SAME builder, so postings append O(batch), the stats
+    * row merges additively, and serving (`Bm25IndexBuilder.topK` over
+    * the same stores) answers exactly what a batch-driven build answers
+    * — streaming state lives in the stores, not the query, the contract
+    * every streaming plane here shares. */
   def bm25IndexStream(stream: DataFrame, key: String, textField: String,
                       index: Store, stats: Store,
                       k1: Double = 1.2, b: Double = 0.75,
                       checkpoint: Option[String] = None): StreamingQuery = {
     require(stream.isStreaming, "bm25IndexStream needs a streaming DataFrame")
     // ONE builder across triggers (TableStore's by-name df reads the
-    // current batch): the torn-pair reconcile recount then runs once at
-    // query start — never per micro-batch — and an in-stream write
-    // failure flips the builder's own suspect flag for the retry
+    // current batch): per-instance caches (the stats row) then live per
+    // QUERY, and the clean-pair marker gates the torn-pair recount, so
+    // it runs at query start and after a failed write, never per
+    // micro-batch
     var current: DataFrame = null
     var builder: graft.builder.Bm25IndexBuilder = null
-    var writer = stream.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          current = batch
-          if (builder == null)
-            builder = new graft.builder.Bm25IndexBuilder(
-              new graft.store.TableStore(batch.sparkSession, current,
-                "stream-batch", key),
-              index, stats, textField, k1, b)
-          builder.run()
-          ()
-        }
-      }
-    checkpoint.foreach(c => writer = writer.option("checkpointLocation", c))
-    writer.start()
+    foreachNonEmpty(stream, checkpoint) { batch =>
+      current = batch
+      if (builder == null)
+        builder = new graft.builder.Bm25IndexBuilder(
+          new graft.store.TableStore(batch.sparkSession, current,
+            "stream-batch", key),
+          index, stats, textField, k1, b)
+      builder.run()
+    }
   }
 
   /** Streaming twin of the END-TO-END curation chain
@@ -270,22 +252,15 @@ object StreamingBuilder {
     // ONE builder across triggers: store reads (source/facts/target)
     // are by-path, so every run sees the accumulated state
     var builder: graft.builder.CurateBuilder = null
-    var writer = stream.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          source.update(batch, Seq(key))
-          if (builder == null)
-            builder = new graft.builder.CurateBuilder(source, target,
-              model = model, eval = eval, textField = textField,
-              stratumField = stratumField, clfThreshold = clfThreshold,
-              mixRates = mixRates, mixDefaultRate = mixDefaultRate,
-              seqLen = seqLen, facts = Some(facts))
-          builder.run()
-          ()
-        }
-      }
-    checkpoint.foreach(c => writer = writer.option("checkpointLocation", c))
-    writer.start()
+    foreachNonEmpty(stream, checkpoint) { batch =>
+      source.update(batch, Seq(key))
+      if (builder == null)
+        builder = new graft.builder.CurateBuilder(source, target,
+          model = model, eval = eval, textField = textField,
+          stratumField = stratumField, clfThreshold = clfThreshold,
+          mixRates = mixRates, mixDefaultRate = mixDefaultRate,
+          seqLen = seqLen, facts = Some(facts))
+      builder.run()
+    }
   }
 }

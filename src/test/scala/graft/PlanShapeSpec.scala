@@ -460,6 +460,100 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  test("count-model builders: insert, lu-update and no-op runs stay at their job pins; pendingItems previews exactly the processed ids") {
+    import org.apache.spark.TestListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions._
+    import graft.builder.{AnnIndexBuilder, Bm25IndexBuilder, Builder, QualityClfBuilder,
+      UnigramLmBuilder}
+    import graft.store.{MemoryStore, ParquetStore, Store}
+    val s = spark; import s.implicits._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val base = java.nio.file.Files.createTempDirectory("ps_countjobs").toString
+    val texts = Seq("alpha beta alpha gamma", "beta gamma delta", "win money free now",
+      "nice article about science", "", "great science text today",
+      "delta epsilon zeta", "alpha zeta money")
+    def vec(i: Long) = Seq(i.toDouble, (i * 7 % 5).toDouble, (i * 3 % 4).toDouble, 1.0)
+    val run1 = texts.zipWithIndex.map { case (t, i) => (i + 1L, t, i % 2, 1L, vec(i + 1L)) }
+    // run 2: doc 2 is re-written (and relabeled), doc 9 is new
+    val run2 = Seq((2L, "beta science news", 0, 2L, vec(5L)),
+      (9L, "fresh gamma words", 1, 2L, vec(9L)))
+    val cols = Seq("doc_id", "text", "label", "lu", "embedding")
+    // per-doc max lu the contributions (or postings) carry — a run
+    // processed exactly the ids whose entry appeared or changed
+    def absorbed(st: Store): Map[Long, Long] =
+      if (!st.df.columns.contains("lu")) Map.empty
+      else st.df.groupBy(col("id")).agg(max(col("lu")).cast("long"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // `pins` are the Spark jobs of the insert, lu-update and no-op runs —
+    // a pin moves only with a deliberate change to a builder's job plan
+    def check(name: String, src: MemoryStore, contrib: Store, mk: () => Builder,
+              pins: Seq[Int]): Unit = {
+      src.load(run1.toDF(cols: _*))
+      val got = Seq(None, Some(run2), None).map { delta =>
+        delta.foreach(d => src.update(d.toDF(cols: _*)))
+        val pending = mk().pendingItems().select(col("doc_id")).as[Long]
+          .collect().toSet
+        val before = absorbed(contrib)
+        TestListenerBus.drain(spark.sparkContext)
+        jobs.set(0)
+        val report = mk().run()
+        TestListenerBus.drain(spark.sparkContext)
+        val n = jobs.get()
+        val after = absorbed(contrib)
+        val processed = after.keySet.filter(k => before.get(k) != after.get(k))
+        assert(pending === processed, s"$name: pendingItems previewed " +
+          s"${pending.toSeq.sorted}, the run processed ${processed.toSeq.sorted}")
+        assert(report.processed === pending.size.toLong, s"$name: report")
+        n
+      }
+      assert(got === pins, s"$name: jobs per run (insert, lu-update, no-op)")
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      locally {
+        val src = new MemoryStore(spark, "pjUlmSrc", "doc_id", "lu")
+        val vocab = new ParquetStore(spark, s"$base/vocab", "tok", "last_updated",
+          deltaWrites = true)
+        val contrib = new ParquetStore(spark, s"$base/udocs", "id", "lu",
+          deltaWrites = true)
+        check("UnigramLm", src, contrib,
+          () => new UnigramLmBuilder(src, vocab, "text", docs = Some(contrib)),
+          Seq(7, 26, 16))
+      }
+      locally {
+        val src = new MemoryStore(spark, "pjClfSrc", "doc_id", "lu")
+        val model = new ParquetStore(spark, s"$base/model", "bucket", "last_updated",
+          deltaWrites = true)
+        val contrib = new ParquetStore(spark, s"$base/qdocs", "id", "lu",
+          deltaWrites = true)
+        check("QualityClf", src, contrib,
+          () => new QualityClfBuilder(src, model, "text", "label", docs = Some(contrib)),
+          Seq(7, 29, 12))
+      }
+      locally {
+        val src = new MemoryStore(spark, "pjBmSrc", "doc_id", "lu")
+        val index = new ParquetStore(spark, s"$base/idx", "id", "term",
+          deltaWrites = true)
+        val stats = new ParquetStore(spark, s"$base/st", "sid", "sid")
+        check("Bm25", src, index,
+          () => new Bm25IndexBuilder(src, index, stats, "text"), Seq(11, 24, 9))
+      }
+      locally {
+        val src = new MemoryStore(spark, "pjAnnSrc", "doc_id", "lu")
+        val index = new ParquetStore(spark, s"$base/ann", "id", "cell",
+          deltaWrites = true)
+        val qz = new ParquetStore(spark, s"$base/qz", "qid", "qid")
+        check("AnnIndex", src, index,
+          () => new AnnIndexBuilder(src, index, qz, "embedding", nCentroids = 2,
+            m = 2, ksub = 4, family = "md5"), Seq(19, 18, 13))
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("text-profile queries ride the compiled kernels, not regex scans") {
     val g = plan("text_gopher_rules")
     assert(g.contains("graft_text_profile") || g.contains("profileLower"),

@@ -1853,6 +1853,59 @@ class RunnerStreamingSpec extends SparkSpec {
     assert(rowsOf(torn.topK(queries, k = 8)) === healthy)
   }
 
+  test("Bm25IndexBuilder reads only its own row from a shared stats store, in one action") {
+    import graft.builder.Bm25IndexBuilder
+    import graft.store.{MemoryStore, ParquetStore}
+    import org.apache.spark.TestListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val s = spark; import s.implicits._
+    val docs = sf("documents").select(col("doc_id"), col("text"))
+    val src = new MemoryStore(spark, "bmshared", key = "doc_id", lastUpdatedField = "doc_id")
+    val idxRoot = java.nio.file.Files.createTempDirectory("bms_idx").toString
+    val stRoot = java.nio.file.Files.createTempDirectory("bms_st").toString
+    def idxStore() = new ParquetStore(spark, idxRoot, "id", "term", deltaWrites = true)
+    def stStore() = new ParquetStore(spark, stRoot, "sid", "sid")
+    // another writer's row is in the stats store before the first build
+    stStore().update(Seq(("other", 999L, 99999L)).toDF("sid", "n_docs", "sum_dl"),
+      Seq("sid"))
+    def builder() = new Bm25IndexBuilder(src, idxStore(), stStore(), "text")
+    src.load(docs.filter(col("doc_id") % 2 === 0))
+    builder().run()
+    src.load(docs)
+    builder().run()
+    assert(stStore().df.count() === 2)
+    val queries = docs.filter(col("doc_id") % 89 === 0)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("q_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    val scratch = rowsOf(graft.ext.TextAnalysis.bm25TopK(
+      docs, queries, "doc_id", "text", k = 8))
+    assert(scratch.nonEmpty)
+    assert(rowsOf(builder().topK(queries, k = 8)) === scratch)
+    // the stats read is one job (the store holds two rows in two
+    // partitions, so a limit-based read would pay a second); a repeat
+    // read is cached
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val n = docs.count()
+    val stats = stStore()
+    stats.df.columns // a fresh ParquetStore pays its first-touch schema read here
+    val b = new Bm25IndexBuilder(src, idxStore(), stats, "text")
+    TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val st = b.loadStats()
+      TestListenerBus.drain(spark.sparkContext)
+      assert(jobs.get() === 1)
+      assert(st.exists { case (nDocs, sumDl) => nDocs == n && sumDl > 0 })
+      b.loadStats()
+      TestListenerBus.drain(spark.sparkContext)
+      assert(jobs.get() === 1)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("Bm25IndexBuilder incremental runs touch O(batch) files; Runner bm25_index spec wires the plane") {
     import graft.store.{MemoryStore, ParquetStore}
     import java.nio.file.{Files, Paths}
