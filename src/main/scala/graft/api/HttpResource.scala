@@ -191,24 +191,6 @@ object ReadResource {
   val injectedCap: Int = 1000
 }
 
-/** Read-only [[Store]] over a re-evaluated frame — lets a resource serve
-  * a live derived view (e.g. submissions with their current state) whose
-  * underlying store mutates between requests. */
-private[api] class ViewStore(
-    val spark: org.apache.spark.sql.SparkSession,
-    val name: String,
-    val key: String,
-    override val lastUpdatedField: String,
-    frame: () => DataFrame) extends Store {
-  def df: DataFrame = frame()
-  override def update(docs: DataFrame, keyFields: Seq[String]): Unit =
-    throw new UnsupportedOperationException(s"ViewStore $name is read-only")
-  override def removeDocs(criteria: String): Unit =
-    throw new UnsupportedOperationException(s"ViewStore $name is read-only")
-  override def removeKeys(keys: DataFrame): Unit =
-    throw new UnsupportedOperationException(s"ViewStore $name is read-only")
-}
-
 /** A14 serving plane (reference `api/resource/submission.py:21-390`):
   * `POST /{name}` submits documents with duplicate rejection (all-dup
   * batch → 409), `PATCH /{name}/{submission_id}` appends to the state
@@ -220,8 +202,9 @@ class SubmissionResource(
     timeoutMs: Long = 0,
     responseHeaders: Map[String, String] = Map.empty)
   extends ReadResource(
-    new ViewStore(sub.inner.spark, s"${sub.inner.name}-submissions",
-      "submission_id", "last_updated", () => sub.withCurrentState),
+    // by-name frame: every read sees the live submissions
+    new graft.store.TableStore(sub.inner.spark, sub.withCurrentState,
+      s"${sub.inner.name}-submissions", "submission_id"),
     // countTtlMs = 0: a live intake view must reflect every submission
     // in total_doc immediately — no cached counts
     ops, None, timeoutMs, responseHeaders, countTtlMs = 0) {

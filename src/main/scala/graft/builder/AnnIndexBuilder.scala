@@ -1,6 +1,5 @@
 package graft.builder
 
-import graft.builder.Builder.MaterializeOps
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.ext.Similarity
 import graft.query.MongoFilter
@@ -272,18 +271,9 @@ class AnnIndexBuilder(
   }
 
   /** Docs gone from the (scoped) corpus leave the index too — the
-    * MapBuilder orphan contract on the codes table (checkpoint: count +
-    * removeKeys are two actions over the same key set). */
-  private def removeOrphans(corpus: DataFrame): Long = {
-    if (!index.df.columns.contains("id")) return 0L
-    val orphanKeys = index.df.select(col("id"))
-      .join(corpus.select(col(source.key).alias("id")), Seq("id"), "left_anti")
-      .materializeEager()
-    val orphans = orphanKeys.count()
-    if (orphans > 0) index.removeKeys(orphanKeys)
-    orphanKeys.unpersist()
-    orphans
-  }
+    * MapBuilder orphan contract on the codes table. */
+  private def removeOrphans(corpus: DataFrame): Long =
+    Builder.sweepOrphans(index, "id", corpus.select(col(source.key)))
 
   /** Retrain the quantizer from the CURRENT corpus and re-encode every
     * doc — the staleness escape hatch for a drifted corpus ([[run]]'s

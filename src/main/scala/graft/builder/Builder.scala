@@ -1,6 +1,8 @@
 package graft.builder
 
+import graft.store.Store
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Build-run report (role of the reference's ReportingHandler events,
   * `utils.py:221-263`). */
@@ -107,5 +109,23 @@ object Builder {
       raw.unpersist()
       spread
     }
+  }
+
+  /** The orphan sweep: remove the rows of `target` whose `keyCol` value
+    * is absent from `live` (a one-column frame of live keys, any column
+    * name). Materialized once because the count and `removeKeys` are two
+    * actions over the same key set. A target that has never been written
+    * (no `keyCol` in its schema) has no orphans. Returns the count. */
+  private[builder] def sweepOrphans(target: Store, keyCol: String, live: DataFrame): Long = {
+    val t = target.df
+    if (!t.columns.contains(keyCol)) return 0L
+    val orphans = t.select(col(keyCol))
+      .join(live.select(col(live.columns.head).alias(keyCol)), Seq(keyCol), "left_anti")
+      .materializeEager()
+    try {
+      val n = orphans.count()
+      if (n > 0) target.removeKeys(orphans)
+      n
+    } finally orphans.unpersist()
   }
 }

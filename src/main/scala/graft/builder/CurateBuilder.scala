@@ -406,17 +406,8 @@ class CurateBuilder(
       else out.withColumnRenamed(source.key, target.key)
     target.update(keyed, Seq(target.key))
     val orphans =
-      if (deleteOrphans && target.df.columns.contains(target.key)) {
-        val stale = target.df.select(col(target.key))
-          .join(out.select(col(source.key).alias(target.key)),
-            Seq(target.key), "left_anti")
-          .materializeEager()
-        try {
-          val n = stale.count()
-          if (n > 0) target.removeKeys(stale)
-          n
-        } finally stale.unpersist()
-      } else 0L
+      if (deleteOrphans) Builder.sweepOrphans(target, target.key, out.select(col(source.key)))
+      else 0L
     (kept, orphans)
   }
 }

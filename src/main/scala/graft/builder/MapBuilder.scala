@@ -139,17 +139,12 @@ class MapBuilder(
     if (processed > 0) target.update(mat, Seq(target.key))
     mat.unpersist()
 
-    var orphans = 0L
-    if (deleteOrphans) {
-      // checkpoint for the same reason: count + removeKeys are two actions
-      val orphanKeys = target.df.select(col(target.key))
-        .join(source.df.select(col(source.key).alias(target.key)),
-              Seq(target.key), "left_anti")
-        .materializeEager()
-      orphans = orphanKeys.count()
-      if (orphans > 0) target.removeKeys(orphanKeys)
-      orphanKeys.unpersist()
-    }
+    // live keys = the FULL source, not the criteria scope (reference
+    // `map_builder.py`)
+    val orphans =
+      if (deleteOrphans)
+        Builder.sweepOrphans(target, target.key, source.df.select(col(source.key)))
+      else 0L
     BuildReport(processed, failed, orphans)
   }
 

@@ -1,7 +1,6 @@
 package graft.store
 
-import graft.query.MongoFilter
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** C6 `FileStore` (reference `stores/file_store.py:36-520`): a directory
@@ -29,7 +28,7 @@ class FileStore(
     val maxDepth: Int = -1,
     val readContents: Boolean = false,
     val contentsSizeCap: Long = 4L * 1024 * 1024)
-  extends Store {
+  extends SnapshotStore {
 
   val key: String = "file_id"
   override val lastUpdatedField: String = "last_updated"
@@ -74,8 +73,10 @@ class FileStore(
 
   private def sidecar: Option[DataFrame] = {
     val p = new java.io.File(new java.net.URI(s"file://$sidecarPath").getPath)
+    // a sidecar emptied by removals reads with no columns: no metadata
     if (!p.exists()) None
     else Some(spark.read.option("multiLine", true).json(sidecarPath))
+      .filter(_.columns.contains(key))
   }
 
   /** Files left-joined with sidecar metadata; metadata rows whose file is
@@ -97,30 +98,13 @@ class FileStore(
           metaOnly.map(col)): _*)
   }
 
-  /** Metadata upsert: merge into the sidecar (protected engine keys are
-    * stripped, `file_store.py:389-398`). */
-  override def update(docs: DataFrame, keyFields: Seq[String] = Seq(key)): Unit = {
-    val clean = docs.columns.filter(c => protectedKeys.contains(c) && c != "file_id")
-      .foldLeft(docs)((d, c) => d.drop(c))
-    val merged = sidecar match {
-      case None => Store.dedupLastWins(clean, keyFields)
-      case Some(m) => Store.upsertPlan(m, clean, keyFields)
-    }
-    writeSidecar(merged)
-  }
+  protected def snapshot: Option[DataFrame] = sidecar
 
-  override def removeDocs(criteria: String): Unit = sidecar.foreach { m =>
-    writeSidecar(m.filter(!coalesce(
-      MongoFilter.compile(criteria, Some(m.schema)), lit(false))))
-  }
-
-  override def removeKeys(keys: DataFrame): Unit = sidecar.foreach { m =>
-    writeSidecar(m.join(keys.select(col(keys.columns.head).alias(key)),
-      Seq(key), "left_anti"))
-  }
-
-  private def writeSidecar(m: DataFrame): Unit = {
-    val rows = m.toJSON.collect()  // sidecar metadata is small by contract
+  /** Write the sidecar; protected engine keys are stripped from every
+    * commit (`file_store.py:389-398`). */
+  protected def commit(m: DataFrame): Unit = {
+    val meta = m.drop(m.columns.filter(c => protectedKeys.contains(c) && c != "file_id"): _*)
+    val rows = meta.toJSON.collect()  // sidecar metadata is small by contract
     val json = rows.mkString("[", ",\n", "]")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(
       new java.net.URI(s"file://$sidecarPath").getPath), json)

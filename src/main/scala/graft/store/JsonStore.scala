@@ -20,7 +20,7 @@ class JsonStore(
     override val lastUpdatedField: String = "last_updated",
     val multiLine: Boolean = true,
     val readOnly: Boolean = true)
-  extends Store {
+  extends SnapshotStore {
 
   val name: String = s"json:${paths.mkString(",")}"
 
@@ -71,7 +71,17 @@ class JsonStore(
     }
   }
 
-  private def persist(next: DataFrame): Unit = {
+  // refuse before any plan is built: a read-only store never reads its
+  // files on a write
+  override protected def writing[T](body: => T): T = {
+    require(!readOnly, s"JsonStore $name is read-only")
+    body
+  }
+
+  // an empty JSON file reads with no columns: nothing is committed yet
+  protected def snapshot: Option[DataFrame] = Some(df).filter(_.columns.contains(key))
+
+  protected def commit(next: DataFrame): Unit = {
     val snap = next.localCheckpoint(true) // sever lineage from overlayDir
     // the replaced snapshot's blocks are dead weight: any frame handed
     // out before this write was already invalid (its overlay files are
@@ -83,43 +93,21 @@ class JsonStore(
     java.nio.file.Files.write(
       overlaySchemaFile.toPath, snap.schema.json.getBytes("UTF-8"))
   }
-
-  override def update(docs: DataFrame, keyFields: Seq[String] = Seq(key)): Unit = {
-    require(!readOnly, s"JsonStore $name is read-only")
-    persist(Store.upsertPlan(df, docs, keyFields))
-  }
-
-  override def removeDocs(criteria: String): Unit = {
-    require(!readOnly, s"JsonStore $name is read-only")
-    val t = df
-    persist(t.filter(!coalesce(
-      graft.query.MongoFilter.compile(criteria, Some(t.schema)), lit(false))))
-  }
-
-  override def removeKeys(keys: DataFrame): Unit = {
-    require(!readOnly, s"JsonStore $name is read-only")
-    persist(df.join(keys.select(col(keys.columns.head).alias(key)),
-      Seq(key), "left_anti"))
-  }
 }
 
 /** Read-only store over an arbitrary DataFrame or parquet path — the
   * adapter that lets every engine operator run over the TESTDATA tables
-  * or any externally-produced DataFrame. */
+  * or any externally-produced DataFrame. `data` is by-name, re-read on
+  * every access: a live view (a stream's current micro-batch, a frame
+  * derived from a store that mutates between requests) stays live. */
 class TableStore(
     val spark: SparkSession,
     data: => DataFrame,
     val name: String,
     val key: String,
     override val lastUpdatedField: String = "last_updated")
-  extends Store {
+  extends ReadOnlyStore {
   def df: DataFrame = data
-  override def update(docs: DataFrame, keyFields: Seq[String]): Unit =
-    throw new UnsupportedOperationException(s"TableStore $name is read-only")
-  override def removeDocs(criteria: String): Unit =
-    throw new UnsupportedOperationException(s"TableStore $name is read-only")
-  override def removeKeys(keys: DataFrame): Unit =
-    throw new UnsupportedOperationException(s"TableStore $name is read-only")
 }
 
 object TableStore {

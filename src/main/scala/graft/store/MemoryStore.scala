@@ -1,8 +1,6 @@
 package graft.store
 
-import graft.query.MongoFilter
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** In-memory writable store (reference `MemoryStore`,
   * `stores/mongolike.py:506-603`): the DataFrame-native equivalent of a
@@ -17,7 +15,7 @@ class MemoryStore(
     val name: String = "memory",
     val key: String = "task_id",
     override val lastUpdatedField: String = "last_updated")
-  extends Store {
+  extends SnapshotStore {
 
   private var current: Option[DataFrame] = None
   // true when `current` is a checkpoint THIS store created (mutation
@@ -47,51 +45,20 @@ class MemoryStore(
     generation.incrementAndGet(); this
   }
 
-  override def update(docs: DataFrame, keyFields: Seq[String] = Seq(key)): Unit = {
-    val next = current match {
-      case None => Store.dedupLastWins(docs, keyFields)
-      case Some(t) => Store.upsertPlan(t, docs, keyFields)
-    }
-    // materialize eagerly: update() must be visible to subsequent reads
-    // and must not grow an unbounded lazy plan across many updates
-    val materialized = next.localCheckpoint(true)
-    replace(materialized)
-  }
+  protected def snapshot: Option[DataFrame] = current
 
-  override def removeDocs(criteria: String): Unit = current.foreach { t =>
-    replace(t.filter(!coalesce(MongoFilter.compile(criteria, Some(t.schema)),
-                               lit(false))).localCheckpoint(true))
-  }
-
-  override def removeKeys(keys: DataFrame): Unit = current.foreach { t =>
-    replace(t.join(keys.select(col(keys.columns.head).alias(key)),
-      Seq(key), "left_anti").localCheckpoint(true))
-  }
-
-  /** Fused remove+upsert as ONE checkpointed plan (see
-    * [[Store.updateRemoveKeys]]) — one materialization pass instead of
-    * two over the whole store. */
-  override def updateRemoveKeys(docs: DataFrame, removals: DataFrame,
-                                keyFields: Seq[String] = Seq(key)): Unit =
-    current match {
-      case None => update(docs, keyFields)
-      case Some(t) =>
-        val cleaned = t.join(
-          removals.select(col(removals.columns.head).alias(key)),
-          Seq(key), "left_anti")
-        replace(Store.upsertPlan(cleaned, docs, keyFields).localCheckpoint(true))
-    }
-
-  /** Swap in the freshly-checkpointed contents and free the replaced
-    * snapshot's blocks — a long foreachBatch loop of update() calls must
-    * hold ONE generation of blocks, not every generation until GC. Like
+  /** Checkpoint `next` eagerly (a write must be visible to subsequent
+    * reads and must not grow an unbounded lazy plan across many writes),
+    * swap it in and free the replaced snapshot's blocks — a long
+    * foreachBatch loop of update() calls must hold ONE generation of
+    * blocks, not every generation until GC. Like
     * every durable store whose files rotate on write, a frame handed out
     * before a mutation is invalid after it (mongomock semantics: cursors
     * don't span writes). Only store-owned checkpoints are freed: a
     * `load`ed frame belongs to the caller. */
-  private def replace(next: DataFrame): Unit = {
+  protected def commit(next: DataFrame): Unit = {
     val old = if (ownsCurrent) current else None
-    current = Some(next)
+    current = Some(next.localCheckpoint(true))
     ownsCurrent = true
     generation.incrementAndGet()
     old.foreach(_.unpersist())

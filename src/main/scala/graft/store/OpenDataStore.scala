@@ -1,6 +1,5 @@
 package graft.store
 
-import graft.query.MongoFilter
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +28,7 @@ class OpenDataStore(
     val key: String = "task_id",
     override val lastUpdatedField: String = "last_updated",
     val writeShards: Int = 8)
-  extends Store {
+  extends SnapshotStore {
 
   require(objectGrouping.nonEmpty, "objectGrouping must name partition columns")
   val name: String = s"opendata:$root"
@@ -97,7 +96,20 @@ class OpenDataStore(
     storeManifest(rowsR.recover { case _ => manifest.toJSON.collect() }.get)
   }
 
-  override def update(docs: DataFrame, keyFields: Seq[String] = Seq(key)): Unit =
+  protected def snapshot: Option[DataFrame] = if (isEmpty) None else Some(df)
+
+  /** Removals rewrite the whole layout: a static overwrite of the
+    * checkpointed contents, whose lineage is severed from the files
+    * being overwritten. */
+  protected def commit(next: DataFrame): Unit = {
+    val keep = next.localCheckpoint(true)
+    try writeDataAndManifest(keep, "static", manifestOf(keep))
+    finally keep.unpersist()
+  }
+
+  /** Upserts merge only the partitions they touch (dynamic overwrite). */
+  override protected def upsert(docs: DataFrame, keyFields: Seq[String],
+                                batchUnique: Boolean): Unit =
     if (isEmpty) {
       // FIRST BUILD: nothing on disk is being replaced, so no lineage to
       // sever — when the batch plan is ORDER-STABLE (deterministic scan,
@@ -149,21 +161,6 @@ class OpenDataStore(
       try writeDataAndManifest(next, "dynamic", fresh.unionByName(untouched))
       finally { next.unpersist(); touched.unpersist() }
     }
-
-  override def removeDocs(criteria: String): Unit = if (!isEmpty) {
-    val d = df
-    val keep = d.filter(!coalesce(MongoFilter.compile(criteria, Some(d.schema)), lit(false)))
-      .localCheckpoint(true) // sever lineage from the files being overwritten
-    try writeDataAndManifest(keep, "static", manifestOf(keep))
-    finally keep.unpersist()
-  }
-
-  override def removeKeys(keys: DataFrame): Unit = if (!isEmpty) {
-    val keep = df.join(keys.select(col(keys.columns.head).alias(key)), Seq(key), "left_anti")
-      .localCheckpoint(true)
-    try writeDataAndManifest(keep, "static", manifestOf(keep))
-    finally keep.unpersist()
-  }
 
   /** `writeShards > 1` spreads each partition group over up to that many
     * objects (`part-*.jsonl.gz` files under the same `field=value/`

@@ -1,6 +1,5 @@
 package graft.store
 
-import graft.query.MongoFilter
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -53,7 +52,7 @@ class ParquetStore(
     val numPartitions: Int = 0,
     val deltaWrites: Boolean = false,
     val compactAfter: Int = 8)
-  extends Store {
+  extends SnapshotStore {
 
   require(compactAfter >= 1, s"compactAfter must be >= 1, got $compactAfter")
 
@@ -95,7 +94,7 @@ class ParquetStore(
   private def metaPath(k: String): Path =
     Paths.get(root, "_meta_" + k.replaceAll("[^a-zA-Z0-9._-]", "_"))
   override private[graft] def putMeta(k: String, v: String): Unit =
-    Files.writeString(metaPath(k), v)
+    writeFileAtomic(metaPath(k), v)
   override private[graft] def getMeta(k: String): Option[String] =
     if (Files.exists(metaPath(k))) Some(Files.readString(metaPath(k))) else None
 
@@ -125,8 +124,8 @@ class ParquetStore(
       // READS NEVER MUTATE: an over-bound delta set reads via the
       // non-broadcast merge (Catalyst picks a shuffled join — slower,
       // correct). Compaction happens on the WRITE path only
-      // (updateImpl), under the store's write lock — a read-triggered
-      // compact raced concurrent writers (two writeVersion calls
+      // (upsert), under the store's write lock — a read-triggered
+      // compact raced concurrent writers (two commit calls
       // computing the same next version id from the same manifest) and
       // concurrent readers (GC deleting dirs a live plan references),
       // the exact serve-while-streaming-build pattern the class
@@ -146,7 +145,7 @@ class ParquetStore(
     * (coverage probe + query, merge + manifest, …). Version dirs are
     * IMMUTABLE once the manifest names them, so the analyzed relation
     * (schema + file listing) stays valid until the next write, which
-    * clears the cache ([[writeVersion]]/[[updateImpl]]). */
+    * clears the cache ([[commit]]/[[upsert]]). */
   private val readCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def readCached(p: String): DataFrame =
     readCache.computeIfAbsent(p, path => spark.read.parquet(path))
@@ -208,17 +207,32 @@ class ParquetStore(
     * already-recorded field after a restart is a no-op — the old shape
     * re-laid-out the WHOLE table on every fresh instance's first
     * ensureIndex (O(corpus) per incremental-builder restart). */
-  override def ensureIndex(field: String, unique: Boolean = false): Boolean = writeLock.synchronized {
+  override def ensureIndex(field: String, unique: Boolean = false): Boolean = writing {
     if (!indexKeys.contains(field)) {
       indexKeys = indexKeys :+ field
-      if (!isEmpty) writeVersion(df)
-      else Files.writeString(Paths.get(root, "_indexkeys"),
-        indexKeys.mkString("\n"))
+      if (!isEmpty) commit(df) else writeIndexKeys()
     }
     true
   }
 
-  /** Serializes every manifest mutation (writeVersion/compact/delta
+  private def writeIndexKeys(): Unit =
+    writeFileAtomic(Paths.get(root, "_indexkeys"), indexKeys.mkString("\n"))
+
+  /** Replace a pointer or sidecar file atomically: write a `_…tmp`
+    * sibling in `root`, then rename it over the target. A process crash
+    * leaves the old or the new contents, never a truncated file — an
+    * empty `_current` would read as an empty store, and the next write
+    * would commit only its own batch. */
+  private def writeFileAtomic(target: Path, content: String): Unit = {
+    val tmp = Paths.get(root,
+      s"_${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      Files.writeString(tmp, content)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** Serializes every manifest mutation (commit/compact/delta
     * append) on this instance: two concurrent writers would otherwise
     * compute the same next version id from the same parsed manifest and
     * overwrite each other's output (and GC dirs the other still
@@ -227,8 +241,12 @@ class ParquetStore(
     * design: cross-process coordination is the cluster deployment's
     * transaction log (Delta Lake, per the class doc). */
   private val writeLock = new Object
+  override protected def writing[T](body: => T): T = writeLock.synchronized(body)
 
-  private def writeVersion(data: DataFrame): Unit = writeLock.synchronized {
+  protected def snapshot: Option[DataFrame] = if (isEmpty) None else Some(df)
+
+  /** Write `data` as the next version and flip `_current` to it. */
+  protected def commit(data: DataFrame): Unit = writing {
     val next = "v_" + (parsed.map(_._1.drop(2).toLong + 1).getOrElse(0L))
     val out =
       if (indexKeys.nonEmpty) {
@@ -259,11 +277,11 @@ class ParquetStore(
     }
     writer.parquet(s"$root/$next")
     val old = parsed
-    Files.writeString(currentFile, next)
+    writeFileAtomic(currentFile, next)
     invalidateReadCache() // prior version dirs are GC'd below
     // record the layout keys AFTER the write commits: the sidecar only
     // ever describes data that is actually clustered this way
-    Files.writeString(Paths.get(root, "_indexkeys"), indexKeys.mkString("\n"))
+    writeIndexKeys()
     // GC: keep the immediately-previous generation (base AND its deltas)
     // so plans captured before this write (and concurrent readers of it)
     // stay scannable; only the grandparent generation is deleted. A
@@ -303,9 +321,6 @@ class ParquetStore(
     case None => dataPath.map(footerRowCount).getOrElse(0L)
   }
 
-  override def update(docs: DataFrame, keyFields: Seq[String] = Seq(key)): Unit =
-    updateImpl(docs, keyFields, batchUnique = false)
-
   /** [[update]] for a batch the CALLER has already made key-unique (and
     * materialized — e.g. one shared [[Store.dedupLastWins]] feeding
     * several planes): the per-store dedup shuffle is skipped, so the
@@ -313,17 +328,19 @@ class ParquetStore(
     * caller's. */
   private[store] def updateUnique(docs: DataFrame,
                                   keyFields: Seq[String] = Seq(key)): Unit =
-    updateImpl(docs, keyFields, batchUnique = true)
+    writing { upsert(docs, keyFields, batchUnique = true) }
 
-  private def updateImpl(docs: DataFrame, keyFields: Seq[String],
-                         batchUnique: Boolean): Unit = writeLock.synchronized {
+  /** Single-key upserts into a populated delta-write store append the
+    * batch as a delta; everything else takes the full rewrite. */
+  override protected def upsert(docs: DataFrame, keyFields: Seq[String],
+                                batchUnique: Boolean): Unit =
     if (deltaWrites && !isEmpty && keyFields == Seq(key)) {
       val (base, deltas) = parsed.get
       val d = "d_" + (deltas.size + 1)
       // Overwrite: a crash-orphaned dir from an unflipped write is replaced
       (if (batchUnique) docs else Store.dedupLastWins(docs, keyFields))
         .write.mode(SaveMode.Overwrite).parquet(s"$root/$base.$d")
-      Files.writeString(currentFile, s"$base;${(deltas :+ d).mkString(",")}")
+      writeFileAtomic(currentFile, s"$base;${(deltas :+ d).mkString(",")}")
       // a crash-orphaned same-name delta dir may have been cached stale
       invalidateReadCache()
       // compact on delta COUNT (the steady-state cadence) or on the
@@ -333,55 +350,18 @@ class ParquetStore(
       if (deltas.size + 1 >= compactAfter ||
           deltaRowBound(base, deltas :+ d)
             .forall(_ > ParquetStore.MaxBroadcastDeltaRows)) compact()
-    } else {
-      val next =
-        if (isEmpty) { if (batchUnique) docs else Store.dedupLastWins(docs, keyFields) }
-        else Store.upsertPlan(df, docs, keyFields, batchUnique)
-      writeVersion(next)
-    }
-  }
+    } else super.upsert(docs, keyFields, batchUnique)
 
   /** Fold pending deltas into one merged base (re-clustered on any
     * [[ensureIndex]] keys) and reset the manifest — restores shuffle-free
     * reads, row-group pruning and the footer count fast path. No-op
     * without deltas. */
-  def compact(): Unit = writeLock.synchronized { parsed.foreach { case (base, deltas) =>
+  def compact(): Unit = writing { parsed.foreach { case (base, deltas) =>
     // builds the merge plan directly (NOT via df — df compacts when the
     // delta bound is exceeded, which would recurse back here forever)
     if (deltas.nonEmpty)
-      writeVersion(mergedRead(s"$root/$base", base, deltas,
+      commit(mergedRead(s"$root/$base", base, deltas,
         bcast = deltaRowBound(base, deltas)
           .exists(_ <= ParquetStore.MaxBroadcastDeltaRows)))
   } }
-
-  override def removeDocs(criteria: String): Unit = writeLock.synchronized {
-    if (!isEmpty) {
-      val t = df
-      writeVersion(t.filter(!coalesce(
-        MongoFilter.compile(criteria, Some(t.schema)), lit(false))))
-    }
-  }
-
-  override def removeKeys(keys: DataFrame): Unit = writeLock.synchronized {
-    if (!isEmpty)
-      writeVersion(df.join(keys.select(col(keys.columns.head).alias(key)), Seq(key), "left_anti"))
-  }
-
-  /** Fused remove+upsert in ONE version write (see [[Store
-    * .updateRemoveKeys]]): the anti-join that drops `removals` and the
-    * key upsert of `docs` compose into a single plan feeding one
-    * [[writeVersion]] — the lu-update builder rows previously paid a
-    * full removeKeys rewrite AND a full compound-key upsert rewrite per
-    * run (VERDICT r16 #3). */
-  override def updateRemoveKeys(docs: DataFrame, removals: DataFrame,
-                                keyFields: Seq[String] = Seq(key)): Unit =
-    writeLock.synchronized {
-      if (isEmpty) update(docs, keyFields)
-      else {
-        val cleaned = df.join(
-          removals.select(col(removals.columns.head).alias(key)),
-          Seq(key), "left_anti")
-        writeVersion(Store.upsertPlan(cleaned, docs, keyFields))
-      }
-    }
 }

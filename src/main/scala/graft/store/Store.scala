@@ -244,11 +244,67 @@ trait Store {
   def ensureIndex(field: String, unique: Boolean = false): Boolean = true
 }
 
+/** A store whose every write commits a whole new snapshot of its
+  * contents. It supplies [[snapshot]], the single [[commit]] point and
+  * optionally a [[writing]] scope; the four writes are defined once
+  * here, each one plan feeding one `commit`. */
+trait SnapshotStore extends Store {
+  /** The committed contents; None when nothing is committed. */
+  protected def snapshot: Option[DataFrame]
+  /** Make `next` the store's contents. */
+  protected def commit(next: DataFrame): Unit
+  /** Wraps each whole write (a lock, a refusal): nothing is planned outside it. */
+  protected def writing[T](body: => T): T = body
+
+  /** The upsert behind [[update]]; a store with a cheaper path (a delta
+    * append, a partition merge) overrides it and calls `super` to
+    * rewrite. `batchUnique` asserts `docs` is already key-unique. */
+  protected def upsert(docs: DataFrame, keyFields: Seq[String], batchUnique: Boolean): Unit =
+    commit(snapshot.fold(if (batchUnique) docs else Store.dedupLastWins(docs, keyFields))(
+      Store.upsertPlan(_, docs, keyFields, batchUnique)))
+
+  override def update(docs: DataFrame, keyFields: Seq[String] = Seq(key)): Unit =
+    writing { upsert(docs, keyFields, batchUnique = false) }
+
+  // a row whose predicate is null (field absent) does not match: kept
+  override def removeDocs(criteria: String): Unit = writing {
+    snapshot.foreach(t => commit(t.filter(
+      !coalesce(MongoFilter.compile(criteria, Some(t.schema)), lit(false)))))
+  }
+
+  override def removeKeys(keys: DataFrame): Unit =
+    writing { snapshot.foreach(t => commit(Store.withoutKeys(t, keys, key))) }
+
+  /** Fused remove+upsert: one plan, one commit. */
+  override def updateRemoveKeys(docs: DataFrame, removals: DataFrame,
+                                keyFields: Seq[String] = Seq(key)): Unit = writing {
+    snapshot match {
+      case None    => upsert(docs, keyFields, batchUnique = false)
+      case Some(t) => commit(Store.upsertPlan(Store.withoutKeys(t, removals, key), docs, keyFields))
+    }
+  }
+}
+
+/** A view that refuses every write (joins, unions, frames); the
+  * inherited `updateRemoveKeys` refuses through `removeKeys`. */
+trait ReadOnlyStore extends Store {
+  private def refuse(): Nothing = throw new UnsupportedOperationException(
+    s"${getClass.getSimpleName} $name is read-only")
+  override def update(docs: DataFrame, keyFields: Seq[String]): Unit = refuse()
+  override def removeDocs(criteria: String): Unit = refuse()
+  override def removeKeys(keys: DataFrame): Unit = refuse()
+}
+
 object Store {
+  /** `t` without the rows whose key appears in `keys` — a distributed
+    * anti-join; the first column of `keys` is taken as the key. */
+  private[graft] def withoutKeys(t: DataFrame, keys: DataFrame, key: String): DataFrame =
+    t.join(keys.select(col(keys.columns.head).alias(key)), Seq(key), "left_anti")
+
   /** Pure-Spark MERGE emulation: anti-join out matched target rows, union
     * the deduped batch (allowMissingColumns both ways). Shared by every
-    * writable store. Batch dedup = last-write-wins by ingestion order. */
-  /** `batchUnique = true` asserts the batch is already key-unique
+    * writable store. Batch dedup = last-write-wins by ingestion order.
+    * `batchUnique = true` asserts the batch is already key-unique
     * (e.g. [[dedupLastWins]] ran upstream and was materialized) — the
     * inner dedup shuffle is skipped; the caller owns the contract. */
   private[graft] def upsertPlan(target: DataFrame, batch: DataFrame,

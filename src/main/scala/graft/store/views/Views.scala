@@ -1,7 +1,7 @@
 package graft.store.views
 
 import graft.query.MongoFilter
-import graft.store.Store
+import graft.store.{ReadOnlyStore, Store}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,7 +32,7 @@ class JointStore(
     val main: Store,
     val others: Seq[(String, Store)],
     val mergeAtRoot: Boolean = false)
-  extends Store {
+  extends ReadOnlyStore {
 
   def spark: SparkSession = main.spark
   def key: String = main.key
@@ -80,13 +80,6 @@ class JointStore(
       else acc
     out.drop(others.map(o => s"__lu_${o._1}"): _*)
   }
-
-  override def update(docs: DataFrame, keyFields: Seq[String]): Unit =
-    throw new UnsupportedOperationException("JointStore is read-only")
-  override def removeDocs(criteria: String): Unit =
-    throw new UnsupportedOperationException("JointStore is read-only")
-  override def removeKeys(keys: DataFrame): Unit =
-    throw new UnsupportedOperationException("JointStore is read-only")
 }
 
 /** C14 `ConcatStore` (reference `stores/compound_stores.py:317-522`):
@@ -98,19 +91,13 @@ class JointStore(
   * design keeps it distributed).
   */
 class ConcatStore(val stores: Seq[Store], val name: String = "concat")
-  extends Store {
+  extends ReadOnlyStore {
   require(stores.nonEmpty, "ConcatStore needs at least one store")
   def spark: SparkSession = stores.head.spark
   def key: String = stores.head.key
   override def lastUpdatedField: String = stores.head.lastUpdatedField
   def df: DataFrame =
     stores.map(_.df).reduce(_.unionByName(_, allowMissingColumns = true))
-  override def update(docs: DataFrame, keyFields: Seq[String]): Unit =
-    throw new UnsupportedOperationException("ConcatStore is read-only")
-  override def removeDocs(criteria: String): Unit =
-    throw new UnsupportedOperationException("ConcatStore is read-only")
-  override def removeKeys(keys: DataFrame): Unit =
-    throw new UnsupportedOperationException("ConcatStore is read-only")
 }
 
 /** C15 `AliasingStore` (reference `stores/advanced_stores.py:198-388`):

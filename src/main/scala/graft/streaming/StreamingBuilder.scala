@@ -66,6 +66,28 @@ object StreamingBuilder {
     writer.start()
   }
 
+  /** Run ONE builder per query over every non-empty micro-batch. `mk`
+    * gets a TableStore whose by-name df reads the CURRENT batch, so the
+    * builder built on the first trigger sees each later one. One builder
+    * per query, not per batch: per-instance state then lives across
+    * triggers — the clean-pair gate (the torn-pair reconcile runs at
+    * query start and after a failed write, never per micro-batch), the
+    * BM25 stats row cache, the parsed ANN quantizer, the model-empty
+    * probe. */
+  private def perQueryBuilder(stream: DataFrame, key: String, lastUpdated: String,
+                              checkpoint: Option[String])
+                             (mk: Store => graft.builder.Builder): StreamingQuery = {
+    var current: DataFrame = null
+    var builder: graft.builder.Builder = null
+    foreachNonEmpty(stream, checkpoint) { batch =>
+      current = batch
+      if (builder == null)
+        builder = mk(new graft.store.TableStore(batch.sparkSession, current,
+          "stream-batch", key, lastUpdated))
+      builder.run()
+    }
+  }
+
   /** Windowed aggregation over an event-time stream — the watermarked
     * `groupBy(window(...))` shape (Structured Streaming's native
     * replacement for the reference's absent stream processing). Returns
@@ -147,19 +169,9 @@ object StreamingBuilder {
                      iters: Int = 0, family: String = "xxh64",
                      checkpoint: Option[String] = None): StreamingQuery = {
     require(stream.isStreaming, "annIndexStream needs a streaming DataFrame")
-    // ONE builder across triggers (TableStore's by-name df reads the
-    // current batch): per-instance caches (the parsed quantizer) and
-    // startup work then run once per QUERY, not once per micro-batch
-    var current: DataFrame = null
-    var builder: graft.builder.AnnIndexBuilder = null
-    foreachNonEmpty(stream, checkpoint) { batch =>
-      current = batch
-      if (builder == null)
-        builder = new graft.builder.AnnIndexBuilder(
-          new graft.store.TableStore(batch.sparkSession, current,
-            "stream-batch", key),
-          index, quantizer, vecField, nCentroids, m, ksub, iters, family)
-      builder.run()
+    perQueryBuilder(stream, key, "last_updated", checkpoint) { src =>
+      new graft.builder.AnnIndexBuilder(src, index, quantizer, vecField,
+        nCentroids, m, ksub, iters, family)
     }
   }
 
@@ -179,19 +191,9 @@ object StreamingBuilder {
                        family: String = "md5", seed: Int = 0,
                        checkpoint: Option[String] = None): StreamingQuery = {
     require(stream.isStreaming, "qualityClfStream needs a streaming DataFrame")
-    // ONE builder across triggers (TableStore's by-name df reads the
-    // current batch): the model-empty probe and watermark read then
-    // price per trigger, never per instance re-setup
-    var current: DataFrame = null
-    var builder: graft.builder.QualityClfBuilder = null
-    foreachNonEmpty(stream, checkpoint) { batch =>
-      current = batch
-      if (builder == null)
-        builder = new graft.builder.QualityClfBuilder(
-          new graft.store.TableStore(batch.sparkSession, current,
-            "stream-batch", key, lastUpdated),
-          model, textField, labelField, buckets, family, seed)
-      builder.run()
+    perQueryBuilder(stream, key, lastUpdated, checkpoint) { src =>
+      new graft.builder.QualityClfBuilder(src, model, textField, labelField,
+        buckets, family, seed)
     }
   }
 
@@ -207,21 +209,8 @@ object StreamingBuilder {
                       k1: Double = 1.2, b: Double = 0.75,
                       checkpoint: Option[String] = None): StreamingQuery = {
     require(stream.isStreaming, "bm25IndexStream needs a streaming DataFrame")
-    // ONE builder across triggers (TableStore's by-name df reads the
-    // current batch): per-instance caches (the stats row) then live per
-    // QUERY, and the clean-pair marker gates the torn-pair recount, so
-    // it runs at query start and after a failed write, never per
-    // micro-batch
-    var current: DataFrame = null
-    var builder: graft.builder.Bm25IndexBuilder = null
-    foreachNonEmpty(stream, checkpoint) { batch =>
-      current = batch
-      if (builder == null)
-        builder = new graft.builder.Bm25IndexBuilder(
-          new graft.store.TableStore(batch.sparkSession, current,
-            "stream-batch", key),
-          index, stats, textField, k1, b)
-      builder.run()
+    perQueryBuilder(stream, key, "last_updated", checkpoint) { src =>
+      new graft.builder.Bm25IndexBuilder(src, index, stats, textField, k1, b)
     }
   }
 

@@ -62,6 +62,18 @@ class BuilderSpec extends SparkSpec {
     assert(tgt.count() === 15)
   }
 
+  test("deleteOrphans on a never-written target sweeps nothing") {
+    val (src, _, tgt) = fixtures()
+    val pq = new graft.store.ParquetStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-orph").toString,
+      key = "k", lastUpdatedField = "lu")
+    for (target <- Seq(tgt, pq)) {
+      val r = CopyBuilder(src, target, criteria = Some("""{"k": 99}"""),
+        deleteOrphans = true).run()
+      assert(r === BuildReport(0, 0, 0))
+    }
+  }
+
   test("docs plane: per-row error capture -> failed docs land in target (map_builder.py:144-155)") {
     val (src, _, tgt) = fixtures()
     val fn: String => String = { doc =>

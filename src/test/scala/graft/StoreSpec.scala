@@ -278,4 +278,20 @@ class StoreSpec extends SparkSpec {
     // criteria path still scans and agrees
     assert(st.count(Some("""{"d": {"$ne": "x"}}""")) === 2)
   }
+
+  test("ParquetStore flips _current by atomic rename, leaving no tmp file") {
+    val s = spark; import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-atomic")
+    val st = new ParquetStore(spark, dir.toString, key = "k", lastUpdatedField = "lu")
+    st.update(Seq((1L, "a")).toDF("k", "d"))
+    val cur = dir.resolve("_current")
+    val ino = java.nio.file.Files.getAttribute(cur, "unix:ino")
+    st.update(Seq((2L, "b")).toDF("k", "d"))
+    st.putMeta("marker", "x")
+    // a rename installs a new inode; an in-place rewrite keeps the old one
+    assert(java.nio.file.Files.getAttribute(cur, "unix:ino") !== ino)
+    assert(java.nio.file.Files.readString(cur) === "v_1")
+    assert(st.getMeta("marker") === Some("x"))
+    assert(!dir.toFile.list().exists(_.endsWith(".tmp")))
+  }
 }

@@ -30,3 +30,5 @@ for name, sql in sorted(oracle.items()):
     except Exception as e:
         print(f"ERROR {name}: {str(e)[:200]}"); failn+=1
 print(f"== {okn} ok, {failn} fail; rows-only queries:", sorted(set(g.split('/')[-1] for g in glob.glob(out+'/*') if g.split('/')[-1] not in oracle and not g.endswith('.json'))))
+# non-zero exit on any FAIL or ERROR, so a script or CI step can gate on it
+sys.exit(1 if failn else 0)
