@@ -2542,19 +2542,9 @@ object SparkEntry {
 
   /** Optionally restricted to `names` (Bench's SPARK_GRAFT_ONLY filter —
     * the oracle subprocess should only time the queries this run timed). */
-  def oracleSqlJson(names: Option[Set[String]]): String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  def oracleSqlJson(names: Option[Set[String]]): String =
     oracleSql.filter { case (k, _) => names.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-  }
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
 
   def oracleSql: Map[String, String] = {
     val Seq(en, de, fr, es) = stopLists.map { case (_, ws) => sqlHits(ws) }

@@ -1,6 +1,6 @@
 package graft.api
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.query.QueryParams
 import graft.store.Store
 import org.apache.spark.sql.DataFrame
@@ -47,7 +47,8 @@ private[api] trait TimedActions {
   }
 }
 
-private[api] object Json {
+/** JSON string literals (quote, backslash and ALL control chars < 0x20 escaped). */
+private[graft] object Json {
   def str(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -57,6 +58,68 @@ private[api] object Json {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** Shared: a configured ObjectMapper is thread-safe for reads. */
+  private[api] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+}
+
+/** A request's JSON body: the one place a body turns into a 400. An empty
+  * body reads as `{}`; malformed JSON and non-object bodies are refused
+  * here, and each accessor refuses a bad value of its field. A missing
+  * required field answers with `usage`, the endpoint's body shape. */
+private[api] final class JsonBody(bytes: Array[Byte],
+                                  usage: String = "request body must be a JSON object") {
+  import com.fasterxml.jackson.databind.JsonNode
+  import scala.jdk.CollectionConverters._
+
+  private val node: JsonNode =
+    if (bytes.isEmpty) Json.mapper.createObjectNode()
+    else try Json.mapper.readTree(bytes)
+    catch { case _: java.io.IOException => throw ApiError(400, "body is not valid JSON") }
+  if (node == null || !node.isObject) throw ApiError(400, usage)
+
+  private def field(f: String): Option[JsonNode] = Option(node.get(f)).filterNot(_.isNull)
+
+  /** Every field as a query parameter: strings as-is, other values as
+    * their JSON text (the POST-search and PATCH parameter maps). */
+  def params: Map[String, String] = node.fields().asScala.map { e =>
+    e.getKey -> (if (e.getValue.isTextual) e.getValue.asText() else e.getValue.toString)
+  }.toMap
+
+  /** The required `"text"` string. */
+  def text: String =
+    field("text").filter(_.isTextual).map(_.asText()).getOrElse(throw ApiError(400, usage))
+
+  def bool(f: String): Boolean = field(f).exists(_.asBoolean(false))
+
+  private def positive(f: String, default: Int): Int = {
+    val n = field(f).fold(default)(_.asInt(default))
+    if (n <= 0) throw ApiError(400, s"$f must be positive")
+    n
+  }
+
+  /** `"k"`, capped at `max` (the PaginationQuery `max_limit` discipline:
+    * the rows a reply collects stay bounded whatever the client asks). */
+  def k(default: Int, max: Int): Int = math.min(max, positive("k", default))
+
+  def nprobe(default: Int): Int = positive("nprobe", default)
+
+  /** The optional `"vector"`: a non-empty number array of the index's
+    * dimension `dim` (None = the index does not know it yet). `dim` is
+    * read only when a vector is sent — checked here, so a wrong-length
+    * vector is a 400, never a ranking computed from the wrong input. */
+  def vector(dim: => Option[Int]): Option[Seq[Double]] = field("vector").map { vn =>
+    if (!vn.isArray || vn.isEmpty)
+      throw ApiError(400, "vector must be a non-empty number array")
+    val v = (0 until vn.size()).map { i =>
+      val e = vn.get(i)
+      if (!e.isNumber) throw ApiError(400, s"vector[$i] is not a number")
+      e.asDouble()
+    }
+    for (d <- dim if v.length != d)
+      throw ApiError(400, s"vector has ${v.length} dimensions, the index expects $d")
+    v
+  }
 }
 
 /** A11/A13: the HTTP resource layer (reference
@@ -256,6 +319,14 @@ class BlobResource(val store: graft.store.BlobStore) {
       .collect().headOption
 }
 
+/** A POST-body search endpoint: the contract the `/name` ann/search
+  * routes in [[GraftHttp.serve]] host (request bytes → response JSON,
+  * errors via [[ApiError]]). */
+trait BodySearchResource {
+  def search(body: Array[Byte]): String
+  def responseHeaders: Map[String, String]
+}
+
 /** ANN serving over HTTP — the A11 analogue for the extension plane
   * (envelope/timeout semantics per reference
   * `api/resource/read_resource.py:232-267`): `POST /{name}` with body
@@ -264,16 +335,7 @@ class BlobResource(val store: graft.store.BlobStore) {
   * index — the query path never touches a float vector column
   * ([[graft.ext.Similarity.ivfPqTopKFromCodes]]). Same `{data, meta}`
   * envelope and 504 watchdog as every read resource; `k` is capped at
-  * `maxK` (the PaginationQuery `max_limit` discipline — driver-side
-  * materialization bounded by contract). */
-/** A POST-body search endpoint: the contract the `/name` ann/search
-  * handlers in [[GraftHttp.serve]] host (request bytes → response JSON,
-  * errors via [[ApiError]]). */
-trait BodySearchResource {
-  def search(body: Array[Byte]): String
-  def responseHeaders: Map[String, String]
-}
-
+  * `maxK`. */
 class AnnResource(
     val builder: graft.builder.AnnIndexBuilder,
     val defaultK: Int = 10,
@@ -288,25 +350,11 @@ class AnnResource(
 
   /** POST body → response JSON. */
   def search(body: Array[Byte]): String = timed {
-    val node =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
-      catch { case _: Exception => throw ApiError(400, "body is not valid JSON") }
-    if (node == null || !node.isObject || !node.has("vector") ||
-        !node.get("vector").isArray || node.get("vector").isEmpty)
-      throw ApiError(400, """body must be {"vector": [numbers], "k"?, "nprobe"?}""")
-    val vecNode = node.get("vector")
-    val vec = (0 until vecNode.size()).map { i =>
-      val e = vecNode.get(i)
-      if (!e.isNumber) throw ApiError(400, s"vector[$i] is not a number")
-      e.asDouble()
-    }
-    val k = math.min(maxK,
-      if (node.has("k")) node.get("k").asInt(defaultK) else defaultK)
-    if (k <= 0) throw ApiError(400, "k must be positive")
-    val nprobe =
-      if (node.has("nprobe")) node.get("nprobe").asInt(defaultNprobe)
-      else defaultNprobe
-    if (nprobe <= 0) throw ApiError(400, "nprobe must be positive")
+    val usage = """body must be {"vector": [numbers], "k"?, "nprobe"?}"""
+    val req = new JsonBody(body, usage)
+    val vec = req.vector(builder.vectorDim).getOrElse(throw ApiError(400, usage))
+    val k = req.k(defaultK, maxK)
+    val nprobe = req.nprobe(defaultNprobe)
     val spark = actionSpark
     import spark.implicits._
     // sentinel query id: topK excludes self-matches by id equality, so
@@ -317,13 +365,11 @@ class AnnResource(
       builder.index.df.schema("id").dataType ==
         org.apache.spark.sql.types.StringType).getOrElse(false)
     val q =
-      if (idIsString) Seq((" graft-ann-query ", vec))
+      if (idIsString) Seq(("\u0000graft-ann-query\u0000", vec))
         .toDF(builder.source.key, builder.vecField)
       else Seq((Long.MinValue, vec)).toDF(builder.source.key, builder.vecField)
     val rows = builder.topK(q, k, nprobe).orderBy("rank")
-      .select(org.apache.spark.sql.functions.col("rank"),
-        org.apache.spark.sql.functions.col("n_id"),
-        org.apache.spark.sql.functions.col("sim"))
+      .select("rank", "n_id", "sim")
       .collect() // ≤ k rows by contract
     val data = rows.map { r =>
       val id = r.get(1) match {
@@ -359,40 +405,13 @@ class SearchResource(
     lexical.source.spark
 
   def search(body: Array[Byte]): String = timed {
-    val node =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
-      catch { case _: Exception => throw ApiError(400, "body is not valid JSON") }
-    if (node == null || !node.isObject || !node.has("text") ||
-        !node.get("text").isTextual)
-      throw ApiError(400,
-        """body must be {"text": "...", "vector"?: [numbers], "k"?, "nprobe"?}""")
-    val text = node.get("text").asText()
-    val k = math.min(maxK,
-      if (node.has("k")) node.get("k").asInt(defaultK) else defaultK)
-    if (k <= 0) throw ApiError(400, "k must be positive")
-    val nprobe =
-      if (node.has("nprobe")) node.get("nprobe").asInt(defaultNprobe)
-      else defaultNprobe
-    if (nprobe < 1) throw ApiError(400, "nprobe must be >= 1")
-    val vec: Option[Seq[Double]] =
-      if (!node.has("vector") || node.get("vector").isNull) None
-      else {
-        val vn = node.get("vector")
-        if (!vn.isArray || vn.isEmpty)
-          throw ApiError(400, "vector must be a non-empty number array")
-        Some((0 until vn.size()).map { i =>
-          val e = vn.get(i)
-          if (!e.isNumber) throw ApiError(400, s"vector[$i] is not a number")
-          e.asDouble()
-        })
-      }
-    if (vec.isDefined && vector.isEmpty)
-      throw ApiError(400, "no vector index is configured on this endpoint")
-    // dimension check at parse time — the error contract promises a 400
-    // here, not a 500 surfacing from inside the ANN scoring leg
-    for (v <- vec; vb <- vector; d <- vb.vectorDim; if v.length != d)
-      throw ApiError(400,
-        s"vector has ${v.length} dimensions, the index expects $d")
+    val req = new JsonBody(body,
+      """body must be {"text": "...", "vector"?: [numbers], "k"?, "nprobe"?}""")
+    val text = req.text
+    val k = req.k(defaultK, maxK)
+    val nprobe = req.nprobe(defaultNprobe)
+    val vec = req.vector(vector.map(_.vectorDim).getOrElse(
+      throw ApiError(400, "no vector index is configured on this endpoint")))
     val spark = actionSpark
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -453,14 +472,9 @@ class TokenizeResource(
   def search(body: Array[Byte]): String = timed {
     if (body.length > maxTextBytes)
       throw ApiError(400, s"text exceeds $maxTextBytes bytes")
-    val node =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
-      catch { case _: Exception => throw ApiError(400, "body is not valid JSON") }
-    if (node == null || !node.isObject || !node.has("text") ||
-        !node.get("text").isTextual)
-      throw ApiError(400, """body must be {"text": "...", "encode"?: bool}""")
-    val encode = node.has("encode") && node.get("encode").asBoolean(false)
-    val text = node.get("text").asText()
+    val req = new JsonBody(body, """body must be {"text": "...", "encode"?: bool}""")
+    val encode = req.bool("encode")
+    val text = req.text
     // the engine tokenizer (lower → alnum runs), driver-side
     val toks = graft.functions.TokenizeRuns.compute(
       org.apache.spark.unsafe.types.UTF8String.fromString(text)
@@ -480,9 +494,10 @@ class TokenizeResource(
 /** Minimal multi-resource HTTP host. `serve(Map("orders" -> res), 0)`
   * binds an ephemeral port (see `getAddress.getPort`); stop with
   * `.stop(0)`. Resource and blob names must be disjoint (each owns the
-  * `/{name}` root). JDK context matching is prefix-based, so every
-  * handler re-checks that the path is exactly `/{name}` or starts with
-  * `/{name}/` — `/ordersfoo` is a 404, not a key lookup on `orders`. */
+  * `/{name}` root). Every endpoint is one [[host]]ed route table; JDK
+  * context matching is prefix-based, so the host re-checks that the path
+  * is exactly `/{name}` or starts with `/{name}/` — `/ordersfoo` is a
+  * 404, not a key lookup on `orders`. */
 object GraftHttp {
 
   private[api] def parseQuery(raw: String): Map[String, String] =
@@ -495,21 +510,6 @@ object GraftHttp {
           URLDecoder.decode(kv.drop(i + 1), UTF_8)
       }.toMap
 
-  private def parseJsonBody(body: Array[Byte]): Map[String, String] = {
-    if (body.isEmpty) return Map.empty
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(body)
-    if (!node.isObject) throw ApiError(400, "request body must be a JSON object")
-    val it = node.fields()
-    val b = Map.newBuilder[String, String]
-    while (it.hasNext) {
-      val e = it.next()
-      b += e.getKey -> (if (e.getValue.isTextual) e.getValue.asText()
-                        else e.getValue.toString)
-    }
-    b.result()
-  }
-
   /** Path below `/{name}`, or None if the request doesn't actually belong
     * to this context (JDK prefix matching hands `/ordersfoo` to the
     * `/orders` handler). */
@@ -521,6 +521,38 @@ object GraftHttp {
     else None
   }
 
+  private final case class Reply(status: Int, body: Array[Byte],
+    contentType: String = "application/json", headers: Map[String, String] = Map.empty)
+  private def json(status: Int, body: String): Reply = Reply(status, body.getBytes(UTF_8))
+  private def json(r: (Int, String)): Reply = json(r._1, r._2)
+  private def error(status: Int, msg: String): Reply = json(status, s"""{"error": ${Json.str(msg)}}""")
+  private def body(ex: HttpExchange): Array[Byte] = ex.getRequestBody.readAllBytes()
+
+  /** Serve `/{name}` from `route`, a table of (method, subpath) → reply.
+    * The behaviour every endpoint shares lives here: 404 outside
+    * `/{name}`, 405 for an unrouted method, [[ApiError]] → its status and
+    * any other throwable → 500, and `Content-Type` plus the resource's
+    * `headers` (the A16 HeaderProcessor analogue) on every reply. */
+  private def host(server: HttpServer, name: String, headers: Map[String, String])
+                  (route: HttpExchange => PartialFunction[(String, String), Reply]): Unit =
+    server.createContext(s"/$name", (ex: HttpExchange) => {
+      val reply =
+        try subPath(ex, name) match {
+          case None => error(404, "not found")
+          case Some(sub) => route(ex).applyOrElse((ex.getRequestMethod, sub),
+            (r: (String, String)) => error(405, s"method ${r._1} not allowed"))
+        } catch {
+          case ApiError(status, msg) => error(status, msg)
+          case e: Throwable => error(500, String.valueOf(e.getMessage).take(500))
+        }
+      val h = ex.getResponseHeaders
+      h.set("Content-Type", reply.contentType)
+      (headers ++ reply.headers).foreach { case (k, v) => h.set(k, v) }
+      ex.sendResponseHeaders(reply.status, reply.body.length.toLong)
+      ex.getResponseBody.write(reply.body)
+      ex.close()
+    })
+
   def serve(resources: Map[String, ReadResource], port: Int = 0,
             blobs: Map[String, BlobResource] = Map.empty,
             anns: Map[String, BodySearchResource] = Map.empty): HttpServer = {
@@ -531,107 +563,35 @@ object GraftHttp {
       s"resource, blob and ann names must be disjoint; shared: ${shared.toSeq.sorted.mkString(", ")}")
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     anns.foreach { case (name, res) =>
-      server.createContext(s"/$name", new HttpHandler {
-        private def send(ex: HttpExchange, status: Int, body: String): Unit = {
-          val bytes = body.getBytes(UTF_8)
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          res.responseHeaders.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
-          ex.sendResponseHeaders(status, bytes.length.toLong)
-          ex.getResponseBody.write(bytes)
-          ex.close()
-        }
-        def handle(ex: HttpExchange): Unit = try {
-          (ex.getRequestMethod, subPath(ex, name)) match {
-            case (_, None) => send(ex, 404, """{"error": "not found"}""")
-            case ("POST", Some("") | Some("search")) =>
-              send(ex, 200, res.search(ex.getRequestBody.readAllBytes()))
-            case (m, _) => send(ex, 405, s"""{"error": "method $m not allowed"}""")
-          }
-        } catch {
-          case ApiError(status, msg) =>
-            send(ex, status, s"""{"error": ${Json.str(msg)}}""")
-          case e: Throwable =>
-            send(ex, 500, s"""{"error": ${Json.str(String.valueOf(e.getMessage).take(500))}}""")
-        }
-      })
+      host(server, name, res.responseHeaders) { ex => {
+        case ("POST", "" | "search") => json(200, res.search(body(ex)))
+      }}
     }
     blobs.foreach { case (name, res) =>
-      server.createContext(s"/$name", new HttpHandler {
-        private def send(ex: HttpExchange, status: Int, body: Array[Byte],
-                         ctype: String): Unit = {
-          ex.getResponseHeaders.set("Content-Type", ctype)
-          ex.sendResponseHeaders(status, body.length.toLong)
-          ex.getResponseBody.write(body)
-          ex.close()
-        }
-        def handle(ex: HttpExchange): Unit = try {
-          (ex.getRequestMethod, subPath(ex, name)) match {
-            case (_, None) =>
-              send(ex, 404, """{"error": "not found"}""".getBytes(UTF_8), "application/json")
-            case ("GET", Some(k)) if k.endsWith("/meta") =>
-              res.meta(k.stripSuffix("/meta")) match {
-                case Some(json) => send(ex, 200, json.getBytes(UTF_8), "application/json")
-                case None => send(ex, 404, """{"error": "blob not found"}""".getBytes(UTF_8), "application/json")
-              }
-            case ("GET", Some(k)) if k.nonEmpty =>
-              res.fetch(k) match {
-                case Some((bytes, md5)) =>
-                  ex.getResponseHeaders.set("ETag", md5)
-                  send(ex, 200, bytes, "application/octet-stream")
-                case None => send(ex, 404, """{"error": "blob not found"}""".getBytes(UTF_8), "application/json")
-              }
-            case (m, _) => send(ex, 405, s"""{"error": "method $m not allowed"}""".getBytes(UTF_8), "application/json")
+      host(server, name, Map.empty) { _ => {
+        case ("GET", k) if k.endsWith("/meta") =>
+          res.meta(k.stripSuffix("/meta")).fold(error(404, "blob not found"))(json(200, _))
+        case ("GET", k) if k.nonEmpty =>
+          res.fetch(k).fold(error(404, "blob not found")) { case (bytes, md5) =>
+            Reply(200, bytes, "application/octet-stream", Map("ETag" -> md5))
           }
-        } catch {
-          case e: Throwable =>
-            send(ex, 500, s"""{"error": ${Json.str(String.valueOf(e.getMessage).take(500))}}""".getBytes(UTF_8), "application/json")
-        }
-      })
+      }}
     }
     resources.foreach { case (name, res) =>
-      server.createContext(s"/$name", new HttpHandler {
-        private def send(ex: HttpExchange, status: Int, body: String): Unit = {
-          val bytes = body.getBytes(UTF_8)
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          // A16 HeaderProcessor analogue: resource-configured headers
-          res.responseHeaders.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
-          ex.sendResponseHeaders(status, bytes.length.toLong)
-          ex.getResponseBody.write(bytes)
-          ex.close()
-        }
-        def handle(ex: HttpExchange): Unit = try {
-          (ex.getRequestMethod, subPath(ex, name), res) match {
-            case (_, None, _) =>
-              send(ex, 404, """{"error": "not found"}""")
-            case ("GET", Some(""), _) =>
-              send(ex, 200, res.search(parseQuery(ex.getRequestURI.getRawQuery)))
-            case ("POST", Some(""), sr: SubmissionResource) => // A14 intake
-              val (code, body) =
-                sr.submit(new String(ex.getRequestBody.readAllBytes(), UTF_8))
-              send(ex, code, body)
-            case ("POST", Some("") | Some("search"), _) => // A13 post resource
-              send(ex, 200, res.search(
-                parseJsonBody(ex.getRequestBody.readAllBytes())))
-            case ("PATCH", Some(id), sr: SubmissionResource) if id.nonEmpty =>
-              // state from ?state=... or the JSON body
-              val params = parseQuery(ex.getRequestURI.getRawQuery) ++
-                parseJsonBody(ex.getRequestBody.readAllBytes())
-              val (code, body) = sr.patchState(id, params.getOrElse("state", ""))
-              send(ex, code, body)
-            case ("GET", Some(key), _) =>
-              res.byKey(key) match {
-                case Some(doc) => send(ex, 200, s"""{"data": [$doc]}""")
-                case None => send(ex, 404, """{"error": "document not found"}""")
-              }
-            case (m, _, _) => send(ex, 405, s"""{"error": "method $m not allowed"}""")
-          }
-        } catch {
-          case ApiError(status, msg) =>
-            send(ex, status, s"""{"error": ${Json.str(msg)}}""")
-          case e: Throwable =>
-            send(ex, 500, s"""{"error": ${Json.str(String.valueOf(e.getMessage).take(500))}}""")
-        }
-      })
+      val intake = Some(res).collect { case sr: SubmissionResource => sr }
+      host(server, name, res.responseHeaders) { ex => {
+        case ("GET", "") => json(200, res.search(parseQuery(ex.getRequestURI.getRawQuery)))
+        case ("POST", "") if intake.isDefined => // A14 intake
+          json(intake.get.submit(new String(body(ex), UTF_8)))
+        case ("POST", "" | "search") => // A13 post resource
+          json(200, res.search(new JsonBody(body(ex)).params))
+        case ("PATCH", id) if id.nonEmpty && intake.isDefined =>
+          // state from ?state=... or the JSON body
+          val params = parseQuery(ex.getRequestURI.getRawQuery) ++ new JsonBody(body(ex)).params
+          json(intake.get.patchState(id, params.getOrElse("state", "")))
+        case ("GET", key) =>
+          res.byKey(key).fold(error(404, "document not found"))(doc => json(200, s"""{"data": [$doc]}"""))
+      }}
     }
     // without an executor the JDK server dispatches EVERY request on its
     // single dispatcher thread — concurrent clients would serialize (and

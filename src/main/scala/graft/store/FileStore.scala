@@ -100,13 +100,13 @@ class FileStore(
 
   protected def snapshot: Option[DataFrame] = sidecar
 
-  /** Write the sidecar; protected engine keys are stripped from every
-    * commit (`file_store.py:389-398`). */
+  /** Replace the sidecar atomically (a torn one would fail every later
+    * read); protected engine keys are stripped from every commit
+    * (`file_store.py:389-398`). */
   protected def commit(m: DataFrame): Unit = {
     val meta = m.drop(m.columns.filter(c => protectedKeys.contains(c) && c != "file_id"): _*)
     val rows = meta.toJSON.collect()  // sidecar metadata is small by contract
-    val json = rows.mkString("[", ",\n", "]")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      new java.net.URI(s"file://$sidecarPath").getPath), json)
+    Store.writeFileAtomic(java.nio.file.Paths.get(
+      new java.net.URI(s"file://$sidecarPath").getPath), rows.mkString("[", ",\n", "]"))
   }
 }

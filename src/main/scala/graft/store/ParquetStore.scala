@@ -2,7 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 /** Durable keyed table over parquet with versioned-directory writes — the
@@ -94,7 +94,7 @@ class ParquetStore(
   private def metaPath(k: String): Path =
     Paths.get(root, "_meta_" + k.replaceAll("[^a-zA-Z0-9._-]", "_"))
   override private[graft] def putMeta(k: String, v: String): Unit =
-    writeFileAtomic(metaPath(k), v)
+    Store.writeFileAtomic(metaPath(k), v)
   override private[graft] def getMeta(k: String): Option[String] =
     if (Files.exists(metaPath(k))) Some(Files.readString(metaPath(k))) else None
 
@@ -206,30 +206,17 @@ class ParquetStore(
     * field set persists in the `_indexkeys` sidecar, so re-ensuring an
     * already-recorded field after a restart is a no-op — the old shape
     * re-laid-out the WHOLE table on every fresh instance's first
-    * ensureIndex (O(corpus) per incremental-builder restart). */
+    * ensureIndex (O(corpus) per incremental-builder restart). The
+    * sidecar is written only here, AFTER the re-layout commit: it only
+    * ever describes data that is actually clustered this way, and a
+    * commit that leaves the key set alone does not rewrite it. */
   override def ensureIndex(field: String, unique: Boolean = false): Boolean = writing {
     if (!indexKeys.contains(field)) {
       indexKeys = indexKeys :+ field
-      if (!isEmpty) commit(df) else writeIndexKeys()
+      if (!isEmpty) commit(df)
+      Store.writeFileAtomic(Paths.get(root, "_indexkeys"), indexKeys.mkString("\n"))
     }
     true
-  }
-
-  private def writeIndexKeys(): Unit =
-    writeFileAtomic(Paths.get(root, "_indexkeys"), indexKeys.mkString("\n"))
-
-  /** Replace a pointer or sidecar file atomically: write a `_…tmp`
-    * sibling in `root`, then rename it over the target. A process crash
-    * leaves the old or the new contents, never a truncated file — an
-    * empty `_current` would read as an empty store, and the next write
-    * would commit only its own batch. */
-  private def writeFileAtomic(target: Path, content: String): Unit = {
-    val tmp = Paths.get(root,
-      s"_${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-    try {
-      Files.writeString(tmp, content)
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    } finally Files.deleteIfExists(tmp)
   }
 
   /** Serializes every manifest mutation (commit/compact/delta
@@ -277,11 +264,10 @@ class ParquetStore(
     }
     writer.parquet(s"$root/$next")
     val old = parsed
-    writeFileAtomic(currentFile, next)
+    // atomic: an empty `_current` would read as an empty store, and the
+    // next write would commit only its own batch
+    Store.writeFileAtomic(currentFile, next)
     invalidateReadCache() // prior version dirs are GC'd below
-    // record the layout keys AFTER the write commits: the sidecar only
-    // ever describes data that is actually clustered this way
-    writeIndexKeys()
     // GC: keep the immediately-previous generation (base AND its deltas)
     // so plans captured before this write (and concurrent readers of it)
     // stay scannable; only the grandparent generation is deleted. A
@@ -340,7 +326,7 @@ class ParquetStore(
       // Overwrite: a crash-orphaned dir from an unflipped write is replaced
       (if (batchUnique) docs else Store.dedupLastWins(docs, keyFields))
         .write.mode(SaveMode.Overwrite).parquet(s"$root/$base.$d")
-      writeFileAtomic(currentFile, s"$base;${(deltas :+ d).mkString(",")}")
+      Store.writeFileAtomic(currentFile, s"$base;${(deltas :+ d).mkString(",")}")
       // a crash-orphaned same-name delta dir may have been cached stale
       invalidateReadCache()
       // compact on delta COUNT (the steady-state cadence) or on the

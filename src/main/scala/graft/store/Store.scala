@@ -296,6 +296,20 @@ trait ReadOnlyStore extends Store {
 }
 
 object Store {
+  /** Replace a pointer or sidecar file atomically: write a `_…tmp`
+    * sibling in the target's directory, then rename it over the target.
+    * A process crash leaves the old or the new contents, never a
+    * truncated file. The `_` prefix keeps the tmp file out of Spark's
+    * file listings (FileStore scans its root with binaryFile). */
+  private[store] def writeFileAtomic(target: java.nio.file.Path, content: String): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val tmp = target.resolveSibling(s"_${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      Files.writeString(tmp, content)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+  }
+
   /** `t` without the rows whose key appears in `keys` — a distributed
     * anti-join; the first column of `keys` is taken as the key. */
   private[graft] def withoutKeys(t: DataFrame, keys: DataFrame, key: String): DataFrame =

@@ -49,6 +49,24 @@ class ConnectorSpec extends SparkSpec {
     assert(orphan.getAs[Boolean]("orphan"))
   }
 
+  test("FileStore replaces its sidecar by atomic rename, leaving no tmp file") {
+    val root = tmp("fstore3")
+    Files.writeString(java.nio.file.Paths.get(s"$root/a.txt"), "alpha")
+    val fs = new FileStore(spark, root, glob = "*")
+    val fid = fs.df.select("file_id").collect()(0).getString(0)
+    val s = spark; import s.implicits._
+    fs.update(Seq((fid, "one")).toDF("file_id", "label"))
+    val sidecar = java.nio.file.Paths.get(s"$root/FileStore.json")
+    val ino = Files.getAttribute(sidecar, "unix:ino")
+    fs.update(Seq((fid, "two")).toDF("file_id", "label"))
+    // a rename installs a new inode; an in-place rewrite keeps the old one
+    assert(Files.getAttribute(sidecar, "unix:ino") !== ino)
+    assert(!new java.io.File(root).list().exists(_.endsWith(".tmp")))
+    // glob "*" would list a stray tmp file as a document
+    val docs = fs.df.collect()
+    assert(docs.length === 1 && docs(0).getAs[String]("label") === "two")
+  }
+
   test("ObjectStore: covering-index routing + rebuild (aws.py:184-216,530-571)") {
     val base = tmp("ostore")
     val os = new ObjectStore(spark, s"$base/data", s"$base/index", key = "k",

@@ -85,6 +85,8 @@ class HttpResourceSpec extends SparkSpec {
     assert(node.get("data").size() === 2)
     assert(node.get("meta").get("total_doc").asLong() ===
       store.count(Some("""{"o_orderstatus": "F"}""")))
+    // a malformed body is the client's error, not a 500
+    assert(post(s"$base/", "{not json")._1 === 400)
   }
 
   test("BlobResource (A15 analogue): payload bytes + ETag, /meta JSON, 404") {
@@ -165,6 +167,9 @@ class HttpResourceSpec extends SparkSpec {
       assert(post(url, "not json")._1 === 400)
       assert(post(url, """{"vector": ["a"]}""")._1 === 400)
       assert(post(url, """{"vector": []}""")._1 === 400)
+      // a vector of the wrong dimension is refused, not ranked
+      assert(b.vectorDim.exists(_ != 2))
+      assert(post(url, """{"vector": [1.0, 2.0]}""")._1 === 400)
       // 405: ANN serving is POST-only
       assert(this.get(url)._1 === 405)
       // 504: a deadline-exceeding codes scan is cancelled by the shared
@@ -419,6 +424,11 @@ class HttpResourceSpec extends SparkSpec {
         .method("PATCH", HttpRequest.BodyPublishers.noBody()).build(),
         HttpResponse.BodyHandlers.ofString())
       assert(p404.statusCode() === 404)
+      // PATCH with a malformed body -> 400
+      val pBad = client.send(HttpRequest.newBuilder(URI.create(s"$url/$sid"))
+        .method("PATCH", HttpRequest.BodyPublishers.ofString("{not json")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(pBad.statusCode() === 400)
     } finally srv.stop(0)
   }
 

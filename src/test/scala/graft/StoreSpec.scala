@@ -294,4 +294,24 @@ class StoreSpec extends SparkSpec {
     assert(st.getMeta("marker") === Some("x"))
     assert(!dir.toFile.list().exists(_.endsWith(".tmp")))
   }
+
+  test("ParquetStore writes _indexkeys only when the index keys change") {
+    val s = spark; import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-indexkeys")
+    val st = new ParquetStore(spark, dir.toString, key = "k", lastUpdatedField = "lu")
+    st.update(Seq((1L, "a")).toDF("k", "d"))
+    st.update(Seq((2L, "b")).toDF("k", "d"))
+    val keys = dir.resolve("_indexkeys")
+    assert(!java.nio.file.Files.exists(keys))
+    st.ensureIndex("k")
+    assert(java.nio.file.Files.readString(keys) === "k")
+    val ino = java.nio.file.Files.getAttribute(keys, "unix:ino")
+    st.update(Seq((3L, "c")).toDF("k", "d"))
+    assert(java.nio.file.Files.getAttribute(keys, "unix:ino") === ino)
+    // a restarted instance still knows the layout
+    assert(new ParquetStore(spark, dir.toString, key = "k", lastUpdatedField = "lu")
+      .ensureIndex("k"))
+    assert(java.nio.file.Files.getAttribute(keys, "unix:ino") === ino)
+    assert(st.count() === 3)
+  }
 }
