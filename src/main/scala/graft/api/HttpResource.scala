@@ -4,6 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.query.QueryParams
 import graft.store.Store
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -228,7 +229,9 @@ class ReadResource(
   }
 
   /** GET `/{key}`: single doc by primary key (reference `get_by_key`).
-    * The key literal is typed from the store schema. */
+    * The key literal is typed from the store schema. Rendered with
+    * `to_json(struct(*))`, which a local frame (the ParquetStore point
+    * read) evaluates without a Spark job. */
   def byKey(key: String): Option[String] = timed {
     val numeric = store.df.schema.fields.find(_.name == store.key)
       .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
@@ -239,7 +242,7 @@ class ReadResource(
     } else Json.str(key)
     val qp = withDefault(QueryParams(
       criteria = Some(s"""{${Json.str(store.key)}: $lit}"""), limit = Some(1)))
-    store.query(qp).toJSON.collect().headOption
+    ReadResource.jsonRows(store.query(qp)).headOption
   }
 }
 
@@ -252,6 +255,10 @@ object ReadResource {
     * PaginationQuery — the one definition both the query limit and the
     * response-meta marker read (reference `max_limit` default). */
   val injectedCap: Int = 1000
+
+  /** Each row as one JSON object — the bytes `toJSON` renders. */
+  private[api] def jsonRows(d: DataFrame): Array[String] =
+    d.select(to_json(struct(col("*")))).collect().map(_.getString(0))
 }
 
 /** A14 serving plane (reference `api/resource/submission.py:21-390`):
@@ -304,19 +311,20 @@ class SubmissionResource(
   * (`application/octet-stream`, `ETag` = content md5),
   * `GET /{name}/{key}/meta` → the metadata document as JSON. */
 class BlobResource(val store: graft.store.BlobStore) {
-  import org.apache.spark.sql.functions.col
+  /** The blob under `key`, selected through `store.query` (the
+    * ParquetStore point read: no Spark job). */
+  private def byKey(key: String): DataFrame = store.query(QueryParams(
+    criteria = Some(s"""{${Json.str(store.key)}: ${Json.str(key)}}"""), limit = Some(1)))
 
   /** (payload bytes, md5) — single-key lookup, payload inflated. */
   def fetch(key: String): Option[(Array[Byte], String)] =
-    store.inflated(store.df.filter(col(store.key) === key)).limit(1)
+    store.inflated(byKey(key))
       .select(col("payload"), col("metadata.content_md5"))
       .collect().headOption
       .map(r => (r.getAs[Array[Byte]](0), r.getString(1)))
 
   def meta(key: String): Option[String] =
-    store.df.filter(col(store.key) === key).limit(1)
-      .select(col(store.key), col("metadata.*")).toJSON
-      .collect().headOption
+    ReadResource.jsonRows(byKey(key).select(col(store.key), col("metadata.*"))).headOption
 }
 
 /** A POST-body search endpoint: the contract the `/name` ann/search
@@ -414,7 +422,6 @@ class SearchResource(
       throw ApiError(400, "no vector index is configured on this endpoint")))
     val spark = actionSpark
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // sentinel query id (the AnnResource contract): must not collide
     // with a corpus id, so the self-match exclusion never drops a hit
     val lex = lexical.topK(

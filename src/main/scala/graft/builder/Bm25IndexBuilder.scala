@@ -1,7 +1,7 @@
 package graft.builder
 
 import graft.builder.Builder.MaterializeOps
-import graft.query.MongoFilter
+import graft.query.{MongoFilter, QueryParams}
 import graft.store.Store
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -120,18 +120,19 @@ class Bm25IndexBuilder(
     stats.update(Seq(("bm25", n, sumDl)).toDF("sid", "n_docs", "sum_dl"), Seq("sid"))
   }
 
-  /** The `sid = "bm25"` stats record. ONE driver action pulling only
-    * this builder's row (the store is upserted on `sid`, so one row) — a
-    * stats store that holds other rows too still answers this record,
-    * not an arbitrary one. No `limit(1)`: a limit scans partition by
-    * partition and pays a second job whenever the row is not in the
-    * first one. The value is CACHED keyed on the stats store's content
-    * token (the AnnIndexBuilder quantizer-cache discipline): any
-    * store write changes the token and misses the cache; a token-less
-    * store ("" — no cheap change signal) never caches. The cache lives
-    * on the instance, so a fresh builder over the same stores pays one
-    * read and every later [[topK]]/[[run]] action in its lifetime is
-    * free. */
+  /** The `sid = "bm25"` stats record, read by `stats.query` on its key
+    * (every stats store is keyed on `sid`, so a ParquetStore answers it
+    * from its point-read fast path with no Spark job; other stores run
+    * ONE driver action). A stats store that holds other rows too still
+    * answers this record, not an arbitrary one. No `limit(1)`: on a plan
+    * a limit scans partition by partition and pays a second job whenever
+    * the row is not in the first one. The value is CACHED keyed on the
+    * stats store's content token (the AnnIndexBuilder quantizer-cache
+    * discipline): any store write changes the token and misses the
+    * cache; a token-less store ("" — no cheap change signal) never
+    * caches. The cache lives on the instance, so a fresh builder over the
+    * same stores pays one read and every later [[topK]]/[[run]] action
+    * in its lifetime is free. */
   @volatile private var statsCache: Option[(String, Option[(Long, Long)])] = None
 
   private[graft] def loadStats(): Option[(Long, Long)] = {
@@ -139,12 +140,12 @@ class Bm25IndexBuilder(
     statsCache match {
       case Some((t, v)) if t.nonEmpty && t == tok => v
       case _ =>
-        val df = stats.df
+        val cols = stats.df.columns
         val v =
-          if (!df.columns.contains("n_docs") || !df.columns.contains("sid")) None
-          else df.filter(col("sid") === "bm25").select(col("n_docs").cast("long"),
-              col("sum_dl").cast("long")).collect().headOption
-            .map(r => (r.getLong(0), r.getLong(1)))
+          if (!cols.contains("n_docs") || !cols.contains("sid")) None
+          else stats.query(QueryParams(criteria = Some("""{"sid": "bm25"}""")))
+            .select(col("n_docs").cast("long"), col("sum_dl").cast("long"))
+            .collect().headOption.map(r => (r.getLong(0), r.getLong(1)))
         statsCache = Some((tok, v))
         v
     }

@@ -80,11 +80,13 @@ class BlobStore(
         call_function("zlib_inflate", col("payload")))
         .otherwise(col("payload")))
 
+  /** Forwarded to the backing store, so a key lookup takes its
+    * point-read fast path. */
   override def query(params: QueryParams): DataFrame =
-    params.copy(
+    backing.query(params.copy(
       criteria = params.criteria.map(BlobStore.transformCriteria(_, key)),
       properties = params.properties.map(prefixField),
-      sort = params.sort.map { case (f, d) => (prefixField(f), d) })(df)
+      sort = params.sort.map { case (f, d) => (prefixField(f), d) }))
 
   private def prefixField(f: String): String =
     if (f == key || f == "payload" || f == "metadata" || f.startsWith("metadata."))

@@ -90,8 +90,7 @@ class JsonStore(
     overlay.foreach(_.unpersist())
     overlay = Some(snap)
     snap.coalesce(1).write.mode(SaveMode.Overwrite).json(overlayDir)
-    java.nio.file.Files.write(
-      overlaySchemaFile.toPath, snap.schema.json.getBytes("UTF-8"))
+    Store.writeFileAtomic(overlaySchemaFile.toPath, snap.schema.json)
   }
 }
 

@@ -202,21 +202,31 @@ class OpenDataStore(
       .agg(org.apache.spark.sql.functions.count(lit(1)).alias("n_docs"), luAgg.alias("last_updated"))
   }
 
-  private def storeManifest(rows: Array[String]): Unit = {
-    val out = hadoopFs(manifestPath)
-      .create(new org.apache.hadoop.fs.Path(manifestPath), true)
-    try out.write(rows.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def storeManifest(rows: Array[String]): Unit =
+    writeAtomic(manifestPath, rows.mkString("", "\n", "\n"))
 
   private def schemaPath = s"$root/_schema.json"
 
-  private def writeSchemaSidecar(schema: org.apache.spark.sql.types.StructType): Unit = {
-    val out = hadoopFs(schemaPath)
-      .create(new org.apache.hadoop.fs.Path(schemaPath), true)
-    try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+  private def writeSchemaSidecar(schema: org.apache.spark.sql.types.StructType): Unit =
+    writeAtomic(schemaPath, schema.json)
+
+  /** Replace a sidecar through a `_…tmp` sibling and a Hadoop rename, so
+    * a crash leaves the old or the new file, never a torn one. A file
+    * system whose rename does not replace an existing target (HDFS,
+    * object stores) gets a delete first, so there a crash between the
+    * two can leave the sidecar missing. */
+  private def writeAtomic(target: String, content: String): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(target)
+    val tmp = new org.apache.hadoop.fs.Path(dst.getParent,
+      s"_${dst.getName}.${java.util.UUID.randomUUID()}.tmp")
+    val fs = hadoopFs(target)
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      if (!fs.rename(tmp, dst) && !(fs.delete(dst, false) && fs.rename(tmp, dst)))
+        throw new java.io.IOException(s"could not rename $tmp to $dst")
+    } finally fs.delete(tmp, false)
   }
 
   private def readSchemaSidecar(): Option[org.apache.spark.sql.types.StructType] = {

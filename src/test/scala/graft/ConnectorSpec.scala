@@ -67,6 +67,46 @@ class ConnectorSpec extends SparkSpec {
     assert(docs.length === 1 && docs(0).getAs[String]("label") === "two")
   }
 
+  test("JsonStore writes its _schema.json through a tmp sibling, leaving no tmp file") {
+    val src = java.nio.file.Paths.get(tmp("jstore-atomic"), "a.json")
+    Files.writeString(src, """[{"k": 1, "d": "a"}]""")
+    val js = new JsonStore(spark, Seq(src.toString), key = "k", readOnly = false)
+    val s = spark; import s.implicits._
+    val lu = new java.sql.Timestamp(1000L)
+    js.update(Seq((2L, "b", lu)).toDF("k", "d", "lu"))
+    js.update(Seq((3L, "c", lu)).toDF("k", "d", "lu"))
+    // no inode check: the overlay write recreates the directory, so the
+    // sidecar is a new file (and may reuse the freed inode) either way
+    val overlay = java.nio.file.Paths.get(s"$src.graft")
+    assert(Files.exists(overlay.resolve("_schema.json")))
+    assert(!overlay.toFile.list().exists(_.endsWith(".tmp")))
+    // a reopened store reads the overlay with the sidecar's types
+    val reopened = new JsonStore(spark, Seq(src.toString), key = "k", readOnly = false)
+    assert(reopened.df.schema("lu").dataType === org.apache.spark.sql.types.TimestampType)
+    assert(reopened.df.select("k").as[Long].collect().sorted === Array(1L, 2L, 3L))
+  }
+
+  test("OpenDataStore replaces manifest.jsonl and _schema.json by atomic rename, leaving no tmp file") {
+    val root = tmp("odstore-atomic")
+    val od = new OpenDataStore(spark, root, objectGrouping = Seq("grp"),
+      key = "k", lastUpdatedField = "lu")
+    val s = spark; import s.implicits._
+    od.update((0 to 5).map(i => (i.toLong, s"g${i % 2}", s"v$i", "2024-06-01"))
+      .toDF("k", "grp", "v", "lu"))
+    val sidecars = Seq("manifest.jsonl", "_schema.json").map(java.nio.file.Paths.get(root, _))
+    val inos = sidecars.map(Files.getAttribute(_, "unix:ino"))
+    od.update(Seq((1L, "g1", "v1-new", "2024-06-02")).toDF("k", "grp", "v", "lu"))
+    // a rename installs a new inode; an in-place rewrite keeps the old one
+    sidecars.zip(inos).foreach { case (f, ino) =>
+      assert(Files.getAttribute(f, "unix:ino") !== ino, s"$f was rewritten in place")
+    }
+    assert(!new java.io.File(root).list().exists(_.contains(".tmp")))
+    val reopened = new OpenDataStore(spark, root, objectGrouping = Seq("grp"),
+      key = "k", lastUpdatedField = "lu")
+    assert(reopened.count() === 6)
+    assert(spark.read.json(s"$root/manifest.jsonl").agg(sum("n_docs")).head().getLong(0) === 6L)
+  }
+
   test("ObjectStore: covering-index routing + rebuild (aws.py:184-216,530-571)") {
     val base = tmp("ostore")
     val os = new ObjectStore(spark, s"$base/data", s"$base/index", key = "k",

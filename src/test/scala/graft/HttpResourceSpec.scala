@@ -578,4 +578,77 @@ class HttpResourceSpec extends SparkSpec {
       .collect()(0).getAs[Long]("o_orderkey")
     assert(guarded.byKey(fKey.toString).isEmpty)
   }
+
+  /** `body`'s result and the Spark jobs started while it ran. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("GET /{key} on a ParquetStore with a pending delta runs no Spark job right after a commit") {
+    import org.apache.spark.sql.functions.col
+    val s = spark; import s.implicits._
+    val st = new graft.store.ParquetStore(spark,
+      java.nio.file.Files.createTempDirectory("pq_bykey_jobs").toString, key = "k",
+      lastUpdatedField = "lu", deltaWrites = true)
+    def row(k: Long, v: String) = (k, v, new java.sql.Timestamp(k * 1000L))
+    st.update((1L to 200L).map(k => row(k, s"v$k")).toDF("k", "v", "lu"))
+    val srv = GraftHttp.serve(Map("docs" -> new ReadResource(st, Seq(new PaginationQuery(5, 100)))))
+    try {
+      val url = s"http://localhost:${srv.getAddress.getPort}/docs"
+      def served(k: Long): (Int, String) = {
+        val ((status, body), n) = jobsIn(get(s"$url/$k"))
+        assert(n === 0, s"GET /docs/$k started $n Spark jobs")
+        (status, body)
+      }
+      for ((k, v) <- Seq(7L -> "seven", 150L -> "late", 7L -> "again")) {
+        st.update(Seq(row(k, v)).toDF("k", "v", "lu")) // a commit: one more pending delta
+        val want = st.df.filter(col("k") === k).toJSON.collect().toSeq
+        assert(want.size === 1 && want.head.contains(v))
+        assert(served(k) === (200, s"""{"data": [${want.head}]}"""))
+      }
+      assert(st.contentToken.contains(";d_1,d_2,d_3"))
+      val base = st.df.filter(col("k") === 8L).toJSON.collect().head
+      assert(served(8L) === (200, s"""{"data": [$base]}"""))
+      assert(served(999L)._1 === 404)
+    } finally srv.stop(0)
+  }
+
+  test("BlobResource fetch and meta select by key with no Spark job; bytes and md5 unchanged") {
+    import org.apache.spark.sql.functions.col
+    val s = spark; import s.implicits._
+    val bs = new graft.store.BlobStore(spark,
+      java.nio.file.Files.createTempDirectory("blob_jobs").toString, key = "blob_id",
+      compression = true)
+    def put(id: String, text: String) = bs.put(Seq((id, text.getBytes("UTF-8"),
+      new java.sql.Timestamp(1000L))).toDF("blob_id", "content", "last_updated"))
+    put("b1", "payload-one")
+    put("b2", "payload-two")
+    put("b2", "payload-two, rewritten") // left pending as a delta
+    val res = new BlobResource(bs)
+    def md5(text: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(text.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    for ((id, text) <- Seq("b1" -> "payload-one", "b2" -> "payload-two, rewritten")) {
+      val (got, n) = jobsIn(res.fetch(id))
+      assert(n === 0, s"fetch($id) started $n Spark jobs")
+      val (bytes, sum) = got.get
+      assert(new String(bytes, "UTF-8") === text && sum === md5(text))
+      val (meta, m) = jobsIn(res.meta(id))
+      assert(m === 0, s"meta($id) started $m Spark jobs")
+      assert(meta.toSeq === bs.df.filter(col("blob_id") === id)
+        .select(col("blob_id"), col("metadata.*")).toJSON.collect().toSeq)
+    }
+    assert(jobsIn(res.fetch("nope")) === (None, 0))
+  }
 }

@@ -522,7 +522,7 @@ class PlanShapeSpec extends SparkSpec {
           deltaWrites = true)
         check("UnigramLm", src, contrib,
           () => new UnigramLmBuilder(src, vocab, "text", docs = Some(contrib)),
-          Seq(7, 26, 16))
+          Seq(7, 25, 14))
       }
       locally {
         val src = new MemoryStore(spark, "pjClfSrc", "doc_id", "lu")
@@ -532,7 +532,7 @@ class PlanShapeSpec extends SparkSpec {
           deltaWrites = true)
         check("QualityClf", src, contrib,
           () => new QualityClfBuilder(src, model, "text", "label", docs = Some(contrib)),
-          Seq(7, 29, 12))
+          Seq(7, 28, 11))
       }
       locally {
         val src = new MemoryStore(spark, "pjBmSrc", "doc_id", "lu")
@@ -540,7 +540,7 @@ class PlanShapeSpec extends SparkSpec {
           deltaWrites = true)
         val stats = new ParquetStore(spark, s"$base/st", "sid", "sid")
         check("Bm25", src, index,
-          () => new Bm25IndexBuilder(src, index, stats, "text"), Seq(11, 24, 9))
+          () => new Bm25IndexBuilder(src, index, stats, "text"), Seq(11, 22, 9))
       }
       locally {
         val src = new MemoryStore(spark, "pjAnnSrc", "doc_id", "lu")
@@ -549,7 +549,7 @@ class PlanShapeSpec extends SparkSpec {
         val qz = new ParquetStore(spark, s"$base/qz", "qid", "qid")
         check("AnnIndex", src, index,
           () => new AnnIndexBuilder(src, index, qz, "embedding", nCentroids = 2,
-            m = 2, ksub = 4, family = "md5"), Seq(19, 18, 13))
+            m = 2, ksub = 4, family = "md5"), Seq(18, 18, 13))
       }
     } finally spark.sparkContext.removeSparkListener(l)
   }

@@ -2,6 +2,9 @@ package graft
 
 import graft.query.QueryParams
 import graft.store.{MemoryStore, ParquetStore, TableStore}
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Store-surface assertions mirroring `tests/stores/test_mongolike.py`
@@ -313,5 +316,151 @@ class StoreSpec extends SparkSpec {
       .ensureIndex("k"))
     assert(java.nio.file.Files.getAttribute(keys, "unix:ino") === ino)
     assert(st.count() === 3)
+  }
+
+  // ---------------------------------------------------------------
+  // point reads: ParquetStore answers {key: scalar} from its footers
+  // ---------------------------------------------------------------
+
+  /** `body`'s result and the Spark jobs started while it ran. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      TestListenerBus.drain(spark.sparkContext)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def json(d: DataFrame): Seq[String] =
+    d.select(to_json(struct(col("*")))).collect().map(_.getString(0)).toSeq.sorted
+
+  /** `st.query(params)` as JSON, checked against the plan over `df`
+    * (rendered by `toJSON`). The query runs first, on cold caches, and
+    * `jobs` is the Spark jobs it may start (0: the fast path served it). */
+  private def keyRead(st: ParquetStore, params: QueryParams, jobs: Int = 0): Seq[String] = {
+    val (got, n) = jobsIn(json(st.query(params)))
+    val want = params(st.df).toJSON.collect().toSeq.sorted
+    assert(got === want, s"fast path vs plan for ${params.criteria}")
+    if (jobs == 0) assert(n === 0, s"${params.criteria} started $n Spark jobs")
+    else assert(n >= jobs, s"${params.criteria} started $n Spark jobs, so it did not fall back")
+    got
+  }
+  private def keyRead(st: ParquetStore, criteria: String): Seq[String] =
+    keyRead(st, QueryParams(criteria = Some(criteria)))
+
+  private def deltaStore(name: String, compactAfter: Int = 8): ParquetStore =
+    new ParquetStore(spark, java.nio.file.Files.createTempDirectory(name).toString,
+      key = "k", lastUpdatedField = "lu", deltaWrites = true, compactAfter = compactAfter)
+
+  private def fill(st: ParquetStore): Unit = {
+    val s = spark; import s.implicits._
+    st.update((1L to 60L).map(k => (k, s"d$k", k * 0.5)).toDF("k", "d", "v"))
+  }
+
+  test("point read, base only: the footer schema is the inferred one; 0 jobs") {
+    val st = deltaStore("pr-base")
+    fill(st)
+    assert(keyRead(st, """{"k": 7}""") === Seq("""{"k":7,"d":"d7","v":3.5}"""))
+    assert(st.df.schema === spark.read.parquet(s"${st.root}/v_0").schema)
+    // a compound-key upsert leaves repeated keys: every row is returned
+    val s = spark; import s.implicits._
+    st.update(Seq((7L, "e7", 9.0)).toDF("k", "d", "v"), Seq("k", "d"))
+    assert(keyRead(st, """{"k": 7}""").size === 2)
+  }
+
+  test("point read with 1 and 2 pending deltas that re-state the key") {
+    val s = spark; import s.implicits._
+    val st = deltaStore("pr-deltas")
+    fill(st)
+    st.update(Seq((7L, "x1", 1.0), (8L, "y1", 1.0)).toDF("k", "d", "v"))
+    assert(keyRead(st, """{"k": 7}""") === Seq("""{"k":7,"d":"x1","v":1.0}"""))
+    st.update(Seq((7L, "x2", 2.0)).toDF("k", "d", "v"))
+    assert(st.contentToken === "v_0;d_1,d_2")
+    assert(keyRead(st, """{"k": 7}""") === Seq("""{"k":7,"d":"x2","v":2.0}"""))
+    assert(keyRead(st, """{"k": 8}""") === Seq("""{"k":8,"d":"y1","v":1.0}"""))
+    assert(keyRead(st, """{"k": 9}""") === Seq("""{"k":9,"d":"d9","v":4.5}"""))
+  }
+
+  test("point read of a key present only in a delta, and after compaction") {
+    val s = spark; import s.implicits._
+    val st = deltaStore("pr-compact", compactAfter = 2)
+    fill(st)
+    st.update(Seq((99L, "new", 1.0)).toDF("k", "d", "v"))
+    assert(keyRead(st, """{"k": 99}""") === Seq("""{"k":99,"d":"new","v":1.0}"""))
+    st.update(Seq((7L, "x2", 2.0)).toDF("k", "d", "v"))
+    assert(st.contentToken === "v_1") // the second delta compacted
+    assert(keyRead(st, """{"k": 99}""") === Seq("""{"k":99,"d":"new","v":1.0}"""))
+    assert(keyRead(st, """{"k": 7}""") === Seq("""{"k":7,"d":"x2","v":2.0}"""))
+  }
+
+  test("point read of a missing key is empty, with and without deltas") {
+    val s = spark; import s.implicits._
+    val st = deltaStore("pr-missing")
+    fill(st)
+    assert(keyRead(st, """{"k": 12345}""").isEmpty)
+    st.update(Seq((7L, "x1", 1.0)).toDF("k", "d", "v"))
+    assert(keyRead(st, """{"k": 12345}""").isEmpty)
+    assert(keyRead(st, """{"k": -1}""").isEmpty)
+  }
+
+  test("point read: int literal on long and int key columns; string key") {
+    val s = spark; import s.implicits._
+    val longs = deltaStore("pr-long")
+    fill(longs)
+    assert(keyRead(longs, """{"k": 60}""") === Seq("""{"k":60,"d":"d60","v":30.0}"""))
+    val ints = deltaStore("pr-int")
+    ints.update((1 to 40).map(k => (k, s"i$k")).toDF("k", "d"))
+    ints.update(Seq((5, "i5b")).toDF("k", "d"))
+    assert(keyRead(ints, """{"k": 5}""") === Seq("""{"k":5,"d":"i5b"}"""))
+    assert(keyRead(ints, """{"k": 6}""") === Seq("""{"k":6,"d":"i6"}"""))
+    val strs = new ParquetStore(spark,
+      java.nio.file.Files.createTempDirectory("pr-str").toString, key = "sid",
+      lastUpdatedField = "sid", deltaWrites = true)
+    strs.update((1 to 40).map(i => (s"s$i", i.toLong)).toDF("sid", "n"))
+    strs.update(Seq(("s3", 33L), ("new", 1L)).toDF("sid", "n"))
+    assert(keyRead(strs, """{"sid": "s3"}""") === Seq("""{"sid":"s3","n":33}"""))
+    assert(keyRead(strs, """{"sid": "s4"}""") === Seq("""{"sid":"s4","n":4}"""))
+    assert(keyRead(strs, """{"sid": "s"}""").isEmpty)
+  }
+
+  test("point read through a delta that adds a column") {
+    val s = spark; import s.implicits._
+    val st = deltaStore("pr-widen")
+    fill(st)
+    st.update(Seq((7L, "x1", 1.0, "extra")).toDF("k", "d", "v", "note"))
+    assert(st.df.columns.toSeq === Seq("k", "d", "v", "note"))
+    assert(keyRead(st, """{"k": 7}""") === Seq("""{"k":7,"d":"x1","v":1.0,"note":"extra"}"""))
+    assert(keyRead(st, """{"k": 8}""") === Seq("""{"k":8,"d":"d8","v":4.0}"""))
+  }
+
+  test("point read runs the query's projection and limit on the local frame") {
+    val s = spark; import s.implicits._
+    val st = deltaStore("pr-project")
+    fill(st)
+    st.update(Seq((7L, "x1", 1.0)).toDF("k", "d", "v"))
+    val qp = QueryParams(criteria = Some("""{"k": 7}"""), properties = Seq("d"),
+      limit = Some(1))
+    assert(keyRead(st, qp) === Seq("""{"d":"x1"}"""))
+    assert(keyRead(st, qp.copy(skip = 1)).isEmpty)
+  }
+
+  test("$and and $gt criteria fall back to the plan over df") {
+    val s = spark; import s.implicits._
+    val st = deltaStore("pr-fallback")
+    fill(st)
+    st.update(Seq((7L, "x1", 1.0)).toDF("k", "d", "v"))
+    assert(keyRead(st, QueryParams(criteria =
+      Some("""{"$and": [{"k": 7}, {"v": {"$gt": 0}}]}""")), jobs = 1)
+      === Seq("""{"k":7,"d":"x1","v":1.0}"""))
+    assert(keyRead(st, QueryParams(criteria = Some("""{"k": {"$gt": 58}}""")), jobs = 1)
+      .size === 2)
+    // a literal that does not cast to the key type falls back too
+    assert(keyRead(st, QueryParams(criteria = Some("""{"k": 7.5}""")), jobs = 1).isEmpty)
   }
 }
