@@ -311,20 +311,23 @@ class SubmissionResource(
   * (`application/octet-stream`, `ETag` = content md5),
   * `GET /{name}/{key}/meta` → the metadata document as JSON. */
 class BlobResource(val store: graft.store.BlobStore) {
-  /** The blob under `key`, selected through `store.query` (the
-    * ParquetStore point read: no Spark job). */
-  private def byKey(key: String): DataFrame = store.query(QueryParams(
-    criteria = Some(s"""{${Json.str(store.key)}: ${Json.str(key)}}"""), limit = Some(1)))
+  /** The `cols` of the blob under `key`, selected through `store.query`
+    * (the ParquetStore point read: no Spark job, and only `cols` decoded). */
+  private def byKey(key: String, cols: String*): DataFrame = store.query(QueryParams(
+    criteria = Some(s"""{${Json.str(store.key)}: ${Json.str(key)}}"""), properties = cols,
+    limit = Some(1)))
 
   /** (payload bytes, md5) — single-key lookup, payload inflated. */
   def fetch(key: String): Option[(Array[Byte], String)] =
-    store.inflated(byKey(key))
+    store.inflated(byKey(key, "payload", "metadata"))
       .select(col("payload"), col("metadata.content_md5"))
       .collect().headOption
       .map(r => (r.getAs[Array[Byte]](0), r.getString(1)))
 
+  /** The metadata document under `key`; the payload column is not read. */
   def meta(key: String): Option[String] =
-    ReadResource.jsonRows(byKey(key).select(col(store.key), col("metadata.*"))).headOption
+    ReadResource.jsonRows(byKey(key, store.key, "metadata")
+      .select(col(store.key), col("metadata.*"))).headOption
 }
 
 /** A POST-body search endpoint: the contract the `/name` ann/search

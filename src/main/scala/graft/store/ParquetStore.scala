@@ -2,7 +2,9 @@ package graft.store
 
 import graft.query.QueryParams
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.paths.SparkPath
@@ -13,7 +15,8 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.EqualTo
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType,
+  StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
@@ -50,24 +53,27 @@ import scala.jdk.CollectionConverters._
   * upsert (the index-build write shape) takes the delta path.
   *
   * ==Footer cache and point reads==
-  * Each immutable version or delta dir has its parquet footers read once
-  * on the driver and cached (cleared with the read cache on every
-  * write): the schema, and each row group's row count and key min/max.
-  * Reads take their schema from it, so reading a fresh version starts no
-  * schema-inference job; the no-criteria count and the delta row bound
-  * sum its row counts. A key-equality [[query]] `{key: scalar}` is a
-  * point read: the deltas newest first, then the base, keep only the row
-  * groups whose key statistics cover the value; Spark's parquet reader
-  * decodes those on the driver with `key = value` pushed down, the first
-  * generation holding the key wins (the merge's last-write-wins), and
-  * the rows come back as a local frame in [[df]]'s column order, on
-  * which the query's own filter, projection, skip and limit run — no
-  * Spark job. It falls back to the plan over [[df]] when the literal
-  * does not cast to the key type (or the key is not an int, long or
-  * string column), a footer cannot be read, a generation's key or
-  * column types differ from df's, or the candidate row groups hold more
-  * than 4096 rows (decoding more on the driver costs more than the job
-  * it saves).
+  * Each immutable version or delta dir has its parquet footers read on
+  * the driver and cached: the schema from one footer (as Spark's own
+  * inference reads it), and, on first use, each row group's row count,
+  * column sizes and key min/max. A commit clears the cache; a delta
+  * append drops only the new dir's entry. Reads take their schema from
+  * it, so reading a fresh version starts no schema-inference job; the
+  * no-criteria count and the delta row bound sum its row counts. A
+  * key-equality [[query]] `{key: scalar}` is a point read: the deltas
+  * newest first, then the base, keep only the row groups whose key
+  * statistics cover the value; Spark's parquet reader decodes those on
+  * the driver, only the columns the query reads, with `key = value`
+  * pushed down; the first generation holding the key wins (the merge's
+  * last-write-wins), and the rows come back as a local frame in [[df]]'s
+  * column order, on which the query's own filter, sort, projection,
+  * skip and limit run — no Spark job. It falls back to the plan over
+  * [[df]] when the literal does not cast to the key type (or the key is
+  * not an int, long or string column), a footer cannot be read, two
+  * generations type a column differently, or the candidate row groups
+  * of the generations it checks hold more than 4096 rows or 4 MiB of
+  * the columns read (decoding more on the driver costs more than the
+  * job it saves).
   */
 object ParquetStore {
   /** Delta-row ceiling for the merge-on-read broadcast (see [[ParquetStore.df]]).
@@ -77,47 +83,60 @@ object ParquetStore {
     * broadcast on every read. */
   private[store] val MaxBroadcastDeltaRows: Long = 4000000L
 
-  /** Row ceiling of the point-read fast path (see [[ParquetStore.query]]):
-    * the candidate row groups are decoded on the driver. On a 4-core host
-    * 1000 to 4000 rows of 18-column docs decode in 20-40 ms, against a
-    * 40-80 ms floor for one Spark job and about 100 ms for the schema
-    * inference the plan path used to pay; beyond this the decode grows
-    * past the job it saves. */
+  /** Ceilings of the point-read fast path (see [[ParquetStore.query]]):
+    * the candidate row groups are decoded on the driver, one thread.
+    * On a 4-core host 1000 to 4000 rows of 18-column docs decode in
+    * 20-40 ms, against a 40-80 ms floor for one Spark job; beyond these
+    * the decode grows past the job it saves. Bytes are the footer's
+    * uncompressed sizes of the columns the query reads, so a few large
+    * payloads (a blob plane) bound the decode as well as many small rows:
+    * on the same host a blob fetch among 4 MiB of candidate payload
+    * takes 73-85 ms this way against 139-155 ms through the plan. */
   private val MaxPointReadRows: Long = 4096L
+  private val MaxPointReadBytes: Long = 4L << 20
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** One row group: its row count, and whether its key statistics
-    * admit a value (true when the statistics cannot rule it out). */
-  private[store] final case class KeyGroup(rows: Long, covers: Any => Boolean)
+  /** One row group: its row count, the uncompressed bytes of each
+    * top-level column, and whether its key statistics admit a value
+    * (true when the statistics cannot rule it out). */
+  private[store] final case class KeyGroup(rows: Long, bytes: Map[String, Long],
+                                           covers: Any => Boolean)
   private[store] final case class FileFooter(status: FileStatus, groups: Seq[KeyGroup])
-  /** The footer facts of one version or delta dir. */
-  private[store] final case class DirFooter(schema: StructType, files: Seq[FileFooter]) {
+  /** The footer facts of one version or delta dir: the schema, from one
+    * footer as Spark's own inference (mergeSchema off) reads it, and the
+    * row groups of every file, read on first use. */
+  private[store] final class DirFooter(val schema: StructType, readFiles: () => Seq[FileFooter]) {
+    lazy val files: Seq[FileFooter] = readFiles()
     def rows: Long = files.iterator.flatMap(_.groups).map(_.rows).sum
   }
 
-  /** Read every parquet footer under `dir` on the driver: the schema
-    * (Spark's own footer conversion, so it equals the inferred one) and
-    * the `key` column's statistics of each row group. */
+  /** The footers of the parquet files under `dir`, on the driver: the
+    * schema from the first (Spark's own footer conversion, so it equals
+    * the inferred one), and on first use of [[DirFooter.files]] every
+    * file's row groups with the `key` column's statistics. */
   private[store] def readFooters(spark: SparkSession, dir: String, key: String): DirFooter = {
     val conf = spark.sessionState.newHadoopConf()
     val path = new HPath(dir)
     val files = path.getFileSystem(conf).listStatus(path).toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
-    val footers = files.map { f =>
+    def footer(f: FileStatus): ParquetMetadata = {
       val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      try f -> r.getFooter finally r.close()
+      try r.getFooter finally r.close()
     }
-    val (first, meta) = footers.headOption.getOrElse(
+    val first = files.headOption.getOrElse(
       throw new java.io.FileNotFoundException(s"no parquet file under $dir"))
-    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, meta),
+    val firstMeta = footer(first)
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, firstMeta),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    DirFooter(schema, footers.map { case (f, m) =>
-      FileFooter(f, m.getBlocks.asScala.toSeq.map { b =>
-        val stats = b.getColumns.asScala.find(_.getPath.toDotString == key)
-          .map(_.getStatistics).orNull
+    new DirFooter(schema, () => files.map { f =>
+      FileFooter(f, (if (f eq first) firstMeta else footer(f)).getBlocks.asScala.toSeq.map { b =>
+        val chunks = b.getColumns.asScala.toSeq
+        val stats: Statistics[_] =
+          chunks.find(_.getPath.toDotString == key).map(_.getStatistics: Statistics[_]).orNull
         KeyGroup(b.getRowCount,
+          chunks.groupMapReduce(_.getPath.toArray.head)(_.getTotalUncompressedSize)(_ + _),
           if (stats == null || stats.isEmpty) (_: Any) => true
           else if (!stats.hasNonNullValue)
             (_: Any) => !(stats.isNumNullsSet && stats.getNumNulls == b.getRowCount)
@@ -128,6 +147,15 @@ object ParquetStore {
           })
       })
     })
+  }
+
+  /** `t` with every nullability flag set and field metadata dropped: two
+    * generations' columns union without widening iff these are equal. */
+  private def loose(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => StructField(f.name, loose(f.dataType))))
+    case a: ArrayType  => ArrayType(loose(a.elementType))
+    case m: MapType    => MapType(loose(m.keyType), loose(m.valueType))
+    case other         => other
   }
 
   /** A key-equality criteria `{key: scalar}` as the value in the key
@@ -206,12 +234,8 @@ class ParquetStore(
   override private[graft] def getMeta(k: String): Option[String] =
     if (Files.exists(metaPath(k))) Some(Files.readString(metaPath(k))) else None
 
-  def df: DataFrame = dfOf(parsed)
-
-  /** [[df]] of one parsed manifest. */
-  private def dfOf(manifest: Option[(String, Seq[String])]): DataFrame =
-    manifest.filter { case (base, _) => Files.exists(Paths.get(root, base)) } match {
-    case Some((base, deltas)) if deltas.nonEmpty =>
+  def df: DataFrame = (dataPath, parsed) match {
+    case (Some(p), Some((base, deltas))) if deltas.nonEmpty =>
       // merge-on-read: later generations win per key. The base NEVER
       // shuffles — only the keys the deltas re-state need resolving, so
       // the read is (base ANTI-JOIN delta keys) ∪ (delta winners). The
@@ -243,42 +267,39 @@ class ParquetStore(
       // the exact serve-while-streaming-build pattern the class
       // documents. Over-bound states are transient anyway: the write
       // that created one compacts in the same update call.
-      // Memoized per manifest in the read cache, so the merge plan is
-      // analyzed once per write, not on every read (built outside the
-      // map: mergedRead fills the cache itself).
-      val m = s"$base;${deltas.mkString(",")}"
-      Option(readCache.get(m)).getOrElse {
-        val merged = mergedRead(s"$root/$base", base, deltas,
-          bcast = deltaRowBound(base, deltas).exists(_ <= ParquetStore.MaxBroadcastDeltaRows))
-        Option(readCache.putIfAbsent(m, merged)).getOrElse(merged)
-      }
-    case Some((base, _)) => readCached(s"$root/$base")
-    case None            => spark.emptyDataFrame
+      mergedRead(p, base, deltas,
+        bcast = deltaRowBound(base, deltas).exists(_ <= ParquetStore.MaxBroadcastDeltaRows))
+    case (Some(p), _) => readCached(p)
+    case _            => spark.emptyDataFrame
   }
 
-  /** Memoized read per version/delta dir (and per manifest for the
-    * merge-on-read plan, see [[dfOf]]). The schema comes from the
+  /** Memoized read per version/delta dir. The schema comes from the
     * dir's footer cache, so a fresh read starts no Spark job (a plain
     * `spark.read.parquet` runs one schema-inference job per dir). Store
     * call chains read [[df]] several times per operation (coverage probe
     * + query, merge + manifest, …); version dirs are IMMUTABLE once the
     * manifest names them, so the analyzed relation stays valid until the
-    * next write, which clears the cache ([[commit]]/[[upsert]]). */
+    * next commit, which clears the cache; a delta append only adds a dir
+    * ([[commit]]/[[upsert]]). */
   private val readCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def readCached(p: String): DataFrame =
     readCache.computeIfAbsent(p, path =>
       scala.util.Try(footerOf(path).schema).toOption
         .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path)))
 
-  /** One footer read per immutable dir, on the driver: the schema, and
-    * each row group's row count and key min/max. Feeds [[readCached]],
-    * [[footerRowCount]], [[deltaRowBound]] and the point-read fast path
-    * of [[query]]; cleared with the read cache. */
+  /** One footer cache entry per immutable dir, on the driver: the schema,
+    * and (read on first use) each row group's row count, column sizes and
+    * key min/max. Feeds [[readCached]], [[footerRowCount]],
+    * [[deltaRowBound]] and the point-read fast path of [[query]]; cleared
+    * with the read cache. */
   private val footerCache = new java.util.concurrent.ConcurrentHashMap[String, ParquetStore.DirFooter]()
   private def footerOf(dir: String): ParquetStore.DirFooter =
     footerCache.computeIfAbsent(dir, ParquetStore.readFooters(spark, _, key))
 
-  private def invalidateReadCache(): Unit = { readCache.clear(); footerCache.clear() }
+  /** Drop the cached reads and footers of `dirs`, or of every dir. */
+  private def invalidateReadCache(dirs: String*): Unit =
+    if (dirs.isEmpty) { readCache.clear(); footerCache.clear() }
+    else dirs.foreach { d => readCache.remove(d); footerCache.remove(d) }
 
   /** The base∪deltas last-write-wins merge plan (see [[df]] doc).
     * `bcast=false` (the over-bound compaction path) drops the broadcast
@@ -429,57 +450,98 @@ class ParquetStore(
     * `{key: scalar}` is answered from the parquet footers and a driver-side
     * decode of the row groups whose key statistics cover the value — no
     * Spark job. The rows come back as a local frame in [[df]]'s column
-    * order and `params` (filter, projection, skip, limit) run on it, so
-    * the Mongo semantics are the plan's own. Any other criteria, and the
-    * cases the fast path declines, take the plan over [[df]]. */
+    * order, holding the columns `params` reads (all of them without a
+    * projection), and `params` (filter, sort, projection, skip, limit) run
+    * on it, so the Mongo semantics are the plan's own. Any other criteria,
+    * and the cases the fast path declines, take the plan over [[df]]. */
   override def query(params: QueryParams): DataFrame =
-    params.criteria.flatMap(pointRead).fold(super.query(params))(params(_))
+    pointRead(params).fold(super.query(params))(params(_))
 
-  /** What [[df]] holds for the key value `criteria` names, or None to
-    * take the plan: the criteria is not `{key: scalar}`, the literal does
-    * not cast to the key type, a footer cannot be read, a generation's
-    * key or column types differ from df's, or the candidate row groups
-    * hold more than `MaxPointReadRows` rows. Deltas are checked newest
-    * first, then the base; the first generation holding the key wins,
-    * which is df's last-write-wins merge. */
-  private def pointRead(criteria: String): Option[DataFrame] = {
-    val manifest = parsed
+  /** What [[df]] holds for the key value `params.criteria` names, or None
+    * to take the plan: the criteria is not `{key: scalar}`, the literal
+    * does not cast to the key type, a footer cannot be read, two
+    * generations type a column differently, or the candidate row groups
+    * of the generations checked hold more than `MaxPointReadRows` rows or
+    * `MaxPointReadBytes` bytes of the columns read. Deltas are checked
+    * newest first, then the base; the first generation holding the key
+    * wins, which is df's last-write-wins merge. */
+  private def pointRead(params: QueryParams): Option[DataFrame] = try {
     for {
-      (base, deltas) <- manifest
-      target = dfOf(manifest).schema
-      field <- target.find(_.name == key)
+      criteria <- params.criteria
+      (base, deltas) <- parsed
+      if Files.exists(Paths.get(root, base))
+      dirs = deltas.reverse.map(d => s"$root/$base.$d") :+ s"$root/$base"
+      all <- dfSchema(dirs.map(footerOf(_).schema))
+      field <- all.find(_.name == key)
       (v, statV) <- ParquetStore.keyLiteral(criteria, key, field.dataType)
-      rows <- try pointRows(base, deltas, field.dataType, v, statV, target)
-              catch { case scala.util.control.NonFatal(_) => None }
+      need = reads(params)
+      target = StructType(all.filter(f => need(f.name)))
+      rows <- pointRows(dirs, v, statV, target)
     } yield spark.createDataFrame(rows.asJava, target)
+  } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** [[df]]'s schema from the generations' footer schemas (newest first,
+    * the base last), or None where df's union would widen a column's
+    * type. A plain base reads in file order; with deltas the merge puts
+    * the key first (the anti-join's USING column), then the base's other
+    * columns, then those only deltas carry, oldest delta first. */
+  private def dfSchema(gens: Seq[StructType]): Option[StructType] = {
+    val b = gens.last
+    val fields =
+      if (gens.size == 1) b.fields.toSeq
+      else (b.filter(_.name == key) ++ b.filter(_.name != key) ++ gens.init.reverse.flatten)
+        .distinctBy(_.name)
+    val agree = fields.forall { f =>
+      gens.forall(_.find(_.name == f.name).forall(g =>
+        ParquetStore.loose(g.dataType) == ParquetStore.loose(f.dataType)))
+    }
+    if (agree) Some(StructType(fields)) else None
   }
 
-  private def pointRows(base: String, deltas: Seq[String], keyType: DataType,
-                        v: Any, statV: Any, target: StructType): Option[Seq[Row]] = {
-    // newest generation first; each with the files holding a candidate group
-    val gens = (deltas.reverse.map(d => s"$root/$base.$d") :+ s"$root/$base").map { dir =>
-      val f = footerOf(dir)
-      (f.schema, f.files.filter(_.groups.exists(_.covers(statV))))
-    }
-    val rows = gens.flatMap(_._2).flatMap(_.groups).filter(_.covers(statV)).map(_.rows).sum
-    if (rows > ParquetStore.MaxPointReadRows ||
-        gens.exists(g => !g._1.find(_.name == key).exists(_.dataType == keyType))) None
+  /** Whether `params` reads the top-level column: every column without a
+    * projection, else the key and the projected and sorted fields' roots
+    * (matched case-insensitively, as the analyzer resolves them). */
+  private def reads(params: QueryParams): String => Boolean = {
+    val fields = params.properties ++ params.sort.map(_._1)
+    if (params.properties.isEmpty || fields.exists(_.contains('`'))) _ => true
     else {
-      // one reader per distinct schema (building one costs a broadcast)
-      val readers = scala.collection.mutable.Map[StructType, PartitionedFile => Iterator[InternalRow]]()
-      gens.iterator.collect { case (schema, files) if files.nonEmpty =>
-        (schema, decode(readers.getOrElseUpdate(schema, reader(schema, v)), schema, files, v))
-      }.find(_._2.nonEmpty)
-        .fold(Option(Seq.empty[Row])) { case (schema, hits) => conform(hits, schema, target) }
+      val roots = (key +: fields).map(_.takeWhile(_ != '.').toLowerCase).toSet
+      name => roots(name.toLowerCase)
     }
   }
 
-  /** Spark's own parquet reader over `schema`, run on the driver, with
-    * `key = v` pushed down (parquet skips the row groups its statistics
-    * rule out). */
-  private def reader(schema: StructType, v: Any): PartitionedFile => Iterator[InternalRow] =
+  /** The rows of the newest generation in `dirs` holding the key value,
+    * as `target` rows; None when the candidate row groups of the
+    * generations up to that one are over the fast path's ceilings. */
+  private def pointRows(dirs: Seq[String], v: Any, statV: Any,
+                        target: StructType): Option[Seq[Row]] = {
+    val names = target.fieldNames.toSet
+    // one reader per distinct schema (building one costs a broadcast)
+    val readers = scala.collection.mutable.Map[StructType, PartitionedFile => Iterator[InternalRow]]()
+    var (rows, bytes) = (0L, 0L)
+    dirs.iterator.map { dir =>
+      val footer = footerOf(dir)
+      val files = footer.files.map(f => f.copy(groups = f.groups.filter(_.covers(statV))))
+        .filter(_.groups.nonEmpty)
+      val groups = files.flatMap(_.groups)
+      rows += groups.map(_.rows).sum
+      bytes += groups.iterator.flatMap(_.bytes).collect { case (c, n) if names(c) => n }.sum
+      if (rows > ParquetStore.MaxPointReadRows || bytes > ParquetStore.MaxPointReadBytes) None
+      else {
+        val read = StructType(footer.schema.filter(f => names(f.name)))
+        val readFile = readers.getOrElseUpdate(footer.schema, reader(footer.schema, read, v))
+        Some(conform(decode(readFile, read, files, v), read, target))
+      }
+    }.find(_.forall(_.nonEmpty)).getOrElse(Some(Nil))
+  }
+
+  /** Spark's own parquet reader over a file of `schema`, run on the
+    * driver, decoding the `read` columns with `key = v` pushed down
+    * (parquet skips the row groups its statistics rule out). */
+  private def reader(schema: StructType, read: StructType,
+                     v: Any): PartitionedFile => Iterator[InternalRow] =
     new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
-      new StructType(), schema, Seq(EqualTo(key, v)),
+      new StructType(), read, Seq(EqualTo(key, v)),
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
 
   /** The rows of `files` whose key equals `v`, decoded on the driver by `read`. */
@@ -505,15 +567,10 @@ class ParquetStore(
   }
 
   /** `rows` of `from` re-laid in `to`'s column order; a column `from`
-    * lacks is null (df's `allowMissingColumns` union). None when a shared
-    * column's type differs (df's union would widen it). */
-  private def conform(rows: Seq[Row], from: StructType, to: StructType): Option[Seq[Row]] = {
-    val idx = to.fields.toSeq.map(t => from.fieldNames.indexOf(t.name))
-    val typesAgree = to.fields.zip(idx).forall { case (t, j) =>
-      j < 0 || DataType.equalsStructurallyByName(from(j).dataType, t.dataType, _ == _)
-    }
-    if (!typesAgree) None
-    else Some(rows.map(r => Row.fromSeq(idx.map(j => if (j < 0) null else r.get(j)))))
+    * lacks is null (df's `allowMissingColumns` union). */
+  private def conform(rows: Seq[Row], from: StructType, to: StructType): Seq[Row] = {
+    val idx = to.fieldNames.toSeq.map(from.fieldNames.indexOf(_))
+    rows.map(r => Row.fromSeq(idx.map(j => if (j < 0) null else r.get(j))))
   }
 
   /** [[update]] for a batch the CALLER has already made key-unique (and
@@ -536,8 +593,9 @@ class ParquetStore(
       (if (batchUnique) docs else Store.dedupLastWins(docs, keyFields))
         .write.mode(SaveMode.Overwrite).parquet(s"$root/$base.$d")
       Store.writeFileAtomic(currentFile, s"$base;${(deltas :+ d).mkString(",")}")
-      // a crash-orphaned same-name delta dir may have been cached stale
-      invalidateReadCache()
+      // the base and older deltas are untouched; a crash-orphaned
+      // same-name delta dir may have been cached stale
+      invalidateReadCache(s"$root/$base.$d")
       // compact on delta COUNT (the steady-state cadence) or on the
       // broadcast row bound — the write path owns compaction so reads
       // never mutate (see the df doc); a bound-exceeding batch compacts

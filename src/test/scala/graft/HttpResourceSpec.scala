@@ -568,6 +568,49 @@ class HttpResourceSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a point lookup on an indexed ParquetStore is pruned to one row group, by the plan and by the point read") {
+    val s = spark; import s.implicits._
+    // 4 shuffle partitions x 2500 rows each, as in the test above
+    def mkStore(indexed: Boolean): graft.store.ParquetStore = {
+      val st = new graft.store.ParquetStore(spark,
+        java.nio.file.Files.createTempDirectory(s"pq_prune_$indexed").toString, key = "k",
+        lastUpdatedField = "lu")
+      if (indexed) st.ensureIndex("k")
+      st.update((1L to 10000L).map(k => (k, 1L)).toDF("k", "lu"))
+      st
+    }
+    val records = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null) records.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
+    }
+    // the plan path: a `$eq` criteria is not `{key: scalar}`, so it runs
+    // as a scan whose pushed equality parquet prunes by row-group min/max
+    def planRecords(st: graft.store.ParquetStore): Long = {
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      records.set(0)
+      assert(st.query("""{"k": {"$eq": 7777}}""").count() === 1L)
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      records.get()
+    }
+    val (indexed, unindexed) = (mkStore(indexed = true), mkStore(indexed = false))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (i, u) = (planRecords(indexed), planRecords(unindexed))
+      assert(i > 0 && i <= 3500, s"indexed scan read $i records, not one row group")
+      assert(u >= 2 * i, s"unindexed scan read $u records vs indexed $i, not probative")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the point read: the indexed store's key statistics leave one
+    // ~2500-row group, which is decoded on the driver with no job; the
+    // unindexed store's groups all cover the key, 10000 rows are over
+    // the point read's row ceiling, and the lookup takes the plan
+    val want = s"""{"k":7777,"lu":1}"""
+    val res = (st: graft.store.ParquetStore) => new ReadResource(st, Seq(new PaginationQuery(5, 100)))
+    assert(jobsIn(res(indexed).byKey("7777")) === (Some(want), 0))
+    val (got, n) = jobsIn(res(unindexed).byKey("7777"))
+    assert(got === Some(want) && n >= 1, s"unindexed lookup ran $n jobs")
+  }
+
   test("defaultCriteria is $and-merged into every search and key lookup") {
     val guarded = new ReadResource(store, Seq(new PaginationQuery(5, 100)),
       defaultCriteria = Some("""{"o_orderstatus": "O"}"""))
@@ -650,5 +693,26 @@ class HttpResourceSpec extends SparkSpec {
         .select(col("blob_id"), col("metadata.*")).toJSON.collect().toSeq)
     }
     assert(jobsIn(res.fetch("nope")) === (None, 0))
+  }
+
+  test("BlobResource meta decodes no payload: over the point read's byte ceiling, fetch takes the plan and meta runs no job") {
+    import org.apache.spark.sql.functions.col
+    val s = spark; import s.implicits._
+    val bs = new graft.store.BlobStore(spark,
+      java.nio.file.Files.createTempDirectory("blob_bytes").toString, key = "blob_id")
+    // three incompressible 2 MiB payloads: 6 MiB of payload in the row
+    // groups a lookup of any of them has to consider
+    val rnd = new scala.util.Random(7)
+    val blobs = Seq("b1", "b2", "b3").map(id => id -> Array.fill(2 << 20)(rnd.nextInt().toByte))
+    bs.put(blobs.map { case (id, b) => (id, b, new java.sql.Timestamp(1000L)) }
+      .toDF("blob_id", "content", "last_updated"))
+    val res = new BlobResource(bs)
+    val (got, n) = jobsIn(res.fetch("b2"))
+    assert(got.map(_._1.toSeq) === Some(blobs(1)._2.toSeq) && n >= 1,
+      s"fetch over the byte ceiling ran $n jobs")
+    val (meta, m) = jobsIn(res.meta("b2"))
+    assert(m === 0, s"meta(b2) started $m Spark jobs")
+    assert(meta.toSeq === bs.df.filter(col("blob_id") === "b2")
+      .select(col("blob_id"), col("metadata.*")).toJSON.collect().toSeq)
   }
 }

@@ -450,6 +450,22 @@ class StoreSpec extends SparkSpec {
     assert(keyRead(st, qp.copy(skip = 1)).isEmpty)
   }
 
+  test("point read decodes only the columns the query reads; over the byte ceiling it falls back") {
+    val s = spark; import s.implicits._
+    val st = deltaStore("pr-wide")
+    // 40 distinct 500 KB strings: every lookup's candidate groups carry
+    // MiBs of `big`, over the point read's byte ceiling
+    st.update((1L to 40L).map(k => (k, s"d$k", s"$k" + "x" * 500000)).toDF("k", "d", "big"))
+    st.update(Seq((7L, "x1", "small")).toDF("k", "d", "big"))
+    val narrow = QueryParams(criteria = Some("""{"k": 8}"""), properties = Seq("D"))
+    assert(keyRead(st, narrow).map(_.toLowerCase) === Seq("""{"d":"d8"}"""))
+    assert(keyRead(st, narrow.copy(criteria = Some("""{"k": 7}"""), properties = Seq("k", "big")))
+      === Seq("""{"k":7,"big":"small"}"""))
+    // a sorted field is read too (a sort over the local frame runs a job)
+    assert(keyRead(st, narrow.copy(sort = Seq("big" -> 1)), jobs = 1).size === 1)
+    assert(keyRead(st, QueryParams(criteria = Some("""{"k": 8}""")), jobs = 1).size === 1)
+  }
+
   test("$and and $gt criteria fall back to the plan over df") {
     val s = spark; import s.implicits._
     val st = deltaStore("pr-fallback")

@@ -4,19 +4,20 @@ Exports the parent revision into a scratch directory with `git archive` (the
 repository's own .git gains no worktree entry, so an interrupted run leaves
 nothing behind in it), builds both trees, runs one discarded warm-up per side
 (the first run after a build writes the JVM class-data archive), then
-alternates untraced `perfbench/run.py --workload W --seed N` runs of the
-parent and of the working tree for N = 1..pairs; which side goes first
-alternates per pair. Prints every run's metrics, the median per side, the
+alternates untraced `perfbench/run.py --workload W --seed N --seconds S` runs
+of the parent and of the working tree for N = 1..pairs, S being BENCHMARK.json's
+`run_seconds` (the same on both sides); which side goes first alternates per
+pair. Prints every run's metrics, the median per side, the
 change/parent ratio of each metric's median, the parent's IQR / median, and
 for each lower-is-better (higher-is-better) metric the number of pairs in
 which the change was better.
 
     python3 tools/perfbench_ab.py --parent HEAD~1 --workload ingest_serve --pairs 10
-    python3 tools/perfbench_ab.py --parent d87e4b5 --workload incr_build --pairs 3 \\
+    python3 tools/perfbench_ab.py --parent d87e4b5 --workload incr_build \\
         --out plans/x/ab_incr_build.txt
 
-Each run takes about a minute on a 4-core host; `--pairs 10` takes about 25
-minutes. The last stdout line of run.py is its result JSON; `--out` also
+Each run takes about a minute on a 4-core host; the default 10 pairs take
+about 25 minutes. The last stdout line of run.py is its result JSON; `--out` also
 keeps every result line, so the report holds the raw runs.
 """
 import argparse
@@ -30,9 +31,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 
 
-def end_to_end(tree: Path):
-    bench = json.loads((tree / "BENCHMARK.json").read_text())
-    return [(m["name"], m["better"]) for m in bench["end_to_end"]]
+BENCH = json.loads((ROOT / "BENCHMARK.json").read_text())
 
 
 def export(rev: str, dest: Path) -> None:
@@ -42,9 +41,10 @@ def export(rev: str, dest: Path) -> None:
     subprocess.run(["tar", "-x", "-C", str(dest)], input=archive, check=True)
 
 
-def run(tree: Path, workload: str, seed: int, seconds: int) -> dict:
+def run(tree: Path, workload: str, seed: int) -> dict:
     r = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(BENCH["run_seconds"]),
+                        "--trace", "0"],
                        cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     lines = [l for l in r.stdout.splitlines() if l.startswith("{")]
     if r.returncode != 0 or not lines:
@@ -62,8 +62,7 @@ def main() -> int:
                                  formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--parent", required=True, help="git revision to compare against")
     ap.add_argument("--workload", required=True, choices=["incr_build", "ingest_serve"])
-    ap.add_argument("--pairs", type=int, default=5)
-    ap.add_argument("--seconds", type=int, default=20)
+    ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--workdir", help="where the parent is exported (default: a new temp dir)")
     ap.add_argument("--out", help="also write the report, with the raw result lines, here")
     a = ap.parse_args()
@@ -74,26 +73,26 @@ def main() -> int:
                          check=True, stdout=subprocess.PIPE, text=True).stdout.strip()
     export(rev, parent_tree)
     sides = {"parent": parent_tree, "change": ROOT}
-    metrics = end_to_end(ROOT)
+    metrics = [(m["name"], m["better"]) for m in BENCH["end_to_end"]]
 
     for side, tree in sides.items():
         subprocess.run([sys.executable, "perfbench/build.py"], cwd=tree, check=True,
                        stdout=subprocess.DEVNULL)
-        run(tree, a.workload, 0, a.seconds)  # warm-up, discarded
+        run(tree, a.workload, 0)  # warm-up, discarded
 
     rows = []  # (seed, side, result)
     for seed in range(1, a.pairs + 1):
         order = ["parent", "change"] if seed % 2 else ["change", "parent"]
         for side in order:
-            res = run(sides[side], a.workload, seed, a.seconds)
+            res = run(sides[side], a.workload, seed)
             rows.append((seed, side, res))
             print(f"# seed {seed} {side}: correct={res.get('correct')}", file=sys.stderr)
 
     def val(res, m):
         return res.get("metrics", {}).get(m, {}).get("value", float("nan"))
 
-    out = [f"# tools/perfbench_ab.py --parent {rev} --workload {a.workload} --pairs {a.pairs} "
-           f"--seconds {a.seconds}: untraced runs, parent vs working tree, alternating", "",
+    out = [f"# tools/perfbench_ab.py --parent {rev} --workload {a.workload} --pairs {a.pairs}: "
+           f"untraced {BENCH['run_seconds']} s runs, parent vs working tree, alternating", "",
            a.workload,
            "  seed side    correct failed " + "".join(f"{m:>13}" for m, _ in metrics)]
     for seed, side, res in rows:
