@@ -39,12 +39,12 @@ object Verify {
         errors(name) = msg.linesIterator.take(3).mkString(" | ").take(500)
       }
     }
+    // the oracle SQL of exactly the queries run, so a subset run compares
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      SparkEntry.oracleSqlJson)
+      SparkEntry.oracleSqlJson(only))
     Files.writeString(Paths.get(s"$outDir/errors.json"),
-      errors.map { case (k, v) =>
-        "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      }.mkString("{", ",", "}"))
+      errors.map { case (k, v) => s"${api.Json.str(k)}:${api.Json.str(v)}" }
+        .mkString("{", ",", "}"))
     spark.stop()
     if (errors.nonEmpty) {
       System.err.println(s"[verify] ${errors.size} quer(ies) FAILED: " +

@@ -204,6 +204,10 @@ class DedupBuilder(
     * old canonical stays canonical and the only target repair needed is
     * PROMOTION — members whose re-resolved label becomes their own id
     * were losers whose canonical left; their source rows are restored.
+    * The removal is VIRTUAL until the end: the remnant is the touched
+    * clusters' rows anti-joined with the changed ids, and each store then
+    * takes one commit — the index its relabels plus the signature
+    * removals, the target its promoted rows plus the row removals.
     *
     * Caveats, documented: (a) re-banding a component's remnant can see
     * fewer bucket members than the original corpus-wide build, so a
@@ -223,54 +227,22 @@ class DedupBuilder(
         col(source.lastUpdatedField).alias("__slu")), Seq("id"))
       .filter(col("__slu") > col("lu"))
       .select(col("id"), col("cluster"))
-      .materializeEager() // consumed by count + 2 removeKeys + semi-join
+      .materializeEager() // consumed by count, member semi/anti-joins, 2 removals
     try {
       val n = changed.count()
       if (n == 0) return 0L
-      idx.removeKeys(changed.select(col("id")))
-      target.removeKeys(changed.select(col("id").alias(target.key)))
-      // remaining members of the touched components, with stored labels
+      // remaining members of the touched components, with stored labels:
+      // the changed docs' stale signatures never reach the pair producer
       val members = idx.df
         .join(changed.select(col("cluster")).distinct(), Seq("cluster"), "left_semi")
+        .join(changed.select(col("id")), Seq("id"), "left_anti")
         .materializeEager() // pair producer reads sigs 2-3×, label diff once
       try {
-        val spark = members.sparkSession
-        def cos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-          graft.functions.GraftFunctions.cosine(spark, a, b)
-        val pairs = method match {
-          case "minhash" => Dedup.minhashLshFromSigs(
-            members.select(col("id"), col("sig")), numHashes, bands,
-            threshold = threshold, family = family)
-          case "simhash" | "image" => Dedup.simhashPairsFromSigs(
-            members.select(col("id"), col("sig").alias("simhash")))
-          case "ngram" => Dedup.ngramJaccardPairsFromSigs(
-            members.select(col("id"), col("grams").alias("sig")),
-            threshold = threshold)
-          case _ => // semantic: within-cell exact cosine among the remnant
-            val m = members.select(col("cell"), col("id"), col("vec"))
-            val hot = m.groupBy(col("cell")).agg(count(lit(1)).alias("__cn"))
-              .filter(col("__cn") > maxCellSize).select(col("cell"))
-            val ok = m.join(broadcast(hot), Seq("cell"), "left_anti")
-            val under = ok
-              .select(col("cell"), col("id").alias("a"), col("vec").alias("va"))
-              .join(ok.select(col("cell"), col("id").alias("b"),
-                col("vec").alias("vb")), Seq("cell"))
-              .filter(col("a") < col("b"))
-              .filter(cos(col("va"), col("vb")) >= threshold)
-              .select(col("a"), col("b"))
-            if (overCap != "star") under
-            else {
-              val over = m.join(broadcast(hot), Seq("cell"), "left_semi")
-              val reps = over.groupBy(col("cell"))
-                .agg(min_by(struct(col("id"), col("vec")), col("id")).alias("__r"))
-                .select(col("cell"), col("__r.id").alias("a"),
-                  col("__r.vec").alias("va"))
-              under.unionByName(over.join(broadcast(reps), Seq("cell"))
-                .filter(col("id") =!= col("a"))
-                .filter(cos(col("va"), col("vec")) >= threshold)
-                .select(col("a"), col("id").alias("b")))
-            }
-        }
+        val pairs =
+          if (method == "semantic") graft.ext.Similarity.cellDupPairs(
+            members.select(col("cell"), col("id"), col("vec")), threshold,
+            maxCellSize, overCap)
+          else sigPairs(members)
         val labels = Dedup.clusters(pairs.select(col("a"), col("b")))
         val relab = members.withColumnRenamed("cluster", "__old")
           .join(labels, Seq("id"), "left_outer")
@@ -278,20 +250,38 @@ class DedupBuilder(
         val delta = relab.filter(col("cluster") =!= col("__old"))
           .drop("__old").materializeEager()
         try {
-          idx.update(delta, Seq("id"))
+          // ONE index commit: the relabels in, the stale signatures out
+          idx.updateRemoveKeys(delta, changed.select(col("id")), Seq("id"))
           // promotion repair: new label == own id ⇒ an ex-loser whose
           // canonical left — restore its (current) source row; a member
-          // gone from the source has no row to restore (orphan, skipped)
+          // gone from the source has no row to restore (orphan, skipped).
+          // ONE target commit with the changed docs' rows (any may be a
+          // stale canonical) out — the resolveDeltaAndRepair pattern
           val promoted = delta.filter(col("id") === col("cluster"))
             .select(col("id").alias(k))
           val rows = scoped.join(promoted, Seq(k), "left_semi")
             .materializeEager()
-          try { if (rows.count() > 0) target.update(rows, Seq(target.key)) }
-          finally rows.unpersist()
+          val stale = changed.select(col("id").alias(target.key))
+          try {
+            if (rows.count() > 0) target.updateRemoveKeys(rows, stale, Seq(target.key))
+            else target.removeKeys(stale)
+          } finally rows.unpersist()
         } finally delta.unpersist()
       } finally members.unpersist()
       n
     } finally changed.unpersist()
+  }
+
+  /** This method's from-scratch pairs over a signature table in the
+    * index layout (`(id, sig)`, or `(id, grams)` for ngram): the first
+    * indexed run and the repair pass's remnant both pair through it. */
+  private def sigPairs(sigs: DataFrame): DataFrame = method match {
+    case "minhash" => Dedup.minhashLshFromSigs(sigs.select(col("id"), col("sig")),
+      numHashes, bands, threshold = threshold, family = family)
+    case "simhash" | "image" => Dedup.simhashPairsFromSigs(
+      sigs.select(col("id"), col("sig").alias("simhash")))
+    case _ => Dedup.ngramJaccardPairsFromSigs(
+      sigs.select(col("id"), col("grams").alias("sig")), threshold = threshold)
   }
 
   /** The candidate set for this build — the (scoped) source corpus, or
@@ -425,14 +415,6 @@ class DedupBuilder(
         .withColumnRenamed("sig", "grams")
     }).materializeEager()
 
-    def fromScratch = method match {
-      case "minhash" => Dedup.minhashLshFromSigs(newSigs, numHashes, bands,
-        threshold = threshold, family = family)
-      case "simhash" | "image" => Dedup.simhashPairsFromSigs(
-        newSigs.withColumnRenamed("sig", "simhash"))
-      case _ => Dedup.ngramJaccardPairsFromSigs(
-        newSigs.withColumnRenamed("grams", "sig"), threshold = threshold)
-    }
     def incremental(knownSigs: DataFrame) = method match {
       case "minhash" =>
         Dedup.minhashLshIncrementalSigs(newSigs, knownSigs, numHashes, bands,
@@ -443,7 +425,7 @@ class DedupBuilder(
         knownSigs.withColumnRenamed("grams", "sig"), threshold = threshold)
     }
     val (pairs, oldEdges, known) =
-      if (!hasIndex) (fromScratch, None, None)
+      if (!hasIndex) (sigPairs(newSigs), None, None)
       else {
         // lu rides the known rows so a relabeled old row keeps its
         // indexed-at lu through the delta rewrite (see attachLu)

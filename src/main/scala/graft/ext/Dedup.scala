@@ -241,12 +241,8 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
   }
 
-  /** id-type dispatch for the capped candidate paths: integral ids ride
-    * the single-shuffle [[graft.functions.BoundedCollectAgg]] kernel
-    * (cast to long — lossless); any other id type (string keys are
-    * common in document stores) falls back to the join-based shape,
-    * which is id-type-agnostic at the cost of shuffling the banded
-    * table three times. Same pair sets either way. */
+  /** Integral ids ride the candidate core's kernel path (see
+    * [[bandedPairs]]); any other id type takes its join fallback. */
   private def integralId(df: DataFrame, idCol: String): Boolean =
     df.schema(idCol).dataType match {
       case org.apache.spark.sql.types.LongType |
@@ -304,15 +300,140 @@ object Dedup {
     if (perLeaf.forall(_.isDefined)) Some(perLeaf.flatten.sum) else None
   }
 
-  /** Fallback over-cap keys + capped banding for non-integral ids:
-    * hot-count aggregate → broadcast anti-join (the pre-kernel shape). */
-  private def cappedBandedFallback(banded: DataFrame, maxBucketSize: Int)
-      : (DataFrame, DataFrame) = {
-    val hot = banded.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).alias("__n")).filter(col("__n") > maxBucketSize)
-      .select(col("band"), col("bucket"))
-    (banded.join(broadcast(hot), Seq("band", "bucket"), "left_anti"), hot)
+  /** The banded-candidate core. Every signature family generates its
+    * candidates here and keeps only its banding (or posting) step and its
+    * verification: rows `(key…, id, aux)` — a band bucket or a gram, a
+    * doc, a 64-bit payload — become pairs `(a, b, xa, xb)` with `a < b`
+    * and each side's aux. Returns the pairs and the over-cap keys (read
+    * only by simhash star mode).
+    *
+    * CAP: a key held by more than `cap` rows is hot (boilerplate
+    * shingles, a crowded 16-bit simhash band) and yields no pairs — the
+    * standard LSH skew guard, bounding fan-out at C(cap, 2) per key.
+    * Integral ids (cast to long, lossless) enforce it INSIDE one
+    * aggregation: each key's posting list rides a
+    * [[graft.functions.BoundedCollectAgg]] with O(cap) state and
+    * NULL-on-overflow, so the rows shuffle ONCE (the hot-count aggregate +
+    * broadcast anti-join + self-join shape shuffles them three times), and
+    * pairs expand map-side from each list in one compiled loop. Any other
+    * id type (string keys are common in document stores) takes
+    * [[cappedBandedFallback]] — id-type-agnostic, same pair set.
+    *
+    * EXCHANGE PIN (`pinned`, kernel path only): the list collect, the
+    * pair explode and the caller's map-side verify or partial count all
+    * run ON the list partitions. Left adaptive, AQE sizes the byte-small
+    * but CPU-dense list shuffle to 1-4 tasks and those stages run on a few
+    * of the cores (87k banded rows took 807 ms on one task in the
+    * dedup_clusters replay; the n-gram naive branch went 3.47 → 2.2 s at
+    * sf0.1 from the pin alone). AQE never re-coalesces a user-specified
+    * repartition, so a pinned call repartitions by key at
+    * defaultParallelism — the rows are narrow 8-byte columns, so shipping
+    * them raw costs what the partial aggregate's output would. Pinned only
+    * where the rows are bounded: banded volume is docs × bands (linear,
+    * never corpus-quadratic), the n-gram naive branch sits under its row
+    * floor / candidate-mass crossover, and incremental n-gram postings are
+    * batch-proportional by contract. The prefix branch and the incremental
+    * minhash/simhash banding stay adaptive.
+    *
+    * ORIENTATION: batch producers take `a < b` as is. The incremental
+    * producers put `payload << 1 | isNew` in aux and orient through
+    * [[touchingNew]]; the cap counts old and new rows together, so it is
+    * measured over the same occupancy as a from-scratch build.
+    *
+    * `reuseLists`: the lists feed both the pairs and the over-cap keys —
+    * persist them (simhash star mode). */
+  private def bandedPairs(rows: DataFrame, keys: Seq[String], cap: Int,
+                          pinned: Boolean, reuseLists: Boolean = false)
+      : (DataFrame, DataFrame) =
+    if (!integralId(rows, "id")) cappedBandedFallback(rows, keys, cap)
+    else {
+      val lists0 = postingLists(rows, keys, cap, pinned)
+      val lists =
+        if (reuseLists) lists0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else lists0
+      (expandPairs(lists), lists.filter(col("lst").isNull).select(keys.map(col): _*))
+    }
+
+  /** The posting step of [[bandedPairs]] (integral ids): `(key…, lst)`,
+    * each key's `(id, aux)` list in one exchange, NULL past the cap. */
+  private def postingLists(rows: DataFrame, keys: Seq[String], cap: Int,
+                           pinned: Boolean): DataFrame = {
+    val spark = rows.sparkSession
+    val k = keys.map(col)
+    val narrow = rows.select(k :+ col("id").cast("long").alias("id") :+ col("aux"): _*)
+    (if (pinned) narrow.repartition(spark.sparkContext.defaultParallelism, k: _*)
+      else narrow)
+      .groupBy(k: _*)
+      .agg(graft.functions.BoundedCollectAgg.boundedCollect(spark,
+        col("id"), col("aux"), cap).alias("lst"))
   }
+
+  /** Capped lists → `(a, b, xa, xb)` with `a < b`: non-NULL lists of ≥ 2
+    * members expand in the compiled pair loop (positional pairs, ordered
+    * by id here; per-row arrays bounded by C(cap, 2) structs). */
+  private def expandPairs(lists: DataFrame): DataFrame = {
+    val swap = col("pr.a") > col("pr.b")
+    lists.filter(col("lst").isNotNull && size(col("lst")) >= 2)
+      .select(explode(graft.functions.GraftFunctions.listPairs(
+        lists.sparkSession, col("lst"))).alias("pr"))
+      .select(least(col("pr.a"), col("pr.b")).alias("a"),
+        greatest(col("pr.a"), col("pr.b")).alias("b"),
+        when(swap, col("pr.szb")).otherwise(col("pr.sza")).alias("xa"),
+        when(swap, col("pr.sza")).otherwise(col("pr.szb")).alias("xb"))
+  }
+
+  /** [[bandedPairs]] for non-integral ids: hot-key count aggregate →
+    * broadcast anti-join → self-join on the keys; same columns, and the
+    * over-cap keys from the count. */
+  private def cappedBandedFallback(rows: DataFrame, keys: Seq[String], cap: Int)
+      : (DataFrame, DataFrame) = {
+    val k = keys.map(col)
+    val hot = rows.groupBy(k: _*).agg(count(lit(1)).alias("__n"))
+      .filter(col("__n") > cap).select(k: _*)
+    val capped = rows.join(broadcast(hot), keys, "left_anti")
+    def side(id: String, x: String) =
+      capped.select(k :+ col("id").alias(id) :+ col("aux").alias(x): _*)
+    (side("a", "xa").join(side("b", "xb"), keys).filter(col("a") < col("b"))
+      .select(col("a"), col("b"), col("xa"), col("xb")), hot)
+  }
+
+  /** Incremental orientation over [[bandedPairs]] output whose aux is
+    * `payload << 1 | isNew`: keeps the pairs that touch a new doc, puts
+    * the OLD id in `a` of an old-new pair (batches are disjoint, so no
+    * order guard) and keeps `a < b` for new-new pairs; `xa`/`xb` become
+    * the payloads. */
+  private def touchingNew(pairs: DataFrame): DataFrame = {
+    val bOld = col("xb").bitwiseAND(1L) === 0L
+    pairs.filter(col("xa").bitwiseAND(1L) + col("xb").bitwiseAND(1L) >= 1L)
+      .select(when(bOld, col("b")).otherwise(col("a")).alias("a"),
+        when(bOld, col("a")).otherwise(col("b")).alias("b"),
+        shiftright(when(bOld, col("xb")).otherwise(col("xa")), 1).alias("xa"),
+        shiftright(when(bOld, col("xa")).otherwise(col("xb")), 1).alias("xb"))
+  }
+
+  /** Re-ingest rule of the incremental producers: an id in both the
+    * stored table and the new batch keeps only its NEW signature (new
+    * wins) — an id on both sides would otherwise fan every verification
+    * join in two. Returns the stored `(id, sig)` rows the batch does not
+    * restate. */
+  private def storedOnly(existingSigs: DataFrame, newSigs: DataFrame): DataFrame =
+    existingSigs.select(col("id"), col("sig"))
+      .join(newSigs.select(col("id")), Seq("id"), "left_anti")
+
+  /** MinHash verification: the fraction of agreeing components
+    * (`est_jaccard`) ≥ `threshold`, `a`'s signature from `aSigs` and
+    * `b`'s from `bSigs`. */
+  private def verifyMinhash(cand: DataFrame, aSigs: DataFrame, bSigs: DataFrame,
+                            numHashes: Int, threshold: Double): DataFrame =
+    cand
+      .join(aSigs.select(col("id").alias("a"), col("sig").alias("siga")), Seq("a"))
+      .join(bSigs.select(col("id").alias("b"), col("sig").alias("sigb")), Seq("b"))
+      .withColumn("est_jaccard",
+        aggregate(zip_with(col("siga"), col("sigb"),
+          (x, y) => when(x === y, 1).otherwise(0)),
+          lit(0), (acc, v) => acc + v).cast("double") / lit(numHashes.toDouble))
+      .filter(col("est_jaccard") >= threshold)
+      .select(col("a"), col("b"), round(col("est_jaccard"), 4).alias("est_jaccard"))
 
   /** [[minhashLsh]] over a pre-computed `(id, sig)` table (e.g. a
     * persisted signature store). `sigs` is consumed twice (banding +
@@ -320,57 +441,12 @@ object Dedup {
   def minhashLshFromSigs(sigs: DataFrame, numHashes: Int = 64, bands: Int = 16,
                          threshold: Double = 0.7, maxBucketSize: Int = 1000,
                          family: String = "xxh64"): DataFrame = {
-    val banded = bandSigs(sigs, numHashes, bands, family)
-    // ONE aggregation shuffles the banded table once: bucket member lists
-    // ride a BoundedCollectAgg whose cap is the hot-bucket (boilerplate)
-    // skew guard — NULL-on-overflow drops the bucket with O(cap) state,
-    // replacing the hot-count aggregate + broadcast anti-join + self-join
-    // trio that shuffled the banded table three times. Candidates expand
-    // map-side (two-level explode: per-row arrays stay O(|bucket|)).
-    // Non-integral ids take the join-based fallback ([[integralId]]).
-    val cand = if (integralId(sigs, "id")) {
-      // The bucket exchange is PINNED at core count (the ngram
-      // naive-branch rationale, measured there and re-measured here:
-      // AQE sizes the ~1-2 MB banded shuffle to one task, then the
-      // CPU-dense bucket collect + pair-kernel explode + distinct
-      // partial all run on 1/32 cores — 87k banded rows took 807 ms on
-      // one task in the clusters replay). The banded rows are three
-      // 8-byte columns, so shipping them raw costs the same as the
-      // partial-agg output while the collect and everything map-side
-      // of it spreads. Banded volume is docs × bands — linear, never
-      // corpus-quadratic — so the pin is scale-safe.
-      val lists = banded
-        .select(col("band"), col("bucket"), col("id").cast("long").alias("id"))
-        .repartition(sigs.sparkSession.sparkContext.defaultParallelism,
-          col("band"), col("bucket"))
-        .groupBy(col("band"), col("bucket"))
-        .agg(graft.functions.BoundedCollectAgg.boundedCollect(sigs.sparkSession,
-          col("id"), lit(0L), maxBucketSize).alias("lst"))
-        .filter(col("lst").isNotNull && size(col("lst")) >= 2)
-      lists
-        .select(explode(graft.functions.GraftFunctions.listPairs(
-          sigs.sparkSession, col("lst"))).alias("pr"))
-        .select(least(col("pr.a"), col("pr.b")).alias("a"),
-          greatest(col("pr.a"), col("pr.b")).alias("b"))
-        .distinct()
-    } else {
-      val (capped, _) = cappedBandedFallback(banded, maxBucketSize)
-      capped.select(col("band"), col("bucket"), col("id").alias("a"))
-        .join(capped.select(col("band"), col("bucket"), col("id").alias("b")),
-          Seq("band", "bucket"))
-        .filter(col("a") < col("b"))
-        .select(col("a"), col("b"))
-        .distinct()
-    }
-    cand
-      .join(sigs.select(col("id").alias("a"), col("sig").alias("siga")), Seq("a"))
-      .join(sigs.select(col("id").alias("b"), col("sig").alias("sigb")), Seq("b"))
-      .withColumn("est_jaccard",
-        aggregate(zip_with(col("siga"), col("sigb"),
-          (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") / lit(numHashes.toDouble))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("a"), col("b"), round(col("est_jaccard"), 4).alias("est_jaccard"))
+    val banded = bandSigs(sigs, numHashes, bands, family).withColumn("aux", lit(0L))
+    val (pairs, _) = bandedPairs(banded, Seq("band", "bucket"), maxBucketSize,
+      pinned = true)
+    // a pair sharing several bands is verified once
+    verifyMinhash(pairs.select(col("a"), col("b")).distinct(), sigs, sigs,
+      numHashes, threshold)
   }
 
   /** 64-bit SimHash signature per doc: sign-sum over token-hash bits,
@@ -418,7 +494,7 @@ object Dedup {
     * because each band has AT MOST 65,536 buckets, so bucket occupancy
     * grows linearly with corpus size and an uncapped self-join fans out
     * quadratically (boilerplate-heavy corpora collapse into few
-    * buckets). Same hash-agg + broadcast anti-join as [[minhashLsh]].
+    * buckets). Candidates come from the shared core ([[bandedPairs]]).
     *
     * @param maxBucketSize RECALL CAVEAT: with `overCap = "drop"` (the
     *   default) a (band, bucket) larger than this yields NO pairs from
@@ -439,6 +515,13 @@ object Dedup {
     simhashPairsFromSigs(simhashSignatures(df, idCol, textCol, family),
       maxHamming, maxBucketSize, overCap)
 
+  /** The 4 × 16-bit band buckets of a packed signature column `sig`:
+    * `(id, sig, band, bucket)`. */
+  private def simhashBands(sigs: DataFrame, sig: String): DataFrame =
+    sigs.select(col("id"), col(sig), posexplode(array((0 until 4).map(b =>
+        shiftright(col(sig), b * 16).bitwiseAND(0xFFFFL)): _*)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+
   /** [[simhashPairs]] over pre-computed signatures `(id, simhash)` —
     * callers that persist signatures (the incremental index) avoid
     * hashing the corpus twice. */
@@ -454,54 +537,17 @@ object Dedup {
         sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else sigs0
     // integral ids are cast to long HERE so the kernel pairs and the
-    // star-mode union agree on the id type ([[integralId]] dispatch)
+    // star-mode union agree on the id type
     val idExpr =
       if (integralId(sigs, "id")) col("id").cast("long").alias("id") else col("id")
-    val banded = sigs.select(idExpr, col("simhash"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("simhash"), b * 16).bitwiseAND(0xFFFFL)): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    // ONE aggregation shuffles the banded table once: each bucket's
-    // member list rides a BoundedCollectAgg (signature as aux, so hamming
-    // verification is map-side arithmetic — no join), NULL marks over-cap
-    // buckets. The previous shape shuffled the banded table three times
-    // (hot-count aggregate + both self-join sides). Non-integral ids
-    // take the join-based fallback ([[integralId]]).
-    val (pairs, hot) = if (integralId(sigs, "id")) {
-      // bucket exchange pinned at core count — the minhashLshFromSigs
-      // rationale verbatim (banded volume = docs × 4, linear; the
-      // collect + pair expansion + hamming verify are all map-side of
-      // this exchange and otherwise run on the 1-2 tasks AQE leaves)
-      val lists0 = banded
-        .repartition(sigs.sparkSession.sparkContext.defaultParallelism,
-          col("band"), col("bucket"))
-        .groupBy(col("band"), col("bucket"))
-        .agg(graft.functions.BoundedCollectAgg.boundedCollect(sigs.sparkSession,
-          col("id"), col("simhash"), maxBucketSize).alias("lst"))
-      val lists = // star mode reads it twice (pair expansion + hot keys)
-        if (overCap == "star")
-          lists0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else lists0
-      (lists
-        .filter(col("lst").isNotNull && size(col("lst")) >= 2)
-        .select(explode(graft.functions.GraftFunctions.listPairs(
-          lists0.sparkSession, col("lst"))).alias("pr"))
-        .select(
-          least(col("pr.a"), col("pr.b")).alias("a"),
-          greatest(col("pr.a"), col("pr.b")).alias("b"),
-          bit_count(col("pr.sza").bitwiseXOR(col("pr.szb"))).alias("hamming")),
-        lists.filter(col("lst").isNull).select(col("band"), col("bucket")))
-    } else {
-      val (capped, hotKeys) = cappedBandedFallback(banded, maxBucketSize)
-      (capped.select(col("band"), col("bucket"), col("id").alias("a"),
-          col("simhash").alias("__sa"))
-        .join(capped.select(col("band"), col("bucket"), col("id").alias("b"),
-          col("simhash").alias("__sb")), Seq("band", "bucket"))
-        .filter(col("a") < col("b"))
-        .select(col("a"), col("b"),
-          bit_count(col("__sa").bitwiseXOR(col("__sb"))).alias("hamming")),
-        hotKeys)
-    }
+    val banded = simhashBands(sigs.select(idExpr, col("simhash")), "simhash")
+    // the signature rides as aux, so hamming verification is map-side
+    // arithmetic on the pair rows — no join
+    val (cand, hot) = bandedPairs(banded.withColumn("aux", col("simhash")),
+      Seq("band", "bucket"), maxBucketSize, pinned = true,
+      reuseLists = overCap == "star")
+    val pairs = cand.select(col("a"), col("b"),
+      bit_count(col("xa").bitwiseXOR(col("xb"))).alias("hamming"))
     val all =
       if (overCap == "drop") pairs
       else {
@@ -561,71 +607,15 @@ object Dedup {
                                 threshold: Double = 0.7,
                                 maxBucketSize: Int = 1000,
                                 family: String = "xxh64"): DataFrame = {
-    // re-ingested ids: drop the stale table signature (new wins) — an id
-    // on both sides would otherwise fan every verification join in two
-    val oldOnly = existingSigs.select(col("id"), col("sig"))
-      .join(newSigs.select(col("id")), Seq("id"), "left_anti")
-    val allSigs = oldOnly.unionByName(newSigs)
-    // ONE aggregation over the union banding: the old/new tag rides the
-    // BoundedCollectAgg aux slot, the hot-bucket cap (measured over the
-    // FULL old+new occupancy, as before) is enforced in-flight with
-    // NULL-on-overflow, and candidates expand map-side keeping only
-    // pairs that touch ≥1 new member. This replaces the previous
-    // hot-union aggregate + two broadcast anti-joins + two bucket joins
-    // (old×new, new×new) that shuffled each banded table multiple times.
-    val tagged = bandSigs(oldOnly, numHashes, bands, family)
-      .withColumn("__new", lit(0L))
-      .unionByName(bandSigs(newSigs, numHashes, bands, family)
-        .withColumn("__new", lit(1L)))
-    // (a, b) with b always a NEW id: old-new pairs keep the old id as a
-    // (no order guard — disjoint batches), new-new pairs order a < b.
-    // Non-integral ids take the join-based fallback ([[integralId]]).
-    val cand = if (integralId(newSigs, "id")) {
-      val lists = tagged
-        .select(col("band"), col("bucket"),
-          col("id").cast("long").alias("id"), col("__new"))
-        .groupBy(col("band"), col("bucket"))
-        .agg(graft.functions.BoundedCollectAgg.boundedCollect(newSigs.sparkSession,
-          col("id"), col("__new"), maxBucketSize).alias("lst"))
-        .filter(col("lst").isNotNull && size(col("lst")) >= 2)
-      lists
-        .select(explode(graft.functions.GraftFunctions.listPairs(
-          newSigs.sparkSession, col("lst"))).alias("pr"))
-        .filter(col("pr.sza") + col("pr.szb") >= 1)
-        .select(
-          when(col("pr.sza") === 0, col("pr.a"))
-            .when(col("pr.szb") === 0, col("pr.b"))
-            .otherwise(least(col("pr.a"), col("pr.b"))).alias("a"),
-          when(col("pr.sza") === 0, col("pr.b"))
-            .when(col("pr.szb") === 0, col("pr.a"))
-            .otherwise(greatest(col("pr.a"), col("pr.b"))).alias("b"))
-        .distinct()
-    } else {
-      val (capped, _) = cappedBandedFallback(tagged, maxBucketSize)
-      capped.select(col("band"), col("bucket"), col("id").alias("__pi"),
-          col("__new").alias("__pn"))
-        .join(capped.select(col("band"), col("bucket"), col("id").alias("__qi"),
-          col("__new").alias("__qn")), Seq("band", "bucket"))
-        .filter(col("__pi") < col("__qi"))
-        .filter(col("__pn") + col("__qn") >= 1)
-        .select(
-          when(col("__pn") === 0, col("__pi"))
-            .when(col("__qn") === 0, col("__qi"))
-            .otherwise(col("__pi")).alias("a"), // __pi < __qi already
-          when(col("__pn") === 0, col("__qi"))
-            .when(col("__qn") === 0, col("__pi"))
-            .otherwise(col("__qi")).alias("b"))
-        .distinct()
-    }
-    cand
-      .join(allSigs.select(col("id").alias("a"), col("sig").alias("siga")), Seq("a"))
-      .join(newSigs.select(col("id").alias("b"), col("sig").alias("sigb")), Seq("b"))
-      .withColumn("est_jaccard",
-        aggregate(zip_with(col("siga"), col("sigb"),
-          (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") / lit(numHashes.toDouble))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("a"), col("b"), round(col("est_jaccard"), 4).alias("est_jaccard"))
+    val oldOnly = storedOnly(existingSigs, newSigs)
+    // one aggregation over the union banding, old/new tag in aux
+    // ([[bandedPairs]], [[touchingNew]])
+    val tagged = bandSigs(oldOnly, numHashes, bands, family).withColumn("aux", lit(0L))
+      .unionByName(bandSigs(newSigs, numHashes, bands, family).withColumn("aux", lit(1L)))
+    val (pairs, _) = bandedPairs(tagged, Seq("band", "bucket"), maxBucketSize,
+      pinned = false)
+    verifyMinhash(touchingNew(pairs).select(col("a"), col("b")).distinct(),
+      oldOnly.unionByName(newSigs), newSigs, numHashes, threshold)
   }
 
   /** Incremental SimHash: near-dup pairs for a NEW batch of signatures
@@ -637,64 +627,21 @@ object Dedup {
     * new-batch id (`a` may be old or new, `a < b` within-batch) and
     * `hamming ≤ maxHamming`.
     *
-    * Same single-aggregation shape: the union banding (4×16-bit bands)
-    * shuffles once, the old/new tag rides the BoundedCollectAgg aux
-    * slot, the hot-bucket cap is measured over the FULL old+new
-    * occupancy, and candidates expand map-side keeping only pairs that
-    * touch ≥1 new member; hamming verification joins the narrow
-    * (id, long) signature tables back on 8-byte keys. */
+    * Same shape: the union banding (4×16-bit bands) goes through the
+    * candidate core once ([[bandedPairs]], [[touchingNew]]); hamming
+    * verification joins the narrow (id, long) signature tables back on
+    * 8-byte keys. */
   def simhashIncrementalSigs(newSigs: DataFrame, existingSigs: DataFrame,
                              maxHamming: Int = 3,
                              maxBucketSize: Int = 1000): DataFrame = {
-    // re-ingested ids: the new signature wins, stale table row ignored
-    val oldOnly = existingSigs.select(col("id"), col("sig"))
-      .join(newSigs.select(col("id")), Seq("id"), "left_anti")
-    val allSigs = oldOnly.unionByName(newSigs.select(col("id"), col("sig")))
-    def banded(df: DataFrame, tag: Int) = df
-      .select(col("id"), posexplode(array((0 until 4).map(b =>
-        shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      .withColumn("__new", lit(tag.toLong))
-    val tagged = banded(oldOnly, 0).unionByName(banded(newSigs, 1))
-    val cand = if (integralId(newSigs, "id")) {
-      val lists = tagged
-        .select(col("band"), col("bucket"),
-          col("id").cast("long").alias("id"), col("__new"))
-        .groupBy(col("band"), col("bucket"))
-        .agg(graft.functions.BoundedCollectAgg.boundedCollect(newSigs.sparkSession,
-          col("id"), col("__new"), maxBucketSize).alias("lst"))
-        .filter(col("lst").isNotNull && size(col("lst")) >= 2)
-      lists
-        .select(explode(graft.functions.GraftFunctions.listPairs(
-          newSigs.sparkSession, col("lst"))).alias("pr"))
-        .filter(col("pr.sza") + col("pr.szb") >= 1)
-        .select(
-          when(col("pr.sza") === 0, col("pr.a"))
-            .when(col("pr.szb") === 0, col("pr.b"))
-            .otherwise(least(col("pr.a"), col("pr.b"))).alias("a"),
-          when(col("pr.sza") === 0, col("pr.b"))
-            .when(col("pr.szb") === 0, col("pr.a"))
-            .otherwise(greatest(col("pr.a"), col("pr.b"))).alias("b"))
-        .distinct()
-    } else {
-      val (capped, _) = cappedBandedFallback(tagged, maxBucketSize)
-      capped.select(col("band"), col("bucket"), col("id").alias("__pi"),
-          col("__new").alias("__pn"))
-        .join(capped.select(col("band"), col("bucket"), col("id").alias("__qi"),
-          col("__new").alias("__qn")), Seq("band", "bucket"))
-        .filter(col("__pi") < col("__qi"))
-        .filter(col("__pn") + col("__qn") >= 1)
-        .select(
-          when(col("__pn") === 0, col("__pi"))
-            .when(col("__qn") === 0, col("__qi"))
-            .otherwise(col("__pi")).alias("a"), // __pi < __qi already
-          when(col("__pn") === 0, col("__qi"))
-            .when(col("__qn") === 0, col("__pi"))
-            .otherwise(col("__qi")).alias("b"))
-        .distinct()
-    }
-    cand
-      .join(allSigs.select(col("id").alias("a"), col("sig").alias("__sa")), Seq("a"))
+    val oldOnly = storedOnly(existingSigs, newSigs)
+    def tagged(df: DataFrame, isNew: Long) =
+      simhashBands(df, "sig").withColumn("aux", lit(isNew))
+    val (pairs, _) = bandedPairs(tagged(oldOnly, 0L).unionByName(tagged(newSigs, 1L)),
+      Seq("band", "bucket"), maxBucketSize, pinned = false)
+    touchingNew(pairs).select(col("a"), col("b")).distinct()
+      .join(oldOnly.unionByName(newSigs.select(col("id"), col("sig")))
+        .select(col("id").alias("a"), col("sig").alias("__sa")), Seq("a"))
       .join(newSigs.select(col("id").alias("b"), col("sig").alias("__sb")), Seq("b"))
       .withColumn("hamming", bit_count(col("__sa").bitwiseXOR(col("__sb"))))
       .filter(col("hamming") <= maxHamming)
@@ -807,15 +754,10 @@ object Dedup {
     *
     * Plan shape (round 5): shingles hash once in the compiled
     * [[graft.functions.NgramHashes]] kernel (per-doc set-dedup inside the
-    * loop — no distinct shuffle), then ONE aggregation gathers each
-    * shingle's capped posting list via
-    * [[graft.functions.BoundedCollectAgg]] — the cap that drops hot
-    * (stopword-only) shingles is enforced INSIDE the aggregate with
-    * O(cap) state and NULL-on-overflow, so the posting table is shuffled
-    * exactly once. Pairs then expand map-side from each list with a
-    * two-level explode (per-row arrays bounded at |list| ≤ cap structs,
-    * never |list|²). The previous shape shuffled the posting table three
-    * times (hot-count aggregate + both self-join sides).
+    * loop — no distinct shuffle), then the candidate core
+    * ([[bandedPairs]]) gathers each shingle's capped posting list in ONE
+    * aggregation — the cap drops hot (stopword-only) shingles — and
+    * pairs expand map-side from each list.
     * TypedImperativeAggregate note: set
     * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` ≥ 64k
     * for sketch workloads (see [[minhashSignatures]]).
@@ -907,10 +849,14 @@ object Dedup {
     * rows 13.5M → 2.4M, distinct candidates into the verify joins
     * 11.14M → 1.28M (8.7×), output identical (248,962 pairs,
     * symmetric diff 0). */
-  private def prefixCandPlan(lists: DataFrame, threshold: Double,
+  private def prefixCandPlan(posted: DataFrame, threshold: Double,
                              maxPostings: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val spark = lists.sparkSession
+    // the gram lists ([[bandedPairs]]'s posting step, adaptive), live
+    // ones only: a gram held by one doc cannot be common
+    val lists = postingLists(posted.withColumnRenamed("sz", "aux"), Seq("sh"),
+      maxPostings, pinned = false)
+      .filter(col("lst").isNotNull && size(col("lst")) >= 2)
     val capped = lists
       .select(size(col("lst")).cast("long").alias("__df"),
         col("sh"), explode(col("lst")).alias("p"))
@@ -937,21 +883,9 @@ object Dedup {
         shiftleft(col("szf").cast("long"), 31)
           .bitwiseOR(col("pos").cast("long")).alias("aux"),
         col("col").alias("sh"))
-    val prefLists = pref.groupBy(col("sh"))
-      .agg(graft.functions.BoundedCollectAgg.boundedCollect(spark,
-        col("id"), col("aux"), maxPostings).alias("lst"))
-      .filter(col("lst").isNotNull && size(col("lst")) >= 2)
     val tFrac = tE / (1.0 + tE)
-    // unordered combinations via the compiled pair kernel
-    val candRaw = prefLists
-      .select(explode(graft.functions.GraftFunctions.listPairs(spark,
-        col("lst"))).alias("pr"))
-      .select(least(col("pr.a"), col("pr.b")).alias("a"),
-        greatest(col("pr.a"), col("pr.b")).alias("b"),
-        when(col("pr.a") <= col("pr.b"), col("pr.sza"))
-          .otherwise(col("pr.szb")).alias("xa"),
-        when(col("pr.a") <= col("pr.b"), col("pr.szb"))
-          .otherwise(col("pr.sza")).alias("xb"))
+    val (prefPairs, _) = bandedPairs(pref, Seq("sh"), maxPostings, pinned = false)
+    val candRaw = prefPairs
       .select(col("a"), col("b"),
         shiftright(col("xa"), 31).alias("sza"),
         col("xa").bitwiseAND(lit((1L << 31) - 1)).alias("pa"),
@@ -980,20 +914,11 @@ object Dedup {
   def ngramJaccardCounters(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 3, threshold: Double = 0.8,
                            maxPostings: Int = 1000): (Long, Long, Long) = {
-    val spark = df.sparkSession
     val sigs = ngramSignatures(df, idCol, textCol, n)
     require(integralId(sigs, "id"),
       "ngramJaccardCounters: integral ids required (the prefix branch)")
-    val posted = sigs
-      .select(col("id").cast("long").alias("id"), col("sig"))
-      .select(col("id"), size(col("sig")).cast("long").alias("sz"),
-        explode_outer(col("sig")).alias("sh"))
-      .filter(col("sh").isNotNull)
-    val lists = posted.groupBy(col("sh"))
-      .agg(graft.functions.BoundedCollectAgg.boundedCollect(spark,
-        col("id"), col("sz"), maxPostings).alias("lst"))
-      .filter(col("lst").isNotNull && size(col("lst")) >= 2)
-    val (candRaw, cand, csigs) = prefixCandPlan(lists, threshold, maxPostings)
+    val (candRaw, cand, csigs) = prefixCandPlan(gramPostings(sigs), threshold,
+      maxPostings)
     try {
       val generated = candRaw.count()
       val verify = cand.count()
@@ -1001,20 +926,9 @@ object Dedup {
       // via ngramJaccardPairsFromSigs(...).count() would persist a second
       // csigs cache internally that this finally cannot release (one
       // leaked MEMORY_AND_DISK cache per bench SF run). The verify tail
-      // below is the prefix branch's own spelling over the same csigs,
-      // so the count is identical by construction.
-      val out = cand
-        .join(csigs.select(col("id").alias("a"), col("csig").alias("__ca"),
-          col("szf").alias("sza")), Seq("a"))
-        .join(csigs.select(col("id").alias("b"), col("csig").alias("__cb"),
-          col("szf").alias("szb")), Seq("b"))
-        .withColumn("common", graft.functions.GraftFunctions.sortedIntersect(
-          spark, col("__ca"), col("__cb")))
-        .withColumn("jaccard", round(col("common").cast("double") /
-          (col("sza") + col("szb") - col("common")).cast("double"), 4))
-        .filter(col("jaccard") >= threshold)
-        .count()
-      (generated, verify, out)
+      // is the prefix branch's own, over the same csigs, so the count is
+      // identical by construction.
+      (generated, verify, verifyExact(cand, csigs, threshold).count())
     } finally csigs.unpersist()
   }
 
@@ -1022,24 +936,15 @@ object Dedup {
                                 maxPostings: Int = 1000,
                                 naiveMaxCandidates: Long = 10000000L,
                                 naiveRowFloor: Long = 20000L): DataFrame = {
-    val spark = sigs.sparkSession
-    // postings keyed by the 64-bit gram hash, not the string — 8-byte
-    // keys in the single inverted-index shuffle (collision odds
-    // ~|shingles|²/2^65: nil); per-doc set size rides with each posting
-    // integral ids ride the bounded-collect kernel (cast to long);
-    // non-integral ids fall back to the join-based inverted index
-    val idExpr =
-      if (integralId(sigs, "id")) col("id").cast("long").alias("id")
-      else col("id")
-    def posted = sigs.select(idExpr, col("sig"))
-      .select(col("id"), size(col("sig")).cast("long").alias("sz"),
-        // explode_outer: see hashedShingles — when `sigs` is the lazy
-        // kernel projection, inner explode re-inlines the kernel 3×
-        explode_outer(col("sig")).alias("sh"))
-      .filter(col("sh").isNotNull)
+    val posted = gramPostings(sigs)
+    // gram co-occurrence rows `(a, b, sza, szb)`, one per shared gram
+    def common(rows: DataFrame, pinned: Boolean) =
+      bandedPairs(rows.withColumnRenamed("sz", "aux"), Seq("sh"), maxPostings,
+        pinned)._1.select(col("a"), col("b"), col("xa").alias("sza"),
+        col("xb").alias("szb"))
     if (integralId(sigs, "id")) {
-      // ONE corpus scan builds the inverted index (`lists`: gram →
-      // bounded posting list), and EVERYTHING else derives from that
+      // ONE corpus scan builds the inverted index (gram → bounded
+      // posting list), and EVERYTHING else derives from that
       // vocab-sized table: the hot-gram cap (boundedCollect nulls
       // over-cap lists — dropping a gram there is exactly the
       // capped-common contract the oracle replays), the per-gram df
@@ -1051,11 +956,6 @@ object Dedup {
       // df-table scan before deciding, charging the prefix branch's
       // fixed cost to the small-corpus naive branch too (2.6 s →
       // 6.4 s at sf0.1).
-      def listsOf(src: DataFrame) = src.groupBy(col("sh"))
-        .agg(graft.functions.BoundedCollectAgg.boundedCollect(spark,
-          col("id"), col("sz"), maxPostings).alias("lst"))
-        .filter(col("lst").isNotNull && size(col("lst")) >= 2)
-      def lists = listsOf(posted)
       // Adaptive join strategy (an AQE-style choice from a measured,
       // vocab-sized statistic): the naive expansion materializes
       // Σ C(df, 2) candidate rows — unbeatable constants when that sum
@@ -1074,7 +974,7 @@ object Dedup {
       // an InMemoryTableScan of fat deserialized arrays re-converts
       // every element per read and LOSES to recomputing the whole
       // codegen'd tokenize→collect pipeline. Both branches stream
-      // `lists` (one consumer each — the second scan is cheaper than
+      // the lists (one consumer each — the second scan is cheaper than
       // the cache); only csigs, read 3×, earns a persist.
       // Round 9: the statistic runs on a DETERMINISTIC 10% document
       // sample (xxhash64(id) residue — reproducible across runs, no
@@ -1121,29 +1021,14 @@ object Dedup {
         (statVal(0, 100L), statVal(1, 10L))
       }
       if (candEst <= naiveMaxCandidates) {
-        // The inverted-index exchange is PINNED at defaultParallelism
-        // (explicit repartition by gram — AQE never re-coalesces a
-        // user-specified repartition), because everything downstream of
-        // it — the pair-kernel explode and scoreJaccard's CPU-heavy
-        // partial aggregation — executes map-side ON the list
-        // partitions. Left adaptive, the byte-small (~20-30 MB at
-        // sf0.1) but CPU-dense list shuffle coalesces to 3-4 tasks and
-        // the 1.8M-row pair aggregation runs on 4/32 cores (measured
-        // 3.47 → 2.2 s from this pin alone). Safe to pin HERE only:
-        // the naive branch is bounded by the row floor / candidate-mass
-        // crossover, so this exchange never carries corpus-scale data;
-        // the prefix branch keeps adaptive sizing. (An input-side
+        // The inverted-index exchange is PINNED ([[bandedPairs]]): the
+        // pair explode and scoreJaccard's CPU-heavy partial aggregation
+        // run map-side on the list partitions, and this branch is bounded
+        // by the row floor / candidate-mass crossover. (An input-side
         // corpus spread was tried on top and REVERTED again — the raw
         // text shuffle costs exactly what the kernel spread saves.)
-        val pr = graft.functions.GraftFunctions.listPairs(spark, col("lst"))
-        val common = listsOf(posted.repartition(
-            spark.sparkContext.defaultParallelism, col("sh")))
-          .select(explode(pr).alias("pr"))
-          .select(
-            least(col("pr.a"), col("pr.b")).alias("a"),
-            greatest(col("pr.a"), col("pr.b")).alias("b"),
-            when(col("pr.a") <= col("pr.b"), col("pr.sza")).otherwise(col("pr.szb")).alias("sza"),
-            when(col("pr.a") <= col("pr.b"), col("pr.szb")).otherwise(col("pr.sza")).alias("szb"))
+        val spark = sigs.sparkSession
+        val pairs = common(posted, pinned = true)
           // The PAIR exchange is pinned too, for the same reason: the
           // candidate mass has near-zero aggregation reduction on Zipf
           // vocabularies (measured 1.78M shuffle records from 1.78M
@@ -1156,12 +1041,12 @@ object Dedup {
           // 1.49 → 1.10 s isolated on top of the lists pin).
           .repartition(spark.sparkContext.defaultParallelism,
             col("a"), col("b"))
-        return scoreJaccard(common, threshold)
+        return scoreJaccard(pairs, threshold)
       }
       // PREFIX branch: candidate generation extracted to
       // prefixCandPlan so the deterministic superlinearity counters
       // ([[ngramJaccardCounters]]) measure EXACTLY the operator's plan
-      val (_, cand, csigs) = prefixCandPlan(lists, threshold, maxPostings)
+      val (_, cand, csigs) = prefixCandPlan(posted, threshold, maxPostings)
       // verify-join strategy: candidates × fat signature arrays. The
       // second join's input carries the first join's signature column,
       // so a shuffle join moves |cand| × |csig| bytes — measured ~20 GB
@@ -1172,38 +1057,51 @@ object Dedup {
       // stream. At corpus scale the estimate blows the cap and the
       // joins stay shuffles — the only exact option at that size.
       val bcastVerify = postEst > 0 && postEst <= 4000000L
-      def vside(d: DataFrame): DataFrame = if (bcastVerify) broadcast(d) else d
-      val verified = cand
-        .join(vside(csigs.select(col("id").alias("a"), col("csig").alias("__ca"),
-          col("szf").alias("sza"))), Seq("a"))
-        .join(vside(csigs.select(col("id").alias("b"), col("csig").alias("__cb"),
-          col("szf").alias("szb"))), Seq("b"))
-        .withColumn("common", graft.functions.GraftFunctions.sortedIntersect(
-          spark, col("__ca"), col("__cb")))
-      verified
-        .withColumn("jaccard", round(col("common").cast("double") /
-          (col("sza") + col("szb") - col("common")).cast("double"), 4))
-        .filter(col("jaccard") >= threshold)
-        .select(col("a"), col("b"), col("jaccard"))
+      verifyExact(cand, csigs, threshold,
+        d => if (bcastVerify) broadcast(d) else d)
     } else {
-      // non-integral ids: join-based inverted index; the hot-gram cap
-      // needs the vocab-sized df table, and the postings feed both join
-      // sides — persist both
-      val postedP = posted
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val hot = postedP.groupBy(col("sh"))
-        .agg(count(lit(1)).alias("__df"))
-        .filter(col("__df") > maxPostings).select(col("sh"))
-      val capped = postedP.join(broadcast(hot), Seq("sh"), "left_anti")
-      val common = capped
-        .select(col("sh"), col("id").alias("a"), col("sz").alias("sza"))
-        .join(capped.select(col("sh"), col("id").alias("b"), col("sz").alias("szb")),
-          Seq("sh"))
-        .filter(col("a") < col("b"))
-        .select(col("a"), col("b"), col("sza"), col("szb"))
-      scoreJaccard(common, threshold)
+      // non-integral ids: the join fallback, whose postings feed the
+      // hot-gram count and both join sides — persisted
+      scoreJaccard(common(posted.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), pinned = false), threshold)
     }
   }
+
+  /** One row per (doc, gram) of a signature table `(id, sig)`:
+    * `(id, sz, sh)`, `sz` the doc's gram-set size, integral ids cast to
+    * long ([[bandedPairs]]). Postings are keyed by the 64-bit gram hash,
+    * not the string — 8-byte keys in the inverted-index shuffle
+    * (collision odds ~|shingles|²/2^65: nil). `explode_outer`: see
+    * hashedShingles — when `sigs` is the lazy kernel projection, inner
+    * explode re-inlines the kernel 3×. */
+  private def gramPostings(sigs: DataFrame): DataFrame = {
+    val id = if (integralId(sigs, "id")) col("id").cast("long") else col("id")
+    sigs.select(id.alias("id"), size(col("sig")).cast("long").alias("sz"),
+        explode_outer(col("sig")).alias("sh"))
+      .filter(col("sh").isNotNull)
+  }
+
+  /** `(a, b, common, sza, szb)` → `(a, b, jaccard)` at `≥ threshold`,
+    * jaccard rounded to 4 places (the oracle's acceptance rule). */
+  private def jaccardAtLeast(df: DataFrame, threshold: Double): DataFrame =
+    df.withColumn("jaccard", round(col("common").cast("double") /
+        (col("sza") + col("szb") - col("common")).cast("double"), 4))
+      .filter(col("jaccard") >= threshold)
+      .select(col("a"), col("b"), col("jaccard"))
+
+  /** The exact verification of prefix candidates, shared by the prefix
+    * branch and [[ngramJaccardCounters]]: a merge-walk intersection of
+    * the two capped signatures; `side` wraps each signature side (the
+    * prefix branch's broadcast hint). */
+  private def verifyExact(cand: DataFrame, csigs: DataFrame, threshold: Double,
+                          side: DataFrame => DataFrame = identity): DataFrame =
+    jaccardAtLeast(cand
+      .join(side(csigs.select(col("id").alias("a"), col("csig").alias("__ca"),
+        col("szf").alias("sza"))), Seq("a"))
+      .join(side(csigs.select(col("id").alias("b"), col("csig").alias("__cb"),
+        col("szf").alias("szb"))), Seq("b"))
+      .withColumn("common", graft.functions.GraftFunctions.sortedIntersect(
+        cand.sparkSession, col("__ca"), col("__cb"))), threshold)
 
   /** The ONE jaccard-scoring tail shared by the from-scratch and
     * incremental ngram tiers (the incremental-equals-from-scratch
@@ -1212,11 +1110,8 @@ object Dedup {
     * sza/szb are functionally determined by a/b — extra group keys
     * only. */
   private def scoreJaccard(common: DataFrame, threshold: Double): DataFrame =
-    common.groupBy("a", "b", "sza", "szb").agg(count(lit(1)).alias("common"))
-      .withColumn("jaccard", round(col("common").cast("double") /
-        (col("sza") + col("szb") - col("common")).cast("double"), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
+    jaccardAtLeast(common.groupBy("a", "b", "sza", "szb")
+      .agg(count(lit(1)).alias("common")), threshold)
 
   /** Incremental n-gram Jaccard: pairs for a NEW batch of gram
     * signatures against an existing signature table plus within the
@@ -1238,79 +1133,21 @@ object Dedup {
   def ngramJaccardIncrementalSigs(newSigs: DataFrame, existingSigs: DataFrame,
                                   threshold: Double = 0.8,
                                   maxPostings: Int = 1000): DataFrame = {
-    val spark = newSigs.sparkSession
-    // re-ingested ids: the new signature wins, stale table row ignored
-    val oldOnly = existingSigs.select(col("id"), col("sig"))
-      .join(newSigs.select(col("id")), Seq("id"), "left_anti")
-    val integral = integralId(newSigs, "id")
-    def post(df: DataFrame, tag: Int) = {
-      val idExpr = if (integral) col("id").cast("long").alias("id") else col("id")
-      df.select(idExpr, size(col("sig")).cast("long").alias("sz"),
-          explode_outer(col("sig")).alias("sh")) // see hashedShingles
-        .filter(col("sh").isNotNull)
-        .withColumn("__new", lit(tag.toLong))
-    }
-    val newPosted = post(newSigs, 1)
+    val oldOnly = storedOnly(existingSigs, newSigs)
+    def post(df: DataFrame, isNew: Long) = gramPostings(df)
+      .select(col("sh"), col("id"), shiftleft(col("sz"), 1).bitwiseOR(lit(isNew)).alias("aux"))
+    val newPosted = post(newSigs, 1L)
     // the batch's distinct gram set is batch-proportional BY CONTRACT —
     // hint the broadcast so the stored-side semi-join stays map-side
     // even with AQE off (an unhinted sort-merge here would shuffle the
     // corpus-scale stored postings every batch)
     val newGrams = broadcast(newPosted.select(col("sh")).distinct())
-    val oldPosted = post(oldOnly, 0).join(newGrams, Seq("sh"), "left_semi")
-    val posted = oldPosted.unionByName(newPosted)
-    val expanded = if (integral) {
-      // inverted-index exchange pinned at defaultParallelism — same
-      // rationale as the from-scratch naive branch (the pair kernel +
-      // scoreJaccard partial agg run map-side on these partitions, and
-      // AQE's size-based coalesce starves them of cores); safe because
-      // the posted set here is batch-proportional by contract
-      val lists = posted
-        .select(col("sh"), col("id"),
-          (shiftleft(col("sz"), 1).bitwiseOR(col("__new"))).alias("aux"))
-        .repartition(spark.sparkContext.defaultParallelism, col("sh"))
-        .groupBy(col("sh"))
-        .agg(graft.functions.BoundedCollectAgg.boundedCollect(spark,
-          col("id"), col("aux"), maxPostings).alias("lst"))
-        .filter(col("lst").isNotNull && size(col("lst")) >= 2)
-      lists
-        .select(explode(graft.functions.GraftFunctions.listPairs(spark,
-          col("lst"))).alias("pr"))
-        .select(col("pr.a").alias("pi"), col("pr.b").alias("qi"),
-          col("pr.sza").bitwiseAND(1).alias("pn"),
-          col("pr.szb").bitwiseAND(1).alias("qn"),
-          shiftright(col("pr.sza"), 1).alias("psz"),
-          shiftright(col("pr.szb"), 1).alias("qsz"))
-    } else {
-      val hot = posted.groupBy(col("sh")).agg(count(lit(1)).alias("__n"))
-        .filter(col("__n") > maxPostings).select(col("sh"))
-      val capped = posted.join(broadcast(hot), Seq("sh"), "left_anti")
-      capped.select(col("sh"), col("id").alias("pi"), col("sz").alias("psz"),
-          col("__new").alias("pn"))
-        .join(capped.select(col("sh"), col("id").alias("qi"),
-          col("sz").alias("qsz"), col("__new").alias("qn")), Seq("sh"))
-        .filter(col("pi") < col("qi"))
-        .select(col("pi"), col("qi"), col("pn"), col("qn"), col("psz"), col("qsz"))
-    }
-    // (a, b) with b always NEW: old-new keeps the old id as a (disjoint
-    // batches need no order guard), new-new orders a < b
-    val common = expanded
-      .filter(col("pn") + col("qn") >= 1)
-      .select(
-        when(col("pn") === 0, col("pi"))
-          .when(col("qn") === 0, col("qi"))
-          .otherwise(least(col("pi"), col("qi"))).alias("a"),
-        when(col("pn") === 0, col("qi"))
-          .when(col("qn") === 0, col("pi"))
-          .otherwise(greatest(col("pi"), col("qi"))).alias("b"),
-        when(col("pn") === 0, col("psz"))
-          .when(col("qn") === 0, col("qsz"))
-          .otherwise(when(col("pi") <= col("qi"), col("psz"))
-            .otherwise(col("qsz"))).alias("sza"),
-        when(col("pn") === 0, col("qsz"))
-          .when(col("qn") === 0, col("psz"))
-          .otherwise(when(col("pi") <= col("qi"), col("qsz"))
-            .otherwise(col("psz"))).alias("szb"))
-    scoreJaccard(common, threshold)
+    val oldPosted = post(oldOnly, 0L).join(newGrams, Seq("sh"), "left_semi")
+    // pinned: the posted set is batch-proportional by contract
+    val (pairs, _) = bandedPairs(oldPosted.unionByName(newPosted), Seq("sh"),
+      maxPostings, pinned = true)
+    scoreJaccard(touchingNew(pairs).select(col("a"), col("b"),
+      col("xa").alias("sza"), col("xb").alias("szb")), threshold)
   }
 
   /** 6. Benchmark decontamination: docs sharing ≥1 word n-gram with an

@@ -702,11 +702,12 @@ object Similarity {
     * [[semanticDupPairs]]. Under-cap cells self-join (`a < b`); over-cap
     * cells contribute nothing (`overCap = "drop"`) or a min-id star
     * (`"star"`). Survivors are `cosine ≥ threshold`, returned as
-    * `(a, b, sim)`. The incremental builder round
-    * (`DedupBuilder.runSemanticIndexed`) deliberately does NOT consume
-    * this helper: its pairing must exclude old×old comparisons and
-    * orient old→new, so it mirrors the cap/star shape inline — keep the
-    * two in sync when changing cap or star semantics. */
+    * `(a, b, sim)`. DedupBuilder's repair pass pairs a component's
+    * remnant through it. The incremental round
+    * (`DedupBuilder.runSemanticIndexed`) deliberately does NOT: its
+    * pairing must exclude old×old comparisons and orient old→new, so it
+    * mirrors the cap/star shape inline — keep `runSemanticIndexed` in
+    * sync when changing cap or star semantics. */
   private[graft] def cellDupPairs(cells: DataFrame, threshold: Double,
                                   maxCellSize: Int, overCap: String): DataFrame = {
     require(overCap == "drop" || overCap == "star",

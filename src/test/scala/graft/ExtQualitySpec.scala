@@ -731,6 +731,92 @@ class ExtQualitySpec extends SparkSpec {
       inc(0).getString(0) === "doc-a" && inc(0).getString(1) === "doc-b")
   }
 
+  test("candidate branches agree under a hot bucket: kernel == string-id fallback, incremental == from-scratch over old ∪ new") {
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.DataFrame
+    val rnd = new scala.util.Random(20261019L)
+    val vocab = Vector("red", "blue", "green", "gold", "ash", "oak", "elm", "iron",
+      "salt", "mist", "dawn", "dusk", "fern", "moss", "reed", "wren", "lark", "hawk",
+      "pine", "sage", "flint", "clay", "tide", "reef", "dune", "vale", "glen", "brook",
+      "cliff", "crag")
+    def words(n: Int) = (0 until n).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val base = (1L to 40L).map(i => (i, words(10 + rnd.nextInt(10))))
+    val near = base.filter(_._1 % 5 == 0).map { case (i, t) => (i + 100L, t + " " + words(1)) }
+    // the planted hot bucket: 9 identical docs plus 3 one-word variants.
+    // The cap is 6 and new ids are `id % 3 == 0`, so the 9 identical docs
+    // split 6 old / 3 new: each side alone is within the cap, only the
+    // union exceeds it
+    val boiler = "the same boilerplate text repeated over and over again on every page"
+    val hot = (200L to 208L).map(i => (i, boiler)) ++
+      (210L to 212L).map(i => (i, s"$boiler footer$i"))
+    val rows = base ++ near ++ hot
+    val cap = 6
+    def isNew(i: Long) = i % 3 == 0
+    // the same corpus under integral and string ids; zero-padding keeps
+    // the string order equal to the numeric order, so `a < b` agrees
+    def corpus(str: Boolean): DataFrame =
+      if (str) rows.map { case (i, t) => (f"d$i%04d", t) }.toDF("id", "text")
+      else rows.toDF("id", "text")
+    def newIds(str: Boolean): Seq[Any] =
+      rows.map(_._1).filter(isNew).map(i => if (str) f"d$i%04d" else i)
+    def idOf(x: Any): Long = x match {
+      case l: Long => l
+      case t: String => t.drop(1).toLong
+    }
+    def pairSet(df: DataFrame, score: String): Set[(Long, Long, Double)] =
+      df.collect().map(r => (idOf(r.get(r.fieldIndex("a"))), idOf(r.get(r.fieldIndex("b"))),
+        r.getAs[Number](score).doubleValue)).toSet
+    def unordered(ps: Set[(Long, Long, Double)]) =
+      ps.map { case (a, b, x) => (math.min(a, b), math.max(a, b), x) }
+    // batch(sigs, cap) and incremental(new, old, cap) over one family's
+    // signature table, checked under both id types
+    def check(name: String, score: String, sigsOf: DataFrame => DataFrame,
+              batch: (DataFrame, Int) => DataFrame,
+              incremental: Option[(DataFrame, DataFrame, Int) => DataFrame]): Unit = {
+      val byType = Seq(false, true).map { str =>
+        val sigs = sigsOf(corpus(str)).localCheckpoint(true)
+        val isN = col("id").isin(newIds(str): _*)
+        val full = pairSet(batch(sigs, cap), score)
+        val inc = incremental.map(f =>
+          unordered(pairSet(f(sigs.filter(isN), sigs.filter(!isN), cap), score)))
+        if (!str) {
+          // non-vacuous: the cap fired, and pairs remain
+          assert(full.nonEmpty, s"$name: no pairs")
+          assert(full !== pairSet(batch(sigs, 1000), score),
+            s"$name: the planted hot bucket did not reach the cap")
+        }
+        inc.foreach { ps =>
+          val expected = unordered(full).filter { case (a, b, _) => isNew(a) || isNew(b) }
+          assert(ps === expected, s"$name (${if (str) "string" else "long"} ids): " +
+            s"incremental ${ps.toSeq.sorted} != from-scratch ${expected.toSeq.sorted}")
+          assert(ps.nonEmpty, s"$name: no incremental pairs")
+        }
+        (full, inc)
+      }
+      assert(byType(0) === byType(1), s"$name: kernel and string-id fallback disagree")
+    }
+    check("minhash", "est_jaccard",
+      Dedup.minhashSignatures(_, "id", "text", 32, 3),
+      (sg, c) => Dedup.minhashLshFromSigs(sg, 32, 16, 0.5, c),
+      Some((n, o, c) => Dedup.minhashLshIncrementalSigs(n, o, 32, 16, 0.5, c)))
+    check("simhash drop", "hamming",
+      Dedup.simhashSignatures(_, "id", "text"),
+      (sg, c) => Dedup.simhashPairsFromSigs(sg, 3, c, "drop"),
+      Some((n, o, c) => Dedup.simhashIncrementalSigs(n.withColumnRenamed("simhash", "sig"),
+        o.withColumnRenamed("simhash", "sig"), 3, c)))
+    check("simhash star", "hamming",
+      Dedup.simhashSignatures(_, "id", "text"),
+      (sg, c) => Dedup.simhashPairsFromSigs(sg, 3, c, "star"), None)
+    check("ngram naive", "jaccard",
+      Dedup.ngramSignatures(_, "id", "text", 3),
+      (sg, c) => Dedup.ngramJaccardPairsFromSigs(sg, 0.5, c),
+      Some((n, o, c) => Dedup.ngramJaccardIncrementalSigs(n, o, 0.5, c)))
+    check("ngram prefix", "jaccard",
+      Dedup.ngramSignatures(_, "id", "text", 3),
+      (sg, c) => Dedup.ngramJaccardPairsFromSigs(sg, 0.5, c, naiveMaxCandidates = 0L),
+      None)
+  }
+
   test("planRowUpperBound: footer bound on parquet plans, None on row-multiplying or unknown plans") {
     val s = spark; import s.implicits._
     val docs = sf("documents")

@@ -554,6 +554,63 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  test("DedupBuilder (minhash, md5, indexed): insert, lu-update and no-op runs stay at their job pins; pendingItems previews exactly the processed ids") {
+    import org.apache.spark.TestListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions._
+    import graft.builder.DedupBuilder
+    import graft.store.{MemoryStore, ParquetStore}
+    val s = spark; import s.implicits._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val base = java.nio.file.Files.createTempDirectory("ps_dedupjobs").toString
+    val dup = "alpha beta gamma delta epsilon zeta eta theta"
+    val other = "another standalone document body with its own phrasing"
+    val texts = Seq(dup, dup, "totally different words entirely here now for sure",
+      other, other, "nice article about science and its methods today",
+      "win money free now with this one simple trick", dup)
+    val run1 = texts.zipWithIndex.map { case (t, i) => (i + 1L, t, 1L) }
+    // run 2: doc 1 (the canonical of {1, 2, 8}) is re-written, so 2 is
+    // promoted by the repair pass; doc 9 is new and joins {4, 5}
+    val run2 = Seq((1L, "entirely novel replacement content appearing once only", 2L),
+      (9L, other, 2L))
+    val cols = Seq("doc_id", "text", "lu")
+    val src = new MemoryStore(spark, "pjDedupSrc", "doc_id", "lu")
+    val idx = new ParquetStore(spark, s"$base/idx", "id", "cluster", deltaWrites = true)
+    val tgt = new ParquetStore(spark, s"$base/tgt", "doc_id", "lu", deltaWrites = true)
+    def mk() = new DedupBuilder(src, tgt, "text", "minhash", threshold = 0.5,
+      indexStore = Some(idx), family = "md5")
+    // per-doc lu the index rows carry — a run processed exactly the ids
+    // whose row appeared or changed lu (a relabel keeps the row's lu)
+    def absorbed(): Map[Long, Long] =
+      if (!idx.df.columns.contains("lu")) Map.empty
+      else idx.df.select(col("id"), col("lu")).as[(Long, Long)].collect().toMap
+    src.load(run1.toDF(cols: _*))
+    spark.sparkContext.addSparkListener(l)
+    val got = try Seq(None, Some(run2), None).map { delta =>
+      delta.foreach(d => src.update(d.toDF(cols: _*)))
+      val pending = mk().pendingItems().select(col("doc_id")).as[Long].collect().toSet
+      val before = absorbed()
+      TestListenerBus.drain(spark.sparkContext)
+      jobs.set(0)
+      val report = mk().run()
+      TestListenerBus.drain(spark.sparkContext)
+      val n = jobs.get()
+      val after = absorbed()
+      val processed = after.keySet.filter(k => before.get(k) != after.get(k))
+      assert(pending === processed, s"pendingItems previewed ${pending.toSeq.sorted}, " +
+        s"the run processed ${processed.toSeq.sorted}")
+      assert(report.processed === pending.size.toLong, "report")
+      n
+    } finally spark.sparkContext.removeSparkListener(l)
+    // the repair promoted 2; the target is the from-scratch canonical view
+    assert(tgt.df.select("doc_id").as[Long].collect().sorted === Array(1L, 2L, 3L, 4L, 6L, 7L))
+    // a pin moves only with a deliberate change to the builder's job plan
+    assert(got === Seq(33, 85, 12), "jobs per run (insert, lu-update, no-op)")
+  }
+
   test("text-profile queries ride the compiled kernels, not regex scans") {
     val g = plan("text_gopher_rules")
     assert(g.contains("graft_text_profile") || g.contains("profileLower"),

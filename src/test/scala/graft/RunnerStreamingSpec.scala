@@ -480,6 +480,43 @@ class RunnerStreamingSpec extends SparkSpec {
     assert(tgt.df.select("doc_id").collect().map(_.getLong(0)).sorted === fromScratch)
   }
 
+  test("DedupBuilder lu-update on a delta-write ParquetStore index: the repair pass commits the index once") {
+    val s = spark; import s.implicits._
+    import graft.builder.DedupBuilder
+    import graft.store.{MemoryStore, ParquetStore}
+    val dupText = "alpha beta gamma delta epsilon zeta eta theta"
+    val root = java.nio.file.Files.createTempDirectory("graft-drepair").toString
+    // version and delta dirs (`v_n`, `v_n.d_k`) — one per committed write
+    def idxDirs() = new java.io.File(root).listFiles.map(_.getName)
+      .filter(_.startsWith("v_")).toSet
+    val src = new MemoryStore(spark, "drsrc", key = "doc_id", lastUpdatedField = "lu")
+    src.load(Seq((1L, dupText, 1L), (2L, dupText, 1L),
+      (3L, "totally different words entirely here now for sure", 1L))
+      .toDF("doc_id", "text", "lu"))
+    val tgt = new MemoryStore(spark, "drtgt", key = "doc_id", lastUpdatedField = "lu")
+    val idx = new ParquetStore(spark, root, key = "id", lastUpdatedField = "cluster",
+      deltaWrites = true)
+    def builder() = new DedupBuilder(src, tgt, "text", "minhash",
+      threshold = 0.5, indexStore = Some(idx))
+    assert(builder().run().processed === 3)
+    val before = idxDirs()
+    assert(before === Set("v_0"))
+    // doc 1, the canonical of {1, 2}, is re-written: the repair removes
+    // its stale signature and relabels 2 in ONE commit (a new version),
+    // then the run appends its own delta (1's new signature)
+    src.update(Seq((1L, "entirely novel replacement content appearing once only", 2L))
+      .toDF("doc_id", "text", "lu"))
+    val r = builder().run()
+    assert(r.updated === 1 && r.processed === 1, s"$r")
+    val added = idxDirs() -- before
+    assert(added === Set("v_1", "v_1.d_1"),
+      s"expected one repair version plus the run's delta, got ${added.toSeq.sorted}")
+    assert(idx.contentToken === "v_1;d_1")
+    assert(idx.df.select("id", "cluster").as[(Long, Long)].collect().toMap ===
+      Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    assert(tgt.df.select("doc_id").as[Long].collect().sorted === Array(1L, 2L, 3L))
+  }
+
   test("UnigramLmBuilder: newer_in watermark, count merge, O(batch) vocab I/O, persisted scoring") {
     val s = spark; import s.implicits._
     import graft.builder.UnigramLmBuilder
