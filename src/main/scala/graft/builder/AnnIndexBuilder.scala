@@ -221,7 +221,7 @@ class AnnIndexBuilder(
     val batch = Builder.spreadCheckpoint(pendingOf(changed.filter(_ => updated > 0)))
     val examined = batch.count()
     var batchErr: Option[Double] = None
-    if (examined > 0) {
+    val rows = if (examined == 0) None else {
       var trainRunErr: Option[Double] = None
       val (books, cents) = loadQuantizer().getOrElse {
         val b = Similarity.trainPq(batch, m, ksub, iters, source.key, vecField, family)
@@ -241,20 +241,27 @@ class AnnIndexBuilder(
       // round-trips doubles losslessly, so pre/post-persist books give
       // the same error) — reuse it instead of re-aggregating the batch
       batchErr = trainRunErr.orElse(meanQuantError(batch, books))
-      val rows = withLu(Similarity.assignToCells(batch, broadcast(cents),
-          source.key, vecField, keep = 1)
-        .select(col("__rid").alias("id"), col("cell"),
-          graft.functions.GraftFunctions.pqEncode(spark, col("__rvec"), books)
-            .alias("code")), batch)
-      index.update(rows, Seq("id"))
+      Some(encode(batch, books, cents))
     }
-    batch.unpersist()
-    // NOT inside the examined-guard: a delete-only corpus change has an
-    // empty batch but still needs its codes removed
-    val orphans = if (deleteOrphans) removeOrphans(scoped) else 0L
-    BuildReport(examined, 0, orphans, updated = updated,
+    // docs gone from the (scoped) corpus leave the index too, in its ONE
+    // commit (a delete-only corpus change has an empty batch)
+    val orphans =
+      if (deleteOrphans) Builder.orphanKeys(index, "id", scoped.select(col(source.key)))
+      else None
+    try Builder.commitOnce(index, rows, orphans.map(_._1), Seq("id"))
+    finally { batch.unpersist(); orphans.foreach(_._1.unpersist()) }
+    BuildReport(examined, 0, orphans.fold(0L)(_._2), updated = updated,
       adcError = batchErr, trainAdcError = loadTrainError())
   }
+
+  /** `(id, cell, code, lu)` rows of `batch` under the quantizer. */
+  private def encode(batch: DataFrame, books: Array[Array[Array[Double]]],
+                     cents: DataFrame): DataFrame =
+    withLu(Similarity.assignToCells(batch, broadcast(cents),
+        source.key, vecField, keep = 1)
+      .select(col("__rid").alias("id"), col("cell"),
+        graft.functions.GraftFunctions.pqEncode(spark, col("__rvec"), books)
+          .alias("code")), batch)
 
   /** Attach the source lu to the encoded rows — constant per id, one
     * column join against the (already-persisted) batch, O(batch). A
@@ -270,19 +277,14 @@ class AnnIndexBuilder(
     else enc.withColumn("lu", lit(null).cast("long"))
   }
 
-  /** Docs gone from the (scoped) corpus leave the index too — the
-    * MapBuilder orphan contract on the codes table. */
-  private def removeOrphans(corpus: DataFrame): Long =
-    Builder.sweepOrphans(index, "id", corpus.select(col(source.key)))
-
   /** Retrain the quantizer from the CURRENT corpus and re-encode every
     * doc — the staleness escape hatch for a drifted corpus ([[run]]'s
     * `adcDrift` is the trigger signal). The quantizer row and the code
     * table flip through their stores' own versioned-write machinery, so
     * a concurrent [[topK]] reads either the old index or the new one,
     * never a mix of quantizer generations within one query. Stale ids
-    * (docs deleted since the last build) leave the index as part of the
-    * same rebuild. */
+    * (docs deleted since the last build) leave the index in the same
+    * commit that writes the re-encoded codes. */
   def rebuild(): BuildReport = {
     index.ensureIndex("cell")
     val corpus = Builder.spreadCheckpoint(scoped)
@@ -293,15 +295,11 @@ class AnnIndexBuilder(
     val trainErr = meanQuantError(corpus, b)
     saveQuantizer(b, c, trainErr)
     val (books, cents) = loadQuantizer().get
-    val rows = withLu(Similarity.assignToCells(corpus, broadcast(cents),
-        source.key, vecField, keep = 1)
-      .select(col("__rid").alias("id"), col("cell"),
-        graft.functions.GraftFunctions.pqEncode(spark, col("__rvec"), books)
-          .alias("code")), corpus)
-    index.update(rows, Seq("id"))
-    val orphans = removeOrphans(corpus)
-    corpus.unpersist()
-    BuildReport(n, 0, orphans, adcError = trainErr, trainAdcError = trainErr)
+    val orphans = Builder.orphanKeys(index, "id", corpus.select(col(source.key)))
+    try Builder.commitOnce(index, Some(encode(corpus, books, cents)),
+      orphans.map(_._1), Seq("id"))
+    finally { corpus.unpersist(); orphans.foreach(_._1.unpersist()) }
+    BuildReport(n, 0, orphans.fold(0L)(_._2), adcError = trainErr, trainAdcError = trainErr)
   }
 
   /** ADC top-k over the persisted codes (see

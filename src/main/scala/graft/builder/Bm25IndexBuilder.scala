@@ -24,6 +24,11 @@ import org.apache.spark.sql.functions._
   *    quantities BM25 needs (idf's N and the length-norm avgdl); batch
   *    increments MERGE into it, never recount the corpus.
   *
+  * One commit per store per [[run]]: the lu-newer docs and (with
+  * `deleteOrphans`) the docs gone from the scoped corpus are found
+  * before the write; their postings leave in the same index commit that
+  * absorbs the batch's, and their counts fold into the one stats write.
+  *
   * Zero-token docs write a SENTINEL posting (`term = ""`, tf 0): the
   * empty term can never match a query term ([[graft.ext.TextAnalysis
   * .normTokens]] emits non-empty tokens only), but it marks the doc as
@@ -67,21 +72,32 @@ class Bm25IndexBuilder(
     usable
   }
 
-  /** `(id, dl)` of docs whose source `last_updated` is newer than the
-    * lu their postings were indexed with ([[Contributions.changed]]; dl
-    * and lu are constant per doc). The posting removal and the stats
-    * decrement are DEFERRED into [[run]]'s index/stats writes — the
-    * removal rides the SAME committed version write that absorbs the
-    * batch's postings, and the decrement folds into the single additive
-    * stats update. */
-  private def changedDocs(): Option[DataFrame] =
-    if (!checkIndexLayout()) None
-    else Contributions.changed(source, scoped, index.df,
-      max(col("dl")).cast("long").alias("dl"))
+  /** ONE per-id aggregate of the postings `(id, dl, __ilu)` joined to
+    * the scoped corpus's `(id, __slu, __live)`: the lu-newer docs
+    * ([[isChanged]]) and, with [[deleteOrphans]] (left-outer join; its
+    * ids also serve the unseen anti-join), the orphans ([[isOrphan]]).
+    * Otherwise inner, changed rows only; None when the index is empty or
+    * the lu discipline does not apply (lu-less source or legacy index). */
+  private def docState(): Option[DataFrame] = {
+    if (!checkIndexLayout()) return None
+    val (postings, corpus, lu) = (index.df, scoped, source.lastUpdatedField)
+    val hasLu = postings.columns.contains("lu") && corpus.columns.contains(lu)
+    if (!(hasLu || deleteOrphans)) return None
+    val state = postings.groupBy(col("id"))
+      .agg(max(col("dl")).cast("long").alias("dl"),
+        max(if (hasLu) col("lu") else lit(null).cast("long")).alias("__ilu"))
+      .join(corpus.select(col(source.key).alias("id"),
+        (if (hasLu) col(lu) else lit(null).cast("long")).alias("__slu"),
+        lit(true).alias("__live")), Seq("id"), if (deleteOrphans) "left_outer" else "inner")
+    Some(if (deleteOrphans) state else state.filter(isChanged))
+  }
+  private def isChanged = col("__slu") > col("__ilu")
+  private def isOrphan = col("__live").isNull
 
-  private def pendingOf(changed: Option[DataFrame]): DataFrame =
+  private def pendingOf(state: Option[DataFrame], changed: Option[DataFrame]): DataFrame =
     if (!checkIndexLayout()) scoped
-    else Contributions.pending(source, scoped, index.df, changed)
+    else Contributions.pending(source, scoped,
+      state.filter(_ => deleteOrphans).getOrElse(index.df), changed)
 
   /** Docs the index has not absorbed ∪ docs whose source lu is newer
     * than their postings' (the sentinel posting keeps zero-token docs
@@ -89,7 +105,10 @@ class Bm25IndexBuilder(
     * text, so [[topK]] matches the from-scratch build over the final
     * corpus (oracle row `text_bm25_update`). A source without a lu
     * column degrades to the id-based insert-only behavior. */
-  def pendingItems(): DataFrame = pendingOf(changedDocs())
+  def pendingItems(): DataFrame = {
+    val state = docState()
+    pendingOf(state, state.map(_.filter(isChanged)))
+  }
 
   /** Postings are the source of truth, the stats row a cache: a torn
     * index/stats pair would leave every later [[topK]] scoring with a
@@ -155,7 +174,7 @@ class Bm25IndexBuilder(
     * compiled [[graft.functions.TermCounts]] kernel carries tf and the
     * doc length; `explode_outer` + coalesce emits the zero-token
     * sentinel. `lu` rides every posting (constant per doc, like `dl`) so
-    * [[changedDocs]] can compare against the source without a second
+    * [[docState]] can compare against the source without a second
     * per-doc table; a lu-less source writes a null long column. A
     * LEGACY populated index built before the lu column keeps its layout
     * (lu stripped) — it stays insert-only rather than failing the
@@ -177,9 +196,11 @@ class Bm25IndexBuilder(
     else p
   }
 
-  /** Index this run's unseen docs: postings append (O(batch) with a
-    * delta-write store), stats merge additively. Report = docs examined
-    * (the incremental contract's measure). */
+  /** Index this run's delta: ONE index commit (the batch's postings in,
+    * the changed docs' and orphans' postings out — O(batch) with a
+    * delta-write store when nothing leaves) and ONE additive stats
+    * write. Report = docs examined (the incremental contract's
+    * measure). */
   def run(): BuildReport = {
     index.ensureIndex("term")
     // repair a possibly-torn index/stats pair BEFORE computing pending
@@ -188,91 +209,57 @@ class Bm25IndexBuilder(
     // un-stamped, so the NEXT run recounts
     lastRunReconciled = !pair.clean
     if (lastRunReconciled) reconcileStats()
-    // lu-newer docs: (id, dl) resolved up front, the stale-posting drop
-    // and the stats decrement DEFERRED into this run's index/stats
-    // writes (see changedDocs) — pendingOf re-surfaces them
-    val changed = changedDocs().map(_.materializeEager())
-    val (updated, updatedDl) = changed.map { ch =>
-      val r = ch.agg(count(lit(1)).alias("n"), sum(col("dl")).alias("s")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }.getOrElse((0L, 0L))
-    val dropSlice = changed.filter(_ => updated > 0)
+    // lu-newer docs and orphans resolved up front (see docState)
+    val state = docState().map(_.materializeEager())
     try {
+      val r = state.map(_.agg(count_if(isChanged), sum(when(isChanged, col("dl"))),
+        count_if(isOrphan), sum(when(isOrphan, col("dl")))).head())
+      def at(i: Int) = r.filterNot(_.isNullAt(i)).fold(0L)(_.getLong(i))
+      val (updated, updatedDl, orphans, orphanDl) = (at(0), at(1), at(2), at(3))
       // spread-checkpointed: the tokenize+count kernel is CPU-dense per
       // doc and must not inherit a 2-split scan (Builder.spreadCheckpoint)
-      val batch = Builder.spreadCheckpoint(pendingOf(dropSlice))
+      val batch = Builder.spreadCheckpoint(pendingOf(state,
+        state.map(_.filter(isChanged)).filter(_ => updated > 0)))
       try {
         val examined = batch.count()
-        if (examined > 0) {
-          // batch stats in ONE small agg (count + Σdl over the batch);
-          // null dl (null text) counts the doc, adds nothing — the same
-          // accounting as the from-scratch stats row
+        // batch stats in ONE small agg (count + Σdl over the batch);
+        // null dl (null text) counts the doc, adds nothing — the same
+        // accounting as the from-scratch stats row
+        val (batchN, batchS) = if (examined == 0) (0L, 0L) else {
           val st = batch.select(
               graft.functions.GraftFunctions.cntTotal(spark,
                 graft.functions.GraftFunctions.termCounts(spark,
                   graft.ext.TextAnalysis.normTokens(col(textField)))).alias("dl"))
             .agg(count(lit(1)).alias("n"), sum(col("dl")).alias("s")).head()
-          val batchN = st.getLong(0)
-          val batchS = if (st.isNullAt(1)) 0L else st.getLong(1)
-          val stats0 = loadStats()
-          // postings first, stats second: a tear between them leaves the
-          // stats row diverged from the postings' truth, which the
-          // clean-pair-gated recount repairs on the next run. The changed
-          // docs' stale postings leave in the SAME committed version
-          // write that absorbs the batch (ONE O(index) rewrite where the
-          // r16 shape paid removeKeys + a full compound-key upsert).
-          dropSlice match {
-            case Some(ch) => index.updateRemoveKeys(postingsOf(batch),
-              ch.select(col("id")), Seq("term", "id"))
-            case None => index.update(postingsOf(batch), Seq("term", "id"))
-          }
-          stats0 match {
-            case Some((n0, s0)) =>
-              // ONE additive stats write: batch increment and (when docs
-              // changed) the decrement of their OLD lengths fold together
-              writeStats(n0 + batchN - updated, s0 + batchS - updatedDl)
-            case None if updated > 0 =>
-              // stats row missing/unreadable while postings exist (e.g.
-              // truncated externally after the startup recount):
-              // decrementing from (0,0) would write NEGATIVE counts —
-              // recount from the just-committed postings, the source of
-              // truth (they already reflect drop + batch)
-              reconcileStats()
-            case None => writeStats(batchN, batchS)
-          }
+          (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
         }
-        val orphans = if (deleteOrphans) removeOrphans(scoped) else 0L
+        // postings first, stats second: a tear between them leaves the
+        // stats row diverged from the postings' truth, which the
+        // clean-pair-gated recount repairs on the next run
+        Builder.commitOnce(index, Some(batch).filter(_ => examined > 0).map(postingsOf),
+          state.map(_.filter(isChanged || isOrphan).select(col("id")))
+            .filter(_ => updated + orphans > 0), Seq("term", "id"))
+        if (examined > 0 || orphans > 0) loadStats() match {
+          case Some((n0, s0)) =>
+            // ONE additive stats write: the batch increment and the
+            // decrement of the changed docs' OLD lengths and the
+            // orphans' fold together
+            writeStats(n0 + batchN - updated - orphans, s0 + batchS - updatedDl - orphanDl)
+          case None if updated > 0 || orphans > 0 =>
+            // stats row missing/unreadable while postings exist (e.g.
+            // truncated externally after the startup recount):
+            // decrementing from (0,0) would write NEGATIVE counts —
+            // recount from the just-committed postings, the source of
+            // truth (they already reflect removals + batch)
+            reconcileStats()
+          case None => writeStats(batchN, batchS)
+        }
         // every write pair committed: stamp the marker (a failure above
         // propagates with the marker stale, so the next run recounts)
         pair.stamp()
         BuildReport(examined, 0, orphans, updated = updated)
       } finally batch.unpersist()
-    } finally changed.foreach(_.unpersist())
-  }
-
-  /** Docs gone from the (scoped) corpus leave the index AND the stats:
-    * their postings are removed by key and `(n_docs, sum_dl)` decrement
-    * by the orphans' own counts — so a later [[topK]] scores against
-    * the live corpus, not a ghost-inflated N. */
-  private def removeOrphans(corpus: DataFrame): Long = {
-    if (!index.df.columns.contains("id")) return 0L
-    val orphanDl = index.df.groupBy(col("id"))
-      .agg(max(col("dl")).cast("long").alias("dl")) // dl constant per doc
-      .join(corpus.select(col(source.key).alias("id")), Seq("id"), "left_anti")
-      .materializeEager() // two actions (agg + removeKeys) on one key set
-    try {
-      val r = orphanDl.agg(count(lit(1)).alias("n"), sum(col("dl")).alias("s")).head()
-      val n = r.getLong(0)
-      if (n > 0) {
-        index.removeKeys(orphanDl.select(col("id")))
-        loadStats() match {
-          case Some((n0, s0)) =>
-            writeStats(n0 - n, s0 - (if (r.isNullAt(1)) 0L else r.getLong(1)))
-          case None => reconcileStats() // see run: never decrement from (0,0)
-        }
-      }
-      n
-    } finally orphanDl.unpersist()
+    } finally state.foreach(_.unpersist())
   }
 
   /** BM25 top-k over the persisted postings; requires a completed

@@ -35,6 +35,11 @@ case class BuildReport(
   * backpressure and process pools (`cli/multiprocessing.py`,
   * `cli/distributed.py`) all disappear into Spark partitioning and task
   * scheduling — there is deliberately no analogue here (SURVEY §2.6).
+  *
+  * A run commits each store it writes at most once: removals (orphans,
+  * stale rows) are found before the write and ride it
+  * ([[Builder.orphanKeys]], [[Builder.commitOnce]]), so an orphan sweep
+  * never pays a second O(store) version rewrite.
   */
 trait Builder {
   /** The delta that would be processed (plan only — inspect/test hook). */
@@ -111,21 +116,33 @@ object Builder {
     }
   }
 
-  /** The orphan sweep: remove the rows of `target` whose `keyCol` value
-    * is absent from `live` (a one-column frame of live keys, any column
-    * name). Materialized once because the count and `removeKeys` are two
-    * actions over the same key set. A target that has never been written
-    * (no `keyCol` in its schema) has no orphans. Returns the count. */
-  private[builder] def sweepOrphans(target: Store, keyCol: String, live: DataFrame): Long = {
+  /** The orphans of `target`: its `keyCol` values absent from `live` (a
+    * one-column frame of live keys, any column name), materialized once
+    * (counted, then written), with their count; None when there are none
+    * or `target` was never written. Found BEFORE the run's write, so
+    * [[commitOnce]] folds them into it; the caller unpersists them. */
+  private[builder] def orphanKeys(target: Store, keyCol: String,
+                                  live: DataFrame): Option[(DataFrame, Long)] = {
     val t = target.df
-    if (!t.columns.contains(keyCol)) return 0L
+    if (!t.columns.contains(keyCol)) return None
     val orphans = t.select(col(keyCol))
       .join(live.select(col(live.columns.head).alias(keyCol)), Seq(keyCol), "left_anti")
       .materializeEager()
-    try {
-      val n = orphans.count()
-      if (n > 0) target.removeKeys(orphans)
-      n
-    } finally orphans.unpersist()
+    val n = orphans.count()
+    if (n > 0) Some((orphans, n)) else { orphans.unpersist(); None }
   }
+
+  /** ONE commit of `target` for a run's batch and key removals:
+    * `updateRemoveKeys` with both, `update` with no removals (a
+    * delta-write ParquetStore keeps its O(batch) append), `removeKeys`
+    * with no batch. A batch's keys are live, so they never overlap
+    * orphan removals and the result equals the two-call sequence. */
+  private[builder] def commitOnce(target: Store, batch: Option[DataFrame],
+                                  removals: Option[DataFrame], keyFields: Seq[String]): Unit =
+    (batch, removals) match {
+      case (Some(b), Some(r)) => target.updateRemoveKeys(b, r, keyFields)
+      case (Some(b), None)    => target.update(b, keyFields)
+      case (None, Some(r))    => target.removeKeys(r)
+      case (None, None)       =>
+    }
 }

@@ -19,18 +19,16 @@ private[builder] object Contributions {
     if (batch.columns.contains(source.lastUpdatedField)) col(source.lastUpdatedField)
     else lit(null).cast("long")
 
-  /** Ids (plus the per-id aggregates `extra`, e.g. Bm25's `dl`) whose
-    * source lu is newer than the max lu their contribution was absorbed
-    * with — the update half of the delta contract. One columnar
-    * (id, lu) aggregate of the contributions joined against the scoped
-    * corpus's (key, lu); no driver-side key lists. None when the lu
-    * discipline does not apply (a lu-less source or a legacy lu-less
+  /** Ids whose source lu is newer than the max lu their contribution
+    * was absorbed with — the update half of the delta contract. One
+    * columnar (id, lu) aggregate of the contributions joined against the
+    * scoped corpus's (key, lu); no driver-side key lists. None when the
+    * lu discipline does not apply (a lu-less source or a legacy lu-less
     * store degrades to insert-only). */
-  def changed(source: Store, scoped: DataFrame, contrib: DataFrame,
-              extra: Column*): Option[DataFrame] =
+  def changed(source: Store, scoped: DataFrame, contrib: DataFrame): Option[DataFrame] =
     if (!contrib.columns.contains("lu") ||
         !scoped.columns.contains(source.lastUpdatedField)) None
-    else Some(contrib.groupBy(col("id")).agg(max(col("lu")).alias("__ilu"), extra: _*)
+    else Some(contrib.groupBy(col("id")).agg(max(col("lu")).alias("__ilu"))
       .join(scoped.select(col(source.key).alias("id"),
         col(source.lastUpdatedField).alias("__slu")), Seq("id"))
       .filter(col("__slu") > col("__ilu"))

@@ -270,24 +270,16 @@ class CurateBuilder(
       val updated =
         if (examined == 0 || !f.df.columns.contains(key)) 0L
         else pending.join(f.df.select(col(key)), Seq(key), "left_semi").count()
-      if (examined > 0) {
-        // ONE kernel pass (C4/Gopher/hash/count) materializes the base
-        // facts; the score + decon joins then read it from cache instead
-        // of re-running the CPU-dense kernels per consumer
-        val base = baseFactsOf(pending).materializeEager()
-        try {
-          val nf = enrichFacts(base).materializeEager()
-          try f.update(nf, Seq(key)) finally nf.unpersist()
-        } finally base.unpersist()
-      }
-      // docs gone from the source leave the facts table
-      if (f.df.columns.contains(key)) {
-        val gone = f.df.select(col(key))
-          .join(scoped.select(col(key)), Seq(key), "left_anti")
-          .materializeEager()
-        try { if (gone.count() > 0) f.removeKeys(gone) }
-        finally gone.unpersist()
-      }
+      // docs gone from the source leave the facts table in the same
+      // commit that absorbs the delta's facts
+      val gone = Builder.orphanKeys(f, key, scoped.select(col(key)))
+      // ONE kernel pass (C4/Gopher/hash/count) materializes the base
+      // facts; the score + decon joins then read it from cache instead
+      // of re-running the CPU-dense kernels per consumer
+      val base = Some(pending).filter(_ => examined > 0).map(baseFactsOf(_).materializeEager())
+      val nf = base.map(enrichFacts(_).materializeEager())
+      try Builder.commitOnce(f, nf, gone.map(_._1), Seq(key))
+      finally (nf ++ base ++ gone.map(_._1)).foreach(_.unpersist())
       val out = manifestFromFacts(f.df).materializeEager()
       try {
         val (_, orphans) = writeManifest(out)
@@ -398,16 +390,18 @@ class CurateBuilder(
     * target whose key column differs from the source's — merging on
     * source.key there would dedup on a column the target is not keyed
     * by and the orphan sweep's columns-contains guard would silently
-    * skip) and sweep orphaned manifest rows. Returns (kept, orphans). */
+    * skip) with the orphaned manifest rows removed in the same commit.
+    * Returns (kept, orphans). */
   private def writeManifest(out: DataFrame): (Long, Long) = {
     val kept = out.count()
     val keyed =
       if (source.key == target.key) out
       else out.withColumnRenamed(source.key, target.key)
-    target.update(keyed, Seq(target.key))
     val orphans =
-      if (deleteOrphans) Builder.sweepOrphans(target, target.key, out.select(col(source.key)))
-      else 0L
-    (kept, orphans)
+      if (deleteOrphans) Builder.orphanKeys(target, target.key, out.select(col(source.key)))
+      else None
+    try Builder.commitOnce(target, Some(keyed), orphans.map(_._1), Seq(target.key))
+    finally orphans.foreach(_._1.unpersist())
+    (kept, orphans.fold(0L)(_._2))
   }
 }

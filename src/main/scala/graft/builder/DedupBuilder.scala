@@ -206,8 +206,8 @@ class DedupBuilder(
     * were losers whose canonical left; their source rows are restored.
     * The removal is VIRTUAL until the end: the remnant is the touched
     * clusters' rows anti-joined with the changed ids, and each store then
-    * takes one commit — the index its relabels plus the signature
-    * removals, the target its promoted rows plus the row removals.
+    * takes one commit — the target its promoted rows plus the row
+    * removals, then the index its relabels plus the signature removals.
     *
     * Caveats, documented: (a) re-banding a component's remnant can see
     * fewer bucket members than the original corpus-wide build, so a
@@ -250,8 +250,6 @@ class DedupBuilder(
         val delta = relab.filter(col("cluster") =!= col("__old"))
           .drop("__old").materializeEager()
         try {
-          // ONE index commit: the relabels in, the stale signatures out
-          idx.updateRemoveKeys(delta, changed.select(col("id")), Seq("id"))
           // promotion repair: new label == own id ⇒ an ex-loser whose
           // canonical left — restore its (current) source row; a member
           // gone from the source has no row to restore (orphan, skipped).
@@ -262,10 +260,12 @@ class DedupBuilder(
           val rows = scoped.join(promoted, Seq(k), "left_semi")
             .materializeEager()
           val stale = changed.select(col("id").alias(target.key))
-          try {
-            if (rows.count() > 0) target.updateRemoveKeys(rows, stale, Seq(target.key))
-            else target.removeKeys(stale)
-          } finally rows.unpersist()
+          try Builder.commitOnce(target, Some(rows).filter(_.count() > 0),
+            Some(stale), Seq(target.key))
+          finally rows.unpersist()
+          // ONE index commit, AFTER the target's (its lu is the progress
+          // marker: until it commits, the next run repeats this repair)
+          idx.updateRemoveKeys(delta, changed.select(col("id")), Seq("id"))
         } finally delta.unpersist()
       } finally members.unpersist()
       n

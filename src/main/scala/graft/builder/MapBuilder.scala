@@ -136,16 +136,16 @@ class MapBuilder(
     ).head()
     val processed = counts.getLong(0)
     val failed = counts.getLong(1)
-    if (processed > 0) target.update(mat, Seq(target.key))
-    mat.unpersist()
-
     // live keys = the FULL source, not the criteria scope (reference
-    // `map_builder.py`)
+    // `map_builder.py`); the orphans ride the batch's one commit
     val orphans =
       if (deleteOrphans)
-        Builder.sweepOrphans(target, target.key, source.df.select(col(source.key)))
-      else 0L
-    BuildReport(processed, failed, orphans)
+        Builder.orphanKeys(target, target.key, source.df.select(col(source.key)))
+      else None
+    try Builder.commitOnce(target, Some(mat).filter(_ => processed > 0),
+      orphans.map(_._1), Seq(target.key))
+    finally { mat.unpersist(); orphans.foreach(_._1.unpersist()) }
+    BuildReport(processed, failed, orphans.fold(0L)(_._2))
   }
 
   /** The schema-fluid doc plane: rows → JSON → user fn under Try/timeout →

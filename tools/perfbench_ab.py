@@ -10,7 +10,9 @@ of the parent and of the working tree for N = 1..pairs, S being BENCHMARK.json's
 pair. Prints every run's metrics, the median per side, the
 change/parent ratio of each metric's median, the parent's IQR / median, and
 for each lower-is-better (higher-is-better) metric the number of pairs in
-which the change was better.
+which the change was better, and a verdict per metric: BETTER or WORSE when
+the change's median moved it by more than its BENCHMARK.json `bound`, else
+`within` (the bound test of the acceptance gate).
 
     python3 tools/perfbench_ab.py --parent HEAD~1 --workload ingest_serve --pairs 10
     python3 tools/perfbench_ab.py --parent d87e4b5 --workload incr_build \\
@@ -50,6 +52,17 @@ def run(tree: Path, workload: str, seed: int) -> dict:
     if r.returncode != 0 or not lines:
         return {"correct": False, "failed": -1, "metrics": {}, "exit": r.returncode}
     return json.loads(lines[-1])
+
+
+def verdict(change: float, parent: float, metric: str) -> str:
+    """BETTER or WORSE when the change's median moved the metric's `better` way or
+    the other by more than its BENCHMARK.json `bound` (a fraction of the parent's
+    median), else `within`."""
+    spec = next(m for m in BENCH["end_to_end"] if m["name"] == metric)
+    if not parent or parent != parent or change != change:
+        return "n/a"
+    worse = change / parent - 1 if spec["better"] == "lower" else 1 - change / parent
+    return "WORSE" if worse > spec["bound"] else "BETTER" if -worse > spec["bound"] else "within"
 
 
 def quartiles(xs):
@@ -118,6 +131,8 @@ def main() -> int:
                 and per[(seed, "change")] != per[(seed, "parent")])
         wins.append(f"{n}/{a.pairs}")
     out.append("  pairs where change is better  " + "".join(f"{w:>13}" for w in wins))
+    out.append("  verdict (median vs bound)     " + "".join(
+        f"{verdict(med['change'][m], med['parent'][m], m):>13}" for m, _ in metrics))
     report = "\n".join(out) + "\n"
     print(report)
     if a.out:
