@@ -1,7 +1,7 @@
 package graft.api
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.query.QueryParams
+import graft.query.{LocalFrame, QueryParams}
 import graft.store.Store
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, struct, to_json}
@@ -134,7 +134,9 @@ private[api] final class JsonBody(bytes: Array[Byte],
   *
   * Driver-side materialization here is bounded BY CONTRACT: every search
   * passes through [[PaginationQuery]] whose `maxLimit` caps the rows a
-  * response may carry; `total_doc` is a count aggregate, not a collect.
+  * response may carry; `total_doc` is a count aggregate, not a collect —
+  * except over a local frame, whose rows the store has already bounded
+  * (the ParquetStore driver read's ceilings).
   *
   * `timeoutMs > 0` bounds every Spark action a request runs (reference
   * `read_resource.py:256-267` aborts long queries with 504): the request
@@ -178,22 +180,27 @@ class ReadResource(
     * criteria accumulate. */
   private val countCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, String, Long)]()
-  private def cachedCount(criteria: Option[String]): Long = {
-    if (countTtlMs <= 0) return store.count(criteria)
+  private def cachedCount(criteria: Option[String], count: => Long): Long = {
+    if (countTtlMs <= 0) return count
     val k = criteria.getOrElse("")
     val now = System.nanoTime()
     val token = store.contentToken
     val hit = countCache.get(k)
     if (hit != null && hit._1 > now && hit._2 == token) hit._3
     else {
-      val v = store.count(criteria)
+      val v = count
       if (countCache.size > 1024) countCache.clear()
       countCache.put(k, (now + countTtlMs * 1000000L, token, v))
       v
     }
   }
 
-  /** GET/POST search: params → operator compile → `{data, meta}`. */
+  /** GET/POST search: params → operator compile → `{data, meta}`. When
+    * the store serves the criteria-matched rows as a local frame (a
+    * ParquetStore driver read), the request finishes on the driver:
+    * `total_doc` and the facets come from one collect of a projection
+    * Catalyst folds, and the page is the query's fold over the same
+    * frame — no Spark job. */
   def search(params: Map[String, String]): String = timed {
     val qp0 = withDefault(QueryOperator.compile(params, ops))
     // the bounded-collect contract must hold even for a resource built
@@ -201,17 +208,22 @@ class ReadResource(
     // whole store onto the serving driver
     val capInjected = qp0.limit.isEmpty
     val qp = if (capInjected) qp0.copy(limit = Some(ReadResource.injectedCap)) else qp0
-    val total = cachedCount(qp.criteria)
-    // limit ≤ maxLimit by PaginationQuery contract → bounded collect
-    val results = ops.foldLeft(store.query(qp))((d, op) => op.postProcess(d, params))
-    val rows = results.toJSON.collect()
     // meta hooks see the criteria-filtered (pre-pagination) frame;
     // qp.criteria already carries the merged default — no re-wrap
-    lazy val filtered = store.query(QueryParams(criteria = qp.criteria))
+    val filtered = store.query(QueryParams(criteria = qp.criteria))
+    val facets = ops.collect { case f: FacetQuery => f }
+    val local = LocalFrame.isLocal(filtered)
+    lazy val present = FacetQuery.present(filtered, facets)
+    // one collect: each matching row's facet values, as strings
+    lazy val values = filtered.select(present.map(f => col(f.field).cast("string")): _*).collect()
+    val total = cachedCount(qp.criteria, if (local) values.length else store.count(qp.criteria))
+    // limit ≤ maxLimit by PaginationQuery contract → bounded collect
+    val page = if (local) qp.copy(criteria = None)(filtered) else store.query(qp)
+    val rows = ReadResource.jsonRows(ops.foldLeft(page)((d, op) => op.postProcess(d, params)))
     // facet operators are folded into ONE explode-struct job per request
     // (FacetQuery.combinedMeta) instead of one action per facet field
-    val facetMeta = FacetQuery.combinedMeta(filtered,
-      ops.collect { case f: FacetQuery => f })
+    val facetMeta =
+      if (local) FacetQuery.localMeta(present, values) else FacetQuery.combinedMeta(filtered, facets)
     // a silently-injected cap is not silent to the client: the applied
     // limit and a truncation flag land in the meta, so "data shorter
     // than total" is detectable without length arithmetic
@@ -312,7 +324,7 @@ class SubmissionResource(
   * `GET /{name}/{key}/meta` → the metadata document as JSON. */
 class BlobResource(val store: graft.store.BlobStore) {
   /** The `cols` of the blob under `key`, selected through `store.query`
-    * (the ParquetStore point read: no Spark job, and only `cols` decoded). */
+    * (the ParquetStore driver read: no Spark job, and only `cols` decoded). */
   private def byKey(key: String, cols: String*): DataFrame = store.query(QueryParams(
     criteria = Some(s"""{${Json.str(store.key)}: ${Json.str(key)}}"""), properties = cols,
     limit = Some(1)))
@@ -436,12 +448,18 @@ class SearchResource(
       vb.topK(Seq((Long.MinValue, v)).toDF(vb.source.key, vb.vecField), k, nprobe)
         .select(col("q_id"), col("n_id").alias("id"), col("rank"))
     }
-    val rows = graft.ext.Similarity.rrfFuse(legs, k, fuseC)
-      .orderBy("rank")
-      .select(col("rank"), col("id"), col("rrf"))
-      .collect() // ≤ k rows by contract
-    val data = rows.map { r =>
-      s"""{"rank": ${r.getInt(0)}, "id": ${r.getLong(1)}, "rrf": ${r.getDouble(2)}}"""
+    // all-local legs (a driver-served BM25 leg alone) fuse on the driver
+    val rows =
+      if (legs.forall(LocalFrame.isLocal))
+        graft.ext.Similarity.rrfFuseRows(legs.map(_.collect().toSeq), k, fuseC)
+          .map(r => (r.getInt(1), r.getLong(2), r.getDouble(3)))
+      else graft.ext.Similarity.rrfFuse(legs, k, fuseC)
+        .orderBy("rank")
+        .select(col("rank"), col("id"), col("rrf"))
+        .collect() // ≤ k rows by contract
+        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
+    val data = rows.map { case (rank, id, rrf) =>
+      s"""{"rank": $rank, "id": $id, "rrf": $rrf}"""
     }.mkString("[", ",", "]")
     s"""{"data": $data, "meta": {"k": $k, "legs": ${legs.length}, "returned": ${rows.length}}}"""
   }

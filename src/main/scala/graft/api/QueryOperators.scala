@@ -2,6 +2,7 @@ package graft.api
 
 import graft.query.QueryParams
 import org.apache.spark.sql.types.{NumericType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** REST-parameter → query compilation layer (reference `maggma.api`
   * query operators, SURVEY §2.5). Each operator consumes URL-style
@@ -186,13 +187,7 @@ object FacetQuery {
     * break on the string form, matching [[FacetQuery.meta]]. */
   def combinedMeta(filtered: org.apache.spark.sql.DataFrame,
                    facets: Seq[FacetQuery]): Seq[(String, String)] = {
-    val present0 = facets.filter(f => filtered.columns.contains(f.field))
-    // one struct per DISTINCT field: duplicate operators on the same
-    // field would each emit a (facet, value) row per doc — doubling
-    // every count — and their `facet_<field>` meta keys collide anyway;
-    // keep the widest topK per field, in first-appearance order
-    val present = present0.map(_.field).distinct.map(fld =>
-      present0.filter(_.field == fld).maxBy(_.topK))
+    val present = FacetQuery.present(filtered, facets)
     if (present.isEmpty) return Nil
     val structs = present.map(f =>
       struct(lit(f.field).alias("facet"), col(f.field).cast("string").alias("value")))
@@ -206,14 +201,40 @@ object FacetQuery {
       .filter(col("__rn") <= maxK)
       .collect()
     present.map { f =>
-      val rows = top.filter(_.getString(0) == f.field)
-        .sortBy(_.getInt(3)).take(f.topK)
-      val obj = rows.map { r =>
-        s"${Json.str(String.valueOf(r.getString(1)))}: ${r.getLong(2)}"
-      }.mkString("{", ", ", "}")
-      s"facet_${f.field}" -> obj
+      render(f, top.filter(_.getString(0) == f.field).sortBy(_.getInt(3)).take(f.topK)
+        .map(r => (r.getString(1), r.getLong(2))).toSeq)
     }
   }
+
+  /** The facets [[combinedMeta]] computes: one per DISTINCT field of
+    * `filtered` — duplicate operators on the same field would each emit
+    * a (facet, value) row per doc, doubling every count, and their
+    * `facet_<field>` meta keys collide anyway — keeping the widest topK
+    * per field, in first-appearance order. */
+  def present(filtered: org.apache.spark.sql.DataFrame,
+              facets: Seq[FacetQuery]): Seq[FacetQuery] = {
+    val present0 = facets.filter(f => filtered.columns.contains(f.field))
+    present0.map(_.field).distinct.map(fld => present0.filter(_.field == fld).maxBy(_.topK))
+  }
+
+  /** [[combinedMeta]] computed on the driver from `values`, each matching
+    * row's string-cast value of every `present` facet, in order: the same
+    * counts, the same (count desc, value asc with null first) order —
+    * strings compared as Spark compares them, by UTF-8 bytes. */
+  def localMeta(present: Seq[FacetQuery],
+                values: Array[org.apache.spark.sql.Row]): Seq[(String, String)] =
+    present.zipWithIndex.map { case (f, i) =>
+      val counts = values.groupMapReduce(r => Option(r.getString(i)))(_ => 1L)(_ + _).toSeq
+      val order = Ordering.Tuple2(Ordering.Long.reverse,
+        Ordering.Option(Ordering.by[String, UTF8String](UTF8String.fromString)))
+      render(f, counts.sortBy { case (v, n) => (n, v) }(order).take(f.topK)
+        .map { case (v, n) => (v.orNull, n) })
+    }
+
+  private def render(f: FacetQuery, counts: Seq[(String, Long)]): (String, String) =
+    s"facet_${f.field}" -> counts.map { case (v, n) =>
+      s"${Json.str(String.valueOf(v))}: $n"
+    }.mkString("{", ", ", "}")
 }
 
 object QueryOperator {

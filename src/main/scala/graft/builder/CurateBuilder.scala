@@ -280,12 +280,33 @@ class CurateBuilder(
       val nf = base.map(enrichFacts(_).materializeEager())
       try Builder.commitOnce(f, nf, gone.map(_._1), Seq(key))
       finally (nf ++ base ++ gone.map(_._1)).foreach(_.unpersist())
-      val out = manifestFromFacts(f.df).materializeEager()
-      try {
-        val (_, orphans) = writeManifest(out)
-        BuildReport(examined, 0, orphans, updated = updated)
-      } finally out.unpersist()
+      // a run that changed no fact keeps the manifest when it was
+      // written from these facts under these dials (a crash between the
+      // two commits or a third-party write changes a token)
+      if (examined == 0 && gone.isEmpty && manifestStamp(f).exists(target.getMeta(ManifestKey).contains))
+        BuildReport(0, 0)
+      else {
+        val out = manifestFromFacts(f.df).materializeEager()
+        try {
+          val (_, orphans) = writeManifest(out)
+          manifestStamp(f).foreach(target.putMeta(ManifestKey, _))
+          BuildReport(examined, 0, orphans, updated = updated)
+        } finally out.unpersist()
+      }
     } finally pending.unpersist()
+  }
+
+  private val ManifestKey = "graft.curate.manifest"
+
+  /** What the manifest is a function of: the facts' and the target's
+    * content tokens, the fact fingerprint and the tail-time dials; None
+    * when a store has no cheap token (the manifest is then always
+    * rewritten). */
+  private def manifestStamp(f: Store): Option[String] = {
+    val (ft, tt) = (f.contentToken, target.contentToken)
+    if (ft.isEmpty || tt.isEmpty) None
+    else Some(Seq(ft, tt, depFingerprint, clfThreshold, mixRates.toSeq.sorted, mixDefaultRate,
+      mixFamily, mixSeed, seqLen, deleteOrphans).mkString("|"))
   }
 
   /** The one kernel pass of [[runIncremental]]: gates 1–2 verdict,

@@ -61,6 +61,27 @@ object MongoFilter {
     else walk(mapper.readTree(criteriaJson)).distinct
   }
 
+  /** Every field a criteria document reads, through `$and`/`$or`/`$nor`
+    * and a top-level `$not`; None when it names fields inside values
+    * (`$expr`, `$text`) or does not parse, so a reader must keep every
+    * column. */
+  def fieldsRead(criteriaJson: String): Option[Seq[String]] = {
+    def all[T](xs: Iterator[T])(f: T => Option[Seq[String]]): Option[Seq[String]] =
+      xs.foldLeft(Option(Seq.empty[String]))((acc, x) => acc.flatMap(a => f(x).map(a ++ _)))
+    def walk(n: JsonNode): Option[Seq[String]] =
+      if (!n.isObject) None
+      else all(n.fields().asScala) { e =>
+        e.getKey match {
+          case "$and" | "$or" | "$nor" if e.getValue.isArray => all(e.getValue.elements().asScala)(walk)
+          case "$not" => walk(e.getValue)
+          case k if k.startsWith("$") => None
+          case field => Some(Seq(field))
+        }
+      }
+    if (criteriaJson == null || criteriaJson.trim.isEmpty) Some(Nil)
+    else scala.util.Try(walk(mapper.readTree(criteriaJson))).toOption.flatten
+  }
+
   // ---------------------------------------------------------------------
   // compiler
   // ---------------------------------------------------------------------

@@ -81,7 +81,7 @@ class BlobStore(
         .otherwise(col("payload")))
 
   /** Forwarded to the backing store, so a key lookup takes its
-    * point-read fast path. */
+    * driver read. */
   override def query(params: QueryParams): DataFrame =
     backing.query(params.copy(
       criteria = params.criteria.map(BlobStore.transformCriteria(_, key)),

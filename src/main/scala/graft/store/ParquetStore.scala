@@ -1,6 +1,6 @@
 package graft.store
 
-import graft.query.QueryParams
+import graft.query.{MongoFilter, QueryParams}
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
@@ -10,14 +10,15 @@ import org.apache.parquet.io.api.Binary
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences,
+  GenericInternalRow, Predicate, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.EqualTo
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType,
-  StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType,
+  MapType, StringType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 import scala.jdk.CollectionConverters._
@@ -52,28 +53,32 @@ import scala.jdk.CollectionConverters._
   * compound-key upserts always compact first — only the single-key
   * upsert (the index-build write shape) takes the delta path.
   *
-  * ==Footer cache and point reads==
+  * ==Footer cache and driver reads==
   * Each immutable version or delta dir has its parquet footers read on
   * the driver and cached: the schema from one footer (as Spark's own
-  * inference reads it), and, on first use, each row group's row count,
-  * column sizes and key min/max. A commit clears the cache; a delta
-  * append drops only the new dir's entry. Reads take their schema from
-  * it, so reading a fresh version starts no schema-inference job; the
-  * no-criteria count and the delta row bound sum its row counts. A
-  * key-equality [[query]] `{key: scalar}` is a point read: the deltas
-  * newest first, then the base, keep only the row groups whose key
-  * statistics cover the value; Spark's parquet reader decodes those on
-  * the driver, only the columns the query reads, with `key = value`
-  * pushed down; the first generation holding the key wins (the merge's
-  * last-write-wins), and the rows come back as a local frame in [[df]]'s
-  * column order, on which the query's own filter, sort, projection,
-  * skip and limit run — no Spark job. It falls back to the plan over
-  * [[df]] when the literal does not cast to the key type (or the key is
-  * not an int, long or string column), a footer cannot be read, two
-  * generations type a column differently, or the candidate row groups
-  * of the generations it checks hold more than 4096 rows or 4 MiB of
-  * the columns read (decoding more on the driver costs more than the
-  * job it saves).
+  * inference reads it), on first use each row group's row count, column
+  * sizes, byte range and the min/max of the key and of the leading
+  * [[ensureIndex]] field, and one parquet reader per read schema. A
+  * commit clears the cache; a delta append drops only the new dir's
+  * entry. Reads take their schema from it, so reading a fresh version
+  * starts no schema-inference job; the no-criteria count and the delta
+  * row bound sum its row counts.
+  *
+  * A [[query]] whose candidate row groups are small is a driver read:
+  * `{f: v}` and `{f: {$in: […]}}` on the key keep the groups whose
+  * statistics admit a value (on the leading index field, the base's
+  * groups; the deltas are read whole), any other criteria keeps them
+  * all. Spark's parquet reader decodes each candidate group on the
+  * driver, only the key and the columns the query's criteria,
+  * projection and sort read; the criteria's own analyzed predicate keeps
+  * the matching rows, the generations merge as [[df]] merges them, and
+  * the rows come back as a local frame in df's column order, on which
+  * the query's filter, sort (on the driver, [[graft.query.LocalFrame]]),
+  * projection, skip and limit run — no Spark job. A key read stops at
+  * the newest generation holding every key it names. It falls back to
+  * the plan over [[df]] when a footer cannot be read, two generations
+  * type a column differently, or the candidates pass a ceiling (see
+  * `MaxScanReadRows`).
   */
 object ParquetStore {
   /** Delta-row ceiling for the merge-on-read broadcast (see [[ParquetStore.df]]).
@@ -83,39 +88,65 @@ object ParquetStore {
     * broadcast on every read. */
   private[store] val MaxBroadcastDeltaRows: Long = 4000000L
 
-  /** Ceilings of the point-read fast path (see [[ParquetStore.query]]):
-    * the candidate row groups are decoded on the driver, one thread.
-    * On a 4-core host 1000 to 4000 rows of 18-column docs decode in
-    * 20-40 ms, against a 40-80 ms floor for one Spark job; beyond these
-    * the decode grows past the job it saves. Bytes are the footer's
-    * uncompressed sizes of the columns the query reads, so a few large
-    * payloads (a blob plane) bound the decode as well as many small rows:
-    * on the same host a blob fetch among 4 MiB of candidate payload
-    * takes 73-85 ms this way against 139-155 ms through the plan. */
-  private val MaxPointReadRows: Long = 4096L
-  private val MaxPointReadBytes: Long = 4L << 20
+  /** Ceilings of the driver read (see [[ParquetStore.query]]): the
+    * candidate row groups are decoded on the driver, one thread, and a
+    * read past a ceiling takes the plan. Measured on a 4-core host
+    * (median of 7 warm reads, the read + fold + collect against the
+    * plan's one-job collect of the same query):
+    *  - a read of every row group (no statistics narrowed it) keeps 4096
+    *    rows: 1000 and 4096 18-column docs take 53-69 ms and 84 ms
+    *    against 97-114 ms and 125 ms, while 8192 took 137 ms against
+    *    107 ms — past a few thousand wide rows the plan's parallel scan
+    *    wins;
+    *  - a read the key or index-field statistics narrowed to part of the
+    *    row groups takes up to 65536 rows: its candidates are the rows a
+    *    lookup index points at (BM25 postings: 4 narrow columns), and
+    *    the predicate keeps only the matches before any frame is built,
+    *    so 4096 to 65536 such rows take 55-70 ms against 95-143 ms;
+    *  - bytes are the footer's uncompressed sizes of the columns read,
+    *    so a few large payloads (a blob plane) bound the decode as well
+    *    as many small rows: a blob fetch among 4 MiB of candidate payload
+    *    takes 73-85 ms this way against 139-155 ms through the plan. */
+  private val MaxScanReadRows: Long = 4096L
+  private val MaxNarrowedReadRows: Long = 65536L
+  private val MaxDriverReadBytes: Long = 4L << 20
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** One row group: its row count, the uncompressed bytes of each
-    * top-level column, and whether its key statistics admit a value
-    * (true when the statistics cannot rule it out). */
-  private[store] final case class KeyGroup(rows: Long, bytes: Map[String, Long],
-                                           covers: Any => Boolean)
-  private[store] final case class FileFooter(status: FileStatus, groups: Seq[KeyGroup])
+    * top-level column, its byte range in the file (a reader split of
+    * exactly this range decodes this group alone), and per statistics
+    * column whether its min/max admit a value (absent: cannot rule out). */
+  private[store] final case class Group(rows: Long, bytes: Map[String, Long], start: Long,
+                                        length: Long, stats: Map[String, Any => Boolean]) {
+    def covers(column: String, v: Any): Boolean = stats.get(column).forall(_(v))
+  }
+  private[store] final case class FileFooter(status: FileStatus, groups: Seq[Group])
+  /** One generation's decoded candidates: every key it holds (a newer
+    * generation holding a key drops the key's older rows, matching or
+    * not) and the rows the criteria matches. */
+  private[store] final case class Gen(keys: Set[Any], rows: Seq[Row])
   /** The footer facts of one version or delta dir: the schema, from one
-    * footer as Spark's own inference (mergeSchema off) reads it, and the
-    * row groups of every file, read on first use. */
+    * footer as Spark's own inference (mergeSchema off) reads it, the row
+    * groups of every file, read on first use, and one parquet reader per
+    * read schema (building one broadcasts the Hadoop conf). */
   private[store] final class DirFooter(val schema: StructType, readFiles: () => Seq[FileFooter]) {
     lazy val files: Seq[FileFooter] = readFiles()
     def rows: Long = files.iterator.flatMap(_.groups).map(_.rows).sum
+    private val readers =
+      new java.util.concurrent.ConcurrentHashMap[StructType, PartitionedFile => Iterator[InternalRow]]()
+    def reader(spark: SparkSession, read: StructType): PartitionedFile => Iterator[InternalRow] =
+      readers.computeIfAbsent(read, r =>
+        new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema, new StructType(), r,
+          Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf()))
   }
 
   /** The footers of the parquet files under `dir`, on the driver: the
     * schema from the first (Spark's own footer conversion, so it equals
     * the inferred one), and on first use of [[DirFooter.files]] every
-    * file's row groups with the `key` column's statistics. */
-  private[store] def readFooters(spark: SparkSession, dir: String, key: String): DirFooter = {
+    * file's row groups with the `statsColumns`' statistics. */
+  private[store] def readFooters(spark: SparkSession, dir: String,
+                                 statsColumns: Seq[String]): DirFooter = {
     val conf = spark.sessionState.newHadoopConf()
     val path = new HPath(dir)
     val files = path.getFileSystem(conf).listStatus(path).toSeq
@@ -133,21 +164,25 @@ object ParquetStore {
     new DirFooter(schema, () => files.map { f =>
       FileFooter(f, (if (f eq first) firstMeta else footer(f)).getBlocks.asScala.toSeq.map { b =>
         val chunks = b.getColumns.asScala.toSeq
-        val stats: Statistics[_] =
-          chunks.find(_.getPath.toDotString == key).map(_.getStatistics: Statistics[_]).orNull
-        KeyGroup(b.getRowCount,
+        Group(b.getRowCount,
           chunks.groupMapReduce(_.getPath.toArray.head)(_.getTotalUncompressedSize)(_ + _),
-          if (stats == null || stats.isEmpty) (_: Any) => true
-          else if (!stats.hasNonNullValue)
-            (_: Any) => !(stats.isNumNullsSet && stats.getNumNulls == b.getRowCount)
-          else {
-            val cmp = stats.comparator().asInstanceOf[Comparator[Any]]
-            val (lo, hi) = (stats.genericGetMin: Any, stats.genericGetMax: Any)
-            (v: Any) => cmp.compare(lo, v) <= 0 && cmp.compare(hi, v) >= 0
-          })
+          b.getStartingPos, b.getCompressedSize,
+          statsColumns.distinct.flatMap { c =>
+            chunks.find(_.getPath.toDotString == c).map(ch => c -> admits(ch.getStatistics, b.getRowCount))
+          }.toMap)
       })
     })
   }
+
+  /** Whether a row group with these column statistics may hold a value. */
+  private def admits(stats: Statistics[_], rows: Long): Any => Boolean =
+    if (stats == null || stats.isEmpty) _ => true
+    else if (!stats.hasNonNullValue) _ => !(stats.isNumNullsSet && stats.getNumNulls == rows)
+    else {
+      val cmp = stats.comparator().asInstanceOf[Comparator[Any]]
+      val (lo, hi) = (stats.genericGetMin: Any, stats.genericGetMax: Any)
+      v => cmp.compare(lo, v) <= 0 && cmp.compare(hi, v) >= 0
+    }
 
   /** `t` with every nullability flag set and field metadata dropped: two
     * generations' columns union without widening iff these are equal. */
@@ -158,24 +193,29 @@ object ParquetStore {
     case other         => other
   }
 
-  /** A key-equality criteria `{key: scalar}` as the value in the key
-    * column's type: (Spark value, parquet statistics value). None for any
-    * other criteria, a key type the fast path does not serve, or a
-    * literal that does not cast to the key type. */
-  private def keyLiteral(criteria: String, key: String, keyType: DataType): Option[(Any, Any)] = {
+  /** The values `{f: v}` or `{f: {$in: [v, …]}}` admits on column `f` of
+    * type `t`, as (Spark value, parquet statistics value); None for any other
+    * criteria, a type the statistics test does not serve, or a literal
+    * that does not cast to it (the row groups are then not pruned). */
+  private def statValues(criteria: String, f: String, t: DataType): Option[Seq[(Any, Any)]] = {
     val n = scala.util.Try(mapper.readTree(criteria)).toOption.orNull
-    if (n == null || !n.isObject || n.size != 1 || !n.has(key)) None
+    if (n == null || !n.isObject || n.size != 1 || !n.has(f)) None
     else {
-      val v = n.get(key)
-      keyType match {
+      val v = n.get(f)
+      val vs =
+        if (v.isObject && v.size == 1 && v.has("$in") && v.get("$in").isArray)
+          v.get("$in").elements().asScala.toSeq
+        else if (v.isValueNode) Seq(v)
+        else Nil
+      val out = vs.map(v => t match {
         case LongType if v.isIntegralNumber && v.canConvertToLong =>
           Some((v.asLong, java.lang.Long.valueOf(v.asLong)))
         case IntegerType if v.isIntegralNumber && v.canConvertToInt =>
           Some((v.asInt, java.lang.Integer.valueOf(v.asInt)))
-        case StringType if v.isTextual =>
-          Some((v.asText, Binary.fromString(v.asText)))
+        case StringType if v.isTextual => Some((v.asText, Binary.fromString(v.asText)))
         case _ => None
-      }
+      })
+      if (vs.nonEmpty && out.forall(_.isDefined)) Some(out.flatten) else None
     }
   }
 }
@@ -288,13 +328,14 @@ class ParquetStore(
         .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path)))
 
   /** One footer cache entry per immutable dir, on the driver: the schema,
-    * and (read on first use) each row group's row count, column sizes and
-    * key min/max. Feeds [[readCached]], [[footerRowCount]],
-    * [[deltaRowBound]] and the point-read fast path of [[query]]; cleared
+    * (read on first use) each row group's row count, column sizes, byte
+    * range and the min/max of the key and the leading index field, and
+    * the dir's parquet readers. Feeds [[readCached]], [[footerRowCount]],
+    * [[deltaRowBound]] and the driver read of [[query]]; cleared
     * with the read cache. */
   private val footerCache = new java.util.concurrent.ConcurrentHashMap[String, ParquetStore.DirFooter]()
   private def footerOf(dir: String): ParquetStore.DirFooter =
-    footerCache.computeIfAbsent(dir, ParquetStore.readFooters(spark, _, key))
+    footerCache.computeIfAbsent(dir, ParquetStore.readFooters(spark, _, key +: indexKeys.take(1)))
 
   /** Drop the cached reads and footers of `dirs`, or of every dir. */
   private def invalidateReadCache(dirs: String*): Unit =
@@ -446,50 +487,100 @@ class ParquetStore(
     case None => dataPath.map(footerRowCount).getOrElse(0L)
   }
 
-  /** S1 `query` with a point-read fast path: a key-equality criteria
-    * `{key: scalar}` is answered from the parquet footers and a driver-side
-    * decode of the row groups whose key statistics cover the value — no
-    * Spark job. The rows come back as a local frame in [[df]]'s column
-    * order, holding the columns `params` reads (all of them without a
-    * projection), and `params` (filter, sort, projection, skip, limit) run
-    * on it, so the Mongo semantics are the plan's own. Any other criteria,
-    * and the cases the fast path declines, take the plan over [[df]]. */
+  /** S1 `query`, served on the driver when it is small: the rows of
+    * [[df]] the criteria can match are decoded from the candidate row
+    * groups on the driver and come back as a local frame in df's column
+    * order, holding the columns `params` reads, and `params` (filter,
+    * sort, projection, skip, limit) run on it with the plan's own
+    * semantics — no Spark job. Otherwise (see [[driverRead]]) the plan
+    * over [[df]]. */
   override def query(params: QueryParams): DataFrame =
-    pointRead(params).fold(super.query(params))(params(_))
+    driverRead(params).fold(super.query(params))(params(_))
 
-  /** What [[df]] holds for the key value `params.criteria` names, or None
-    * to take the plan: the criteria is not `{key: scalar}`, the literal
-    * does not cast to the key type, a footer cannot be read, two
-    * generations type a column differently, or the candidate row groups
-    * of the generations checked hold more than `MaxPointReadRows` rows or
-    * `MaxPointReadBytes` bytes of the columns read. Deltas are checked
-    * newest first, then the base; the first generation holding the key
-    * wins, which is df's last-write-wins merge. */
-  private def pointRead(params: QueryParams): Option[DataFrame] = try {
+  /** What [[df]] holds that `params.criteria` can match, as a local frame
+    * of the columns `params` reads, or None to take the plan. Each
+    * generation (the deltas newest first, then the base) contributes its
+    * candidate row groups: all of them, or for `{f: v}` / `{f: {$in: […]}}`
+    * on the key those whose key statistics admit a value; on the leading
+    * [[ensureIndex]] field the base's groups are pruned the same way,
+    * while the deltas are read whole, because a delta row re-stating a
+    * key drops that key's base rows whatever the field holds. A key read
+    * stops at the generation where every key value it names has been
+    * found: older rows of those keys lose the merge. None when a footer
+    * cannot be read, two generations type a column differently, a
+    * delta-write store has a binary key, or the candidates of the
+    * generations read hold more than `MaxScanReadRows` rows
+    * (`MaxNarrowedReadRows` once the statistics have excluded a row
+    * group) or `MaxDriverReadBytes` bytes of the columns read. The
+    * generations merge as df does ([[merged]]). */
+  private def driverRead(params: QueryParams): Option[DataFrame] = try {
     for {
-      criteria <- params.criteria
       (base, deltas) <- parsed
       if Files.exists(Paths.get(root, base))
-      dirs = deltas.reverse.map(d => s"$root/$base.$d") :+ s"$root/$base"
-      all <- dfSchema(dirs.map(footerOf(_).schema))
-      field <- all.find(_.name == key)
-      (v, statV) <- ParquetStore.keyLiteral(criteria, key, field.dataType)
+      footers = (base +: deltas.map(d => s"$base.$d")).map(d => footerOf(s"$root/$d"))
+      all <- dfSchema(footers.map(_.schema))
+      keyField <- all.find(_.name == key)
+      if deltas.isEmpty || keyField.dataType != BinaryType
       need = reads(params)
-      target = StructType(all.filter(f => need(f.name)))
-      rows <- pointRows(dirs, v, statV, target)
-    } yield spark.createDataFrame(rows.asJava, target)
+      target = StructType(all.filter(f => f.name == key || need(f.name)))
+      gens <- candidateRows(footers, params.criteria, all, target)
+    } yield spark.createDataFrame(merged(gens, target.fieldIndex(key)).asJava, target)
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** [[df]]'s schema from the generations' footer schemas (newest first,
-    * the base last), or None where df's union would widen a column's
-    * type. A plain base reads in file order; with deltas the merge puts
-    * the key first (the anti-join's USING column), then the base's other
+  /** The candidates of each generation the read needs (see
+    * [[driverRead]]), decoded and filtered by the criteria, the oldest
+    * first; None over the ceilings. */
+  private def candidateRows(footers: Seq[ParquetStore.DirFooter], criteria: Option[String],
+                            all: StructType, target: StructType): Option[Seq[ParquetStore.Gen]] = {
+    val prune = criteria.flatMap(c => (key +: indexKeys.take(1)).distinct.flatMap { f =>
+      all.find(_.name == f).flatMap(t => ParquetStore.statValues(c, f, t.dataType)).map(f -> _)
+    }.headOption)
+    val keyValues = prune.collect { case (f, vs) if f == key => vs.map(_._1).toSet }
+    // a pruning criteria is a membership test on its column (its values
+    // are of the column's type), which needs no analyzed predicate
+    val matches = prune.flatMap { case (f, vs) =>
+      Some(target.fieldNames.indexOf(f)).filter(_ >= 0).map { i =>
+        val (t, want) = (target(i).dataType, vs.map(_._1).toSet)
+        val conv = CatalystTypeConverters.createToScalaConverter(t)
+        (r: InternalRow) => !r.isNullAt(i) && want(conv(r.get(i, t)))
+      }
+    }.getOrElse(predicate(criteria, target))
+    val found = scala.collection.mutable.Set[Any]()
+    var (rows, bytes, scanned, groupsTotal) = (0L, 0L, 0, 0)
+    var out = List.empty[ParquetStore.Gen]
+    var gen = footers.size - 1
+    while (gen >= 0 && !keyValues.exists(_.subsetOf(found))) {
+      val footer = footers(gen)
+      val files = prune.filter { case (f, _) => f == key || gen == 0 }.fold(footer.files) {
+        case (f, vs) =>
+          footer.files.map(ff => ff.copy(groups = ff.groups.filter(g => vs.exists(v => g.covers(f, v._2)))))
+      }.filter(_.groups.nonEmpty)
+      val groups = files.flatMap(_.groups)
+      rows += groups.iterator.map(_.rows).sum
+      bytes += groups.iterator.flatMap(_.bytes).collect { case (c, n) if target.names.contains(c) => n }.sum
+      scanned += groups.size
+      groupsTotal += footer.files.iterator.map(_.groups.size).sum
+      val maxRows =
+        if (scanned < groupsTotal) ParquetStore.MaxNarrowedReadRows else ParquetStore.MaxScanReadRows
+      if (rows > maxRows || bytes > ParquetStore.MaxDriverReadBytes) return None
+      val g = decode(footer, files, target, matches, keys = footers.size > 1 || keyValues.isDefined)
+      found ++= g.keys
+      out = g :: out
+      gen -= 1
+    }
+    Some(out)
+  }
+
+  /** [[df]]'s schema from the generations' footer schemas (the base
+    * first), or None where df's union would widen a column's type. A
+    * plain base reads in file order; with deltas the merge puts the key
+    * first (the anti-join's USING column), then the base's other
     * columns, then those only deltas carry, oldest delta first. */
   private def dfSchema(gens: Seq[StructType]): Option[StructType] = {
-    val b = gens.last
+    val b = gens.head
     val fields =
       if (gens.size == 1) b.fields.toSeq
-      else (b.filter(_.name == key) ++ b.filter(_.name != key) ++ gens.init.reverse.flatten)
+      else (b.filter(_.name == key) ++ b.filter(_.name != key) ++ gens.tail.flatten)
         .distinctBy(_.name)
     val agree = fields.forall { f =>
       gens.forall(_.find(_.name == f.name).forall(g =>
@@ -499,79 +590,86 @@ class ParquetStore(
   }
 
   /** Whether `params` reads the top-level column: every column without a
-    * projection, else the key and the projected and sorted fields' roots
-    * (matched case-insensitively, as the analyzer resolves them). */
+    * projection, else the key and the projected, sorted and criteria
+    * fields' roots (matched case-insensitively, as the analyzer resolves
+    * them); every column when the criteria names fields inside values. */
   private def reads(params: QueryParams): String => Boolean = {
-    val fields = params.properties ++ params.sort.map(_._1)
-    if (params.properties.isEmpty || fields.exists(_.contains('`'))) _ => true
+    val criteriaFields = params.criteria.fold(Option(Seq.empty[String]))(MongoFilter.fieldsRead)
+    val fields = params.properties ++ params.sort.map(_._1) ++ criteriaFields.getOrElse(Nil)
+    if (params.properties.isEmpty || criteriaFields.isEmpty || fields.exists(_.contains('`')))
+      _ => true
     else {
       val roots = (key +: fields).map(_.takeWhile(_ != '.').toLowerCase).toSet
       name => roots(name.toLowerCase)
     }
   }
 
-  /** The rows of the newest generation in `dirs` holding the key value,
-    * as `target` rows; None when the candidate row groups of the
-    * generations up to that one are over the fast path's ceilings. */
-  private def pointRows(dirs: Seq[String], v: Any, statV: Any,
-                        target: StructType): Option[Seq[Row]] = {
-    val names = target.fieldNames.toSet
-    // one reader per distinct schema (building one costs a broadcast)
-    val readers = scala.collection.mutable.Map[StructType, PartitionedFile => Iterator[InternalRow]]()
-    var (rows, bytes) = (0L, 0L)
-    dirs.iterator.map { dir =>
-      val footer = footerOf(dir)
-      val files = footer.files.map(f => f.copy(groups = f.groups.filter(_.covers(statV))))
-        .filter(_.groups.nonEmpty)
-      val groups = files.flatMap(_.groups)
-      rows += groups.map(_.rows).sum
-      bytes += groups.iterator.flatMap(_.bytes).collect { case (c, n) if names(c) => n }.sum
-      if (rows > ParquetStore.MaxPointReadRows || bytes > ParquetStore.MaxPointReadBytes) None
-      else {
-        val read = StructType(footer.schema.filter(f => names(f.name)))
-        val readFile = readers.getOrElseUpdate(footer.schema, reader(footer.schema, read, v))
-        Some(conform(decode(readFile, read, files, v), read, target))
-      }
-    }.find(_.forall(_.nonEmpty)).getOrElse(Some(Nil))
-  }
-
-  /** Spark's own parquet reader over a file of `schema`, run on the
-    * driver, decoding the `read` columns with `key = v` pushed down
-    * (parquet skips the row groups its statistics rule out). */
-  private def reader(schema: StructType, read: StructType,
-                     v: Any): PartitionedFile => Iterator[InternalRow] =
-    new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
-      new StructType(), read, Seq(EqualTo(key, v)),
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
-
-  /** The rows of `files` whose key equals `v`, decoded on the driver by `read`. */
-  private def decode(read: PartitionedFile => Iterator[InternalRow], schema: StructType,
-                     files: Seq[ParquetStore.FileFooter], v: Any): Seq[Row] = {
-    val i = schema.fieldIndex(key)
-    val hit: InternalRow => Boolean = v match {
-      case s: String =>
-        val u = UTF8String.fromString(s)
-        r => !r.isNullAt(i) && r.getUTF8String(i) == u
-      case l: Long => r => !r.isNullAt(i) && r.getLong(i) == l
-      case n: Int  => r => !r.isNullAt(i) && r.getInt(i) == n
-    }
-    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-    files.flatMap { f =>
+  /** The rows of `files`' groups, decoded on the driver by the dir's
+    * reader of the `target` columns it has, each group through a split of
+    * exactly its byte range, laid out in `target`'s order (a column the
+    * dir lacks is null: df's `allowMissingColumns` union): the keys of
+    * them all (with `keys`) and the rows `matches` keeps. */
+  private def decode(footer: ParquetStore.DirFooter, files: Seq[ParquetStore.FileFooter],
+                     target: StructType, matches: InternalRow => Boolean,
+                     keys: Boolean): ParquetStore.Gen = {
+    val read = StructType(footer.schema.filter(f => target.names.contains(f.name)))
+    val readFile = footer.reader(spark, read)
+    val idx = target.fields.map(f => read.fieldNames.indexOf(f.name))
+    val types = target.fields.map(_.dataType)
+    val k = target.fieldIndex(key)
+    val toRow = CatalystTypeConverters.createToScalaConverter(target)
+    val keyOf = CatalystTypeConverters.createToScalaConverter(types(k))
+    val row = new GenericInternalRow(target.size)
+    val (held, out) = (scala.collection.mutable.Set[Any](), Vector.newBuilder[Row])
+    for (f <- files; g <- f.groups) {
       val st = f.status
-      val it = read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(st), 0,
-        st.getLen, Array.empty, st.getModificationTime, st.getLen, Map.empty))
+      val it = readFile(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(st),
+        g.start, g.length, Array.empty, st.getModificationTime, st.getLen, Map.empty))
       // rows are converted before the reader moves on (it reuses them)
-      try it.filter(hit).map(r => toRow(r).asInstanceOf[Row]).toList
-      finally it match { case c: java.io.Closeable => c.close(); case _ => }
+      try it.foreach { r =>
+        var i = 0
+        while (i < idx.length) {
+          row.update(i, if (idx(i) < 0 || r.isNullAt(idx(i))) null else r.get(idx(i), types(i)))
+          i += 1
+        }
+        if (keys) held += keyOf(row.get(k, types(k)))
+        if (matches(row)) out += toRow(row).asInstanceOf[Row]
+      } finally it match { case c: java.io.Closeable => c.close(); case _ => }
     }
+    ParquetStore.Gen(held.toSet, out.result())
   }
 
-  /** `rows` of `from` re-laid in `to`'s column order; a column `from`
-    * lacks is null (df's `allowMissingColumns` union). */
-  private def conform(rows: Seq[Row], from: StructType, to: StructType): Seq[Row] = {
-    val idx = to.fieldNames.toSeq.map(from.fieldNames.indexOf(_))
-    rows.map(r => Row.fromSeq(idx.map(j => if (j < 0) null else r.get(j))))
-  }
+  /** `criteria`'s predicate over rows of `target`, as the plan's filter
+    * evaluates it: the analyzed condition of the Mongo filter over a frame
+    * of that schema, run by Catalyst's interpreter. Pre-filtering the
+    * decoded rows with it leaves the query's own filter nothing to drop. */
+  private def predicate(criteria: Option[String], target: StructType): InternalRow => Boolean =
+    criteria.map(c => MongoFilter(spark.createDataFrame(java.util.List.of[Row](), target), c)
+        .queryExecution.analyzed).collect {
+      case Filter(cond, child) =>
+        val p = Predicate.createInterpreted(BindReferences.bindReference(
+          cond.transformDown { case r: RuntimeReplaceable => r.replacement },
+          AttributeSeq(child.output)))
+        p.initialize(0)
+        (r: InternalRow) => p.eval(r)
+    }.getOrElse(_ => true)
+
+  /** [[df]]'s merge of the generations' matching rows (the oldest read
+    * first): its rows whose key no newer generation holds (a null key
+    * matches none, as in the anti-join), then per key the rows of the
+    * newest generation holding it — if they match (the deltas are
+    * key-unique, so one row). */
+  private def merged(gens: Seq[ParquetStore.Gen], k: Int): Seq[Row] =
+    if (gens.size == 1) gens.head.rows
+    else {
+      val seen = scala.collection.mutable.Set[Any]()
+      val winners = gens.tail.reverse.flatMap { g =>
+        val first = g.keys.filterNot(seen)
+        seen ++= first
+        g.rows.filter(r => first(r.get(k)))
+      }
+      gens.head.rows.filter(r => r.isNullAt(k) || !seen(r.get(k))) ++ winners
+    }
 
   /** [[update]] for a batch the CALLER has already made key-unique (and
     * materialized — e.g. one shared [[Store.dedupLastWins]] feeding

@@ -710,4 +710,47 @@ class PlanShapeSpec extends SparkSpec {
     // index and one stats write: the two-commit sweep measured 14/34/12)
     assert(got === Seq(11, 22, 9), "jobs per run (insert, update+delete, no-op)")
   }
+
+  test("serving reads over ParquetStores run 0 Spark jobs: a search, a lexical BM25 query and a byKey") {
+    import org.apache.spark.TestListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.api._
+    import graft.builder.Bm25IndexBuilder
+    import graft.store.ParquetStore
+    val s = spark; import s.implicits._
+    val base = java.nio.file.Files.createTempDirectory("ps_serve").toString
+    val cols = Seq("id", "crystal_system", "band_gap", "chemsys", "description", "last_updated")
+    def docs(ids: Seq[Long], lu: Long) = ids.map(i => (i, Seq("cubic", "hexagonal")((i % 2).toInt),
+      (i % 7) * 0.5, s"Fe-O${i % 3}", s"oxide crystal number ${i % 11} band metal", lu)).toDF(cols: _*)
+    val store = new ParquetStore(spark, s"$base/docs", "id", "last_updated", deltaWrites = true)
+    store.update(docs(1L to 400L, 1L))
+    val lex = new Bm25IndexBuilder(store, new ParquetStore(spark, s"$base/idx", "id", "lu"),
+      new ParquetStore(spark, s"$base/st", "sid", "sid"), "description")
+    lex.run()
+    store.update(docs(395L to 410L, 2L)) // a pending delta, as a stream leaves it
+    lex.run()
+    val read = new ReadResource(store, Seq(new PaginationQuery(10, 100), new SortQuery(),
+      new SparseFieldsQuery(), new DynamicQuery(store.df.schema), new FacetQuery("chemsys", 5)))
+    val search = new SearchResource(lex)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Any): Int = {
+      TestListenerBus.drain(spark.sparkContext)
+      jobs.set(0)
+      body
+      TestListenerBus.drain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(l)
+    val got = try (1 to 2).flatMap { _ => Seq(
+      jobsOf(read.search(Map("crystal_system" -> "cubic", "band_gap_min" -> "1.0",
+        "_sort_fields" -> "-band_gap,id", "_skip" -> "10", "_limit" -> "20",
+        "_fields" -> "id,chemsys,band_gap"))),
+      jobsOf(search.search("""{"text": "oxide number 7 metal", "k": 10}""".getBytes("UTF-8"))),
+      jobsOf(read.byKey("403")))
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(got === Seq(0, 0, 0, 0, 0, 0), "jobs (search, bm25, byKey) x 2")
+  }
 }

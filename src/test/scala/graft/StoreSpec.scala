@@ -461,22 +461,112 @@ class StoreSpec extends SparkSpec {
     assert(keyRead(st, narrow).map(_.toLowerCase) === Seq("""{"d":"d8"}"""))
     assert(keyRead(st, narrow.copy(criteria = Some("""{"k": 7}"""), properties = Seq("k", "big")))
       === Seq("""{"k":7,"big":"small"}"""))
-    // a sorted field is read too (a sort over the local frame runs a job)
-    assert(keyRead(st, narrow.copy(sort = Seq("big" -> 1)), jobs = 1).size === 1)
+    // a sorted field is read too, and the sort runs on the driver
+    assert(keyRead(st, narrow.copy(criteria = Some("""{"k": 7}"""), sort = Seq("big" -> 1)))
+      .map(_.toLowerCase) === Seq("""{"d":"x1"}"""))
     assert(keyRead(st, QueryParams(criteria = Some("""{"k": 8}""")), jobs = 1).size === 1)
   }
 
-  test("$and and $gt criteria fall back to the plan over df") {
+  test("$and and $gt criteria on a small store are served on the driver") {
     val s = spark; import s.implicits._
     val st = deltaStore("pr-fallback")
     fill(st)
     st.update(Seq((7L, "x1", 1.0)).toDF("k", "d", "v"))
     assert(keyRead(st, QueryParams(criteria =
-      Some("""{"$and": [{"k": 7}, {"v": {"$gt": 0}}]}""")), jobs = 1)
+      Some("""{"$and": [{"k": 7}, {"v": {"$gt": 0}}]}""")))
       === Seq("""{"k":7,"d":"x1","v":1.0}"""))
-    assert(keyRead(st, QueryParams(criteria = Some("""{"k": {"$gt": 58}}""")), jobs = 1)
-      .size === 2)
-    // a literal that does not cast to the key type falls back too
-    assert(keyRead(st, QueryParams(criteria = Some("""{"k": 7.5}""")), jobs = 1).isEmpty)
+    assert(keyRead(st, QueryParams(criteria = Some("""{"k": {"$gt": 58}}""")))
+      === Seq("""{"k":59,"d":"d59","v":29.5}""", """{"k":60,"d":"d60","v":30.0}"""))
+    // a literal that does not cast to the key type prunes nothing
+    assert(keyRead(st, QueryParams(criteria = Some("""{"k": 7.5}"""))).isEmpty)
+  }
+
+  // ---------------------------------------------------------------
+  // driver reads: any criteria over small candidate row groups
+  // ---------------------------------------------------------------
+
+  /** `keyRead` with the page's row ORDER checked too (a total-order sort). */
+  private def orderedRead(st: ParquetStore, params: QueryParams): Seq[String] = {
+    val (got, n) = jobsIn(st.query(params).select(to_json(struct(col("*"))))
+      .collect().map(_.getString(0)).toSeq)
+    assert(got === params(st.df).toJSON.collect().toSeq, s"driver read vs plan for $params")
+    assert(n === 0, s"$params started $n Spark jobs")
+    got
+  }
+
+  /** Docs with a struct, an array, nulls, NaN, -0.0 and repeated values. */
+  private def docStore(name: String): ParquetStore = {
+    val s = spark; import s.implicits._
+    val st = deltaStore(name)
+    st.update((1L to 30L).map { k =>
+      (k, if (k % 7 == 0) null else s"t${k % 4}",
+        if (k == 5) Double.NaN else if (k == 6) -0.0 else (k % 5) * 0.5,
+        Seq(s"x${k % 3}", s"y${k % 2}"), (k % 3, s"g$k"))
+    }.toDF("k", "d", "v", "tags", "g"))
+    st
+  }
+
+  private val criteriaCases = Seq(
+    """{"d": "t1"}""", """{"d": {"$eq": "t2"}}""", """{"d": {"$ne": "t1"}}""",
+    """{"v": {"$gt": 1.0}}""", """{"v": {"$gte": 1.0}}""", """{"v": {"$lt": 1.0}}""",
+    """{"v": {"$lte": 0.0}}""", """{"k": {"$in": [3, 9, 27, 300]}}""",
+    """{"d": {"$nin": ["t1", null]}}""", """{"d": {"$in": ["t3", null]}}""",
+    """{"d": {"$exists": true}}""", """{"d": {"$exists": false}}""", """{"d": null}""",
+    """{"missing": null}""", """{"missing": {"$ne": 1}}""", """{"d": {"$regex": "^t[12]$"}}""",
+    """{"tags": "x1"}""", """{"tags": {"$all": ["x1", "y0"]}}""", """{"tags": {"$size": 2}}""",
+    """{"tags": {"$elemMatch": {"$in": ["x2"]}}}""", """{"g._1": 2}""", """{"g._2": {"$gte": "g3"}}""",
+    """{"$or": [{"k": 1}, {"v": {"$gt": 1.5}}]}""", """{"$nor": [{"d": "t1"}, {"d": "t2"}]}""",
+    """{"$and": [{"k": {"$gt": 10}}, {"d": {"$not": {"$eq": "t3"}}}]}""",
+    """{"$not": {"k": {"$lt": 20}}}""", """{"$expr": {"$gt": ["$k", "$v"]}}""",
+    """{"$text": {"$search": "t1", "$field": "d"}}""")
+
+  test("driver read equals the plan over df: criteria operators, base only and with deltas; 0 jobs") {
+    val s = spark; import s.implicits._
+    val st = docStore("dr-ops")
+    def check(): Unit = criteriaCases.foreach(c => keyRead(st, c))
+    check()
+    // a delta re-stating keys (one moves out of and one into a match set)
+    st.update(Seq((3L, "t1", 9.0, Seq("x9"), (2L, "g3b")), (40L, "t1", 0.5, Seq("x1"), (1L, "g40")))
+      .toDF("k", "d", "v", "tags", "g"))
+    check()
+    // a second delta that adds a column
+    st.update(Seq((9L, "t3", 1.0, Seq("x1", "y0"), (0L, "g9b"), "n9"))
+      .toDF("k", "d", "v", "tags", "g", "note"))
+    assert(st.contentToken === "v_0;d_1,d_2")
+    check()
+    keyRead(st, """{"note": {"$exists": true}}""")
+    keyRead(st, """{"note": null}""")
+  }
+
+  test("driver read equals the plan over df: total-order sorts, skip/limit, dot-path projections") {
+    val s = spark; import s.implicits._
+    val st = docStore("dr-sort")
+    st.update(Seq((3L, null: String, Double.NaN, Seq("x9"), (2L, "g3b"))).toDF("k", "d", "v", "tags", "g"))
+    val sorts = Seq(Seq("v" -> 1, "k" -> 1), Seq("v" -> -1, "k" -> -1), Seq("d" -> 1, "k" -> -1),
+      Seq("d" -> -1, "k" -> 1), Seq("g._1" -> -1, "g._2" -> 1), Seq("k" -> -1))
+    for (sort <- sorts; (skip, limit) <- Seq((0, None), (0, Some(5)), (4, Some(3)), (28, Some(5)))) {
+      orderedRead(st, QueryParams(sort = sort, skip = skip, limit = limit))
+      orderedRead(st, QueryParams(criteria = Some("""{"v": {"$gte": 0.5}}"""),
+        properties = Seq("k", "g._2", "v"), sort = sort, skip = skip, limit = limit))
+    }
+  }
+
+  test("driver read: $in on the key and on the leading index field prune row groups; over the row ceiling it falls back") {
+    val s = spark; import s.implicits._
+    // 80k narrow rows in 8 term-ordered row groups: more rows than the
+    // driver read takes, while the groups of a few terms fit
+    val st = new ParquetStore(spark, java.nio.file.Files.createTempDirectory("dr-prune").toString,
+      key = "id", lastUpdatedField = "id", numPartitions = 8)
+    st.update(spark.range(80000).select(col("id"), format_string("w%03d", col("id") % 800).alias("term"),
+      (col("id") % 7).alias("tf")))
+    st.ensureIndex("term")
+    val terms = QueryParams(criteria = Some("""{"term": {"$in": ["w001", "w450", "nope"]}}"""),
+      properties = Seq("term", "id", "tf"))
+    assert(keyRead(st, terms).size === 200)
+    assert(keyRead(st, QueryParams(criteria = Some("""{"term": "w799"}"""))).size === 100)
+    assert(keyRead(st, QueryParams(criteria = Some("""{"id": {"$in": [5, 79999, 100000]}}"""))).size === 2)
+    // nothing prunes a range criteria: the plan takes it
+    assert(keyRead(st, QueryParams(criteria = Some("""{"term": {"$gte": "w790"}}""")), jobs = 1)
+      .size === 1000)
   }
 }
