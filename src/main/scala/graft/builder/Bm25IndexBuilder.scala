@@ -223,18 +223,16 @@ class Bm25IndexBuilder(
       val batch = Builder.spreadCheckpoint(pendingOf(state,
         state.map(_.filter(isChanged)).filter(_ => updated > 0)))
       try {
-        val examined = batch.count()
-        // batch stats in ONE small agg (count + Σdl over the batch);
-        // null dl (null text) counts the doc, adds nothing — the same
-        // accounting as the from-scratch stats row
-        val (batchN, batchS) = if (examined == 0) (0L, 0L) else {
-          val st = batch.select(
-              graft.functions.GraftFunctions.cntTotal(spark,
-                graft.functions.GraftFunctions.termCounts(spark,
-                  graft.ext.TextAnalysis.normTokens(col(textField)))).alias("dl"))
-            .agg(count(lit(1)).alias("n"), sum(col("dl")).alias("s")).head()
-          (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-        }
+        // batch stats in ONE small agg (count + Σdl over the batch), the
+        // count also the run's examined docs; null dl (null text) counts
+        // the doc, adds nothing — the same accounting as the
+        // from-scratch stats row
+        val st = batch.select(
+            graft.functions.GraftFunctions.cntTotal(spark,
+              graft.functions.GraftFunctions.termCounts(spark,
+                graft.ext.TextAnalysis.normTokens(col(textField)))).alias("dl"))
+          .agg(count(lit(1)).alias("n"), sum(col("dl")).alias("s")).head()
+        val (examined, batchS) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
         // postings first, stats second: a tear between them leaves the
         // stats row diverged from the postings' truth, which the
         // clean-pair-gated recount repairs on the next run
@@ -246,7 +244,7 @@ class Bm25IndexBuilder(
             // ONE additive stats write: the batch increment and the
             // decrement of the changed docs' OLD lengths and the
             // orphans' fold together
-            writeStats(n0 + batchN - updated - orphans, s0 + batchS - updatedDl - orphanDl)
+            writeStats(n0 + examined - updated - orphans, s0 + batchS - updatedDl - orphanDl)
           case None if updated > 0 || orphans > 0 =>
             // stats row missing/unreadable while postings exist (e.g.
             // truncated externally after the startup recount):
@@ -254,7 +252,7 @@ class Bm25IndexBuilder(
             // recount from the just-committed postings, the source of
             // truth (they already reflect removals + batch)
             reconcileStats()
-          case None => writeStats(batchN, batchS)
+          case None => writeStats(examined, batchS)
         }
         // every write pair committed: stamp the marker (a failure above
         // propagates with the marker stale, so the next run recounts)

@@ -8,7 +8,7 @@ import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences,
   GenericInternalRow, Predicate, RuntimeReplaceable}
@@ -31,7 +31,12 @@ import scala.jdk.CollectionConverters._
   * version. Upsert/delete write a new version then flip the pointer —
   * readers never see partial data (a poor man's Delta transaction log;
   * with Delta Lake on the cluster this class swaps to `MERGE INTO` /
-  * `DELETE WHERE` with no interface change).
+  * `DELETE WHERE` with no interface change). Every data file is written
+  * with the zstd codec at parquet's default level; the session's
+  * `spark.sql.parquet.compression.codec` does not apply to store files.
+  * Reads take each column chunk's codec from its footer, so a store
+  * whose older generations are snappy reads, merges and compacts as
+  * one.
   *
   * Scale notes: the upsert is a key anti-join (shuffles on the key — at
   * cluster scale bucketing the table by key makes it shuffle-free); reads
@@ -112,6 +117,18 @@ object ParquetStore {
   private val MaxDriverReadBytes: Long = 4L << 20
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The writer of every store data file (a version commit, a delta
+    * append, a compaction): zstd at parquet's default level, whatever
+    * the session's `spark.sql.parquet.compression.codec`. A version is a
+    * round's whole write, so its bytes are the write cost: zstd writes
+    * about a quarter fewer than snappy (BM25 postings, already dictionary
+    * encoded, about a seventh). Parquet records the codec per column
+    * chunk, so files of any other codec keep reading, merging and
+    * compacting next to these; `Overwrite` replaces a crash-orphaned dir
+    * of an unflipped write. */
+  private def writer(data: DataFrame): DataFrameWriter[Row] =
+    data.write.mode(SaveMode.Overwrite).option("compression", "zstd")
 
   /** One row group: its row count, the uncompressed bytes of each
     * top-level column, its byte range in the file (a reader split of
@@ -426,7 +443,7 @@ class ParquetStore(
       }
       else if (numPartitions > 0) data.repartition(numPartitions, col(key))
       else data
-    val writer = out.write.mode(SaveMode.Overwrite)
+    val writer = ParquetStore.writer(out)
     // every indexed field also gets a parquet BLOOM filter: range
     // clustering prunes point lookups on the FIRST sort key via
     // row-group min/max, but a secondary indexed field is unsorted
@@ -687,9 +704,8 @@ class ParquetStore(
     if (deltaWrites && !isEmpty && keyFields == Seq(key)) {
       val (base, deltas) = parsed.get
       val d = "d_" + (deltas.size + 1)
-      // Overwrite: a crash-orphaned dir from an unflipped write is replaced
-      (if (batchUnique) docs else Store.dedupLastWins(docs, keyFields))
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/$base.$d")
+      ParquetStore.writer(if (batchUnique) docs else Store.dedupLastWins(docs, keyFields))
+        .parquet(s"$root/$base.$d")
       Store.writeFileAtomic(currentFile, s"$base;${(deltas :+ d).mkString(",")}")
       // the base and older deltas are untouched; a crash-orphaned
       // same-name delta dir may have been cached stale

@@ -73,14 +73,18 @@ object StreamingBuilder {
     * triggers — the clean-pair gate (the torn-pair reconcile runs at
     * query start and after a failed write, never per micro-batch), the
     * BM25 stats row cache, the parsed ANN quantizer, the model-empty
-    * probe. */
+    * probe. The batch is key-unique by the docs plane's upsert rule
+    * ([[Store.dedupLastWins]], the last row of a key wins): a doc that
+    * appears twice in one micro-batch is one source doc, not two (a BM25
+    * index would keep both texts' postings and count the doc twice in
+    * its stats). */
   private def perQueryBuilder(stream: DataFrame, key: String, lastUpdated: String,
                               checkpoint: Option[String])
                              (mk: Store => graft.builder.Builder): StreamingQuery = {
     var current: DataFrame = null
     var builder: graft.builder.Builder = null
     foreachNonEmpty(stream, checkpoint) { batch =>
-      current = batch
+      current = Store.dedupLastWins(batch, Seq(key))
       if (builder == null)
         builder = mk(new graft.store.TableStore(batch.sparkSession, current,
           "stream-batch", key, lastUpdated))

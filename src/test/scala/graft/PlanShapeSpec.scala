@@ -540,7 +540,7 @@ class PlanShapeSpec extends SparkSpec {
           deltaWrites = true)
         val stats = new ParquetStore(spark, s"$base/st", "sid", "sid")
         check("Bm25", src, index,
-          () => new Bm25IndexBuilder(src, index, stats, "text"), Seq(11, 22, 9))
+          () => new Bm25IndexBuilder(src, index, stats, "text"), Seq(9, 20, 9))
       }
       locally {
         val src = new MemoryStore(spark, "pjAnnSrc", "doc_id", "lu")
@@ -708,7 +708,7 @@ class PlanShapeSpec extends SparkSpec {
     // a pin moves only with a deliberate change to the builder's job plan
     // (the orphan removal and the stats decrement ride the run's one
     // index and one stats write: the two-commit sweep measured 14/34/12)
-    assert(got === Seq(11, 22, 9), "jobs per run (insert, update+delete, no-op)")
+    assert(got === Seq(9, 20, 9), "jobs per run (insert, update+delete, no-op)")
   }
 
   test("serving reads over ParquetStores run 0 Spark jobs: a search, a lexical BM25 query and a byKey") {

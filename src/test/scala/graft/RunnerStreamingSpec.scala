@@ -1382,6 +1382,41 @@ class RunnerStreamingSpec extends SparkSpec {
     assert(model.df.orderBy("bucket").collect().toSeq === before)
   }
 
+  test("StreamingBuilder.bm25IndexStream: a doc twice in one micro-batch is indexed once, as its last row") {
+    val s = spark
+    import s.implicits._
+    val base = java.nio.file.Files.createTempDirectory("strbm-dup").toString
+    val inbox = java.nio.file.Paths.get(base, "inbox")
+    java.nio.file.Files.createDirectories(inbox)
+    // ONE file, so ONE micro-batch: doc 1 at lu 1, doc 2, doc 1 again at lu 2
+    java.nio.file.Files.writeString(inbox.resolve("batch.json"), Seq(
+      """{"id": 1, "text": "alpha beta gamma", "last_updated": 1}""",
+      """{"id": 2, "text": "delta", "last_updated": 1}""",
+      """{"id": 1, "text": "zeta", "last_updated": 2}""").mkString("", "\n", "\n"))
+    val schema = "id LONG, text STRING, last_updated LONG"
+    def stores(name: String) = (
+      new graft.store.ParquetStore(spark, s"$base/$name-idx", "id", "term", deltaWrites = true),
+      new graft.store.ParquetStore(spark, s"$base/$name-st", "sid", "sid"))
+    val (idx, st) = stores("stream")
+    val q = StreamingBuilder.bm25IndexStream(
+      spark.readStream.schema(schema).json(inbox.toString), "id", "text", idx, st)
+    try q.processAllAvailable() finally q.stop()
+    // the from-scratch build over each doc's last version
+    val last = Seq((1L, "zeta", 2L), (2L, "delta", 1L)).toDF("id", "text", "last_updated")
+    val (idx0, st0) = stores("scratch")
+    new graft.builder.Bm25IndexBuilder(
+      new graft.store.TableStore(spark, last, "strbm-last", "id", "last_updated"),
+      idx0, st0, "text").run()
+    def postings(i: graft.store.Store) = i.df.select("term", "id", "tf", "dl", "lu")
+      .as[(String, Long, Long, Long, Long)].collect().sorted.toSeq
+    def statsRow(t: graft.store.Store) = t.df.select("n_docs", "sum_dl")
+      .as[(Long, Long)].collect().toSeq
+    assert(postings(idx) === postings(idx0))
+    assert(postings(idx).map(_._1).toSet === Set("zeta", "delta"))
+    assert(statsRow(st) === Seq((2L, 2L)))
+    assert(statsRow(st) === statsRow(st0))
+  }
+
   test("StreamingBuilder.curateStream: facts persist across triggers, cross-trigger dedup, snapshot convergence") {
     val s = spark
     import s.implicits._

@@ -6,6 +6,7 @@ import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Store-surface assertions mirroring `tests/stores/test_mongolike.py`
   * (query/count/distinct/groupby/update-upsert/remove/newer_in). */
@@ -568,5 +569,66 @@ class StoreSpec extends SparkSpec {
     // nothing prunes a range criteria: the plan takes it
     assert(keyRead(st, QueryParams(criteria = Some("""{"term": {"$gte": "w790"}}""")), jobs = 1)
       .size === 1000)
+  }
+
+  /** The codec of every column chunk of every `.parquet` file under
+    * `dir`, read from the footers. */
+  private def codecs(dir: String): Set[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty, s"no parquet file under $dir")
+    files.toSet.flatMap { (f: java.io.File) =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), conf))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+      finally r.close()
+    }
+  }
+
+  test("ParquetStore writes zstd column chunks: a version, a delta dir and a compacted base") {
+    val s = spark; import s.implicits._
+    val st = deltaStore("zstd-files", compactAfter = 2)
+    // the session default (snappy) does not reach store files
+    assert(spark.conf.get("spark.sql.parquet.compression.codec") === "snappy")
+    fill(st)
+    assert(codecs(s"${st.root}/v_0") === Set("ZSTD"))
+    st.update(Seq((7L, "x1", 1.0)).toDF("k", "d", "v"))
+    assert(codecs(s"${st.root}/v_0.d_1") === Set("ZSTD"))
+    st.update(Seq((8L, "y1", 1.0)).toDF("k", "d", "v"))
+    assert(st.contentToken === "v_1") // the second delta compacted
+    assert(codecs(s"${st.root}/v_1") === Set("ZSTD"))
+  }
+
+  test("a snappy-written store takes a zstd delta, serves df, a driver query and a byKey, then compacts") {
+    val s = spark; import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("snappy-store").toString
+    // v_0 as a store written with the session's snappy codec leaves it
+    (1L to 60L).map(k => (k, s"d$k", k * 0.5)).toDF("k", "d", "v")
+      .write.option("compression", "snappy").parquet(s"$dir/v_0")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_current"), "v_0")
+    assert(codecs(s"$dir/v_0") === Set("SNAPPY"))
+    val st = new ParquetStore(spark, dir, key = "k", lastUpdatedField = "lu",
+      deltaWrites = true, compactAfter = 8)
+    val want = scala.collection.mutable.Map((1L to 60L).map(k => k -> (s"d$k", k * 0.5)): _*)
+    def check(): Unit = {
+      assert(st.df.as[(Long, String, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+        === want.toMap)
+      for (k <- Seq(7L, 99L, 12L)) {
+        val row = want.get(k).map { case (d, v) => s"""{"k":$k,"d":"$d","v":$v}""" }.toSeq
+        assert(keyRead(st, s"""{"k": $k}""") === row)
+        assert(new graft.api.ReadResource(st, Nil).byKey(k.toString) === row.headOption)
+      }
+    }
+    check()
+    st.update(Seq((7L, "x1", 1.0), (99L, "new", 2.0)).toDF("k", "d", "v"))
+    assert(st.contentToken === "v_0;d_1")
+    assert(codecs(s"$dir/v_0.d_1") === Set("ZSTD"))
+    want ++= Seq(7L -> ("x1", 1.0), 99L -> ("new", 2.0))
+    check()
+    st.compact()
+    assert(st.contentToken === "v_1")
+    assert(codecs(s"$dir/v_1") === Set("ZSTD"))
+    check()
   }
 }
