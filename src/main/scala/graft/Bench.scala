@@ -66,23 +66,32 @@ object Bench {
     // first LSH query 13.9 s cold vs 2.9 s steady state); warming on a
     // smaller SF does NOT absorb it, because AQE picks different
     // physical plans at different sizes and the codegen cache misses.
-    // Spark's block cache is cleared between runs — only JVM-global
-    // state (JIT, codegen cache, page cache) persists, so the timed
-    // pass measures the per-query data work, the quantity that scales.
+    // Each run is one Materialize.scope, which frees every block the
+    // query cached or checkpointed (one left in the cache manager leaked:
+    // the query fails) — only JVM-global state (JIT, codegen cache, page
+    // cache) persists, so the timed pass measures the per-query data
+    // work, the quantity that scales.
     // Failures return None and are EXCLUDED from every total (and emitted
     // as JSON nulls) — folding a fail-fast latency into the headline sum
     // would misreport both the engine and the warm+timed double execution.
     def time(fn: (SparkSession, String) => DataFrame, name: String): Option[Double] = {
       val t0 = System.nanoTime()
       val ok =
-        try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-        catch { case e: Throwable =>
+        try {
+          graft.builder.Materialize.scope(
+            fn(spark, sfDir).write.mode("overwrite").format("noop").save())
+          true
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // evict per-query persisted staging tables
-      System.gc()                // let ContextCleaner reap shuffle/broadcast state
-      if (ok) Some(dt) else None
+      val leaked = !spark.sharedState.cacheManager.isEmpty
+      if (leaked) {
+        System.err.println(s"[bench] $name failed: cached frames outlived its Materialize.scope")
+        spark.catalog.clearCache()
+      }
+      System.gc() // let ContextCleaner reap shuffle/broadcast state
+      if (ok && !leaked) Some(dt) else None
     }
     // headline numbers use the engine hash family (xxh64) for the sketch
     // queries; the md5 family is the oracle-replay artifact Verify keeps.

@@ -31,8 +31,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.builder.Materialize.scope(fn(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: $msg")

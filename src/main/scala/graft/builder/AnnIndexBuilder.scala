@@ -209,16 +209,16 @@ class AnnIndexBuilder(
   /** Encode this run's unseen docs and append them to the code table;
     * the first run also trains + persists the quantizer from its batch.
     * Report = docs examined (the incremental contract's measure). */
-  def run(): BuildReport = {
+  protected def build(): BuildReport = {
     index.ensureIndex("cell")
     // lu-newer docs re-enter as pending and their stale code row is
     // SHADOWED by this run's id-keyed upsert (see changedIds — no
     // O(index) removal write); the plan is counted, not materialized
     val changed = changedIds()
     val updated = changed.fold(0L)(_.count())
-    // spread-checkpointed: the PQ-encode kernel is CPU-bound per vector
-    // and must not inherit a 2-split scan (Builder.spreadCheckpoint)
-    val batch = Builder.spreadCheckpoint(pendingOf(changed.filter(_ => updated > 0)))
+    // spread: the PQ-encode kernel is CPU-bound per vector and must not
+    // inherit a 2-split scan (Materialize.spread)
+    val batch = Materialize.spread(pendingOf(changed.filter(_ => updated > 0)))
     val examined = batch.count()
     var batchErr: Option[Double] = None
     val rows = if (examined == 0) None else {
@@ -248,8 +248,7 @@ class AnnIndexBuilder(
     val orphans =
       if (deleteOrphans) Builder.orphanKeys(index, "id", scoped.select(col(source.key)))
       else None
-    try Builder.commitOnce(index, rows, orphans.map(_._1), Seq("id"))
-    finally { batch.unpersist(); orphans.foreach(_._1.unpersist()) }
+    Builder.commitOnce(index, rows, orphans.map(_._1), Seq("id"))
     BuildReport(examined, 0, orphans.fold(0L)(_._2), updated = updated,
       adcError = batchErr, trainAdcError = loadTrainError())
   }
@@ -285,21 +284,22 @@ class AnnIndexBuilder(
     * never a mix of quantizer generations within one query. Stale ids
     * (docs deleted since the last build) leave the index in the same
     * commit that writes the re-encoded codes. */
-  def rebuild(): BuildReport = {
+  def rebuild(): BuildReport = Materialize.scope {
     index.ensureIndex("cell")
-    val corpus = Builder.spreadCheckpoint(scoped)
+    val corpus = Materialize.spread(scoped)
     val n = corpus.count()
-    if (n == 0) { corpus.unpersist(); return BuildReport(0) }
-    val b = Similarity.trainPq(corpus, m, ksub, iters, source.key, vecField, family)
-    val c = Similarity.centroidDraw(corpus, nCentroids, source.key, vecField, family)
-    val trainErr = meanQuantError(corpus, b)
-    saveQuantizer(b, c, trainErr)
-    val (books, cents) = loadQuantizer().get
-    val orphans = Builder.orphanKeys(index, "id", corpus.select(col(source.key)))
-    try Builder.commitOnce(index, Some(encode(corpus, books, cents)),
-      orphans.map(_._1), Seq("id"))
-    finally { corpus.unpersist(); orphans.foreach(_._1.unpersist()) }
-    BuildReport(n, 0, orphans.fold(0L)(_._2), adcError = trainErr, trainAdcError = trainErr)
+    if (n == 0) BuildReport(0)
+    else {
+      val b = Similarity.trainPq(corpus, m, ksub, iters, source.key, vecField, family)
+      val c = Similarity.centroidDraw(corpus, nCentroids, source.key, vecField, family)
+      val trainErr = meanQuantError(corpus, b)
+      saveQuantizer(b, c, trainErr)
+      val (books, cents) = loadQuantizer().get
+      val orphans = Builder.orphanKeys(index, "id", corpus.select(col(source.key)))
+      Builder.commitOnce(index, Some(encode(corpus, books, cents)),
+        orphans.map(_._1), Seq("id"))
+      BuildReport(n, 0, orphans.fold(0L)(_._2), adcError = trainErr, trainAdcError = trainErr)
+    }
   }
 
   /** ADC top-k over the persisted codes (see

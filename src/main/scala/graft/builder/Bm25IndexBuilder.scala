@@ -1,6 +1,5 @@
 package graft.builder
 
-import graft.builder.Builder.MaterializeOps
 import graft.ext.Similarity
 import graft.query.{LocalFrame, MongoFilter, QueryParams}
 import graft.store.Store
@@ -203,7 +202,7 @@ class Bm25IndexBuilder(
     * delta-write store when nothing leaves) and ONE additive stats
     * write. Report = docs examined (the incremental contract's
     * measure). */
-  def run(): BuildReport = {
+  protected def build(): BuildReport = {
     index.ensureIndex("term")
     // repair a possibly-torn index/stats pair BEFORE computing pending
     // items — skipped when the clean-pair marker still matches (see
@@ -212,54 +211,50 @@ class Bm25IndexBuilder(
     lastRunReconciled = !pair.clean
     if (lastRunReconciled) reconcileStats()
     // lu-newer docs and orphans resolved up front (see docState)
-    val state = docState().map(_.materializeEager())
-    try {
-      val r = state.map(_.agg(count_if(isChanged), sum(when(isChanged, col("dl"))),
-        count_if(isOrphan), sum(when(isOrphan, col("dl")))).head())
-      def at(i: Int) = r.filterNot(_.isNullAt(i)).fold(0L)(_.getLong(i))
-      val (updated, updatedDl, orphans, orphanDl) = (at(0), at(1), at(2), at(3))
-      // spread-checkpointed: the tokenize+count kernel is CPU-dense per
-      // doc and must not inherit a 2-split scan (Builder.spreadCheckpoint)
-      val batch = Builder.spreadCheckpoint(pendingOf(state,
-        state.map(_.filter(isChanged)).filter(_ => updated > 0)))
-      try {
-        // batch stats in ONE small agg (count + Σdl over the batch), the
-        // count also the run's examined docs; null dl (null text) counts
-        // the doc, adds nothing — the same accounting as the
-        // from-scratch stats row
-        val st = batch.select(
-            graft.functions.GraftFunctions.cntTotal(spark,
-              graft.functions.GraftFunctions.termCounts(spark,
-                graft.ext.TextAnalysis.normTokens(col(textField)))).alias("dl"))
-          .agg(count(lit(1)).alias("n"), sum(col("dl")).alias("s")).head()
-        val (examined, batchS) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
-        // postings first, stats second: a tear between them leaves the
-        // stats row diverged from the postings' truth, which the
-        // clean-pair-gated recount repairs on the next run
-        Builder.commitOnce(index, Some(batch).filter(_ => examined > 0).map(postingsOf),
-          state.map(_.filter(isChanged || isOrphan).select(col("id")))
-            .filter(_ => updated + orphans > 0), Seq("term", "id"))
-        if (examined > 0 || orphans > 0) loadStats() match {
-          case Some((n0, s0)) =>
-            // ONE additive stats write: the batch increment and the
-            // decrement of the changed docs' OLD lengths and the
-            // orphans' fold together
-            writeStats(n0 + examined - updated - orphans, s0 + batchS - updatedDl - orphanDl)
-          case None if updated > 0 || orphans > 0 =>
-            // stats row missing/unreadable while postings exist (e.g.
-            // truncated externally after the startup recount):
-            // decrementing from (0,0) would write NEGATIVE counts —
-            // recount from the just-committed postings, the source of
-            // truth (they already reflect removals + batch)
-            reconcileStats()
-          case None => writeStats(examined, batchS)
-        }
-        // every write pair committed: stamp the marker (a failure above
-        // propagates with the marker stale, so the next run recounts)
-        pair.stamp()
-        BuildReport(examined, 0, orphans, updated = updated)
-      } finally batch.unpersist()
-    } finally state.foreach(_.unpersist())
+    val state = docState().map(Materialize.eager(_))
+    val r = state.map(_.agg(count_if(isChanged), sum(when(isChanged, col("dl"))),
+      count_if(isOrphan), sum(when(isOrphan, col("dl")))).head())
+    def at(i: Int) = r.filterNot(_.isNullAt(i)).fold(0L)(_.getLong(i))
+    val (updated, updatedDl, orphans, orphanDl) = (at(0), at(1), at(2), at(3))
+    // spread: the tokenize+count kernel is CPU-dense per doc and must
+    // not inherit a 2-split scan (Materialize.spread)
+    val batch = Materialize.spread(pendingOf(state,
+      state.map(_.filter(isChanged)).filter(_ => updated > 0)))
+    // batch stats in ONE small agg (count + Σdl over the batch), the
+    // count also the run's examined docs; null dl (null text) counts
+    // the doc, adds nothing — the same accounting as the
+    // from-scratch stats row
+    val st = batch.select(
+        graft.functions.GraftFunctions.cntTotal(spark,
+          graft.functions.GraftFunctions.termCounts(spark,
+            graft.ext.TextAnalysis.normTokens(col(textField)))).alias("dl"))
+      .agg(count(lit(1)).alias("n"), sum(col("dl")).alias("s")).head()
+    val (examined, batchS) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
+    // postings first, stats second: a tear between them leaves the
+    // stats row diverged from the postings' truth, which the
+    // clean-pair-gated recount repairs on the next run
+    Builder.commitOnce(index, Some(batch).filter(_ => examined > 0).map(postingsOf),
+      state.map(_.filter(isChanged || isOrphan).select(col("id")))
+        .filter(_ => updated + orphans > 0), Seq("term", "id"))
+    if (examined > 0 || orphans > 0) loadStats() match {
+      case Some((n0, s0)) =>
+        // ONE additive stats write: the batch increment and the
+        // decrement of the changed docs' OLD lengths and the
+        // orphans' fold together
+        writeStats(n0 + examined - updated - orphans, s0 + batchS - updatedDl - orphanDl)
+      case None if updated > 0 || orphans > 0 =>
+        // stats row missing/unreadable while postings exist (e.g.
+        // truncated externally after the startup recount):
+        // decrementing from (0,0) would write NEGATIVE counts —
+        // recount from the just-committed postings, the source of
+        // truth (they already reflect removals + batch)
+        reconcileStats()
+      case None => writeStats(examined, batchS)
+    }
+    // every write pair committed: stamp the marker (a failure above
+    // propagates with the marker stale, so the next run recounts)
+    pair.stamp()
+    BuildReport(examined, 0, orphans, updated = updated)
   }
 
   /** BM25 top-k over the persisted postings; requires a completed

@@ -41,7 +41,7 @@ class BpeTrainBuilder(
     if (trained && !force) scoped.limit(0) else scoped
 
   /** Report = number of merges learned (0 on skip). */
-  def run(): BuildReport = {
+  protected def build(): BuildReport = {
     if (trained && !force) return BuildReport(0)
     val learned = graft.ext.Bpe.trainBatched(scoped, textField,
       numMerges, batchSize)

@@ -44,92 +44,32 @@ case class BuildReport(
 trait Builder {
   /** The delta that would be processed (plan only — inspect/test hook). */
   def pendingItems(): DataFrame
-  /** Execute: process the delta and upsert into the target(s). */
-  def run(): BuildReport
+  /** Execute: process the delta and upsert into the target(s). The run
+    * is one [[Materialize.scope]]: everything [[build]] materializes is
+    * freed when it returns or throws. */
+  final def run(): BuildReport = Materialize.scope(build())
+  /** One run's body (see [[run]]). */
+  protected def build(): BuildReport
 }
 
 object Builder {
-  /** Policy-driven EAGER materialization for builder run paths —
-    * `spark.graft.materialize` (session conf; Runner specs set it via
-    * `"materialize"`):
-    *  - `"local"` (default): `localCheckpoint(true)` — lineage truncated
-    *    to executor-local blocks. Fastest, and exactly right at
-    *    local[32] (one JVM: executor loss = driver loss anyway). On a
-    *    real cluster an executor loss mid-build fails the job
-    *    unrecoverably — hence the knob.
-    *  - `"reliable"`: `checkpoint(true)` to the configured
-    *    `sparkContext.setCheckpointDir` (Runner: `"checkpoint_dir"`) —
-    *    lineage truncated to DURABLE files; executor loss recomputes
-    *    from the checkpoint, and read-then-mutate builder phases stay
-    *    correct because the materialized bytes can never be recomputed
-    *    from a store the run has since mutated.
-    *  - `"persist"`: MEMORY_AND_DISK persist + count, lineage KEPT —
-    *    executor loss recomputes from the ORIGINAL inputs. Sound when
-    *    sources are immutable for the run's duration; a recompute that
-    *    re-reads a store this run already mutated can diverge (the
-    *    builders' upserts are keyed and idempotent, so the documented
-    *    recovery there is re-running the builder).
-    * The returned frame tolerates `.unpersist()` in every mode
-    * (checkpointed frames no-op). */
-  def materialize[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
-    val mode = scala.util.Try(
-      ds.sparkSession.conf.get("spark.graft.materialize")).getOrElse("local")
-    mode match {
-      case "local" => ds.localCheckpoint(true)
-      case "reliable" =>
-        require(ds.sparkSession.sparkContext.getCheckpointDir.isDefined,
-          "spark.graft.materialize=reliable requires a checkpoint dir " +
-            "(sparkContext.setCheckpointDir / Runner spec \"checkpoint_dir\")")
-        ds.checkpoint(true)
-      case "persist" =>
-        val p = ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize must be local|reliable|persist, got '$other'")
-    }
-  }
-
-  /** [[materialize]] as a postfix op — keeps builder call sites as
-    * terse as the `localCheckpoint(true)` calls they replaced. */
-  implicit class MaterializeOps[T](private val ds: org.apache.spark.sql.Dataset[T]) extends AnyVal {
-    def materializeEager(): org.apache.spark.sql.Dataset[T] = Builder.materialize(ds)
-  }
-
-  /** Eagerly materialize `df`, spread to core count when the
-    * materialized batch carries fewer partitions. The eager checkpoint
-    * inherits the source scan's split count — a single-row-group
-    * parquet source checkpoints as 2 partitions at test SFs — and the
-    * CPU-bound per-doc kernels the builders run downstream (md5-family
-    * minhash signatures, PQ encode) are then stuck on 2 of N local
-    * cores (measured: the sf0.1 signature pass dropped 6.8 s → 0.75 s
-    * after the spread). At corpus scale the scan already carries
-    * ≥ defaultParallelism splits and the re-checkpoint never triggers. */
-  def spreadCheckpoint(df: DataFrame): DataFrame = {
-    val raw = materialize(df)
-    val par = raw.sparkSession.sparkContext.defaultParallelism
-    if (raw.rdd.getNumPartitions >= par) raw
-    else {
-      val spread = materialize(raw.repartition(par))
-      raw.unpersist()
-      spread
-    }
-  }
+  /** [[Materialize.eager]] (the `spark.graft.materialize` policy). */
+  def materialize[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] =
+    Materialize.eager(ds)
 
   /** The orphans of `target`: its `keyCol` values absent from `live` (a
     * one-column frame of live keys, any column name), materialized once
     * (counted, then written), with their count; None when there are none
     * or `target` was never written. Found BEFORE the run's write, so
-    * [[commitOnce]] folds them into it; the caller unpersists them. */
+    * [[commitOnce]] folds them into it; the run's scope frees them. */
   private[builder] def orphanKeys(target: Store, keyCol: String,
                                   live: DataFrame): Option[(DataFrame, Long)] = {
     val t = target.df
     if (!t.columns.contains(keyCol)) return None
-    val orphans = t.select(col(keyCol))
-      .join(live.select(col(live.columns.head).alias(keyCol)), Seq(keyCol), "left_anti")
-      .materializeEager()
+    val orphans = Materialize.eager(t.select(col(keyCol))
+      .join(live.select(col(live.columns.head).alias(keyCol)), Seq(keyCol), "left_anti"))
     val n = orphans.count()
-    if (n > 0) Some((orphans, n)) else { orphans.unpersist(); None }
+    if (n > 0) Some((orphans, n)) else None
   }
 
   /** ONE commit of `target` for a run's batch and key removals:

@@ -1,6 +1,5 @@
 package graft.builder
 
-import graft.builder.Builder.MaterializeOps
 import graft.query.MongoFilter
 import graft.store.Store
 import org.apache.spark.sql.{Column, DataFrame}
@@ -190,20 +189,18 @@ abstract class CountModelBuilder extends Builder {
       return
     }
     val c0 = counts.head
-    val joined = truth.join(model.df.select(col(key) +:
+    // isEmpty + two consumers on one diff slice
+    val joined = Materialize.eager(truth.join(model.df.select(col(key) +:
           counts.map(c => col(c).cast("long").alias(s"__p_$c")) :+ col(lu).alias("__lu"): _*),
         Seq(key), "full_outer")
       .filter(col(c0).isNull || col(s"__p_$c0").isNull ||
-        counts.map(c => col(c) =!= col(s"__p_$c")).reduce(_ || _))
-      .materializeEager() // isEmpty + two consumers on one diff slice
-    try {
-      if (!joined.isEmpty) {
-        model.update(joined.filter(col(c0).isNotNull).select(col(key) +:
-            counts.map(col) :+ coalesce(col("__lu"), luLit()).alias(lu): _*), Seq(key))
-        val gone = joined.filter(col(c0).isNull).select(col(key))
-        if (!gone.isEmpty) model.removeKeys(gone)
-      }
-    } finally joined.unpersist()
+        counts.map(c => col(c) =!= col(s"__p_$c")).reduce(_ || _)))
+    if (!joined.isEmpty) {
+      model.update(joined.filter(col(c0).isNotNull).select(col(key) +:
+          counts.map(col) :+ coalesce(col("__lu"), luLit()).alias(lu): _*), Seq(key))
+      val gone = joined.filter(col(c0).isNull).select(col(key))
+      if (!gone.isEmpty) model.removeKeys(gone)
+    }
   }
 
   /** The keyed additive merge: `c = batch + persisted − dropped` per
@@ -232,7 +229,7 @@ abstract class CountModelBuilder extends Builder {
   private def prefixed(df: DataFrame, p: String): DataFrame =
     counts.foldLeft(df)((d, c) => d.withColumnRenamed(c, p + c))
 
-  def run(): BuildReport = {
+  protected def build(): BuildReport = {
     // store-emptiness probes are limit-1 jobs on a durable store — run
     // each ONCE per build, not once per consumer
     val dEmpty: Option[Boolean] = docs.map(storeEmpty)
@@ -259,57 +256,51 @@ abstract class CountModelBuilder extends Builder {
     // pending and removed from the contributions in the fused write
     val changed = docs.filter(_ => dEmpty.contains(false))
       .flatMap(d => Contributions.changed(source, scoped, d.df))
-      .map(_.materializeEager())
+      .map(Materialize.eager(_))
     val updated = changed.map(_.count()).getOrElse(0L)
     val subSlice = changed.filter(_ => updated > 0)
-    try {
-      // spread-checkpointed: the tokenize kernels are CPU-dense per doc
-      // and must not inherit a 2-split scan (Builder.spreadCheckpoint)
-      val batch = Builder.spreadCheckpoint(pendingOf(dEmpty, _ => subSlice))
-      try {
-        // ONE header agg: batch size + the new watermark (= max lu of
-        // THIS batch, strictly monotone per the newer_in filter; stamped
-        // on every touched row, so the model's max-lu always names the
-        // latest absorbed batch)
-        val hdr = batch.agg(count(lit(1)).alias("__n"),
-          max(Contributions.lu(source, batch)).alias("__lu")).head()
-        val examined = hdr.getLong(0)
-        if (examined == 0) {
-          pair.foreach(_.stamp()) // the reconcile (if any) committed; record it
-          return BuildReport(0, updated = updated)
-        }
-        val batchLu = hdr.get(1)
-        // typed null when the batch carries no lu (see Contributions.lu)
-        val luCol = if (batchLu == null) lit(null).cast("long") else lit(batchLu)
-        val dropped = subSlice.map(ch =>
-          prefixed(sums(docs.get.df.join(ch, Seq("id"), "left_semi")), "__s_"))
-        val next = merged(prefixed(sums(contribOf(batch)), "__b_"), dropped,
-          mEmpty, luCol)
-        // contributions land FIRST (the source of truth the reconcile
-        // recomputes from), the model cache second; the clean-pair marker
-        // is stamped ONLY after both committed — a tear anywhere leaves
-        // it stale and the next run repairs
-        subSlice match {
-          case None =>
-            docs.foreach(d => d.update(contribOf(batch), Seq("id", key)))
-            model.update(next, Seq(key))
-          case Some(ch) =>
-            val m = next.materializeEager() // ups/gone/isEmpty, one slice
-            try {
-              val ups = m.filter(positive)
-              val gone = m.filter(!positive).select(col(key))
-              // the changed docs' stale contribution rows leave in the
-              // SAME committed write that absorbs the batch's
-              docs.foreach(d => d.updateRemoveKeys(contribOf(batch), ch, Seq("id", key)))
-              // keys whose counts all reached zero LEAVE the model in the
-              // same write (from-scratch convergence)
-              if (gone.isEmpty) model.update(ups, Seq(key))
-              else model.updateRemoveKeys(ups, gone, Seq(key))
-            } finally m.unpersist()
-        }
-        pair.foreach(_.stamp())
-        BuildReport(examined, updated = updated)
-      } finally batch.unpersist()
-    } finally changed.foreach(_.unpersist())
+    // spread: the tokenize kernels are CPU-dense per doc and must not
+    // inherit a 2-split scan (Materialize.spread)
+    val batch = Materialize.spread(pendingOf(dEmpty, _ => subSlice))
+    // ONE header agg: batch size + the new watermark (= max lu of
+    // THIS batch, strictly monotone per the newer_in filter; stamped
+    // on every touched row, so the model's max-lu always names the
+    // latest absorbed batch)
+    val hdr = batch.agg(count(lit(1)).alias("__n"),
+      max(Contributions.lu(source, batch)).alias("__lu")).head()
+    val examined = hdr.getLong(0)
+    if (examined == 0) {
+      pair.foreach(_.stamp()) // the reconcile (if any) committed; record it
+      return BuildReport(0, updated = updated)
+    }
+    val batchLu = hdr.get(1)
+    // typed null when the batch carries no lu (see Contributions.lu)
+    val luCol = if (batchLu == null) lit(null).cast("long") else lit(batchLu)
+    val dropped = subSlice.map(ch =>
+      prefixed(sums(docs.get.df.join(ch, Seq("id"), "left_semi")), "__s_"))
+    val next = merged(prefixed(sums(contribOf(batch)), "__b_"), dropped,
+      mEmpty, luCol)
+    // contributions land FIRST (the source of truth the reconcile
+    // recomputes from), the model cache second; the clean-pair marker
+    // is stamped ONLY after both committed — a tear anywhere leaves
+    // it stale and the next run repairs
+    subSlice match {
+      case None =>
+        docs.foreach(d => d.update(contribOf(batch), Seq("id", key)))
+        model.update(next, Seq(key))
+      case Some(ch) =>
+        val m = Materialize.eager(next) // ups/gone/isEmpty, one slice
+        val ups = m.filter(positive)
+        val gone = m.filter(!positive).select(col(key))
+        // the changed docs' stale contribution rows leave in the
+        // SAME committed write that absorbs the batch's
+        docs.foreach(d => d.updateRemoveKeys(contribOf(batch), ch, Seq("id", key)))
+        // keys whose counts all reached zero LEAVE the model in the
+        // same write (from-scratch convergence)
+        if (gone.isEmpty) model.update(ups, Seq(key))
+        else model.updateRemoveKeys(ups, gone, Seq(key))
+    }
+    pair.foreach(_.stamp())
+    BuildReport(examined, updated = updated)
   }
 }

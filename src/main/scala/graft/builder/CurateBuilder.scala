@@ -1,6 +1,5 @@
 package graft.builder
 
-import graft.builder.Builder.MaterializeOps
 import graft.ext.{Dedup, Sampling, TextAnalysis}
 import graft.query.MongoFilter
 import graft.store.Store
@@ -155,13 +154,14 @@ class CurateBuilder(
   /** The curated manifest as a plan (inspect/test hook; always the
     * SNAPSHOT chain): `(key, stratum, n_tokens, pack_id, pack_offset)`
     * — no caching, so repeated actions re-execute the chain; [[run]]
-    * uses the persisted variant. */
+    * uses the cached variant. Its decontamination and packing steps
+    * materialize, so it needs an open [[Materialize.scope]]. */
   def curated(): DataFrame = chain(identity, identity)
 
   /** The chain with caller-supplied hooks at the post-dedup point (the
     * narrowest frame decontaminate's two legs read) and the post-mix
     * point (read twice by packSequences' prefix + output passes) —
-    * [[run]] persists both: re-running the cleaned/gated/deduped chain
+    * [[run]] caches both: re-running the cleaned/gated/deduped chain
     * 4x is strictly worse than two MEMORY_AND_DISK materializations of
     * the survivors at any scale. */
   private def chain(mid: DataFrame => DataFrame,
@@ -232,27 +232,16 @@ class CurateBuilder(
         col("pack_id"), col("pack_offset"))
   }
 
-  def run(): BuildReport =
+  protected def build(): BuildReport =
     if (incremental) runIncremental(facts.get) else runSnapshot()
 
   private def runSnapshot(): BuildReport = {
-    // persist the post-dedup and post-mix survivors (see chain) and
+    // cache the post-dedup and post-mix survivors (see chain) and
     // materialize the manifest once for its own consumers (write +
     // orphan diff + count)
-    val handles = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def hook(d: DataFrame): DataFrame = {
-      val p = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      handles += p
-      p
-    }
-    val out = chain(hook, hook).materializeEager()
-    try {
-      val (kept, orphans) = writeManifest(out)
-      BuildReport(kept, 0, orphans)
-    } finally {
-      out.unpersist()
-      handles.foreach(_.unpersist())
-    }
+    val out = Materialize.eager(chain(Materialize.cache(_), Materialize.cache(_)))
+    val (kept, orphans) = writeManifest(out)
+    BuildReport(kept, 0, orphans)
   }
 
   /** Incremental run (see class doc): per-doc facts for the delta only,
@@ -262,38 +251,32 @@ class CurateBuilder(
     * (source lu newer than the stored fact's). */
   private def runIncremental(f: Store): BuildReport = {
     val key = source.key
-    // spread-checkpointed: the C4/Gopher/hash kernels are CPU-dense per
-    // doc and must not inherit a 2-split scan (Builder.spreadCheckpoint)
-    val pending = Builder.spreadCheckpoint(pendingItems())
-    try {
-      val examined = pending.count()
-      val updated =
-        if (examined == 0 || !f.df.columns.contains(key)) 0L
-        else pending.join(f.df.select(col(key)), Seq(key), "left_semi").count()
-      // docs gone from the source leave the facts table in the same
-      // commit that absorbs the delta's facts
-      val gone = Builder.orphanKeys(f, key, scoped.select(col(key)))
-      // ONE kernel pass (C4/Gopher/hash/count) materializes the base
-      // facts; the score + decon joins then read it from cache instead
-      // of re-running the CPU-dense kernels per consumer
-      val base = Some(pending).filter(_ => examined > 0).map(baseFactsOf(_).materializeEager())
-      val nf = base.map(enrichFacts(_).materializeEager())
-      try Builder.commitOnce(f, nf, gone.map(_._1), Seq(key))
-      finally (nf ++ base ++ gone.map(_._1)).foreach(_.unpersist())
-      // a run that changed no fact keeps the manifest when it was
-      // written from these facts under these dials (a crash between the
-      // two commits or a third-party write changes a token)
-      if (examined == 0 && gone.isEmpty && manifestStamp(f).exists(target.getMeta(ManifestKey).contains))
-        BuildReport(0, 0)
-      else {
-        val out = manifestFromFacts(f.df).materializeEager()
-        try {
-          val (_, orphans) = writeManifest(out)
-          manifestStamp(f).foreach(target.putMeta(ManifestKey, _))
-          BuildReport(examined, 0, orphans, updated = updated)
-        } finally out.unpersist()
-      }
-    } finally pending.unpersist()
+    // spread: the C4/Gopher/hash kernels are CPU-dense per doc and must
+    // not inherit a 2-split scan (Materialize.spread)
+    val pending = Materialize.spread(pendingItems())
+    val examined = pending.count()
+    val updated =
+      if (examined == 0 || !f.df.columns.contains(key)) 0L
+      else pending.join(f.df.select(col(key)), Seq(key), "left_semi").count()
+    // docs gone from the source leave the facts table in the same
+    // commit that absorbs the delta's facts
+    val gone = Builder.orphanKeys(f, key, scoped.select(col(key)))
+    // ONE kernel pass (C4/Gopher/hash/count) materializes the base
+    // facts; the score + decon joins then read it from cache instead
+    // of re-running the CPU-dense kernels per consumer
+    val base = Some(pending).filter(_ => examined > 0).map(p => Materialize.eager(baseFactsOf(p)))
+    val nf = base.map(b => Materialize.eager(enrichFacts(b)))
+    Builder.commitOnce(f, nf, gone.map(_._1), Seq(key))
+    // a run that changed no fact keeps the manifest when it was
+    // written from these facts under these dials (a crash between the
+    // two commits or a third-party write changes a token)
+    if (examined == 0 && gone.isEmpty && manifestStamp(f).exists(target.getMeta(ManifestKey).contains))
+      BuildReport(0, 0)
+    else {
+      val (_, orphans) = writeManifest(Materialize.eager(manifestFromFacts(f.df)))
+      manifestStamp(f).foreach(target.putMeta(ManifestKey, _))
+      BuildReport(examined, 0, orphans, updated = updated)
+    }
   }
 
   private val ManifestKey = "graft.curate.manifest"
@@ -421,8 +404,7 @@ class CurateBuilder(
     val orphans =
       if (deleteOrphans) Builder.orphanKeys(target, target.key, out.select(col(source.key)))
       else None
-    try Builder.commitOnce(target, Some(keyed), orphans.map(_._1), Seq(target.key))
-    finally orphans.foreach(_._1.unpersist())
+    Builder.commitOnce(target, Some(keyed), orphans.map(_._1), Seq(target.key))
     (kept, orphans.fold(0L)(_._2))
   }
 }

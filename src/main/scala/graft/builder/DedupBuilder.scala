@@ -1,6 +1,5 @@
 package graft.builder
 
-import graft.builder.Builder.MaterializeOps
 import graft.ext.Dedup
 import graft.query.MongoFilter
 import graft.store.Store
@@ -222,54 +221,45 @@ class DedupBuilder(
     if (!usableIndex(idx) || !idx.df.columns.contains("lu") ||
         !scoped.columns.contains(source.lastUpdatedField)) return 0L
     val k = source.key
-    val changed = idx.df.select(col("id"), col("cluster"), col("lu"))
+    // consumed by count, member semi/anti-joins, 2 removals
+    val changed = Materialize.eager(idx.df.select(col("id"), col("cluster"), col("lu"))
       .join(scoped.select(col(k).alias("id"),
         col(source.lastUpdatedField).alias("__slu")), Seq("id"))
       .filter(col("__slu") > col("lu"))
-      .select(col("id"), col("cluster"))
-      .materializeEager() // consumed by count, member semi/anti-joins, 2 removals
-    try {
-      val n = changed.count()
-      if (n == 0) return 0L
-      // remaining members of the touched components, with stored labels:
-      // the changed docs' stale signatures never reach the pair producer
-      val members = idx.df
-        .join(changed.select(col("cluster")).distinct(), Seq("cluster"), "left_semi")
-        .join(changed.select(col("id")), Seq("id"), "left_anti")
-        .materializeEager() // pair producer reads sigs 2-3×, label diff once
-      try {
-        val pairs =
-          if (method == "semantic") graft.ext.Similarity.cellDupPairs(
-            members.select(col("cell"), col("id"), col("vec")), threshold,
-            maxCellSize, overCap)
-          else sigPairs(members)
-        val labels = Dedup.clusters(pairs.select(col("a"), col("b")))
-        val relab = members.withColumnRenamed("cluster", "__old")
-          .join(labels, Seq("id"), "left_outer")
-          .withColumn("cluster", coalesce(col("cluster"), col("id")))
-        val delta = relab.filter(col("cluster") =!= col("__old"))
-          .drop("__old").materializeEager()
-        try {
-          // promotion repair: new label == own id ⇒ an ex-loser whose
-          // canonical left — restore its (current) source row; a member
-          // gone from the source has no row to restore (orphan, skipped).
-          // ONE target commit with the changed docs' rows (any may be a
-          // stale canonical) out — the resolveDeltaAndRepair pattern
-          val promoted = delta.filter(col("id") === col("cluster"))
-            .select(col("id").alias(k))
-          val rows = scoped.join(promoted, Seq(k), "left_semi")
-            .materializeEager()
-          val stale = changed.select(col("id").alias(target.key))
-          try Builder.commitOnce(target, Some(rows).filter(_.count() > 0),
-            Some(stale), Seq(target.key))
-          finally rows.unpersist()
-          // ONE index commit, AFTER the target's (its lu is the progress
-          // marker: until it commits, the next run repeats this repair)
-          idx.updateRemoveKeys(delta, changed.select(col("id")), Seq("id"))
-        } finally delta.unpersist()
-      } finally members.unpersist()
-      n
-    } finally changed.unpersist()
+      .select(col("id"), col("cluster")))
+    val n = changed.count()
+    if (n == 0) return 0L
+    // remaining members of the touched components, with stored labels:
+    // the changed docs' stale signatures never reach the pair producer;
+    // the pair producer reads them 2-3×, the label diff once
+    val members = Materialize.eager(idx.df
+      .join(changed.select(col("cluster")).distinct(), Seq("cluster"), "left_semi")
+      .join(changed.select(col("id")), Seq("id"), "left_anti"))
+    val pairs =
+      if (method == "semantic") graft.ext.Similarity.cellDupPairs(
+        members.select(col("cell"), col("id"), col("vec")), threshold,
+        maxCellSize, overCap)
+      else sigPairs(members)
+    val labels = Dedup.clusters(pairs.select(col("a"), col("b")))
+    val relab = members.withColumnRenamed("cluster", "__old")
+      .join(labels, Seq("id"), "left_outer")
+      .withColumn("cluster", coalesce(col("cluster"), col("id")))
+    val delta = Materialize.eager(relab.filter(col("cluster") =!= col("__old")).drop("__old"))
+    // promotion repair: new label == own id ⇒ an ex-loser whose
+    // canonical left — restore its (current) source row; a member
+    // gone from the source has no row to restore (orphan, skipped).
+    // ONE target commit with the changed docs' rows (any may be a
+    // stale canonical) out — the resolveDeltaAndRepair pattern
+    val promoted = delta.filter(col("id") === col("cluster"))
+      .select(col("id").alias(k))
+    val rows = Materialize.eager(scoped.join(promoted, Seq(k), "left_semi"))
+    val stale = changed.select(col("id").alias(target.key))
+    Builder.commitOnce(target, Some(rows).filter(_.count() > 0),
+      Some(stale), Seq(target.key))
+    // ONE index commit, AFTER the target's (its lu is the progress
+    // marker: until it commits, the next run repeats this repair)
+    idx.updateRemoveKeys(delta, changed.select(col("id")), Seq("id"))
+    n
   }
 
   /** This method's from-scratch pairs over a signature table in the
@@ -306,15 +296,14 @@ class DedupBuilder(
     * its size; `None` means the batch is empty and the run is a no-op. */
   private def indexedBatch(idx: Store, hasIndex: Boolean)
       : Option[(DataFrame, Long)] = {
-    // spread-checkpointed so the signature kernels parallelize past the
-    // source scan's split count (see Builder.spreadCheckpoint)
-    val batch =
-      Builder.spreadCheckpoint(if (hasIndex) unseen(scoped, idx) else scoped)
+    // spread so the signature kernels parallelize past the source
+    // scan's split count (see Materialize.spread)
+    val batch = Materialize.spread(if (hasIndex) unseen(scoped, idx) else scoped)
     val examined = batch.count()
-    if (examined == 0) { batch.unpersist(); None } else Some((batch, examined))
+    if (examined == 0) None else Some((batch, examined))
   }
 
-  def run(): BuildReport = indexStore match {
+  protected def build(): BuildReport = indexStore match {
     case Some(idx) if method == "semantic" => runSemanticIndexed(idx)
     case Some(idx) => runIndexed(idx) // minhash | simhash | ngram signature index
     case None => runFull()
@@ -375,10 +364,9 @@ class DedupBuilder(
       case other => throw new IllegalArgumentException(
         s"unknown dedup method: $other (exact|fingerprint|minhash|simhash|image|ngram|semantic|lines|spans)")
     }
-    val mat = kept.materializeEager()
+    val mat = Materialize.eager(kept)
     val processed = mat.count()
     if (processed > 0) target.update(mat, Seq(target.key))
-    mat.unpersist()
     BuildReport(processed, 0)
   }
 
@@ -400,7 +388,7 @@ class DedupBuilder(
     val sigCol = if (method == "ngram") "grams" else "sig"
     // batch signatures: computed once, consumed by banding, verification
     // and the index write
-    val newSigs = (method match {
+    val newSigs = Materialize.eager(method match {
       case "minhash" => Dedup.minhashSignatures(batch, k, textField,
         numHashes, shingleSize, family)
       case "simhash" => Dedup.simhashSignatures(batch, k, textField, family)
@@ -413,7 +401,7 @@ class DedupBuilder(
           .select(col("media_id").alias("id"), col("simhash").alias("sig"))
       case _ => Dedup.ngramSignatures(batch, k, textField, shingleSize)
         .withColumnRenamed("sig", "grams")
-    }).materializeEager()
+    })
 
     def incremental(knownSigs: DataFrame) = method match {
       case "minhash" =>
@@ -442,7 +430,6 @@ class DedupBuilder(
     val r = resolveDeltaAndRepair(idx, batch, examined,
       attachLu(newSigs.select(col("id"), col(sigCol)), batch, idx),
       pairs, oldEdges, known)
-    newSigs.unpersist()
     r.copy(updated = updated)
   }
 
@@ -495,9 +482,9 @@ class DedupBuilder(
         Similarity.centroidDraw(batch,
           if (autoK) Similarity.autoCentroids(examined, targetCellSize)
           else nCentroids, k, textField)
-    val newCells = Similarity.assignToCells(batch, cents, k, textField, keep = 1)
-      .select(col("__rid").alias("id"), col("__rvec").alias("vec"), col("cell"))
-      .materializeEager()
+    val newCells = Materialize.eager(
+      Similarity.assignToCells(batch, cents, k, textField, keep = 1)
+        .select(col("__rid").alias("id"), col("__rvec").alias("vec"), col("cell")))
     // the batch's distinct cell set is ≤ nCentroids BY CONSTRUCTION
     // (argmax over the persisted draw) — a bounded collect, and the
     // static IN-predicate is what parquet row-group stats can prune on
@@ -592,7 +579,6 @@ class DedupBuilder(
       .withColumn("centroid", coalesce(col("__c"), lit(false))).drop("__c")
     val r = resolveDeltaAndRepair(idx, batch, examined,
       attachLu(newRows, batch, idx), pairs, oldEdges, known)
-    newCells.unpersist()
     r.copy(updated = updated)
   }
 
@@ -613,7 +599,7 @@ class DedupBuilder(
     // pairs feed BOTH the edge set and the affected-cluster restriction —
     // materialize once (they are the bounded post-threshold candidate
     // set; clusters() would persist them anyway)
-    val p = pairs.select(col("a"), col("b")).materializeEager()
+    val p = Materialize.eager(pairs.select(col("a"), col("b")))
     // min-label monotonicity: only components a new pair touches can
     // change labels, so stored edges are restricted to the clusters of
     // stored ids appearing in this round's pairs. Without this the
@@ -639,11 +625,11 @@ class DedupBuilder(
         .drop("__old"))
     // allowMissingColumns: a lu-carrying index fed by a source that lost
     // its lu column unions null-lu new rows against lu-carrying old rows
-    val delta = changedOld.foldLeft(newRows)(
-      _.unionByName(_, allowMissingColumns = true)).materializeEager()
-    val losers = delta.filter(col("id") =!= col("cluster"))
-      .select(col("id").alias(k)).materializeEager()
-    val mat = batch.join(losers, Seq(k), "left_anti").materializeEager()
+    val delta = Materialize.eager(changedOld.foldLeft(newRows)(
+      _.unionByName(_, allowMissingColumns = true)))
+    val losers = Materialize.eager(delta.filter(col("id") =!= col("cluster"))
+      .select(col("id").alias(k)))
+    val mat = Materialize.eager(batch.join(losers, Seq(k), "left_anti"))
     // r17 (VERDICT r16 #3): the loser drop rides the SAME committed
     // write as the survivor upsert — the pre-r17 shape paid an
     // unconditional O(target) removeKeys rewrite (even with zero
@@ -656,8 +642,6 @@ class DedupBuilder(
     if (mat.count() > 0) target.updateRemoveKeys(mat, losers, Seq(target.key))
     else if (!losers.isEmpty) target.removeKeys(losers)
     idx.update(delta, Seq("id"))
-    mat.unpersist(); losers.unpersist(); delta.unpersist(); batch.unpersist()
-    p.unpersist()
     BuildReport(examined, 0)
   }
 }
@@ -683,13 +667,12 @@ class DecontaminateBuilder(
 
   def pendingItems(): DataFrame = scoped
 
-  def run(): BuildReport = {
+  protected def build(): BuildReport = {
     val clean = Dedup.decontaminate(scoped, evalStore.df,
       source.key, textField, n)
-    val mat = clean.materializeEager()
+    val mat = Materialize.eager(clean)
     val kept = mat.count()
     if (kept > 0) target.update(mat, Seq(target.key))
-    mat.unpersist()
     BuildReport(kept, 0)
   }
 }

@@ -1,6 +1,5 @@
 package graft.builder
 
-import graft.builder.Builder.MaterializeOps
 import graft.query.MongoFilter
 import graft.store.Store
 import org.apache.spark.sql.{Column, DataFrame}
@@ -120,7 +119,7 @@ class GroupBuilder(
     Prechunk.rangeCriteria(gk, cuts.toSeq, criteria)
   }
 
-  def run(): BuildReport = {
+  protected def build(): BuildReport = {
     val items = pendingItems()
     val out = docFn match {
       case None =>
@@ -141,7 +140,7 @@ class GroupBuilder(
     // and the checkpoint also pins a user doc-fn to one invocation per
     // group, so a nondeterministic fn cannot make the report disagree
     // with what is written
-    val mat = out.materializeEager()
+    val mat = Materialize.eager(out)
     val hasState = mat.columns.contains("state")
     val counts = mat.agg(
       count(lit(1)).alias("n"),
@@ -168,20 +167,18 @@ class GroupBuilder(
           explode(col(pluralKeys)).alias("__m"))
         val oldPairs = target.df.select(col(target.key).alias("__ok"),
           explode(col(pluralKeys)).alias("__m"))
-        val stale = oldPairs.join(newPairs, Seq("__m"))
+        // counted, then the write's removal set
+        val stale = Materialize.eager(oldPairs.join(newPairs, Seq("__m"))
           .filter(col("__ok") =!= col("__nk"))
-          .select(col("__ok").alias(target.key)).distinct()
-          .materializeEager() // counted, then the write's removal set
+          .select(col("__ok").alias(target.key)).distinct())
         // the stale-group drop rides the SAME committed write as the
         // batch upsert; with no stale group it is a plain update, so a
         // delta-write target appends O(batch) instead of rewriting
-        try Builder.commitOnce(target, Some(mat),
+        Builder.commitOnce(target, Some(mat),
           Some(stale).filter(_.count() > 0), Seq(target.key))
-        finally stale.unpersist()
       }
       else target.update(mat, Seq(target.key))
     }
-    mat.unpersist()
     BuildReport(processed, failed)
   }
 
@@ -244,7 +241,7 @@ class GroupBuilder(
     // checkpoint the STRINGS before read.json: schema inference is its
     // own pass, so an unmaterialized fn would run once for inference and
     // again downstream (see MapBuilder.docs — same pin)
-    val jsonMat = outJson.materializeEager()
+    val jsonMat = Materialize.eager(outJson)
     val inferred = spark.read.json(jsonMat).withColumn("_bt", current_timestamp())
     // the JSON round-trip stringifies lu; restore the source's type so the
     // target's watermark (`lastUpdated`) stays a real timestamp

@@ -1,6 +1,5 @@
 package graft.builder
 
-import graft.builder.Builder.MaterializeOps
 import graft.query.MongoFilter
 import graft.store.Store
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -101,7 +100,7 @@ class MapBuilder(
     Prechunk.rangeCriteria(source.key, cuts.toSeq, criteria)
   }
 
-  def run(): BuildReport = {
+  protected def build(): BuildReport = {
     val items = pendingItems()
     val out = transform match {
       case Left(colFn) =>
@@ -127,7 +126,7 @@ class MapBuilder(
     // nondeterministic/timing-out fn cannot make the report disagree with
     // what is written. (upsertPlan references the batch subtree twice, so
     // Dataset.observe would double-count — checkpoint is the safe shape.)
-    val mat = out.materializeEager()
+    val mat = Materialize.eager(out)
     val hasState = mat.columns.contains("state")
     // one combined agg over cached blocks instead of two counting actions
     val counts = mat.agg(
@@ -142,9 +141,8 @@ class MapBuilder(
       if (deleteOrphans)
         Builder.orphanKeys(target, target.key, source.df.select(col(source.key)))
       else None
-    try Builder.commitOnce(target, Some(mat).filter(_ => processed > 0),
+    Builder.commitOnce(target, Some(mat).filter(_ => processed > 0),
       orphans.map(_._1), Seq(target.key))
-    finally { mat.unpersist(); orphans.foreach(_._1.unpersist()) }
     BuildReport(processed, failed, orphans.fold(0L)(_._2))
   }
 
@@ -201,7 +199,7 @@ class MapBuilder(
     // for inference and again downstream — side effects and
     // _process_time would double, and a field emitted only in the second
     // pass would be silently dropped (absent from the inferred schema)
-    val jsonMat = outJson.materializeEager()
+    val jsonMat = Materialize.eager(outJson)
     val inferred = spark.read.json(jsonMat).withColumn("_bt", current_timestamp())
     // the JSON round-trip stringifies lu; restore the source's type so the
     // target's watermark (`lastUpdated`) stays a real timestamp

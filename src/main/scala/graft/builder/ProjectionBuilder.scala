@@ -1,6 +1,5 @@
 package graft.builder
 
-import graft.builder.Builder.MaterializeOps
 import graft.query.MongoFilter
 import graft.store.Store
 import org.apache.spark.sql.DataFrame
@@ -78,16 +77,15 @@ class ProjectionBuilder(
     joined.select((col("__key").alias(target.key) +: outCols): _*)
   }
 
-  def run(): BuildReport = {
+  protected def build(): BuildReport = {
     val out = merged()
       .withColumn("state", lit("successful"))
       .withColumn("_bt", current_timestamp())
     // materialize once: count + write are separate actions; without this
     // the N-way full-outer join runs twice (see MapBuilder.run)
-    val mat = out.materializeEager()
+    val mat = Materialize.eager(out)
     val processed = mat.count()
     if (processed > 0) target.update(mat, Seq(target.key))
-    mat.unpersist()
     BuildReport(processed, 0)
   }
 }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.builder.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -135,7 +136,7 @@ object Bpe {
     * round (measured 10-14 s for 16 rounds at sf0.1; this shape runs
     * the same rounds in ~2 s). */
   def trainBatchedFromHistogram(hist0: DataFrame, numMerges: Int,
-                                batchSize: Int = 64): Seq[Merge] = {
+                                batchSize: Int = 64): Seq[Merge] = Materialize.scope {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
     val spark = hist0.sparkSession
@@ -143,48 +144,45 @@ object Bpe {
     // per-round jobs on a handful of fat partitions instead of
     // inheriting the corpus aggregation's task count (16 rounds ×
     // 32 near-empty tasks × 2 stages is pure scheduler floor)
-    val hist = hist0.select(col("word"), col("cnt").cast("long").alias("cnt"))
-      .coalesce(math.max(2, spark.sparkContext.defaultParallelism / 4))
-      .localCheckpoint(true)
+    val hist = Materialize.checkpoint(
+      hist0.select(col("word"), col("cnt").cast("long").alias("cnt"))
+        .coalesce(math.max(2, spark.sparkContext.defaultParallelism / 4)))
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var exhausted = false
-    try {
-      while (merges.size < numMerges && !exhausted) {
-        // the LAST round shrinks to the remainder, so the merge COUNT
-        // contract is exact (and the oracle's per-round LIMITs replay it)
-        val k = math.min(batchSize, numMerges - merges.size)
-        // adjacent pairs via posexplode + element_at — ALL codegen'd.
-        // The transform(sequence(...)) HOF spelling the sequential
-        // trainer keeps is a CodegenFallback: interpreted per row, it
-        // was 3× the whole round's cost at sf1 (measured 1.5 s → 0.5 s
-        // per round)
-        val top = hist
-          .select(col("cnt"), graft.functions.GraftFunctions.bpeEncode(
-            spark, col("word"), mergesSpec(merges.toSeq)).alias("f"))
-          .filter(size(col("f")) >= 2)
-          .select(col("cnt"), col("f"), posexplode(col("f")))
-          .filter(col("pos") < size(col("f")) - 1)
-          .select(col("cnt"), col("col").alias("a"),
-            element_at(col("f"), col("pos") + 2).alias("b"))
-          .groupBy(col("a"), col("b"))
-          .agg(sum(col("cnt")).alias("n"))
-          .orderBy(col("n").desc, col("a").asc, col("b").asc)
-          .limit(k).collect() // ≤ batchSize rows by construction
-        if (top.isEmpty) exhausted = true
-        else merges ++= top.map(r => Merge(r.getString(0), r.getString(1)))
-      }
-    } finally hist.unpersist()
+    while (merges.size < numMerges && !exhausted) {
+      // the LAST round shrinks to the remainder, so the merge COUNT
+      // contract is exact (and the oracle's per-round LIMITs replay it)
+      val k = math.min(batchSize, numMerges - merges.size)
+      // adjacent pairs via posexplode + element_at — ALL codegen'd.
+      // The transform(sequence(...)) HOF spelling the sequential
+      // trainer keeps is a CodegenFallback: interpreted per row, it
+      // was 3× the whole round's cost at sf1 (measured 1.5 s → 0.5 s
+      // per round)
+      val top = hist
+        .select(col("cnt"), graft.functions.GraftFunctions.bpeEncode(
+          spark, col("word"), mergesSpec(merges.toSeq)).alias("f"))
+        .filter(size(col("f")) >= 2)
+        .select(col("cnt"), col("f"), posexplode(col("f")))
+        .filter(col("pos") < size(col("f")) - 1)
+        .select(col("cnt"), col("col").alias("a"),
+          element_at(col("f"), col("pos") + 2).alias("b"))
+        .groupBy(col("a"), col("b"))
+        .agg(sum(col("cnt")).alias("n"))
+        .orderBy(col("n").desc, col("a").asc, col("b").asc)
+        .limit(k).collect() // ≤ batchSize rows by construction
+      if (top.isEmpty) exhausted = true
+      else merges ++= top.map(r => Merge(r.getString(0), r.getString(1)))
+    }
     merges.toSeq
   }
 
   /** Train from a `(word, cnt)` histogram. Stops early if the corpus
     * runs out of adjacent pairs (every word fully merged). */
-  def trainFromHistogram(hist0: DataFrame, numMerges: Int): Seq[Merge] = {
+  def trainFromHistogram(hist0: DataFrame, numMerges: Int): Seq[Merge] = Materialize.scope {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     // materialized once: every round re-reads it (vocabulary-sized)
-    var hist = hist0.select(col("word"), col("cnt").cast("long").alias("cnt"),
-        initialSymbols(col("word")).alias("s"))
-      .localCheckpoint(true)
+    var hist = Materialize.checkpoint(hist0.select(col("word"),
+      col("cnt").cast("long").alias("cnt"), initialSymbols(col("word")).alias("s")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var r = 0
     var exhausted = false
@@ -210,14 +208,13 @@ object Bpe {
         // evaluates an unboundedly deep replace chain; between
         // checkpoints the chain is ≤ 8 string passes per word
         hist = if ((r + 1) % 8 == 0) {
-          val next = applied.localCheckpoint(true)
-          hist.unpersist()
+          val next = Materialize.checkpoint(applied)
+          Materialize.release(hist)
           next
         } else applied
       }
       r += 1
     }
-    hist.unpersist()
     merges.toSeq
   }
 

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.builder.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -148,7 +149,7 @@ object Dedup {
     * (narrow ops above it preserve its spread), and a MATERIALIZED
     * batch — a `LogicalRDD` leaf with ≥ core partitions.
     * DedupBuilder/AnnIndexBuilder batches are the second shape:
-    * `Builder.spreadCheckpoint` checkpoints AFTER its repartition, so
+    * `Materialize.spread` checkpoints AFTER its repartition, so
     * the Repartition node is gone by the time the signature kernels see
     * the batch — a plan-containment-only guard never fires there and a
     * second round-robin exchange re-ships the corpus text per signature
@@ -217,11 +218,11 @@ object Dedup {
                  numHashes: Int = 64, bands: Int = 16,
                  shingleSize: Int = 3, threshold: Double = 0.7,
                  maxBucketSize: Int = 1000, family: String = "xxh64"): DataFrame = {
-    // sigs are used twice (banding + verification): persist the small
+    // sigs are used twice (banding + verification): cache the small
     // signature table instead of recomputing the shingle pipeline. At
     // cluster scale this is the "write signatures once" staging table.
-    val sigs = minhashSignatures(df, idCol, textCol, numHashes, shingleSize, family)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = Materialize.cache(
+      minhashSignatures(df, idCol, textCol, numHashes, shingleSize, family))
     minhashLshFromSigs(sigs, numHashes, bands, threshold, maxBucketSize, family)
   }
 
@@ -341,16 +342,14 @@ object Dedup {
     * measured over the same occupancy as a from-scratch build.
     *
     * `reuseLists`: the lists feed both the pairs and the over-cap keys —
-    * persist them (simhash star mode). */
+    * cache them (simhash star mode). */
   private def bandedPairs(rows: DataFrame, keys: Seq[String], cap: Int,
                           pinned: Boolean, reuseLists: Boolean = false)
       : (DataFrame, DataFrame) =
     if (!integralId(rows, "id")) cappedBandedFallback(rows, keys, cap)
     else {
       val lists0 = postingLists(rows, keys, cap, pinned)
-      val lists =
-        if (reuseLists) lists0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else lists0
+      val lists = if (reuseLists) Materialize.cache(lists0) else lists0
       (expandPairs(lists), lists.filter(col("lst").isNull).select(keys.map(col): _*))
     }
 
@@ -531,11 +530,8 @@ object Dedup {
     require(overCap == "drop" || overCap == "star",
       s"overCap must be 'drop' or 'star', got '$overCap'")
     // in drop mode the signature table has a single consumer (banding) —
-    // no persist; star mode re-reads it for the over-cap member fetch
-    val sigs =
-      if (overCap == "star")
-        sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sigs0
+    // no cache; star mode re-reads it for the over-cap member fetch
+    val sigs = if (overCap == "star") Materialize.cache(sigs0) else sigs0
     // integral ids are cast to long HERE so the kernel pairs and the
     // star-mode union agree on the id type
     val idExpr =
@@ -591,8 +587,8 @@ object Dedup {
                             shingleSize: Int = 3, threshold: Double = 0.7,
                             maxBucketSize: Int = 1000,
                             family: String = "xxh64"): DataFrame = {
-    val newSigs = minhashSignatures(newDf, idCol, textCol, numHashes,
-      shingleSize, family).localCheckpoint(true)
+    val newSigs = Materialize.checkpoint(minhashSignatures(newDf, idCol, textCol,
+      numHashes, shingleSize, family))
     minhashLshIncrementalSigs(newSigs, existingSigs, numHashes, bands,
       threshold, maxBucketSize, family)
   }
@@ -658,10 +654,12 @@ object Dedup {
     * carries its min id. Rounds needed = graph diameter — LSH duplicate
     * clusters are near-cliques (diameter 2-3), so this converges in a
     * handful of rounds even at 100 TB. Each round is one join + one
-    * hash-agg on narrow (long, long) rows; labels are localCheckpoint'd
-    * per round so the plan (and its lineage) stays O(1) deep, and the
-    * previous round's blocks are freed as soon as the next is
-    * materialized.
+    * hash-agg on narrow (long, long) rows; labels are checkpointed per
+    * round so the plan (and its lineage) stays O(1) deep, and the
+    * previous round's checkpoint is released as soon as the next is
+    * materialized; the pair and edge tables are released after the last
+    * round. The returned labels stay registered with the caller's
+    * [[graft.builder.Materialize.scope]].
     *
     * Returns `(id, cluster)` with `cluster` = min id of the component.
     * Only ids appearing in `pairs` are returned — untouched docs are
@@ -672,8 +670,7 @@ object Dedup {
     // materialize the pair plan once: the symmetric-edge union references
     // it twice, and upstream pair producers (LSH join pipelines) are far
     // too expensive to execute per branch
-    val p = pairs.select(col(aCol).alias("src"), col(bCol).alias("dst"))
-      .localCheckpoint(true)
+    val p = Materialize.checkpoint(pairs.select(col(aCol).alias("src"), col(bCol).alias("dst")))
     // pre-partition on dst: every round joins edges on dst, so paying one
     // extra shuffle here lets the cached partitioning be reused by all R
     // round joins instead of re-exchanging the edge table each round.
@@ -686,19 +683,17 @@ object Dedup {
     val defaultPar = pairs.sparkSession.sessionState.conf.numShufflePartitions
     val ccPar = math.max(1L, math.min(defaultPar.toLong,
       p.count() / 50000L + 1L)).toInt
-    val edges = p
+    val edges = Materialize.cache(p
       .unionByName(p.select(col("dst").alias("src"), col("src").alias("dst")))
       .distinct()
-      .repartition(ccPar, col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(ccPar, col("dst")))
     // fused first round: labels after round 1 are exactly
     // min(id, min(neighbor id)) — computed as ONE aggregation over the
     // edge table, replacing both the identity-labels materialization and
     // the first join round of the generic loop
-    var mat = edges.groupBy(col("src"))
+    var mat = Materialize.checkpoint(edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).alias("lbl"))
-      .select(col("src").alias("id"), col("lbl"))
-      .localCheckpoint(true)
+      .select(col("src").alias("id"), col("lbl")))
     var labels = mat
     // -1 = "not yet measured": with maxIter=1 the loop never runs and no
     // round observed label changes, so no convergence warning may fire
@@ -713,15 +708,14 @@ object Dedup {
       // checkpoint materialization as an observed metric instead of a
       // second count() pass over the round's output
       val obs = new org.apache.spark.sql.Observation(s"cc_round_$i")
-      val next = labels.join(nbrMin, Seq("id"), "left_outer")
+      val next = Materialize.checkpoint(labels.join(nbrMin, Seq("id"), "left_outer")
         .select(col("id"),
           least(col("lbl"), coalesce(col("nmin"), col("lbl"))).alias("lbl"),
           (coalesce(col("nmin"), col("lbl")) < col("lbl")).alias("__chg"))
         .observe(obs,
-          coalesce(sum(when(col("__chg"), 1L).otherwise(0L)), lit(0L)).alias("changed"))
-        .localCheckpoint(true)
+          coalesce(sum(when(col("__chg"), 1L).otherwise(0L)), lit(0L)).alias("changed")))
       changed = obs.get.apply("changed").asInstanceOf[Long]
-      mat.unpersist() // next is materialized; the old round's blocks free
+      Materialize.release(mat) // next is materialized; the old round's blocks free
       mat = next
       labels = next.select(col("id"), col("lbl"))
       i += 1
@@ -731,7 +725,7 @@ object Dedup {
         s"Dedup.clusters did not converge in $maxIter rounds " +
           s"($changed labels still changing) — a component with diameter " +
           s"> $maxIter is split across cluster ids; raise maxIter")
-    edges.unpersist()
+    Seq(edges, p).foreach(Materialize.release)
     labels.withColumnRenamed("lbl", "cluster")
   }
 
@@ -817,8 +811,8 @@ object Dedup {
     * operator's prefix branch and [[ngramJaccardCounters]] — returns
     * `(candRaw, cand, csigs)`: the post-map-side-filter candidate
     * stream BEFORE the distinct (the "generated candidates" mass), its
-    * distinct pairs (the verify-join input), and the persisted capped
-    * signatures (caller unpersists).
+    * distinct pairs (the verify-join input), and the capped signatures,
+    * cached for the caller's scope.
     *
     * Capped signature per doc: hash-ascending for the merge-walk
     * verification, PLUS the same grams rare-first ((df, hash)
@@ -862,14 +856,13 @@ object Dedup {
         col("sh"), explode(col("lst")).alias("p"))
       .select(col("sh"), col("__df"), col("p.id").alias("id"),
         col("p.aux").alias("sz"))
-    val csigs = capped
+    // consumed 3× (prefix explode, a-side verify, b-side verify)
+    val csigs = Materialize.cache(capped
       .groupBy(col("id"))
       .agg(sort_array(collect_list(col("sh"))).alias("csig"),
         sort_array(collect_list(struct(col("__df"), col("sh"))))
           .getField("sh").alias("rare"),
-        first(col("sz")).alias("szf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // consumed 3× (prefix explode, a-side verify, b-side verify)
+        first(col("sz")).alias("szf")))
     // minimum common for a qualifying pair; the −5e-5 absorbs the
     // round(·, 4) ≥ t acceptance boundary so a pair that only passes
     // via rounding still lands inside both prefixes
@@ -913,23 +906,17 @@ object Dedup {
     * counters cannot drift from the plan they adjudicate. */
   def ngramJaccardCounters(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 3, threshold: Double = 0.8,
-                           maxPostings: Int = 1000): (Long, Long, Long) = {
+                           maxPostings: Int = 1000): (Long, Long, Long) = Materialize.scope {
     val sigs = ngramSignatures(df, idCol, textCol, n)
     require(integralId(sigs, "id"),
       "ngramJaccardCounters: integral ids required (the prefix branch)")
     val (candRaw, cand, csigs) = prefixCandPlan(gramPostings(sigs), threshold,
       maxPostings)
-    try {
-      val generated = candRaw.count()
-      val verify = cand.count()
-      // output count from the ALREADY-HELD plan: re-running the operator
-      // via ngramJaccardPairsFromSigs(...).count() would persist a second
-      // csigs cache internally that this finally cannot release (one
-      // leaked MEMORY_AND_DISK cache per bench SF run). The verify tail
-      // is the prefix branch's own, over the same csigs, so the count is
-      // identical by construction.
-      (generated, verify, verifyExact(cand, csigs, threshold).count())
-    } finally csigs.unpersist()
+    // output count from the ALREADY-HELD plan: re-running the operator
+    // via ngramJaccardPairsFromSigs(...).count() would cache csigs a
+    // second time. The verify tail is the prefix branch's own, over the
+    // same csigs, so the count is identical by construction.
+    (candRaw.count(), cand.count(), verifyExact(cand, csigs, threshold).count())
   }
 
   def ngramJaccardPairsFromSigs(sigs: DataFrame, threshold: Double = 0.8,
@@ -1061,9 +1048,8 @@ object Dedup {
         d => if (bcastVerify) broadcast(d) else d)
     } else {
       // non-integral ids: the join fallback, whose postings feed the
-      // hot-gram count and both join sides — persisted
-      scoreJaccard(common(posted.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), pinned = false), threshold)
+      // hot-gram count and both join sides — cached
+      scoreJaccard(common(Materialize.cache(posted), pinned = false), threshold)
     }
   }
 
@@ -1186,8 +1172,8 @@ object Dedup {
     * real size when picking broadcast-vs-shuffle for the anti-join. */
   def decontaminate(corpus: DataFrame, evalDf: DataFrame,
                     idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    val contaminated = contamination(corpus, evalDf, idCol, textCol, n)
-      .select(col(idCol)).localCheckpoint(true)
+    val contaminated = Materialize.checkpoint(
+      contamination(corpus, evalDf, idCol, textCol, n).select(col(idCol)))
     corpus.join(contaminated, Seq(idCol), "left_anti")
   }
 

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.builder.Materialize
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -71,8 +72,9 @@ object Sampling {
     * [[packSequences]]: range-partition + sort by `orderCol` (one
     * shuffle), per-partition token partials reduced to ONE row each,
     * exclusive prefix offsets over those partials (O(partitions) driver
-    * memory, broadcast back). Null token counts coalesce to 0 so the
-    * partials and the primitive `getLong` walk agree. Exclusive offsets
+    * memory, broadcast back; both owned by the caller's scope). Null
+    * token counts coalesce to 0 so the partials and the primitive
+    * `getLong` walk agree. Exclusive offsets
     * are keyed by partition id in range order (even AQE-coalesced range
     * partitions stay ordered by construction); iteration runs to the max
     * OBSERVED pid in case AQE coalesced below `numPartitions`. */
@@ -82,10 +84,10 @@ object Sampling {
     val spark = df.sparkSession
     val np = if (numPartitions > 0) numPartitions
              else spark.sessionState.conf.numShufflePartitions
-    val ordered = df.withColumn(tokensCol, coalesce(col(tokensCol).cast("long"), lit(0L)))
-      .repartitionByRange(np, col(orderCol).asc)
-      .sortWithinPartitions(col(orderCol).asc)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ordered = Materialize.cache(
+      df.withColumn(tokensCol, coalesce(col(tokensCol).cast("long"), lit(0L)))
+        .repartitionByRange(np, col(orderCol).asc)
+        .sortWithinPartitions(col(orderCol).asc))
     val partials = ordered
       .select(spark_partition_id().alias("__pid"), col(tokensCol).alias("__t"))
       .groupBy("__pid").agg(sum(col("__t")).alias("__s"))
@@ -96,7 +98,7 @@ object Sampling {
         val o = p -> acc; acc += partials.getOrElse(p, 0L); o
       }.toMap
     }
-    (ordered, spark.sparkContext.broadcast(offsets),
+    (ordered, Materialize.broadcast(spark, offsets),
       ordered.schema.fieldIndex(tokensCol))
   }
 

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.builder.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -496,8 +497,7 @@ object TextAnalysis {
     val spark = org.apache.spark.sql.SparkSession.active
     val tagged = df.select(explode(graft.functions.GraftFunctions
         .uniBigramTagged(spark, normTokens(col(textCol)))).alias("t"))
-    val counts = tagged.groupBy(col("t")).agg(count(lit(1)).alias("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = Materialize.cache(tagged.groupBy(col("t")).agg(count(lit(1)).alias("c")))
     val uni = counts.filter(col("t").startsWith("u "))
       .select(expr("substring(t, 3)").alias("term"), col("c").alias("c1"))
     val biAll = counts.filter(col("t").startsWith("b "))

@@ -32,7 +32,7 @@ object Runner {
   def run(spark: SparkSession, specJson: String,
           reporting: Option[Store] = None): RunReport = {
     val spec = mapper.readTree(specJson)
-    // materialization policy for this run's builders (Builder.materialize):
+    // materialization policy for this run's builders (Materialize.eager):
     // "materialize": "local" | "reliable" | "persist"; "reliable" needs
     // "checkpoint_dir". Session conf is restored after the run.
     val prevMat = scala.util.Try(
@@ -41,7 +41,7 @@ object Runner {
       spark.sparkContext.setCheckpointDir(d.asText()))
     Option(spec.get("materialize")).foreach(m =>
       spark.conf.set("spark.graft.materialize", m.asText()))
-    try runWith(spark, spec, reporting)
+    try Materialize.scope(runWith(spark, spec, reporting))
     finally prevMat match {
       case Some(v) => spark.conf.set("spark.graft.materialize", v)
       case None => spark.conf.unset("spark.graft.materialize")

@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.builder.Materialize
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,6 +26,9 @@ class JsonStore(
   val name: String = s"json:${paths.mkString(",")}"
 
   private var overlay: Option[DataFrame] = None  // post-update contents
+  // the overlay one write back, kept so a plan captured before a write
+  // still reads (one generation, like ParquetStore's version GC)
+  private var previous: Option[DataFrame] = None
 
   /** Durable write-back location (reference rewrites the source file on
     * every update when writable, `stores/mongolike.py:743-766`; we write
@@ -82,12 +86,11 @@ class JsonStore(
   protected def snapshot: Option[DataFrame] = Some(df).filter(_.columns.contains(key))
 
   protected def commit(next: DataFrame): Unit = {
-    val snap = next.localCheckpoint(true) // sever lineage from overlayDir
-    // the replaced snapshot's blocks are dead weight: any frame handed
-    // out before this write was already invalid (its overlay files are
-    // about to be overwritten), so free the old checkpoint now instead
-    // of waiting for GC + ContextCleaner
-    overlay.foreach(_.unpersist())
+    val snap = Materialize.snapshot(next) // sever lineage from overlayDir
+    // a long loop of writes holds two generations of blocks, not every
+    // generation until a GC lets the ContextCleaner reap them
+    previous.foreach(Materialize.release)
+    previous = overlay
     overlay = Some(snap)
     snap.coalesce(1).write.mode(SaveMode.Overwrite).json(overlayDir)
     Store.writeFileAtomic(overlaySchemaFile.toPath, snap.schema.json)

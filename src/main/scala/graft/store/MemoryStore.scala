@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.builder.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** In-memory writable store (reference `MemoryStore`,
@@ -19,9 +20,11 @@ class MemoryStore(
 
   private var current: Option[DataFrame] = None
   // true when `current` is a checkpoint THIS store created (mutation
-  // paths) — only those may be unpersisted on replacement; a load()ed
-  // frame belongs to the caller, who may have persisted it themselves
+  // paths) — only those are released on replacement; a load()ed frame
+  // belongs to the caller, who may have persisted it themselves
   private var ownsCurrent: Boolean = false
+  // the store-owned snapshot one write back (see swap)
+  private var previous: Option[DataFrame] = None
   private val generation = new java.util.concurrent.atomic.AtomicLong(0)
   // lineage nonce: a bare generation counter restarts at small integers
   // on every fresh instance, so a DURABLE consumer of the token (the
@@ -39,28 +42,26 @@ class MemoryStore(
   def isEmpty: Boolean = current.isEmpty
 
   /** Replace contents wholesale (connect-time load). */
-  def load(data: DataFrame): this.type = {
-    if (ownsCurrent) current.foreach(_.unpersist())
-    current = Some(data); ownsCurrent = false
-    generation.incrementAndGet(); this
-  }
+  def load(data: DataFrame): this.type = { swap(data, owned = false); this }
 
   protected def snapshot: Option[DataFrame] = current
 
   /** Checkpoint `next` eagerly (a write must be visible to subsequent
-    * reads and must not grow an unbounded lazy plan across many writes),
-    * swap it in and free the replaced snapshot's blocks — a long
-    * foreachBatch loop of update() calls must hold ONE generation of
-    * blocks, not every generation until GC. Like
-    * every durable store whose files rotate on write, a frame handed out
-    * before a mutation is invalid after it (mongomock semantics: cursors
-    * don't span writes). Only store-owned checkpoints are freed: a
-    * `load`ed frame belongs to the caller. */
-  protected def commit(next: DataFrame): Unit = {
-    val old = if (ownsCurrent) current else None
-    current = Some(next.localCheckpoint(true))
-    ownsCurrent = true
+    * reads and must not grow an unbounded lazy plan across many writes)
+    * and swap it in. */
+  protected def commit(next: DataFrame): Unit = swap(Materialize.snapshot(next), owned = true)
+
+  /** Make `next` the contents, keeping the replaced store-owned snapshot
+    * one write (a plan captured before a write still reads, as with
+    * ParquetStore's version GC) and releasing the one before it: a long
+    * loop of update() calls holds two generations of blocks, not every
+    * generation until a GC. A frame handed out two writes back is invalid
+    * (mongomock semantics: cursors don't span writes). */
+  private def swap(next: DataFrame, owned: Boolean): Unit = {
+    previous.foreach(Materialize.release)
+    previous = current.filter(_ => ownsCurrent)
+    current = Some(next)
+    ownsCurrent = owned
     generation.incrementAndGet()
-    old.foreach(_.unpersist())
   }
 }

@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.builder.Materialize
 import graft.query.QueryParams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -110,27 +111,23 @@ class ObjectStore(
       val indexF = Future(index.update(indexOf(docs), keyFields))
       val results = Seq(dataF, indexF).map(f => scala.util.Try(Await.result(f, Duration.Inf)))
       results.collectFirst { case scala.util.Failure(e) => throw e }
-    } else {
-      val deduped = Store.dedupLastWins(docs, keyFields).localCheckpoint(true)
-      try {
-        val dataF = Future(data.updateUnique(deduped, keyFields))
-        val indexF = Future(index.updateUnique(indexOf(deduped), keyFields))
-        val results = Seq(dataF, indexF).map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-        results.collectFirst { case scala.util.Failure(e) => throw e }
-      } finally deduped.unpersist()
+    } else Materialize.scope {
+      val deduped = Materialize.checkpoint(Store.dedupLastWins(docs, keyFields))
+      val dataF = Future(data.updateUnique(deduped, keyFields))
+      val indexF = Future(index.updateUnique(indexOf(deduped), keyFields))
+      val results = Seq(dataF, indexF).map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      results.collectFirst { case scala.util.Failure(e) => throw e }
     }
   }
 
-  override def removeDocs(criteria: String): Unit = {
+  override def removeDocs(criteria: String): Unit = Materialize.scope {
     // orphan-safe: resolve doomed keys once, delete from both tables.
     // Materialized eagerly — the lazy plan would reference data-plane
     // files that the first delete garbage-collects.
-    val doomed = graft.query.MongoFilter(data.df, criteria).select(col(key))
-      .localCheckpoint(true)
-    try {
-      data.removeKeys(doomed)
-      index.removeKeys(doomed)
-    } finally doomed.unpersist()
+    val doomed = Materialize.checkpoint(
+      graft.query.MongoFilter(data.df, criteria).select(col(key)))
+    data.removeKeys(doomed)
+    index.removeKeys(doomed)
   }
 
   override def removeKeys(keys: DataFrame): Unit = {

@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.builder.Materialize
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -101,15 +102,14 @@ class OpenDataStore(
   /** Removals rewrite the whole layout: a static overwrite of the
     * checkpointed contents, whose lineage is severed from the files
     * being overwritten. */
-  protected def commit(next: DataFrame): Unit = {
-    val keep = next.localCheckpoint(true)
-    try writeDataAndManifest(keep, "static", manifestOf(keep))
-    finally keep.unpersist()
+  protected def commit(next: DataFrame): Unit = Materialize.scope {
+    val keep = Materialize.checkpoint(next)
+    writeDataAndManifest(keep, "static", manifestOf(keep))
   }
 
   /** Upserts merge only the partitions they touch (dynamic overwrite). */
   override protected def upsert(docs: DataFrame, keyFields: Seq[String],
-                                batchUnique: Boolean): Unit =
+                                batchUnique: Boolean): Unit = Materialize.scope {
     if (isEmpty) {
       // FIRST BUILD: nothing on disk is being replaced, so no lineage to
       // sever — when the batch plan is ORDER-STABLE (deterministic scan,
@@ -123,14 +123,9 @@ class OpenDataStore(
       // ONCE and both consumers share the materialized result. (The
       // non-empty branch keeps its checkpoints — there the merged plan
       // reads files the dynamic overwrite replaces.)
-      if (Store.orderStable(docs)) {
-        val next = Store.dedupLastWins(docs, keyFields)
-        writeDataAndManifest(next, "dynamic", manifestOf(next))
-      } else {
-        val next = Store.dedupLastWins(docs, keyFields).localCheckpoint(true)
-        try writeDataAndManifest(next, "dynamic", manifestOf(next))
-        finally next.unpersist()
-      }
+      val deduped = Store.dedupLastWins(docs, keyFields)
+      val next = if (Store.orderStable(docs)) deduped else Materialize.checkpoint(deduped)
+      writeDataAndManifest(next, "dynamic", manifestOf(next))
     } else {
       // merge only the partitions the batch touches: the batch's own
       // grouping tuples PLUS the current partitions of the batch's
@@ -143,12 +138,11 @@ class OpenDataStore(
         .select(objectGrouping.map(col): _*).distinct()
       // checkpointed: consumed by the merge below AND by the manifest
       // patch AFTER the overwrite, when its source files are gone
-      val touched = batchTouched.unionByName(movedFrom).distinct()
-        .localCheckpoint(true)
+      val touched = Materialize.checkpoint(batchTouched.unionByName(movedFrom).distinct())
       val current = d.join(touched, objectGrouping, "left_semi")
       // sever lineage: the merged plan reads the files the dynamic
       // overwrite below replaces
-      val next = Store.upsertPlan(current, docs, keyFields).localCheckpoint(true)
+      val next = Materialize.checkpoint(Store.upsertPlan(current, docs, keyFields))
       // incremental manifest: fresh rows for the touched partitions,
       // prior rows for the rest — O(batch partitions), never a re-read
       // of the whole store. The untouched rows come from the PRIOR
@@ -158,9 +152,9 @@ class OpenDataStore(
       val fresh = manifestOf(next)
       val untouched = spark.read.schema(fresh.schema).json(manifestPath)
         .join(touched, objectGrouping, "left_anti")
-      try writeDataAndManifest(next, "dynamic", fresh.unionByName(untouched))
-      finally { next.unpersist(); touched.unpersist() }
+      writeDataAndManifest(next, "dynamic", fresh.unionByName(untouched))
     }
+  }
 
   /** `writeShards > 1` spreads each partition group over up to that many
     * objects (`part-*.jsonl.gz` files under the same `field=value/`

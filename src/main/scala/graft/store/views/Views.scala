@@ -1,5 +1,6 @@
 package graft.store.views
 
+import graft.builder.Materialize
 import graft.query.MongoFilter
 import graft.store.{ReadOnlyStore, Store}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -234,8 +235,8 @@ class ValidatingStore(val inner: Store, val contract: graft.store.RowValidator,
   override def update(docs: DataFrame, keyFields: Seq[String]): Unit = {
     // one materialization: the strict probe, the rejects write and the
     // inner write must not each re-run the batch plan (builder rule)
-    val annotated = contract.annotate(docs).localCheckpoint(true)
-    try {
+    Materialize.scope {
+      val annotated = Materialize.checkpoint(contract.annotate(docs))
       val invalid = annotated.filter(col("_validation_errors").isNotNull)
       if (contract.strict) {
         val bad = invalid.limit(1).collect()
@@ -250,7 +251,7 @@ class ValidatingStore(val inner: Store, val contract: graft.store.RowValidator,
       val valid = annotated.filter(col("_validation_errors").isNull)
         .drop("_validation_errors")
       if (!valid.isEmpty) inner.update(valid, keyFields)
-    } finally annotated.unpersist()
+    }
   }
   override def removeDocs(criteria: String): Unit = inner.removeDocs(criteria)
   override def removeKeys(keys: DataFrame): Unit = inner.removeKeys(keys)

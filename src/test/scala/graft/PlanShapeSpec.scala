@@ -208,23 +208,22 @@ class PlanShapeSpec extends SparkSpec {
       .simhashSignatures(docs, "doc_id", "text", family = "md5")
       .queryExecution.executedPlan.toString
     assert(roundRobins(bare) == 1, s"expected the family spread exchange:\n$bare")
-    // REAL builder-shaped input — Builder.spreadCheckpoint itself, which
+    // REAL builder-shaped input — Materialize.spread itself, which
     // checkpoints AFTER its repartition and hands downstream a bare
     // LogicalRDD with ≥ core partitions (no Repartition node left in the
     // plan). The guard must recognize the materialized spread and NOT
     // stack an exchange — that re-shipped the corpus per signature call
     // and doubled the 2-batch builder lifecycle (16 → 33 s) when the
     // round-11 guard only looked for plan-carried Repartition nodes.
-    val batch = graft.builder.Builder.spreadCheckpoint(docs)
-    try {
-      assert(batch.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism,
-        "precondition: spreadCheckpoint output must be core-wide")
-      val p = graft.ext.Dedup
-        .simhashSignatures(batch, "doc_id", "text", family = "md5")
-        .queryExecution.executedPlan.toString
-      assert(roundRobins(p) == 0,
-        s"family spread must not re-exchange a materialized builder batch, found ${roundRobins(p)}:\n$p")
-    } finally batch.unpersist()
+    // (the test's scope frees it)
+    val batch = graft.builder.Materialize.spread(docs)
+    assert(batch.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism,
+      "precondition: Materialize.spread output must be core-wide")
+    val p = graft.ext.Dedup
+      .simhashSignatures(batch, "doc_id", "text", family = "md5")
+      .queryExecution.executedPlan.toString
+    assert(roundRobins(p) == 0,
+      s"family spread must not re-exchange a materialized builder batch, found ${roundRobins(p)}:\n$p")
     // plan-carried shape (narrow ops above an explicit repartition): the
     // batch's own exchange is reused, never stacked
     val spread = docs.localCheckpoint(true)

@@ -155,15 +155,18 @@ object PropertySpec extends Properties("graft") {
         builder().run()
       }
       val incremental = tgt.df.select("doc_id").collect().map(_.getLong(0)).toSet
-      // ...must land exactly where one from-scratch build does
+      // ...must land exactly where one from-scratch build does (the ext
+      // calls materialize into the scope that consumes their frame)
       val all = docs.toDF("doc_id", "text", "lu")
-      val pairs = method match {
-        case "minhash" => graft.ext.Dedup.minhashLsh(all, "doc_id", "text", threshold = 0.5)
-        case "simhash" => graft.ext.Dedup.simhashPairs(all, "doc_id", "text")
-        case _ => graft.ext.Dedup.ngramJaccardPairs(all, "doc_id", "text", threshold = 0.5)
+      val scratch = graft.builder.Materialize.scope {
+        val pairs = method match {
+          case "minhash" => graft.ext.Dedup.minhashLsh(all, "doc_id", "text", threshold = 0.5)
+          case "simhash" => graft.ext.Dedup.simhashPairs(all, "doc_id", "text")
+          case _ => graft.ext.Dedup.ngramJaccardPairs(all, "doc_id", "text", threshold = 0.5)
+        }
+        graft.ext.Dedup.keepCanonical(all, pairs, "doc_id")
+          .select("doc_id").collect().map(_.getLong(0)).toSet
       }
-      val scratch = graft.ext.Dedup.keepCanonical(all, pairs, "doc_id")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
       incremental == scratch
     }
 

@@ -2,13 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 
-/** Shared local SparkSession for all suites. */
+/** Shared local SparkSession for all suites. Each test is one
+  * [[graft.builder.Materialize.scope]], so what it materializes is freed
+  * when it ends. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(table: String, sf: String = "0.001"): org.apache.spark.sql.DataFrame =
     spark.read.parquet(s"/root/testdata/sf$sf/$table.parquet")
+  override def withFixture(test: NoArgTest): Outcome =
+    graft.builder.Materialize.scope(super.withFixture(test))
 }
 
 object SparkSpec {
