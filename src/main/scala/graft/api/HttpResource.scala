@@ -197,10 +197,9 @@ class ReadResource(
 
   /** GET/POST search: params → operator compile → `{data, meta}`. When
     * the store serves the criteria-matched rows as a local frame (a
-    * ParquetStore driver read), the request finishes on the driver:
-    * `total_doc` and the facets come from one collect of a projection
-    * Catalyst folds, and the page is the query's fold over the same
-    * frame — no Spark job. */
+    * ParquetStore driver read), `total_doc` is its row count and the page
+    * its fold; page and facets collect through the driver evaluator
+    * ([[LocalFrame.collect]]), so such a request starts no Spark job. */
   def search(params: Map[String, String]): String = timed {
     val qp0 = withDefault(QueryOperator.compile(params, ops))
     // the bounded-collect contract must hold even for a resource built
@@ -211,19 +210,13 @@ class ReadResource(
     // meta hooks see the criteria-filtered (pre-pagination) frame;
     // qp.criteria already carries the merged default — no re-wrap
     val filtered = store.query(QueryParams(criteria = qp.criteria))
-    val facets = ops.collect { case f: FacetQuery => f }
     val local = LocalFrame.isLocal(filtered)
-    lazy val present = FacetQuery.present(filtered, facets)
-    // one collect: each matching row's facet values, as strings
-    lazy val values = filtered.select(present.map(f => col(f.field).cast("string")): _*).collect()
-    val total = cachedCount(qp.criteria, if (local) values.length else store.count(qp.criteria))
+    val total = cachedCount(qp.criteria,
+      if (local) LocalFrame.collect(filtered).length else store.count(qp.criteria))
     // limit ≤ maxLimit by PaginationQuery contract → bounded collect
     val page = if (local) qp.copy(criteria = None)(filtered) else store.query(qp)
     val rows = ReadResource.jsonRows(ops.foldLeft(page)((d, op) => op.postProcess(d, params)))
-    // facet operators are folded into ONE explode-struct job per request
-    // (FacetQuery.combinedMeta) instead of one action per facet field
-    val facetMeta =
-      if (local) FacetQuery.localMeta(present, values) else FacetQuery.combinedMeta(filtered, facets)
+    val facetMeta = FacetQuery.combinedMeta(filtered, ops.collect { case f: FacetQuery => f })
     // a silently-injected cap is not silent to the client: the applied
     // limit and a truncation flag land in the meta, so "data shorter
     // than total" is detectable without length arithmetic
@@ -268,9 +261,10 @@ object ReadResource {
     * response-meta marker read (reference `max_limit` default). */
   val injectedCap: Int = 1000
 
-  /** Each row as one JSON object — the bytes `toJSON` renders. */
+  /** Each row as one JSON object — the bytes `toJSON` renders —
+    * collected through the driver evaluator ([[LocalFrame.collect]]). */
   private[api] def jsonRows(d: DataFrame): Array[String] =
-    d.select(to_json(struct(col("*")))).collect().map(_.getString(0))
+    LocalFrame.collect(d.select(to_json(struct(col("*"))))).map(_.getString(0))
 }
 
 /** A14 serving plane (reference `api/resource/submission.py:21-390`):
@@ -449,15 +443,10 @@ class SearchResource(
         .select(col("q_id"), col("n_id").alias("id"), col("rank"))
     }
     // all-local legs (a driver-served BM25 leg alone) fuse on the driver
-    val rows =
-      if (legs.forall(LocalFrame.isLocal))
-        graft.ext.Similarity.rrfFuseRows(legs.map(_.collect().toSeq), k, fuseC)
-          .map(r => (r.getInt(1), r.getLong(2), r.getDouble(3)))
-      else graft.ext.Similarity.rrfFuse(legs, k, fuseC)
+    val rows = LocalFrame.collect(graft.ext.Similarity.rrfFuse(legs, k, fuseC)
         .orderBy("rank")
-        .select(col("rank"), col("id"), col("rrf"))
-        .collect() // ≤ k rows by contract
-        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
+        .select(col("rank"), col("id"), col("rrf"))) // ≤ k rows by contract
+      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
     val data = rows.map { case (rank, id, rrf) =>
       s"""{"rank": $rank, "id": $id, "rrf": $rrf}"""
     }.mkString("[", ",", "]")

@@ -1,8 +1,7 @@
 package graft.api
 
-import graft.query.QueryParams
+import graft.query.{LocalFrame, QueryParams}
 import org.apache.spark.sql.types.{NumericType, StringType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** REST-parameter → query compilation layer (reference `maggma.api`
   * query operators, SURVEY §2.5). Each operator consumes URL-style
@@ -166,8 +165,8 @@ class FacetQuery(val field: String, val topK: Int = 10) extends QueryOperator {
                     params: Map[String, String]): Map[String, String] = {
     if (!filtered.columns.contains(field)) return Map.empty
     // bounded collect: topK rows of a count aggregate
-    val counts = filtered.groupBy(col(field).cast("string").alias("value")).count()
-      .orderBy(desc("count"), col("value")).limit(topK).collect()
+    val counts = LocalFrame.collect(filtered.groupBy(col(field).cast("string").alias("value")).count()
+      .orderBy(desc("count"), col("value")).limit(topK))
     val obj = counts.map { r =>
       s"${Json.str(String.valueOf(r.get(0)))}: ${r.getLong(1)}"
     }.mkString("{", ", ", "}")
@@ -178,16 +177,22 @@ class FacetQuery(val field: String, val topK: Int = 10) extends QueryOperator {
 object FacetQuery {
   import org.apache.spark.sql.functions._
 
-  /** All facets in ONE Spark job: each matching doc explodes into one
+  /** All facets in ONE plan: each matching doc explodes into one
     * (facet, value) row per facet dimension, a single hash-agg counts
     * them, and one window keeps the per-facet top-K — the serving-path
-    * twin of the oracle-checked `a10_text_facets` plan. The collect is
+    * form of the oracle-checked `a10_text_facets` plan. Over a local
+    * frame (a ParquetStore driver read) the driver evaluator computes it
+    * ([[LocalFrame.collect]]), else it is one Spark job. The collect is
     * bounded by Σ topK rows. Values are compared/rendered as strings
     * (the explode array must be uniformly typed); count ties therefore
     * break on the string form, matching [[FacetQuery.meta]]. */
   def combinedMeta(filtered: org.apache.spark.sql.DataFrame,
                    facets: Seq[FacetQuery]): Seq[(String, String)] = {
-    val present = FacetQuery.present(filtered, facets)
+    // one facet per DISTINCT field of `filtered`, the widest topK, in
+    // first-appearance order: a duplicate operator would emit each doc's
+    // (facet, value) row twice, and its `facet_<field>` meta key collides
+    val fields = facets.filter(f => filtered.columns.contains(f.field))
+    val present = fields.map(_.field).distinct.map(fld => fields.filter(_.field == fld).maxBy(_.topK))
     if (present.isEmpty) return Nil
     val structs = present.map(f =>
       struct(lit(f.field).alias("facet"), col(f.field).cast("string").alias("value")))
@@ -197,44 +202,14 @@ object FacetQuery {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("facet")).orderBy(desc("n"), col("value"))
     val maxK = present.map(_.topK).max
-    val top = counts.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxK)
-      .collect()
+    val top = LocalFrame.collect(counts.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= maxK))
     present.map { f =>
-      render(f, top.filter(_.getString(0) == f.field).sortBy(_.getInt(3)).take(f.topK)
-        .map(r => (r.getString(1), r.getLong(2))).toSeq)
+      s"facet_${f.field}" -> top.filter(_.getString(0) == f.field).sortBy(_.getInt(3)).take(f.topK)
+        .map(r => s"${Json.str(String.valueOf(r.getString(1)))}: ${r.getLong(2)}")
+        .mkString("{", ", ", "}")
     }
   }
-
-  /** The facets [[combinedMeta]] computes: one per DISTINCT field of
-    * `filtered` — duplicate operators on the same field would each emit
-    * a (facet, value) row per doc, doubling every count, and their
-    * `facet_<field>` meta keys collide anyway — keeping the widest topK
-    * per field, in first-appearance order. */
-  def present(filtered: org.apache.spark.sql.DataFrame,
-              facets: Seq[FacetQuery]): Seq[FacetQuery] = {
-    val present0 = facets.filter(f => filtered.columns.contains(f.field))
-    present0.map(_.field).distinct.map(fld => present0.filter(_.field == fld).maxBy(_.topK))
-  }
-
-  /** [[combinedMeta]] computed on the driver from `values`, each matching
-    * row's string-cast value of every `present` facet, in order: the same
-    * counts, the same (count desc, value asc with null first) order —
-    * strings compared as Spark compares them, by UTF-8 bytes. */
-  def localMeta(present: Seq[FacetQuery],
-                values: Array[org.apache.spark.sql.Row]): Seq[(String, String)] =
-    present.zipWithIndex.map { case (f, i) =>
-      val counts = values.groupMapReduce(r => Option(r.getString(i)))(_ => 1L)(_ + _).toSeq
-      val order = Ordering.Tuple2(Ordering.Long.reverse,
-        Ordering.Option(Ordering.by[String, UTF8String](UTF8String.fromString)))
-      render(f, counts.sortBy { case (v, n) => (n, v) }(order).take(f.topK)
-        .map { case (v, n) => (v.orNull, n) })
-    }
-
-  private def render(f: FacetQuery, counts: Seq[(String, Long)]): (String, String) =
-    s"facet_${f.field}" -> counts.map { case (v, n) =>
-      s"${Json.str(String.valueOf(v))}: $n"
-    }.mkString("{", ", ", "}")
 }
 
 object QueryOperator {

@@ -1,11 +1,9 @@
 package graft.builder
 
-import graft.ext.Similarity
 import graft.query.{LocalFrame, MongoFilter, QueryParams}
 import graft.store.Store
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Incremental BM25 inverted index + serving — the LEXICAL twin of
   * [[AnnIndexBuilder]], giving the round-12 retrieval plane
@@ -261,57 +259,39 @@ class Bm25IndexBuilder(
     * [[run]]. `queries` rows carry `(idCol, textCol)` — defaults to the
     * source's fields. Serving shape: query terms collect driver-side
     * (small by the query contract, the [[AnnIndexBuilder]] probe
-    * pattern), the posting scan is pruned by a static term IN-predicate
-    * (term-clustered layout + blooms from `ensureIndex`), df for the
-    * probed terms falls out of the pruned postings themselves, and
-    * scores replay [[graft.ext.TextAnalysis.bm25TopK]]'s micro-long
-    * fixed-point arithmetic op for op.
-    *
-    * A local `queries` frame (a request) is served on the driver when
-    * the index answers `{term: {$in: terms}}` as a local frame (a
-    * ParquetStore driver read): the tokenizing projection folds, and
-    * [[driverTopK]] scores the postings with the plan's arithmetic. The
-    * result is then a local frame; otherwise, and for any other
-    * `queries` frame, the plan. */
+    * pattern), the postings are read by `{term: {$in: terms}}` (a
+    * term-clustered layout + blooms from `ensureIndex` prune the scan),
+    * df for the probed terms falls out of the pruned postings themselves,
+    * and scores replay [[graft.ext.TextAnalysis.bm25TopK]]'s micro-long
+    * fixed-point arithmetic op for op. When the postings read is a local
+    * frame (a ParquetStore driver read), the driver evaluator computes
+    * this one plan ([[LocalFrame.fold]]): a request starts no Spark job. */
   def topK(queries: DataFrame, k: Int = 10,
            idCol: Option[String] = None, textCol: Option[String] = None): DataFrame = {
     val (n, sumdl) = loadStats().getOrElse(throw new IllegalStateException(
       "Bm25IndexBuilder.topK before any run(): no stats persisted"))
     if (!index.df.columns.contains("term")) throw new IllegalStateException(
       "Bm25IndexBuilder.topK: the posting index is empty — run() a batch first")
-    val tc = queries.select(
-      col(idCol.getOrElse(source.key)).cast("long").alias("q_id"),
-      graft.functions.GraftFunctions.termCounts(spark,
-        graft.ext.TextAnalysis.normTokens(col(textCol.getOrElse(textField)))).alias("__tc"))
-    val qt = tc.select(col("q_id"), explode(col("__tc")).alias("__t"))
+    val qt = queries.select(
+        col(idCol.getOrElse(source.key)).cast("long").alias("q_id"),
+        explode(graft.functions.GraftFunctions.termCounts(spark,
+          graft.ext.TextAnalysis.normTokens(col(textCol.getOrElse(textField))))).alias("__t"))
       .select(col("q_id"), col("__t.term").alias("term"))
     // ≤ |queries| × |query vocab| rows by the small-query contract:
-    // collect ONCE (a local frame's projection folds, and the explode
-    // runs here), re-plan as a local relation (no leaking checkpoint
+    // collect ONCE, re-plan as a local relation (no leaking checkpoint
     // in a long-lived serving process — the AnnIndexBuilder rationale)
-    val local = LocalFrame.rows(tc)
-    val qtRows = local.fold(qt.collect()) { rows =>
-      for {
-        r <- rows if !r.isNullAt(1)
-        t <- r.getSeq[Row](1)
-      } yield Row(r.get(0), if (t == null) null else t.getString(0))
-    }
-    // ONE local relation serves both the empty-result schema and the
-    // scored join's query side
-    val qtDf = spark.createDataFrame(
-      java.util.Arrays.asList(qtRows: _*), qt.schema)
-    val terms = qtRows.map(_.getString(1)).distinct.toSeq
-    if (terms.isEmpty)
-      return qtDf.select(col("q_id"), lit(1).cast("int").alias("rank"),
-        col("q_id").alias("doc_id"), lit(0.0).alias("score")).limit(0)
+    val qtRows = LocalFrame.collect(qt)
+    // no terms: `$in: []` reads no posting, and the plan scores nothing
+    val terms = qtRows.map(_.getString(1)).filter(_ != null).distinct.toSeq
     val nD = n.toDouble
     val avgdl = sumdl.toDouble / nD
-    for (served <- local.flatMap(_ => driverTopK(qtRows, terms, nD, avgdl, k))) return served
     // post-prune the postings keep their strings only long enough to
     // hash: the scored join/agg runs on 8-byte xxhash64 keys, and idf
     // folds into the probed-term slice (ln per term, not per scored
     // row) — the bm25TopK spellings, values bit-identical
-    val post = index.df.filter(col("term").isin(terms: _*))
+    val inList = terms.map(graft.api.Json.str).mkString("[", ",", "]")
+    val post = index.query(QueryParams(criteria = Some(s"""{"term": {"$$in": $inList}}"""),
+        properties = Seq("term", "id", "tf", "dl")))
       .select(xxhash64(col("term")).alias("th"),
         col("id").cast("long").alias("id"),
         col("tf").cast("long").alias("tf"), col("dl").cast("long").alias("dl"))
@@ -321,7 +301,8 @@ class Bm25IndexBuilder(
       .agg(count(lit(1)).alias("df"))
       .select(col("th"), log(lit(1.0) + (lit(nD) - col("df") + 0.5) /
         (col("df") + 0.5)).alias("__idf")))
-    val qth = qtDf.select(col("q_id"), xxhash64(col("term")).alias("th"))
+    val qth = spark.createDataFrame(java.util.Arrays.asList(qtRows: _*), qt.schema)
+      .select(col("q_id"), xxhash64(col("term")).alias("th"))
     val scored = post.join(broadcast(qth), Seq("th"))
       .filter(col("id") =!= col("q_id"))
       .join(dfreq, Seq("th"))
@@ -332,7 +313,7 @@ class Bm25IndexBuilder(
           (col("tf") * (k1 + 1.0)) /
           (col("tf") + (col("dl") / lit(avgdl) * b + (1.0 - b)) * k1) *
           1000000.0 + 0.5).cast("long").alias("__sm"))
-    scored.groupBy(col("q_id"), col("id"))
+    LocalFrame.fold(scored.groupBy(col("q_id"), col("id"))
       .agg(sum(col("__sm")).alias("__sm"))
       .groupBy(col("q_id"))
       .agg(graft.functions.TopKAgg.topk(spark,
@@ -340,59 +321,6 @@ class Bm25IndexBuilder(
       .select(col("q_id"), posexplode(col("__top")))
       .select(col("q_id"), (col("pos") + 1).cast("int").alias("rank"),
         col("col.id").alias("doc_id"),
-        round(col("col.score") / 1000000.0, 4).alias("score"))
+        round(col("col.score") / 1000000.0, 4).alias("score")))
   }
-
-  /** [[topK]]'s plan computed on the driver over the postings of `terms`,
-    * or None when the index does not serve them as a local frame (over
-    * the driver read's ceilings, or not a ParquetStore). The arithmetic is
-    * the plan's: idf through `StrictMath.log` (Spark's `log`), each
-    * posting's score as `floor(x·1e6 + 0.5)` micro-longs summed per
-    * (query, doc), [[graft.functions.TopKAgg]]'s heap and order (score
-    * desc, id asc), and Spark's own `round(·, 4)`. A null operand or a
-    * zero divisor makes a posting's score null, which the sum skips. */
-  private def driverTopK(qtRows: Array[Row], terms: Seq[String], nD: Double, avgdl: Double,
-                         k: Int): Option[DataFrame] = {
-    val inList = terms.map(t => graft.api.Json.str(String.valueOf(t))).mkString("[", ",", "]")
-    LocalFrame.rows(index.query(QueryParams(criteria = Some(s"""{"term": {"$$in": $inList}}"""),
-        properties = Seq("term", "id", "tf", "dl")))).map { postings =>
-      def long(r: Row, i: Int): Option[Long] =
-        if (r.isNullAt(i)) None else Some(r.get(i).asInstanceOf[Number].longValue)
-      // (id, tf, dl) per term; df = the term's posting count
-      val byTerm = postings.groupBy(_.getString(0)).map { case (t, rs) =>
-        val df = rs.length.toDouble
-        val x = 1.0 + (nD - df + 0.5) / (df + 0.5)
-        t -> ((if (x <= 0.0) None else Some(StrictMath.log(x))),
-          rs.map(r => (long(r, 1), long(r, 2), long(r, 3))))
-      }
-      val sums = scala.collection.mutable.LinkedHashMap[(Long, Long), Long]()
-      for {
-        r <- qtRows if !r.isNullAt(0)
-        q = r.getLong(0)
-        (Some(idf), ps) <- byTerm.get(r.getString(1)).toSeq
-        (Some(id), Some(tf), Some(dl)) <- ps if id != q
-        den = tf + (dl / avgdl * b + (1.0 - b)) * k1
-        if avgdl != 0.0 && den != 0.0
-      } {
-        val sm = math.floor(idf * (tf * (k1 + 1.0)) / den * 1000000.0 + 0.5).toLong
-        sums((q, id)) = sums.getOrElse((q, id), 0L) + sm
-      }
-      val heaps = scala.collection.mutable.LinkedHashMap[Long, graft.functions.TopKAgg.Heap]()
-      sums.foreach { case ((q, id), sm) =>
-        heaps.getOrElseUpdate(q, new graft.functions.TopKAgg.Heap(k)).offer(sm.toDouble, id)
-      }
-      val rows = for {
-        (q, h) <- heaps.toSeq
-        ((id, score), pos) <- h.sortedBestFirst().toSeq.zipWithIndex
-      } yield Row(q, pos + 1, id, Similarity.sparkRound(score / 1000000.0, 4))
-      LocalFrame.of(spark, rows, Bm25IndexBuilder.TopKSchema)
-    }
-  }
-}
-
-object Bm25IndexBuilder {
-  /** [[Bm25IndexBuilder.topK]]'s output: (q_id, rank, doc_id, score). */
-  private val TopKSchema = StructType(Seq(StructField("q_id", LongType),
-    StructField("rank", IntegerType, nullable = false), StructField("doc_id", LongType),
-    StructField("score", DoubleType)))
 }

@@ -15,7 +15,7 @@ import scala.reflect.ClassTag
   * `Runner.run`, a bench or verify query, a call that returns no frame);
   * an `ext` call that returns a lazy frame registers what it materializes
   * with the caller's scope and throws without one. A checkpoint is freed
-  * by unpersisting the RDD under its `LogicalRDD`: `Dataset.unpersist`
+  * by freeing the RDD under its `LogicalRDD` (`Rdds.free`): `Dataset.unpersist`
   * only consults the cache manager and leaves those blocks to the GC. */
 object Materialize {
   private final class Owner {
@@ -118,7 +118,7 @@ object Materialize {
   }
 
   private def free(ds: Dataset[_], rdd: Option[RDD[_]]): Unit = rdd match {
-    case Some(r) => r.unpersist(blocking = false)
+    case Some(r) => org.apache.spark.graft.Rdds.free(r)
     case None => ds.unpersist(blocking = false)
   }
 }

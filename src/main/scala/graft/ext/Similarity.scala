@@ -1,7 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -772,7 +771,8 @@ object Similarity {
     * replayable; equal-rank singletons from different lists tie
     * EXACTLY (same 1/(c+r) double) and break toward the smaller id.
     * Scale shape: inputs are already k·|queries| rows by the top-k
-    * contract — everything here is query-scale, never corpus-scale. */
+    * contract — everything here is query-scale, never corpus-scale (over
+    * local legs, [[graft.query.LocalFrame]] computes it with no job). */
   def rrfFuse(lists: Seq[DataFrame], k: Int = 5, c: Int = 60): DataFrame = {
     require(lists.nonEmpty, "rrfFuse needs at least one ranked list")
     val spark = lists.head.sparkSession
@@ -789,38 +789,4 @@ object Similarity {
       .select(col("q_id"), (col("pos") + 1).cast("int").alias("rank"),
         col("col.id").alias("id"), round(col("col.score"), 6).alias("rrf"))
   }
-
-  /** [[rrfFuse]] computed on the driver over each list's collected
-    * `(q_id, id, rank)` rows, as `(q_id, rank, id, rrf)` rows in rank
-    * order per query: the same per-doc sums of `1.0 / (c + rank)` (a null
-    * id or rank contributes nothing, as in the plan's cast, aggregate and
-    * heap), the same [[graft.functions.TopKAgg]] heap and order, and
-    * Spark's own `round(·, 6)`. */
-  def rrfFuseRows(lists: Seq[Seq[Row]], k: Int = 5, c: Int = 60): Seq[Row] = {
-    require(lists.nonEmpty, "rrfFuse needs at least one ranked list")
-    val sums = scala.collection.mutable.LinkedHashMap[(Any, Long), Double]()
-    for {
-      list <- lists
-      r <- list
-      i = r.fieldIndex("id")
-      j = r.fieldIndex("rank")
-      if !r.isNullAt(i) && !r.isNullAt(j)
-    } {
-      val key = (r.getAs[Any]("q_id"), r.get(i).asInstanceOf[Number].longValue)
-      sums(key) = sums.getOrElse(key, 0.0) + 1.0 / (c.toDouble + r.get(j).asInstanceOf[Number].intValue)
-    }
-    val heaps = scala.collection.mutable.LinkedHashMap[Any, graft.functions.TopKAgg.Heap]()
-    sums.foreach { case ((q, id), s) =>
-      heaps.getOrElseUpdate(q, new graft.functions.TopKAgg.Heap(k)).offer(s, id)
-    }
-    for {
-      (q, h) <- heaps.toSeq
-      ((id, s), pos) <- h.sortedBestFirst().toSeq.zipWithIndex
-    } yield Row(q, pos + 1, id, sparkRound(s, 6))
-  }
-
-  /** Spark's `round(x, scale)` (HALF_UP on the decimal form), evaluated
-    * by the same expression the plan runs. */
-  private[graft] def sparkRound(x: Double, scale: Int): Double =
-    Round(Literal(x), Literal(scale)).eval().asInstanceOf[Double]
 }

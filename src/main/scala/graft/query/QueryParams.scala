@@ -34,13 +34,12 @@ case class QueryParams(
   def projection: Seq[Column] =
     properties.map(p => if (p.contains(".")) col(p).alias(p.replace('.', '_')) else col(p))
 
-  /** Canonical fold: match → sort → project → skip → limit. A local
-    * frame ([[LocalFrame]]) is sorted on the driver, so the whole fold
-    * over it starts no Spark job. */
+  /** Canonical fold: match → sort → project → skip → limit. Over a
+    * local frame the whole fold is evaluated on the driver
+    * ([[LocalFrame]]) by whoever collects it. */
   def apply(df: DataFrame): DataFrame = {
     var out = criteria.map(MongoFilter(df, _)).getOrElse(df)
-    if (sort.nonEmpty)
-      out = LocalFrame.sorted(out, sortColumns).getOrElse(out.orderBy(sortColumns: _*))
+    if (sort.nonEmpty) out = out.orderBy(sortColumns: _*)
     if (properties.nonEmpty) out = out.select(projection: _*)
     if (skip > 0) out = out.offset(skip)
     limit.foreach(n => out = out.limit(n))

@@ -1,6 +1,6 @@
 package graft.store
 
-import graft.query.{MongoFilter, QueryParams}
+import graft.query.{LocalFrame, MongoFilter, QueryParams}
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
@@ -10,9 +10,7 @@ import org.apache.parquet.io.api.Binary
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences,
-  GenericInternalRow, Predicate, RuntimeReplaceable}
-import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
@@ -75,15 +73,14 @@ import scala.jdk.CollectionConverters._
   * groups; the deltas are read whole), any other criteria keeps them
   * all. Spark's parquet reader decodes each candidate group on the
   * driver, only the key and the columns the query's criteria,
-  * projection and sort read; the criteria's own analyzed predicate keeps
-  * the matching rows, the generations merge as [[df]] merges them, and
-  * the rows come back as a local frame in df's column order, on which
-  * the query's filter, sort (on the driver, [[graft.query.LocalFrame]]),
-  * projection, skip and limit run — no Spark job. A key read stops at
-  * the newest generation holding every key it names. It falls back to
-  * the plan over [[df]] when a footer cannot be read, two generations
-  * type a column differently, or the candidates pass a ceiling (see
-  * `MaxScanReadRows`).
+  * projection and sort read; the generations merge as [[df]] merges
+  * them, and the rows come back as a local frame in df's column order,
+  * on which the query's filter, sort, projection, skip and limit are
+  * evaluated on the driver ([[graft.query.LocalFrame]]) — no Spark job.
+  * A key read stops at the newest generation holding every key it
+  * names. It falls back to the plan over [[df]] when a footer cannot be
+  * read, two generations type a column differently, or the candidates
+  * pass a ceiling (see `MaxScanReadRows`).
   */
 object ParquetStore {
   /** Delta-row ceiling for the merge-on-read broadcast (see [[ParquetStore.df]]).
@@ -106,14 +103,14 @@ object ParquetStore {
     *  - a read the key or index-field statistics narrowed to part of the
     *    row groups takes up to 65536 rows: its candidates are the rows a
     *    lookup index points at (BM25 postings: 4 narrow columns), and
-    *    the predicate keeps only the matches before any frame is built,
-    *    so 4096 to 65536 such rows take 55-70 ms against 95-143 ms;
+    *    its membership test keeps only the matches before any frame is
+    *    built, so 4096 to 65536 such rows take 55-70 ms against 95-143 ms;
     *  - bytes are the footer's uncompressed sizes of the columns read,
     *    so a few large payloads (a blob plane) bound the decode as well
     *    as many small rows: a blob fetch among 4 MiB of candidate payload
     *    takes 73-85 ms this way against 139-155 ms through the plan. */
   private val MaxScanReadRows: Long = 4096L
-  private val MaxNarrowedReadRows: Long = 65536L
+  private val MaxNarrowedReadRows: Long = LocalFrame.MaxRows
   private val MaxDriverReadBytes: Long = 4L << 20
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -141,7 +138,7 @@ object ParquetStore {
   private[store] final case class FileFooter(status: FileStatus, groups: Seq[Group])
   /** One generation's decoded candidates: every key it holds (a newer
     * generation holding a key drops the key's older rows, matching or
-    * not) and the rows the criteria matches. */
+    * not) and the rows a pruning criteria's membership test keeps. */
   private[store] final case class Gen(keys: Set[Any], rows: Seq[Row])
   /** The footer facts of one version or delta dir: the schema, from one
     * footer as Spark's own inference (mergeSchema off) reads it, the row
@@ -509,10 +506,11 @@ class ParquetStore(
     * groups on the driver and come back as a local frame in df's column
     * order, holding the columns `params` reads, and `params` (filter,
     * sort, projection, skip, limit) run on it with the plan's own
-    * semantics — no Spark job. Otherwise (see [[driverRead]]) the plan
-    * over [[df]]. */
+    * semantics by the driver evaluator ([[graft.query.LocalFrame]]), and
+    * the result is a local frame — no Spark job. Otherwise (see
+    * [[driverRead]]) the plan over [[df]]. */
   override def query(params: QueryParams): DataFrame =
-    driverRead(params).fold(super.query(params))(params(_))
+    driverRead(params).fold(super.query(params))(d => LocalFrame.fold(params(d)))
 
   /** What [[df]] holds that `params.criteria` can match, as a local frame
     * of the columns `params` reads, or None to take the plan. Each
@@ -545,8 +543,7 @@ class ParquetStore(
   } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The candidates of each generation the read needs (see
-    * [[driverRead]]), decoded and filtered by the criteria, the oldest
-    * first; None over the ceilings. */
+    * [[driverRead]]), decoded, the oldest first; None over the ceilings. */
   private def candidateRows(footers: Seq[ParquetStore.DirFooter], criteria: Option[String],
                             all: StructType, target: StructType): Option[Seq[ParquetStore.Gen]] = {
     val prune = criteria.flatMap(c => (key +: indexKeys.take(1)).distinct.flatMap { f =>
@@ -554,14 +551,15 @@ class ParquetStore(
     }.headOption)
     val keyValues = prune.collect { case (f, vs) if f == key => vs.map(_._1).toSet }
     // a pruning criteria is a membership test on its column (its values
-    // are of the column's type), which needs no analyzed predicate
+    // are of the column's type); any other criteria is the query's own
+    // filter, which the driver evaluator runs over the merged rows
     val matches = prune.flatMap { case (f, vs) =>
       Some(target.fieldNames.indexOf(f)).filter(_ >= 0).map { i =>
         val (t, want) = (target(i).dataType, vs.map(_._1).toSet)
         val conv = CatalystTypeConverters.createToScalaConverter(t)
         (r: InternalRow) => !r.isNullAt(i) && want(conv(r.get(i, t)))
       }
-    }.getOrElse(predicate(criteria, target))
+    }.getOrElse((_: InternalRow) => true)
     val found = scala.collection.mutable.Set[Any]()
     var (rows, bytes, scanned, groupsTotal) = (0L, 0L, 0, 0)
     var out = List.empty[ParquetStore.Gen]
@@ -655,21 +653,6 @@ class ParquetStore(
     }
     ParquetStore.Gen(held.toSet, out.result())
   }
-
-  /** `criteria`'s predicate over rows of `target`, as the plan's filter
-    * evaluates it: the analyzed condition of the Mongo filter over a frame
-    * of that schema, run by Catalyst's interpreter. Pre-filtering the
-    * decoded rows with it leaves the query's own filter nothing to drop. */
-  private def predicate(criteria: Option[String], target: StructType): InternalRow => Boolean =
-    criteria.map(c => MongoFilter(spark.createDataFrame(java.util.List.of[Row](), target), c)
-        .queryExecution.analyzed).collect {
-      case Filter(cond, child) =>
-        val p = Predicate.createInterpreted(BindReferences.bindReference(
-          cond.transformDown { case r: RuntimeReplaceable => r.replacement },
-          AttributeSeq(child.output)))
-        p.initialize(0)
-        (r: InternalRow) => p.eval(r)
-    }.getOrElse(_ => true)
 
   /** [[df]]'s merge of the generations' matching rows (the oldest read
     * first): its rows whose key no newer generation holds (a null key

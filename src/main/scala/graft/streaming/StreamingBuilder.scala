@@ -84,11 +84,15 @@ object StreamingBuilder {
     var current: DataFrame = null
     var builder: graft.builder.Builder = null
     foreachNonEmpty(stream, checkpoint) { batch =>
-      current = Store.dedupLastWins(batch, Seq(key))
-      if (builder == null)
-        builder = mk(new graft.store.TableStore(batch.sparkSession, current,
-          "stream-batch", key, lastUpdated))
-      builder.run()
+      // the key-unique batch is made once per trigger: every plan of the
+      // run reads it, and the dedup's shuffle would re-run in each
+      graft.builder.Materialize.scope {
+        current = graft.builder.Materialize.eager(Store.dedupLastWins(batch, Seq(key)))
+        if (builder == null)
+          builder = mk(new graft.store.TableStore(batch.sparkSession, current,
+            "stream-batch", key, lastUpdated))
+        builder.run()
+      }
     }
   }
 

@@ -258,17 +258,69 @@ class MaterializeSpec extends SparkSpec {
     assert(st.count() === 10)
   }
 
-  test("source guard: only Materialize persists, caches, checkpoints or unpersists") {
+  /** Lines of `src/main/scala` matching `pattern`, in files `scan` keeps. */
+  private def sourceHits(pattern: scala.util.matching.Regex)(scan: java.io.File => Boolean): Seq[String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
-    val call = """(?<!Materialize)\.(persist|localCheckpoint|checkpoint|unpersist)\(|\.cache\(\)""".r
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val hits = for {
-      f <- files(root) if f.getName.endsWith(".scala") && f.getName != "Materialize.scala"
+    for {
+      f <- files(root) if f.getName.endsWith(".scala") && scan(f)
       (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
-      if call.findFirstIn(line).isDefined
+      if pattern.findFirstIn(line).isDefined
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+  }
+
+  test("source guard: only Materialize persists, caches, checkpoints or unpersists") {
+    val call = """(?<!Materialize)\.(persist|localCheckpoint|checkpoint|unpersist)\(|\.cache\(\)""".r
+    val hits = sourceHits(call)(_.getName != "Materialize.scala")
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("source guard: no driver copy of a plan's arithmetic (top-k heaps, a hand-built Round)") {
+    // a plan's result is computed on the driver by the evaluator
+    // (graft.query.LocalFrame), never re-implemented beside the plan
+    val copy = """TopK(Str)?Agg\.Heap|\bRound\(""".r
+    val hits = sourceHits(copy)(f => !f.getPath.endsWith("functions/TopKAggregate.scala"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("freeing local checkpoints logs no RDD warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Configurator
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+    val warns = new java.util.concurrent.atomic.AtomicInteger(0)
+    val freed = new java.util.concurrent.atomic.AtomicInteger(0)
+    val appender = new AbstractAppender("rdd-warns", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warns.incrementAndGet()
+    }
+    appender.start()
+    // RDD subclasses log under their own class names, all in this package
+    val logger = "org.apache.spark.rdd"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val before = ctx.getConfiguration.getLoggerConfig(logger).getLevel
+    val listener = new SparkListener {
+      override def onUnpersistRDD(u: SparkListenerUnpersistRDD): Unit = { freed.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    Configurator.setLevel(logger, Level.WARN)
+    ctx.getConfiguration.getLoggerConfig(logger).addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    sc.addSparkListener(listener)
+    try {
+      val t = pq("warn_dedup", "doc_id")
+      lifecycle("Dedup warns", t)(src => new DedupBuilder(src, t, "text", "minhash", threshold = 0.5))
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      ctx.getConfiguration.getLoggerConfig(logger).removeAppender("rdd-warns")
+      Configurator.setLevel(logger, before)
+      appender.stop()
+    }
+    assert(freed.get > 0, "the runs freed no checkpoint")
+    assert(warns.get === 0, s"${warns.get} RDD warnings while freeing checkpoints")
   }
 }

@@ -3,7 +3,6 @@ package graft
 import graft.api.{DynamicQuery, FacetQuery, PaginationQuery, ReadResource, SearchResource,
   SortQuery, SparseFieldsQuery}
 import graft.builder.Bm25IndexBuilder
-import graft.ext.Similarity
 import graft.query.LocalFrame
 import graft.store.{MemoryStore, ParquetStore, TableStore}
 import org.apache.spark.TestListenerBus
@@ -14,9 +13,9 @@ import org.apache.spark.sql.functions._
 import java.util.SplittableRandom
 
 /** Serving reads finished on the driver equal the plans they replace:
-  * the BM25 top-k scored from a ParquetStore driver read, the driver
-  * RRF fuse, and a search over a ParquetStore against the same rows in a
-  * plan-served store. */
+  * the BM25 top-k scored from a ParquetStore driver read, the RRF fuse
+  * of a driver-served leg, and a search over a ParquetStore against the
+  * same rows in a plan-served store. */
 class ServeOnDriverSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -107,24 +106,6 @@ class ServeOnDriverSpec extends SparkSpec {
       lex.run()
     }
     checkTopK(lex, rng, 20)
-  }
-
-  test("Similarity.rrfFuseRows equals rrfFuse: shared docs, rank ties, several queries, k below the union") {
-    val s = spark; import s.implicits._
-    val rng = new SplittableRandom(3)
-    (1 to 20).foreach { round =>
-      val lists = Seq.fill(1 + rng.nextInt(2)) {
-        for (q <- Seq(-5L, 2L); (id, r) <- Seq.fill(8)(rng.nextInt(15).toLong).distinct.zipWithIndex)
-          yield (q, id, r + 1)
-      }
-      val k = 1 + rng.nextInt(12)
-      val frames = lists.map(_.toDF("q_id", "id", "rank"))
-      val want = Similarity.rrfFuse(frames, k, 60).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq.sorted
-      val got = Similarity.rrfFuseRows(frames.map(_.collect().toSeq), k, 60)
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).sorted
-      assert(got === want, s"round $round")
-    }
   }
 
   test("SearchResource fuses a driver-served BM25 leg with 0 jobs, to the body the plan fuse returns") {
