@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
+/** Benchmark main: runs every SparkEntry.table query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Materialization = noop-sink write (computes every
   * output column; `count()` would let Catalyst prune the actual work). */
 object Bench {
@@ -100,10 +100,8 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val engineQueries = SparkEntry.queries ++ SparkEntry.benchOverrides
-    def warm(pairs: Seq[(String, (SparkSession, String) => DataFrame)]): Unit =
-      pairs.foreach { case (name, fn) => time(fn, s"$name(warm)") }
-    val timedEngine = engineQueries.toSeq.filter(p => keep(p._1)).sortBy(_._1)
+    val kept = SparkEntry.table.filter(q => keep(q.name)).sortBy(_.name)
+    val timedEngine = kept.map(q => q.name -> q.timedPlan)
     // the warm pass doubles as a per-query reference reading for the
     // steal guard below, so its times are kept (first execution: includes
     // one-time Janino/JIT cost, hence only an UPPER-bound sanity bar)
@@ -148,9 +146,8 @@ object Bench {
     // byte-replayed by the DuckDB oracle (the md5 family is); the
     // cross-family agreement spec in ExtQualitySpec ("hash families
     // agree") pins that both plans find the same duplicate sets.
-    val timedMd5 = SparkEntry.benchOverrides.keys.toSeq.filter(keep).sorted
-      .map(name => name -> SparkEntry.queries(name))
-    warm(timedMd5)
+    val timedMd5 = kept.filter(_.timed.isDefined).map(q => q.name -> q.plan)
+    timedMd5.foreach { case (name, fn) => time(fn, s"$name(warm)") }
     val md5Results = timedMd5.map { case (name, fn) => name -> time(fn, s"$name(md5)") }
     def fmt(rs: Seq[(String, Option[Double])]): String =
       rs.map { case (k, v) =>
@@ -173,7 +170,7 @@ object Bench {
       val script = java.nio.file.Paths.get(
         sys.props.getOrElse("user.dir", "."), "tools", "bench_oracle.py")
       if (!java.nio.file.Files.exists(script)) throw new RuntimeException("no script")
-      val names = SparkEntry.oracleSql.keySet.filter(keep)
+      val names = kept.map(_.name).toSet
       val tmp = java.nio.file.Files.createTempFile("graft_oracle", ".json")
       // ship only the queries this run timed — the subprocess would
       // otherwise execute the full oracle suite under SPARK_GRAFT_ONLY
@@ -291,7 +288,8 @@ object Bench {
     // curate_dedup_hash entry) is kept byte-compatible.
     val skewExchanges: Seq[(String, (Int, Long, Long))] =
       if (only.nonEmpty) Nil
-      else scala.util.Try(SparkEntry.skewGateExchanges(spark, sfDir))
+      // one scope, as each timed query has: the minhash plan materializes
+      else scala.util.Try(graft.builder.Materialize.scope(SparkEntry.skewGateExchanges(spark, sfDir)))
         .getOrElse(Nil)
     val skewCounters: Option[(Int, Long, Long)] =
       skewExchanges.collectFirst { case ("curate_dedup_hash", v) => v }

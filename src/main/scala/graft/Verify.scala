@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.BenchQuery
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.table plan's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -28,10 +29,10 @@ object Verify {
     // failures shrank the correctness artifact from 90 to 79 entries
     // without any red signal — ADVICE r8).
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try graft.builder.Materialize.scope(fn(spark, sfDir).coalesce(1).write
+    SparkEntry.table
+      .filter(q => only.forall(_.contains(q.name)))
+      .foreach { case BenchQuery(name, plan, _, _) =>
+      try graft.builder.Materialize.scope(plan(spark, sfDir).coalesce(1).write
         .mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.optimizer.{ReplaceExpressions, RewriteWithExpression}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftOuter, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.types._
 
 /** The driver evaluator: a plan over local relations only is interpreted
@@ -33,22 +34,24 @@ private[graft] object LocalFrame {
 
   /** `d`'s rows computed on the driver, or None when the plan must run
     * (also when the walk throws: the plan then reports the fault). */
-  def rows(d: DataFrame): Option[Array[Row]] = {
-    val plan = d.queryExecution.analyzed
-    if (!plan.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
-    else (try eval(RewriteWithExpression(ReplaceExpressions(plan)))
-          catch { case scala.util.control.NonFatal(_) => None }).map { rs =>
-      val toRow = CatalystTypeConverters.createToScalaConverter(plan.schema)
-      rs.map(toRow(_).asInstanceOf[Row]).toArray
-    }
+  def rows(d: DataFrame): Option[Array[Row]] = internalRows(d).map { rs =>
+    val toRow = CatalystTypeConverters.createToScalaConverter(d.schema)
+    rs.map(toRow(_).asInstanceOf[Row]).toArray
   }
 
   /** `d.collect()`, computed on the driver when [[rows]] can. */
   def collect(d: DataFrame): Array[Row] = rows(d).getOrElse(d.collect())
 
-  /** `d` as a local frame of its [[rows]], or `d` itself. */
+  /** `d` as a local frame of its rows computed on the driver, or `d` itself. */
   def fold(d: DataFrame): DataFrame =
-    rows(d).fold(d)(rs => d.sparkSession.createDataFrame(java.util.Arrays.asList(rs: _*), d.schema))
+    internalRows(d).fold(d)(LocalRows.frame(d.sparkSession, d.schema, _))
+
+  private def internalRows(d: DataFrame): Option[Rows] = {
+    val plan = d.queryExecution.analyzed
+    if (!plan.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else try eval(RewriteWithExpression(ReplaceExpressions(plan)))
+    catch { case scala.util.control.NonFatal(_) => None }
+  }
 
   private def eval(p: LogicalPlan): Option[Rows] =
     if (!p.expressions.forall(evaluable)) None

@@ -12,6 +12,7 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSes
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -139,7 +140,7 @@ object ParquetStore {
   /** One generation's decoded candidates: every key it holds (a newer
     * generation holding a key drops the key's older rows, matching or
     * not) and the rows a pruning criteria's membership test keeps. */
-  private[store] final case class Gen(keys: Set[Any], rows: Seq[Row])
+  private[store] final case class Gen(keys: Set[Any], rows: Seq[InternalRow])
   /** The footer facts of one version or delta dir: the schema, from one
     * footer as Spark's own inference (mergeSchema off) reads it, the row
     * groups of every file, read on first use, and one parquet reader per
@@ -539,7 +540,7 @@ class ParquetStore(
       need = reads(params)
       target = StructType(all.filter(f => f.name == key || need(f.name)))
       gens <- candidateRows(footers, params.criteria, all, target)
-    } yield spark.createDataFrame(merged(gens, target.fieldIndex(key)).asJava, target)
+    } yield LocalRows.frame(spark, target, merged(gens, target, target.fieldIndex(key)))
   } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The candidates of each generation the read needs (see
@@ -632,15 +633,14 @@ class ParquetStore(
     val idx = target.fields.map(f => read.fieldNames.indexOf(f.name))
     val types = target.fields.map(_.dataType)
     val k = target.fieldIndex(key)
-    val toRow = CatalystTypeConverters.createToScalaConverter(target)
     val keyOf = CatalystTypeConverters.createToScalaConverter(types(k))
     val row = new GenericInternalRow(target.size)
-    val (held, out) = (scala.collection.mutable.Set[Any](), Vector.newBuilder[Row])
+    val (held, out) = (scala.collection.mutable.Set[Any](), Vector.newBuilder[InternalRow])
     for (f <- files; g <- f.groups) {
       val st = f.status
       val it = readFile(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(st),
         g.start, g.length, Array.empty, st.getModificationTime, st.getLen, Map.empty))
-      // rows are converted before the reader moves on (it reuses them)
+      // rows are copied before the reader moves on (it reuses them)
       try it.foreach { r =>
         var i = 0
         while (i < idx.length) {
@@ -648,7 +648,7 @@ class ParquetStore(
           i += 1
         }
         if (keys) held += keyOf(row.get(k, types(k)))
-        if (matches(row)) out += toRow(row).asInstanceOf[Row]
+        if (matches(row)) out += row.copy()
       } finally it match { case c: java.io.Closeable => c.close(); case _ => }
     }
     ParquetStore.Gen(held.toSet, out.result())
@@ -659,16 +659,18 @@ class ParquetStore(
     * matches none, as in the anti-join), then per key the rows of the
     * newest generation holding it — if they match (the deltas are
     * key-unique, so one row). */
-  private def merged(gens: Seq[ParquetStore.Gen], k: Int): Seq[Row] =
+  private def merged(gens: Seq[ParquetStore.Gen], target: StructType, k: Int): Seq[InternalRow] =
     if (gens.size == 1) gens.head.rows
     else {
+      val t = target(k).dataType
+      val keyOf = CatalystTypeConverters.createToScalaConverter(t)
       val seen = scala.collection.mutable.Set[Any]()
       val winners = gens.tail.reverse.flatMap { g =>
         val first = g.keys.filterNot(seen)
         seen ++= first
-        g.rows.filter(r => first(r.get(k)))
+        g.rows.filter(r => first(keyOf(r.get(k, t))))
       }
-      gens.head.rows.filter(r => r.isNullAt(k) || !seen(r.get(k))) ++ winners
+      gens.head.rows.filter(r => r.isNullAt(k) || !seen(keyOf(r.get(k, t)))) ++ winners
     }
 
   /** [[update]] for a batch the CALLER has already made key-unique (and

@@ -47,7 +47,7 @@ class EventsEncodingSpec extends SparkSpec {
     val ntzDir = writeVariant("ntz", timestamp_micros(col("us")).cast("timestamp_ntz"))
     val instDir = writeVariant("inst", timestamp_micros(col("us")))
     for (q <- eventsQueries) {
-      val fn = SparkEntry.queries(q)
+      val fn = SparkEntry.table.find(_.name == q).get.plan
       val ref = fn(spark, nanosDir).collect().map(_.toString).sorted.toSeq
       assert(ref.nonEmpty, s"$q returned no rows on the nanos encoding")
       for ((label, dir) <- Seq("ntz" -> ntzDir, "instant" -> instDir)) {

@@ -7,6 +7,8 @@ import org.apache.spark.TestBlocks
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Scoped materialization: every persist, checkpoint and broadcast a
   * builder run or an `ext` call makes is freed by the scope that owns it,
   * on success and on failure. */
@@ -207,6 +209,28 @@ class MaterializeSpec extends SparkSpec {
       Sampling.packSequences(counted, "doc_id", "n", 2048L).collect()
       assert((TestBlocks.mapBroadcasts(sc) -- before).nonEmpty)
     })
+  }
+
+  test("a reliable checkpoint's files are deleted when its scope frees it") {
+    val s = spark; import s.implicits._
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    val dir = tmp("leak_reliable")
+    sc.setCheckpointDir(dir)
+    spark.conf.set("spark.graft.materialize", "reliable")
+    try {
+      val src = new MemoryStore(spark, "leakReliable", "doc_id", "lu")
+      src.load((1L to 12L).map(doc(_, 1L)).toDF(cols: _*))
+      released("Bm25 reliable")(new Bm25IndexBuilder(src, pq("bm25_reliable", "id", "term", delta = true),
+        pq("bm25st_reliable", "sid", "sid"), "text").run())
+    } finally {
+      spark.conf.unset("spark.graft.materialize")
+      prev.foreach(sc.setCheckpointDir)
+    }
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    val left = try walk.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("rdd-")).toList
+      finally walk.close()
+    assert(left.isEmpty, s"reliable checkpoint files remain: $left")
   }
 
   test("calls that return no frame are run boundaries: they free what they materialize") {

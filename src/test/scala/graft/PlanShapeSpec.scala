@@ -6,7 +6,7 @@ class PlanShapeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private def plan(q: String): String =
-    SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+    SparkEntry.table.find(_.name == q).get.plan(spark, dir).queryExecution.executedPlan.toString
 
   test("c13_joint_lookup broadcasts the dimension side") {
     val p = plan("c13_joint_lookup")
@@ -179,7 +179,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("minhash engine family hashes shingles once (kernel), not k string hashes") {
-    val p = SparkEntry.benchOverrides("dedup_minhash_lsh")(spark, dir)
+    val p = SparkEntry.table.find(_.name == "dedup_minhash_lsh").get.timed.get(spark, dir)
       .queryExecution.executedPlan.toString
     assert(p.contains("graft_ngram_hashes"), s"expected NgramHashes kernel:\n$p")
     // the interpreted per-shingle gram-construction tower must stay gone
@@ -291,7 +291,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("dedup_lines: AQE converts the unhinted hot-line anti-join to broadcast at runtime") {
-    val df = SparkEntry.queries("dedup_lines")(spark, dir)
+    val df = SparkEntry.table.find(_.name == "dedup_lines").get.plan(spark, dir)
     df.collect() // finalize the adaptive plan
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("LeftAnti"), s"hot-line removal not an anti-join:\n$p")
