@@ -290,7 +290,10 @@ object Bench {
       if (only.nonEmpty) Nil
       // one scope, as each timed query has: the minhash plan materializes
       else scala.util.Try(graft.builder.Materialize.scope(SparkEntry.skewGateExchanges(spark, sfDir)))
-        .getOrElse(Nil)
+        .recover { case e =>
+          System.err.println(s"skew gate failed, skew_counters/skew_exchanges left out: $e")
+          Nil
+        }.get
     val skewCounters: Option[(Int, Long, Long)] =
       skewExchanges.collectFirst { case ("curate_dedup_hash", v) => v }
     val skewField = skewCounters.map { case (n, mx, md) =>

@@ -163,22 +163,22 @@ private[graft] object DedupQueries {
         s"count(*) AS n, min(doc_id) AS keep FROM $dupCorpusSql " +
         "GROUP BY 1 HAVING count(*) > 1 ORDER BY 1")),
 
-    BenchQuery("dedup_minhash_lsh", (s, dir) =>
+    {
+      def pairs(family: String): BenchQuery.Plan = (s, dir) =>
+        sortedPairs(Dedup.minhashLsh(nearDupCorpus(s, dir), "doc_id", "text",
+          numHashes = 32, bands = 16, threshold = 0.5, family = family), "a", "b")
       // md5 hash family: byte-replayable in the DuckDB oracle; k=32 with
       // two components per digest keeps the md5 count at 16/shingle
-      sortedPairs(Dedup.minhashLsh(nearDupCorpus(s, dir), "doc_id", "text",
-        numHashes = 32, bands = 16, threshold = 0.5, family = "md5"),
-        "a", "b"),
-      // the md5-family MinHash is byte-replayable: 60-bit md5-prefix
-      // hashes, 64 min-aggs, 16 band buckets, hot-bucket cap, sig-match
-      // verification — all regenerated as SQL from the same parameters
-      oracleSql = {
-        val (ctes, pairSel) = minhashOracleParts
-        s"WITH $ctes $pairSel ORDER BY 1, 2"
-      },
-      timed = Some((s, dir) =>
-        sortedPairs(Dedup.minhashLsh(nearDupCorpus(s, dir), "doc_id", "text",
-          numHashes = 32, bands = 16, threshold = 0.5), "a", "b"))),
+      BenchQuery("dedup_minhash_lsh", pairs("md5"),
+        // the md5-family MinHash is byte-replayable: 60-bit md5-prefix
+        // hashes, 64 min-aggs, 16 band buckets, hot-bucket cap, sig-match
+        // verification — all regenerated as SQL from the same parameters
+        oracleSql = {
+          val (ctes, pairSel) = minhashOracleParts
+          s"WITH $ctes $pairSel ORDER BY 1, 2"
+        },
+        timed = Some(pairs("xxh64")))
+    },
 
     // 2-batch INCREMENTAL LSH — the repeat-build contract (reference
     // `core/store.py:239-275`: process only the unseen): the signature
@@ -188,32 +188,26 @@ private[graft] object DedupQueries {
     // the batch, without re-reading batch-A text. md5 family so the
     // oracle replays batch-B-vs-index banding against the batch-A
     // signature CTE.
-    BenchQuery("dedup_minhash_incremental", (s, dir) => {
-      val corpus = nearDupCorpus(s, dir)
-      val sigsA = Dedup.minhashSignatures(
-        corpus.filter(col("doc_id") < 1000000L), "doc_id", "text",
-        numHashes = 32, shingleSize = 3, family = "md5")
-      sortedPairs(Dedup.minhashLshIncremental(
-        corpus.filter(col("doc_id") >= 1000000L), sigsA, "doc_id", "text",
-        numHashes = 32, bands = 16, threshold = 0.5, family = "md5"),
-        "a", "b")
-    },
-      // incremental replay: same signature/banding CTE chain, candidate
-      // pairs restricted to those touching a batch-B member (y is the
-      // new id by the +1000000 offset — see minhashOraclePartsWith)
-      oracleSql = {
-        val (ctes, pairSel) = minhashOraclePartsWith(" AND y.doc_id >= 1000000")
-        s"WITH $ctes $pairSel ORDER BY 1, 2"
-      },
-      timed = Some((s, dir) => {
+    {
+      def pairs(family: String): BenchQuery.Plan = (s, dir) => {
         val corpus = nearDupCorpus(s, dir)
         val sigsA = Dedup.minhashSignatures(
           corpus.filter(col("doc_id") < 1000000L), "doc_id", "text",
-          numHashes = 32, shingleSize = 3)
+          numHashes = 32, shingleSize = 3, family = family)
         sortedPairs(Dedup.minhashLshIncremental(
           corpus.filter(col("doc_id") >= 1000000L), sigsA, "doc_id", "text",
-          numHashes = 32, bands = 16, threshold = 0.5), "a", "b")
-      })),
+          numHashes = 32, bands = 16, threshold = 0.5, family = family), "a", "b")
+      }
+      BenchQuery("dedup_minhash_incremental", pairs("md5"),
+        // incremental replay: same signature/banding CTE chain, candidate
+        // pairs restricted to those touching a batch-B member (y is the
+        // new id by the +1000000 offset — see minhashOraclePartsWith)
+        oracleSql = {
+          val (ctes, pairSel) = minhashOraclePartsWith(" AND y.doc_id >= 1000000")
+          s"WITH $ctes $pairSel ORDER BY 1, 2"
+        },
+        timed = Some(pairs("xxh64")))
+    },
 
     // 2-batch incremental build through the BUILDER plane: batch A
     // (original corpus) trains the signature index + canonical target,
@@ -290,40 +284,41 @@ private[graft] object DedupQueries {
           "WHERE l.cluster IS NULL OR l.cluster = c.doc_id ORDER BY 1"
       }),
 
-    BenchQuery("dedup_simhash", (s, dir) =>
-      // md5 hash family: byte-replayable in the DuckDB oracle
-      sortedPairs(Dedup.simhashPairs(nearDupCorpus(s, dir), "doc_id", "text",
-        maxHamming = 3, family = "md5"), "a", "b"),
-      // md5-family SimHash replayed in SQL: weighted token-hash bit sums,
-      // 64-bit signature pack, 4x16-bit band candidates, hamming verify
-      oracleSql = {
-        def H(seed: String, v: String) =
-          s"CAST(('0x' || substr(md5($seed || ':' || $v), 1, 15)) AS BIGINT)"
-        val bitSums = (0 until 64).map(i =>
-          s"sum(CASE WHEN (h >> $i) & 1 = 1 THEN w ELSE -w END) AS b$i").mkString(", ")
-        val pack = (0 until 64).map(i =>
-          s"(CASE WHEN b$i > 0 THEN CAST(${1L << i} AS BIGINT) ELSE 0 END)").mkString(" + ")
-        val bandSelects = (0 until 4).map(b =>
-          s"SELECT doc_id, $b AS band, (sig >> ${16 * b}) & 65535 AS bucket FROM sigs")
-          .mkString(" UNION ALL ")
-        "WITH corpus AS (SELECT doc_id, text FROM documents UNION ALL " +
-          "SELECT doc_id + 1000000, text || ' zzz near dup suffix' FROM documents WHERE doc_id % 10 = 0), " +
-          "toks AS (SELECT doc_id, t.tok FROM corpus, UNNEST(regexp_extract_all(lower(text), '\\S+')) AS t(tok)), " +
-          "wt AS (SELECT doc_id, tok, count(*) AS w FROM toks GROUP BY 1, 2), " +
-          s"hs AS (SELECT doc_id, w, ${H("0", "tok")} AS h FROM wt), " +
-          s"bits AS (SELECT doc_id, $bitSums FROM hs GROUP BY 1), " +
-          s"sigs AS (SELECT doc_id, ($pack) AS sig FROM bits), " +
-          s"banded AS ($bandSelects), " +
-          "capped AS (SELECT * FROM banded QUALIFY count(*) OVER (PARTITION BY band, bucket) <= 1000), " +
-          "cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM capped x " +
-          "JOIN capped y USING (band, bucket) WHERE x.doc_id < y.doc_id) " +
-          "SELECT a, b, bit_count(xor(sa.sig, sb.sig)) AS hamming FROM cand " +
-          "JOIN sigs sa ON sa.doc_id = a JOIN sigs sb ON sb.doc_id = b " +
-          "WHERE bit_count(xor(sa.sig, sb.sig)) <= 3 ORDER BY 1, 2"
-      },
-      timed = Some((s, dir) =>
+    {
+      def pairs(family: String): BenchQuery.Plan = (s, dir) =>
         sortedPairs(Dedup.simhashPairs(nearDupCorpus(s, dir), "doc_id", "text",
-          maxHamming = 3), "a", "b"))),
+          maxHamming = 3, family = family), "a", "b")
+      // md5 hash family: byte-replayable in the DuckDB oracle
+      BenchQuery("dedup_simhash", pairs("md5"),
+        // md5-family SimHash replayed in SQL: weighted token-hash bit sums,
+        // 64-bit signature pack, 4x16-bit band candidates, hamming verify
+        oracleSql = {
+          def H(seed: String, v: String) =
+            s"CAST(('0x' || substr(md5($seed || ':' || $v), 1, 15)) AS BIGINT)"
+          val bitSums = (0 until 64).map(i =>
+            s"sum(CASE WHEN (h >> $i) & 1 = 1 THEN w ELSE -w END) AS b$i").mkString(", ")
+          val pack = (0 until 64).map(i =>
+            s"(CASE WHEN b$i > 0 THEN CAST(${1L << i} AS BIGINT) ELSE 0 END)").mkString(" + ")
+          val bandSelects = (0 until 4).map(b =>
+            s"SELECT doc_id, $b AS band, (sig >> ${16 * b}) & 65535 AS bucket FROM sigs")
+            .mkString(" UNION ALL ")
+          "WITH corpus AS (SELECT doc_id, text FROM documents UNION ALL " +
+            "SELECT doc_id + 1000000, text || ' zzz near dup suffix' FROM documents WHERE doc_id % 10 = 0), " +
+            "toks AS (SELECT doc_id, t.tok FROM corpus, UNNEST(regexp_extract_all(lower(text), '\\S+')) AS t(tok)), " +
+            "wt AS (SELECT doc_id, tok, count(*) AS w FROM toks GROUP BY 1, 2), " +
+            s"hs AS (SELECT doc_id, w, ${H("0", "tok")} AS h FROM wt), " +
+            s"bits AS (SELECT doc_id, $bitSums FROM hs GROUP BY 1), " +
+            s"sigs AS (SELECT doc_id, ($pack) AS sig FROM bits), " +
+            s"banded AS ($bandSelects), " +
+            "capped AS (SELECT * FROM banded QUALIFY count(*) OVER (PARTITION BY band, bucket) <= 1000), " +
+            "cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM capped x " +
+            "JOIN capped y USING (band, bucket) WHERE x.doc_id < y.doc_id) " +
+            "SELECT a, b, bit_count(xor(sa.sig, sb.sig)) AS hamming FROM cand " +
+            "JOIN sigs sa ON sa.doc_id = a JOIN sigs sb ON sb.doc_id = b " +
+            "WHERE bit_count(xor(sa.sig, sb.sig)) <= 3 ORDER BY 1, 2"
+        },
+        timed = Some(pairs("xxh64")))
+    },
 
     BenchQuery("dedup_ngram_jaccard", (s, dir) =>
       sortedPairs(Dedup.ngramJaccardPairs(nearDupCorpus(s, dir), "doc_id",
@@ -344,29 +339,27 @@ private[graft] object DedupQueries {
 
     // cluster resolution: pairs -> connected components -> one cluster id
     // per member (min id). md5 family so the oracle replays the pair set.
-    BenchQuery("dedup_clusters", (s, dir) =>
-      Dedup.clusters(
-        Dedup.minhashLsh(nearDupCorpus(s, dir), "doc_id", "text",
-          numHashes = 32, bands = 16, threshold = 0.5, family = "md5"))
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id"),
-      // cluster resolution replay: the same pair CTE chain, transitive
-      // min-label closure via a recursive CTE (the engine's iterative
-      // min-label propagation converges to the identical fixpoint)
-      oracleSql = {
-        val (ctes, pairSel) = minhashOracleParts
-        s"WITH RECURSIVE $ctes, pairs AS ($pairSel), " +
-          "edges AS (SELECT a AS src, b AS dst FROM pairs UNION SELECT b AS src, a AS dst FROM pairs), " +
-          "reach AS (SELECT src AS id, src AS r FROM edges " +
-          "UNION SELECT e.src AS id, rc.r AS r FROM edges e JOIN reach rc ON rc.id = e.dst) " +
-          "SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id ORDER BY 1"
-      },
-      timed = Some((s, dir) =>
+    {
+      def clusters(family: String): BenchQuery.Plan = (s, dir) =>
         Dedup.clusters(
           Dedup.minhashLsh(nearDupCorpus(s, dir), "doc_id", "text",
-            numHashes = 32, bands = 16, threshold = 0.5))
+            numHashes = 32, bands = 16, threshold = 0.5, family = family))
           .withColumnRenamed("id", "doc_id")
-          .orderBy("doc_id"))),
+          .orderBy("doc_id")
+      BenchQuery("dedup_clusters", clusters("md5"),
+        // cluster resolution replay: the same pair CTE chain, transitive
+        // min-label closure via a recursive CTE (the engine's iterative
+        // min-label propagation converges to the identical fixpoint)
+        oracleSql = {
+          val (ctes, pairSel) = minhashOracleParts
+          s"WITH RECURSIVE $ctes, pairs AS ($pairSel), " +
+            "edges AS (SELECT a AS src, b AS dst FROM pairs UNION SELECT b AS src, a AS dst FROM pairs), " +
+            "reach AS (SELECT src AS id, src AS r FROM edges " +
+            "UNION SELECT e.src AS id, rc.r AS r FROM edges e JOIN reach rc ON rc.id = e.dst) " +
+            "SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id ORDER BY 1"
+        },
+        timed = Some(clusters("xxh64")))
+    },
 
     BenchQuery("dedup_embedding", (s, dir) =>
       // all math in doubles from the start (float->double cast is exact,
@@ -528,38 +521,39 @@ private[graft] object DedupQueries {
 
     // SemDeDup-style semantic near-dup pairs: cell partition by nearest
     // deterministic centroid, within-cell cosine ≥ 0.9. md5 family so the
-    // oracle replays the centroid draw; xxh64 twin in benchOverrides.
-    BenchQuery("dedup_semantic", (s, dir) =>
-      sortedPairs(Similarity.semanticDupPairs(embDupCorpus(s, dir),
-        nCentroids = 16, threshold = 0.9, family = "md5"), "a", "b"),
-      // SemDeDup replay: centroid draw by the seeded md5 id-hash (same
-      // spelling as sim_ivf_topk), nearest-cell assignment via QUALIFY,
-      // within-cell pairs with exact cosine verification
-      oracleSql = {
-        val H = "CAST(('0x' || substr(md5('0:' || CAST(id AS VARCHAR)), 1, 15)) AS BIGINT)"
-        "WITH corpus AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings " +
-          "UNION ALL SELECT vec_id + 1000000, " +
-          "list_concat([CAST(embedding[1] AS DOUBLE) + 0.1], CAST(embedding[2:] AS DOUBLE[])) " +
-          "FROM embeddings WHERE vec_id % 10 = 0), " +
-          s"cents AS (SELECT id AS c_id, vec AS c_vec FROM corpus ORDER BY $H ASC, id ASC LIMIT 16), " +
-          "cells AS (SELECT e.id, e.vec, c.c_id AS cell FROM corpus e, cents c " +
-          "QUALIFY row_number() OVER (PARTITION BY e.id ORDER BY " +
-          "list_cosine_similarity(e.vec, c.c_vec) DESC, c.c_id ASC) <= 1), " +
-          // the engine's hot-cell cap (maxCellSize = 10000, drop): cells
-          // above the cap contribute no pairs in the oracle either
-          "capped AS (SELECT * FROM cells QUALIFY " +
-          "count(*) OVER (PARTITION BY cell) <= 10000) " +
-          "SELECT x.id AS a, y.id AS b, round(list_cosine_similarity(x.vec, y.vec), 4) AS sim " +
-          "FROM capped x JOIN capped y ON x.cell = y.cell AND x.id < y.id " +
-          "WHERE list_cosine_similarity(x.vec, y.vec) >= 0.9 ORDER BY 1, 2"
-      },
-      // the engine twin also rides AUTO quantizer sizing (nCentroids = 0:
-      // one cell per 256 docs) — the 100 TB path, where a FIXED k would
-      // make within-cell pairing quadratic in corpus size. The md5
-      // original keeps k=16 so the external oracle can replay the draw
-      // without running the corpus count.
-      timed = Some((s, dir) =>
+    // oracle replays the centroid draw; the engine-hash twin is `timed`.
+    {
+      def pairs(nCentroids: Int, family: String): BenchQuery.Plan = (s, dir) =>
         sortedPairs(Similarity.semanticDupPairs(embDupCorpus(s, dir),
-          nCentroids = 0, threshold = 0.9), "a", "b")))
+          nCentroids = nCentroids, threshold = 0.9, family = family), "a", "b")
+      BenchQuery("dedup_semantic", pairs(16, "md5"),
+        // SemDeDup replay: centroid draw by the seeded md5 id-hash (same
+        // spelling as sim_ivf_topk), nearest-cell assignment via QUALIFY,
+        // within-cell pairs with exact cosine verification
+        oracleSql = {
+          val H = "CAST(('0x' || substr(md5('0:' || CAST(id AS VARCHAR)), 1, 15)) AS BIGINT)"
+          "WITH corpus AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings " +
+            "UNION ALL SELECT vec_id + 1000000, " +
+            "list_concat([CAST(embedding[1] AS DOUBLE) + 0.1], CAST(embedding[2:] AS DOUBLE[])) " +
+            "FROM embeddings WHERE vec_id % 10 = 0), " +
+            s"cents AS (SELECT id AS c_id, vec AS c_vec FROM corpus ORDER BY $H ASC, id ASC LIMIT 16), " +
+            "cells AS (SELECT e.id, e.vec, c.c_id AS cell FROM corpus e, cents c " +
+            "QUALIFY row_number() OVER (PARTITION BY e.id ORDER BY " +
+            "list_cosine_similarity(e.vec, c.c_vec) DESC, c.c_id ASC) <= 1), " +
+            // the engine's hot-cell cap (maxCellSize = 10000, drop): cells
+            // above the cap contribute no pairs in the oracle either
+            "capped AS (SELECT * FROM cells QUALIFY " +
+            "count(*) OVER (PARTITION BY cell) <= 10000) " +
+            "SELECT x.id AS a, y.id AS b, round(list_cosine_similarity(x.vec, y.vec), 4) AS sim " +
+            "FROM capped x JOIN capped y ON x.cell = y.cell AND x.id < y.id " +
+            "WHERE list_cosine_similarity(x.vec, y.vec) >= 0.9 ORDER BY 1, 2"
+        },
+        // the engine twin also rides AUTO quantizer sizing (nCentroids = 0:
+        // one cell per 256 docs) — the 100 TB path, where a FIXED k would
+        // make within-cell pairing quadratic in corpus size. The md5
+        // original keeps k=16 so the external oracle can replay the draw
+        // without running the corpus count.
+        timed = Some(pairs(0, "xxh64")))
+    }
   )
 }

@@ -380,39 +380,37 @@ private[graft] object TextQueries {
         "FROM embeddings q, embeddings c WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id) " +
         "WHERE rank <= 5 ORDER BY q_id, rank")),
 
-    BenchQuery("sim_ivf_topk", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      // md5 hash family for the centroid draw: oracle-replayable
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
-        nCentroids = 16, nprobe = 4, family = "md5")
-        .orderBy("q_id", "rank")
-    },
-      // md5-family IVF replayed in SQL: hash-ordered centroid draw,
-      // nearest-centroid cells, nprobe probing, exact cosine rerank
-      oracleSql = {
-        val H = "CAST(('0x' || substr(md5('0:' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-        val cs = "list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.c_vec AS DOUBLE[]))"
-        s"WITH cents AS (SELECT vec_id AS c_id, embedding AS c_vec FROM embeddings " +
-          s"ORDER BY $H ASC, vec_id ASC LIMIT 16), " +
-          "cells AS (SELECT e.vec_id AS n_id, e.embedding AS n_vec, c.c_id AS cell " +
-          s"FROM embeddings e, cents c QUALIFY row_number() OVER (PARTITION BY e.vec_id " +
-          s"ORDER BY $cs DESC, c.c_id ASC) <= 1), " +
-          "probes AS (SELECT e.vec_id AS q_id, e.embedding AS q_vec, c.c_id AS cell " +
-          s"FROM embeddings e, cents c WHERE e.vec_id < 10 QUALIFY row_number() OVER " +
-          s"(PARTITION BY e.vec_id ORDER BY $cs DESC, c.c_id ASC) <= 4) " +
-          "SELECT q_id, rank, n_id, sim FROM (SELECT p.q_id, cl.n_id, " +
-          "round(list_cosine_similarity(CAST(p.q_vec AS DOUBLE[]), CAST(cl.n_vec AS DOUBLE[])), 4) AS sim, " +
-          "row_number() OVER (PARTITION BY p.q_id ORDER BY " +
-          "list_cosine_similarity(CAST(p.q_vec AS DOUBLE[]), CAST(cl.n_vec AS DOUBLE[])) DESC, cl.n_id) AS rank " +
-          "FROM cells cl JOIN probes p USING (cell) WHERE cl.n_id <> p.q_id) " +
-          "WHERE rank <= 5 ORDER BY q_id, rank"
-      },
-      timed = Some((s, dir) => {
+    {
+      def topK(family: String): BenchQuery.Plan = (s, dir) => {
         val emb = t(s, dir, "embeddings")
         Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
-          nCentroids = 16, nprobe = 4)
+          nCentroids = 16, nprobe = 4, family = family)
           .orderBy("q_id", "rank")
-      })),
+      }
+      // md5 hash family for the centroid draw: oracle-replayable
+      BenchQuery("sim_ivf_topk", topK("md5"),
+        // md5-family IVF replayed in SQL: hash-ordered centroid draw,
+        // nearest-centroid cells, nprobe probing, exact cosine rerank
+        oracleSql = {
+          val H = "CAST(('0x' || substr(md5('0:' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT)"
+          val cs = "list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(c.c_vec AS DOUBLE[]))"
+          s"WITH cents AS (SELECT vec_id AS c_id, embedding AS c_vec FROM embeddings " +
+            s"ORDER BY $H ASC, vec_id ASC LIMIT 16), " +
+            "cells AS (SELECT e.vec_id AS n_id, e.embedding AS n_vec, c.c_id AS cell " +
+            s"FROM embeddings e, cents c QUALIFY row_number() OVER (PARTITION BY e.vec_id " +
+            s"ORDER BY $cs DESC, c.c_id ASC) <= 1), " +
+            "probes AS (SELECT e.vec_id AS q_id, e.embedding AS q_vec, c.c_id AS cell " +
+            s"FROM embeddings e, cents c WHERE e.vec_id < 10 QUALIFY row_number() OVER " +
+            s"(PARTITION BY e.vec_id ORDER BY $cs DESC, c.c_id ASC) <= 4) " +
+            "SELECT q_id, rank, n_id, sim FROM (SELECT p.q_id, cl.n_id, " +
+            "round(list_cosine_similarity(CAST(p.q_vec AS DOUBLE[]), CAST(cl.n_vec AS DOUBLE[])), 4) AS sim, " +
+            "row_number() OVER (PARTITION BY p.q_id ORDER BY " +
+            "list_cosine_similarity(CAST(p.q_vec AS DOUBLE[]), CAST(cl.n_vec AS DOUBLE[])) DESC, cl.n_id) AS rank " +
+            "FROM cells cl JOIN probes p USING (cell) WHERE cl.n_id <> p.q_id) " +
+            "WHERE rank <= 5 ORDER BY q_id, rank"
+        },
+        timed = Some(topK("xxh64")))
+    },
 
     BenchQuery("sim_lsh_topk", (s, dir) => {
       val emb = t(s, dir, "embeddings")

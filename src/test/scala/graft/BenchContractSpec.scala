@@ -38,18 +38,24 @@ class BenchContractSpec extends AnyFunSuite {
     env.put("SPARK_GRAFT_ONLY", "s2_query_one")
     env.put("SPARK_GRAFT_SKIP_ORACLE", "1")
     env.put("SPARK_GRAFT_CPUS", "2")
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-    val rc = p.waitFor()
-    def tail = scala.util.Try(Files.readString(err.toPath).takeRight(2000)).getOrElse("")
-    assert(rc === 0, s"graft.Bench exited $rc; stderr tail:\n$tail")
-    // chosen by its shape, not its position
-    val line = out.linesIterator.map(_.trim).filter(_.startsWith("{\"metric\":")).toList.lastOption
-    assert(line.isDefined, s"no {\"metric\":…} line on stdout:\n$out")
-    val node = com.fasterxml.jackson.databind.json.JsonMapper.builder().build().readTree(line.get)
-    assert(node.get("queries").fieldNames().asScala.toSet === Set("s2_query_one"))
-    assert(!node.get("queries").get("s2_query_one").isNull, s"s2_query_one failed: ${line.get}")
-    assert(node.get("md5_family_sec").size() === 0)
-    assert(node.get("failed") === null)
+    try {
+      val p = pb.start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+      val rc = p.waitFor()
+      def tail = scala.util.Try(Files.readString(err.toPath).takeRight(2000)).getOrElse("")
+      assert(rc === 0, s"graft.Bench exited $rc; stderr tail:\n$tail")
+      // chosen by its shape, not its position
+      val line = out.linesIterator.map(_.trim).filter(_.startsWith("{\"metric\":")).toList.lastOption
+      assert(line.isDefined, s"no {\"metric\":…} line on stdout:\n$out")
+      val node = com.fasterxml.jackson.databind.json.JsonMapper.builder().build().readTree(line.get)
+      assert(node.get("queries").fieldNames().asScala.toSet === Set("s2_query_one"))
+      assert(!node.get("queries").get("s2_query_one").isNull, s"s2_query_one failed: ${line.get}")
+      assert(node.get("md5_family_sec").size() === 0)
+      assert(node.get("failed") === null)
+    } finally {
+      val walk = Files.walk(cwd.toPath)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]()).forEach(f => Files.delete(f))
+      finally walk.close()
+    }
   }
 }
